@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the measurement-session configuration, shared by
-  * every entry point that times or verifies gate queries (Bench, Verify,
-  * TimeProbe, PlanProbe, ExplainOne). Round 11 taught the cost of drift:
-  * PlanProbe missed one conf (`initialPartitionNum`) that Bench had gained,
+  * every entry point that times, verifies or plans gate queries (Bench,
+  * Verify, Probe, PlanDump). Round 11 taught the cost of drift: a plan
+  * probe missed one conf (`initialPartitionNum`) that Bench had gained,
   * and the shuffled-hash-join bound (broadcast threshold × shuffle partition
   * count) is 8× larger at 256 than at 32 — so the probe could show a
   * SortMergeJoin where Bench executed a shuffled hash join, exactly the plan

@@ -1,4498 +1,30 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
-  *
-  * Conventions shared by every (queries, oracleSql) pair:
-  *   - column aliases identical on both sides (driver hash-compares by
-  *     sorted column name);
-  *   - aggregates over doubles are `round(_, 2..4)` on BOTH sides so float
-  *     summation order cannot flip the hash;
-  *   - sums/window fns over integers cast so Spark and DuckDB agree on the
-  *     result type (DuckDB sum(int)→int128, row_number→int64);
-  *   - deterministic ORDER BY with tie-breakers wherever LIMIT appears.
-  */
+import graft.gate._
+
+/** Driver contract — see SURVEY.md §2 for the inventory. A facade over the
+  * [[graft.gate]] registry, which holds the rows one file per family. */
 object SparkEntry {
 
   /** Flagship query (q5-shaped 6-way join) on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q5_local_volume")(spark, "/root/testdata/sf0.001")
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.t(s, dir, name)
-
-  private val revenue: Column =
-    col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-
-  /** Exact decimal summation with a rounded double result: per-row scaled
-    * fixed-point conversion (deterministic), 128-bit integer sum
-    * (order-independent, unlike float sums), round, back to double. DuckDB
-    * mirror: `CAST(round(sum(CAST(x AS DECIMAL(30,10))),2) AS DOUBLE)`.
-    * This removes the half-cent boundary flips that order-dependent double
-    * summation can produce between engines. Round 11: the engine side is
-    * [[graft.functions.FixedPointSum]] (graft_fixed_sum10) rather than
-    * sum(cast(x as decimal(30,10))) — same exactness contract and the same
-    * rounded values (gate-verified), at 4.4x less aggregation cost (the
-    * decimal path's per-row BigDecimal.valueOf + non-compact sum buffers
-    * were ~80% of q1 at sf10). */
-  private def fsum(c: Column): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
-    call_function("graft_fixed_sum10", c)
+  /** Every gate row, family by family. Names are unique: the registry
+    * refuses to build otherwise. */
+  val rows: Seq[GateQuery] = {
+    val all = CatalogRows.rows ++ RelationalRows.rows ++ DedupRows.rows ++
+      TextRows.rows ++ AnnRows.rows ++ CorpusRows.rows ++ StreamingRows.rows
+    val dups = all.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate gate query names: ${dups.mkString(", ")}")
+    all
   }
 
-  private def rsum(c: Column, scale: Int = 2): Column =
-    round(fsum(c), scale).cast("double")
-
-  /** avg with the same exact-sum discipline: fixed-point sum → double ÷
-    * count. */
-  private def ravg(c: Column, scale: Int = 4): Column =
-    round(fsum(c).cast("double") / count(c), scale)
-
-  /** Exact fixed-point sum cast to double (for engine-portable ratios). */
-  private def dsum(c: Column): Column =
-    fsum(c).cast("double")
-
-  /** Run `sql` against the DSv2 `glue` catalog rooted at `dir`, configuring
-    * the catalog on first use (catalog instances are cached per session, so
-    * an already-configured `glue` catalog — e.g. the test fixture's — is
-    * left alone; every caller passes the same dir within one session). */
-  private def infoSchemaSql(s: SparkSession, dir: String, sql: String): DataFrame = {
-    if (s.conf.getOption("spark.sql.catalog.glue").isEmpty) {
-      s.conf.set("spark.sql.catalog.glue", "graft.catalog.GlueTableCatalog")
-      s.conf.set("spark.sql.catalog.glue.root", dir)
-    }
-    s.sql(sql)
-  }
-
-  /** Shared batch sessionization rollup (B27 and B58): LAG + cumulative-sum
-    * session numbering in ONE shuffle on user_id (the lag window, the
-    * cumsum window, and both rollup aggregates all reuse that partitioning;
-    * the two windows share one sort), 30-minute gap in microsecond integer
-    * arithmetic. This formulation IS Spark's native `session_window`
-    * semantics, including at the only candidate divergence point: the
-    * native operator merges sessions INCLUSIVELY (an event landing exactly
-    * gap after its predecessor CONTINUES the session — pinned empirically
-    * by SessionEquivalenceSpec's planted exact-gap fixture), which is
-    * exactly this rollup's `delta > gap` split condition. Round 12 routes
-    * the batch q_session_window through it: the native aggregate (kept for
-    * the D2 streaming path, where incremental state is the point) produces
-    * identical results but paid 2-3x in UpdatingSessions machinery (3.47x
-    * DuckDB at sf100 vs ~1.6x for this shape). */
-  private[graft] def sessionRollup(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val gapMicros = 1800000000L // 30 minutes, in microsecond integer math
-    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val delta = unix_micros(col("ts")) - unix_micros(col("prev_ts"))
-    val isNew = col("prev_ts").isNull || delta > gapMicros
-    events
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("new_session", when(isNew, 1L).otherwise(0L))
-      .withColumn("session_no", sum(col("new_session")).over(byUser))
-      .groupBy(col("user_id"), col("session_no"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        rsum(col("value")).as("session_value")
-      )
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n_sessions"),
-        max(col("n_events")).as("max_session_events"),
-        rsum(col("session_value")).as("total_value")
-      )
-      .orderBy(col("user_id"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- B1: wide aggregation over the fact table (TPC-H Q1 shape).
-    // One shuffle on (returnflag, linestatus); partial aggregation map-side.
-    "q1_pricing_summary" -> { (s, dir) =>
-      T(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          rsum(col("l_quantity")).as("sum_qty"),
-          rsum(col("l_extendedprice")).as("sum_base_price"),
-          rsum(revenue).as("sum_disc_price"),
-          rsum(revenue * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-          ravg(col("l_quantity")).as("avg_qty"),
-          ravg(col("l_extendedprice")).as("avg_price"),
-          ravg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order")
-        )
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
-
-    // ---- B2: dim-filter join + agg + top-k. customer is broadcast; the only
-    // shuffle is orders⋈lineitem on the order key, reused by the aggregation.
-    "q3_shipping_priority" -> { (s, dir) =>
-      val cust = T(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select("c_custkey")
-      val ord = T(s, dir, "orders")
-        .filter(col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-      val li = T(s, dir, "lineitem")
-        .filter(col("l_shipdate") > lit("1997-01-01").cast("timestamp"))
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(rsum(revenue).as("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
-        .limit(10)
-    },
-
-    // ---- B3: 6-way join; every dim side broadcast, single fact shuffle.
-    "q5_local_volume" -> { (s, dir) =>
-      val dims = broadcast(
-        T(s, dir, "supplier")
-          .join(
-            T(s, dir, "nation"),
-            col("s_nationkey") === col("n_nationkey")
-          )
-          .join(
-            T(s, dir, "region").filter(col("r_name") === "ASIA"),
-            col("n_regionkey") === col("r_regionkey")
-          )
-          .select("s_suppkey", "s_nationkey", "n_name")
-      )
-      val cust = broadcast(T(s, dir, "customer").select("c_custkey", "c_nationkey"))
-      val ord = T(s, dir, "orders")
-        .filter(
-          col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("o_orderdate") < lit("1997-01-01").cast("timestamp")
-        )
-        .select("o_orderkey", "o_custkey")
-      T(s, dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(dims, col("l_suppkey") === col("s_suppkey"))
-        .join(
-          cust,
-          col("o_custkey") === col("c_custkey") &&
-            col("c_nationkey") === col("s_nationkey")
-        )
-        .groupBy(col("n_name"))
-        .agg(rsum(revenue).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    },
-
-    // ---- B4: selective scan + filter-only agg (pushdown showcase).
-    "q6_forecast_revenue" -> { (s, dir) =>
-      T(s, dir, "lineitem")
-        .filter(
-          col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-            col("l_discount").between(0.02, 0.04) &&
-            col("l_quantity") < 24
-        )
-        .agg(
-          rsum(col("l_extendedprice") * col("l_discount")).as("revenue"),
-          count(lit(1)).as("n")
-        )
-    },
-
-    // ---- B5: join + group + top-k by revenue (TPC-H Q10 shape).
-    "q10_returned_items" -> { (s, dir) =>
-      val ord = T(s, dir, "orders")
-        .filter(
-          col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("o_orderdate") < lit("1996-07-01").cast("timestamp")
-        )
-        .select("o_orderkey", "o_custkey")
-      val li = T(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      val custN = broadcast(
-        T(s, dir, "customer")
-          .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-          .select("c_custkey", "c_name", "n_name")
-      )
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(custN, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(rsum(revenue).as("revenue"))
-        .select("c_custkey", "c_name", "revenue", "n_name")
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    },
-
-    // ---- B6: global top-k (TakeOrderedAndProject, no full sort at scale).
-    "q_topk_orders" -> { (s, dir) =>
-      T(s, dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderdate")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(25)
-    },
-
-    // ---- B7: distinct aggregation.
-    "q_distinct_count" -> { (s, dir) =>
-      T(s, dir, "orders").agg(
-        countDistinct(col("o_custkey")).as("n_cust"),
-        countDistinct(col("o_orderpriority")).as("n_prio"),
-        count(lit(1)).as("n_orders")
-      )
-    },
-
-    // ---- B8: window functions (partitioned rank).
-    "q_window_rank" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window
-        .partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      T(s, dir, "orders")
-        .select(
-          col("o_orderpriority"),
-          col("o_orderkey"),
-          col("o_totalprice"),
-          row_number().over(w).cast("long").as("rnk")
-        )
-        .filter(col("rnk") <= 3)
-        .orderBy(col("o_orderpriority"), col("rnk"))
-    },
-
-    // ---- B9: rollup (grouping sets).
-    "q_rollup" -> { (s, dir) =>
-      T(s, dir, "orders")
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), rsum(col("o_totalprice")).as("total"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n"),
-          col("total")
-        )
-        .orderBy(col("status"), col("priority"))
-    },
-
-    // ---- B10: post-aggregation filter (HAVING).
-    "q_having" -> { (s, dir) =>
-      T(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          rsum(col("o_totalprice")).as("spend")
-        )
-        .filter(col("n_orders") >= 14)
-        .orderBy(col("o_custkey"))
-    },
-
-    // ---- B11: EXISTS → left-semi join (broadcast of the filtered side).
-    "q_semi_join" -> { (s, dir) =>
-      val urgent = T(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_custkey")
-      T(s, dir, "customer")
-        .join(urgent, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy(col("c_custkey"))
-    },
-
-    // ---- B12: NOT EXISTS → left-anti join.
-    "q_anti_join" -> { (s, dir) =>
-      val big = T(s, dir, "orders")
-        .filter(col("o_totalprice") > 400000.0)
-        .select("o_custkey")
-      T(s, dir, "customer")
-        .join(big, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy(col("c_custkey"))
-    },
-
-    // ---- B13: union + dedup.
-    "q_union" -> { (s, dir) =>
-      T(s, dir, "customer")
-        .select(col("c_nationkey").as("nationkey"))
-        .union(T(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-        .distinct()
-        .orderBy(col("nationkey"))
-    },
-
-    // ---- B14: conditional aggregation (CASE inside SUM).
-    "q_case_agg" -> { (s, dir) =>
-      T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("l_quantity") > 25, 1L).otherwise(0L)).as("big_qty"),
-          rsum(when(col("l_discount") > 0.05, col("l_extendedprice")).otherwise(0.0)).as("discounted_rev")
-        )
-        .orderBy(col("l_returnflag"))
-    },
-
-    // ---- B15: string functions.
-    "q_string_funcs" -> { (s, dir) =>
-      T(s, dir, "part")
-        .filter(col("p_name").like("%a%"))
-        .select(
-          col("p_partkey"),
-          upper(col("p_brand")).as("brand_u"),
-          substring(col("p_name"), 1, 10).as("name10"),
-          concat(col("p_type"), lit("-"), col("p_brand")).as("label"),
-          length(col("p_name")).as("name_len")
-        )
-        .orderBy(col("p_partkey"))
-        .limit(100)
-    },
-
-    // ---- B16: timestamp truncation + agg over the events table.
-    "q_date_agg" -> { (s, dir) =>
-      T(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), rsum(col("value")).as("total_value"))
-        .orderBy(col("day"), col("event_type"))
-    },
-
-    // ---- B18: EXISTS-per-order + priority histogram (TPC-H Q4 shape).
-    "q4_order_priority" -> { (s, dir) =>
-      val late = T(s, dir, "lineitem")
-        .filter(col("l_shipdate") > lit("1999-01-01").cast("timestamp"))
-        .select(col("l_orderkey"))
-      T(s, dir, "orders")
-        .join(late, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))
-    },
-
-    // ---- B19: nation-pair volume by year (TPC-H Q7 shape).
-    "q7_nation_volume" -> { (s, dir) =>
-      val suppNation = broadcast(
-        T(s, dir, "supplier")
-          .join(T(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-          .select(
-            col("s_suppkey"),
-            col("n_name").as("supp_nation"),
-            col("n_regionkey").as("supp_region")
-          )
-      )
-      val custNation = broadcast(
-        T(s, dir, "customer")
-          .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-          .select(
-            col("c_custkey"),
-            col("n_name").as("cust_nation"),
-            col("n_regionkey").as("cust_region")
-          )
-      )
-      T(s, dir, "lineitem")
-        .join(
-          T(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey")
-        )
-        .join(suppNation, col("l_suppkey") === col("s_suppkey"))
-        .join(custNation, col("o_custkey") === col("c_custkey"))
-        .filter(
-          // inter-region trade, both directions (ASIA=2, EUROPE=3)
-          (col("supp_region") === 2 && col("cust_region") === 3) ||
-            (col("supp_region") === 3 && col("cust_region") === 2)
-        )
-        .groupBy(
-          col("supp_nation"),
-          col("cust_nation"),
-          year(col("l_shipdate")).as("l_year")
-        )
-        .agg(rsum(revenue).as("volume"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    },
-
-    // ---- B20: market-share ratio with conditional aggregation (Q8 shape).
-    "q8_market_share" -> { (s, dir) =>
-      val asiaCust = broadcast(
-        T(s, dir, "customer")
-          .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-          .join(
-            T(s, dir, "region").filter(col("r_name") === "ASIA"),
-            col("n_regionkey") === col("r_regionkey")
-          )
-          .select(col("c_custkey"))
-      )
-      val suppNation = broadcast(
-        T(s, dir, "supplier")
-          .join(T(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      )
-      // The ASIA semi-join runs BEFORE the fact join (round 11): filtering
-      // orders first sends ~1/5 of the table through the orderkey join
-      // instead of semi-filtering the joined fact stream after it, and the
-      // early select drops o_custkey the moment the semi-join has used it.
-      // The fact-fact join itself is left hint-free: small scales broadcast
-      // (statically or via AQE's measured-size conversion), and when the
-      // orders side outgrows the threshold the session's
-      // preferSortMergeJoin=false (see Bench/Verify builders) picks a
-      // shuffled HASH join — the sf10 probe showed the broadcast flipping
-      // to a SortMergeJoin one decade up, and the 60M-row lineitem sort was
-      // the whole 11.2x superlinear term. A pinned shuffle_hash hint was
-      // measured worse: it blocks the AQE broadcast at small scale.
-      val ordersAsia = T(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-        .join(asiaCust, col("o_custkey") === col("c_custkey"), "left_semi")
-        .select("o_orderkey", "o_orderdate")
-      T(s, dir, "lineitem")
-        .join(ordersAsia, col("l_orderkey") === col("o_orderkey"))
-        .join(suppNation, col("l_suppkey") === col("s_suppkey"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(
-          round(
-            dsum(when(col("supp_nation") === "NATION_3", revenue).otherwise(0.0)) /
-              dsum(revenue),
-            6
-          ).as("mkt_share")
-        )
-        .orderBy(col("o_year"))
-    },
-
-    // ---- B21: profit by nation and year (Q9 shape; part join + expression).
-    "q9_profit" -> { (s, dir) =>
-      val parts = broadcast(
-        T(s, dir, "part")
-          .filter(col("p_name").like("%a%"))
-          .select("p_partkey", "p_retailprice")
-      )
-      val suppNation = broadcast(
-        T(s, dir, "supplier")
-          .join(T(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("n_name").as("nation"))
-      )
-      T(s, dir, "lineitem")
-        .join(parts, col("l_partkey") === col("p_partkey"))
-        .join(suppNation, col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("nation"), year(col("l_shipdate")).as("o_year"))
-        .agg(
-          rsum(revenue - col("l_quantity") * col("p_retailprice") * 0.1).as("profit")
-        )
-        .orderBy(col("nation"), col("o_year").desc)
-    },
-
-    // ---- B22: two-bucket conditional counts (Q12 shape).
-    "q12_priority_class" -> { (s, dir) =>
-      T(s, dir, "lineitem")
-        .join(
-          T(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-          col("l_orderkey") === col("o_orderkey")
-        )
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp"))
-        .filter(col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .groupBy(col("l_linestatus"))
-        .agg(
-          sum(
-            when(
-              col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L
-            ).otherwise(0L)
-          ).as("high_line_count"),
-          sum(
-            when(
-              !col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L
-            ).otherwise(0L)
-          ).as("low_line_count")
-        )
-        .orderBy(col("l_linestatus"))
-    },
-
-    // ---- B23: promo revenue ratio (Q14 shape).
-    "q14_promo_revenue" -> { (s, dir) =>
-      T(s, dir, "lineitem")
-        .join(
-          broadcast(T(s, dir, "part").select("p_partkey", "p_type")),
-          col("l_partkey") === col("p_partkey")
-        )
-        .filter(col("l_shipdate") >= lit("1997-03-01").cast("timestamp"))
-        .filter(col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
-        .agg(
-          round(
-            dsum(when(col("p_type") === "ECONOMY", revenue).otherwise(0.0)) * 100.0 /
-              dsum(revenue),
-            6
-          ).as("promo_revenue")
-        )
-    },
-
-    // ---- B24: correlated aggregate subquery (Q17 shape): lineitems far
-    // below their part's average quantity.
-    "q17_small_quantity" -> { (s, dir) =>
-      val li = T(s, dir, "lineitem")
-      val partAvg = li
-        .groupBy(col("l_partkey").as("pk"))
-        .agg(avg(col("l_quantity")).as("avg_qty"))
-      li.join(broadcast(partAvg), col("l_partkey") === col("pk"))
-        .filter(col("l_quantity") < col("avg_qty") * 0.5)
-        .agg(
-          round(dsum(col("l_extendedprice")) / 7.0, 2).as("avg_yearly"),
-          count(lit(1)).as("n")
-        )
-    },
-
-    // ---- B25: HAVING-sum join-back (Q18 shape): large-quantity orders.
-    "q18_large_orders" -> { (s, dir) =>
-      val big = T(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity")).as("total_qty"))
-        .filter(col("total_qty") > 180.0)
-      T(s, dir, "orders")
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(
-          broadcast(T(s, dir, "customer").select("c_custkey", "c_name")),
-          col("o_custkey") === col("c_custkey")
-        )
-        .select(
-          col("c_custkey"),
-          col("c_name"),
-          col("o_orderkey"),
-          col("o_orderdate"),
-          col("o_totalprice"),
-          round(col("total_qty"), 2).as("total_qty")
-        )
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(20)
-    },
-
-    // ---- B26: OR-of-ANDs multi-range predicate (Q19 shape).
-    "q19_discounted" -> { (s, dir) =>
-      T(s, dir, "lineitem")
-        .join(
-          broadcast(T(s, dir, "part").select("p_partkey", "p_brand", "p_size")),
-          col("l_partkey") === col("p_partkey")
-        )
-        .filter(
-          (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(1, 20)) ||
-            (col("p_brand") === "Brand#2" && col("p_size").between(10, 30) &&
-              col("l_quantity").between(10, 40)) ||
-            (col("p_brand") === "Brand#3" && col("p_size").between(20, 50) &&
-              col("l_quantity").between(20, 50))
-        )
-        .agg(rsum(revenue).as("revenue"), count(lit(1)).as("n"))
-    },
-
-    // ---- B27: batch sessionization via LAG + cumulative window (same
-    // semantics as the streaming sessionizer, 30-minute gap; microsecond
-    // integer arithmetic — engine-portable, no seconds truncation).
-    "q_sessionize_batch" -> { (s, dir) =>
-      sessionRollup(T(s, dir, "events"))
-    },
-
-    // ---- B59: the DSv2 catalog path under the oracle gate — the same
-    // engine surface through `SELECT ... FROM <catalog>.<db>.<table>`
-    // three-part names (GlueTableCatalog), proving the DataSource-V2 route
-    // serves byte-identical data, not just the temp-view route.
-    "q_dsv2_catalog" -> { (s, dir) =>
-      s.conf.set(
-        "spark.sql.catalog.glue_v",
-        "graft.catalog.GlueTableCatalog"
-      )
-      s.conf.set("spark.sql.catalog.glue_v.root", dir)
-      s.sql(
-        """SELECT r_name, count(*) AS n_nations,
-          | CAST(round(sum(CAST(s_acctbal AS DECIMAL(30,10))),2) AS DOUBLE) AS total_bal
-          |FROM glue_v.graft.region
-          |JOIN glue_v.graft.nation ON n_regionkey = r_regionkey
-          |JOIN glue_v.graft.supplier ON s_nationkey = n_nationkey
-          |GROUP BY r_name
-          |ORDER BY r_name""".stripMargin
-      )
-    },
-
-    // ---- B58: session-window semantics, round 12: computed by
-    // operators.Sessionize — one shuffle + one sort (the same exchange the
-    // window formulation pays), then a single O(1)-state streaming pass
-    // instead of two WindowExec passes + two hash aggregates. All three
-    // formulations are proven equivalent: SessionEquivalenceSpec pins this
-    // operator and the LAG rollup (B27's shape) against the native
-    // `session_window` aggregate, INCLUDING a planted exact-gap fixture at
-    // the one point they could diverge (the native operator merges
-    // inclusively at last+gap). Measured at sf10, one window: native 3.7 s,
-    // LAG rollup 2.8 s, this pass 1.85 s vs DuckDB 0.96 s paired. The
-    // native operator stays the D2 streaming path, where its incremental
-    // state is the point.
-    "q_session_window" -> { (s, dir) =>
-      operators.Sessionize.userSessionStats(T(s, dir, "events"), 1800000000L)
-    },
-
-    // ---- B39: join back on an aggregate max (Q15 top-supplier shape).
-    "q15_top_supplier" -> { (s, dir) =>
-      val rev = T(s, dir, "lineitem")
-        .filter(
-          col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("l_shipdate") < lit("1996-04-01").cast("timestamp")
-        )
-        .groupBy(col("l_suppkey"))
-        .agg(rsum(revenue).as("total_rev"))
-        // consumed by both the supplier join and the max; pin at
-        // aggregate scale (|suppkeys| rows) so the fact scan + suppkey
-        // aggregation execute once, not once per consumer
-        .localCheckpoint()
-      val mx = rev.agg(max(col("total_rev")).as("mx"))
-      T(s, dir, "supplier")
-        .join(rev, col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(mx), col("total_rev") === col("mx"))
-        .select("s_suppkey", "s_name", "total_rev")
-        .orderBy("s_suppkey")
-    },
-
-    // ---- B40: anti-join + scalar subquery (Q22 shape): wealthy customers
-    // with no orders, by nation.
-    "q22_sales_opportunity" -> { (s, dir) =>
-      val cust = T(s, dir, "customer")
-      val avgBal = cust
-        .filter(col("c_acctbal") > 0.0)
-        .agg(
-          (dsum(col("c_acctbal")) /
-            count(col("c_acctbal"))).as("ab")
-        )
-      cust
-        .join(broadcast(avgBal))
-        .filter(col("c_acctbal") > col("ab"))
-        .join(
-          T(s, dir, "orders")
-            .filter(col("o_orderpriority") === "1-URGENT")
-            .select("o_custkey"),
-          col("c_custkey") === col("o_custkey"),
-          "left_anti"
-        )
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("numcust"), rsum(col("c_acctbal")).as("totacctbal"))
-        .orderBy(col("c_nationkey"))
-    },
-
-    // ---- B41: share-of-total HAVING (Q11 shape): parts above a revenue
-    // fraction of the whole.
-    "q11_important_parts" -> { (s, dir) =>
-      val li = T(s, dir, "lineitem")
-      // `pr` feeds BOTH join sides (the rows and the broadcast average);
-      // without pinning, the executed plan nests the whole fact-table
-      // scan + partkey aggregation inside the broadcast subtree and runs
-      // it twice. localCheckpoint bounds the pin at aggregate scale
-      // (|partkeys| rows, not |lineitem|).
-      val pr = li
-        .groupBy(col("l_partkey"))
-        .agg(rsum(revenue).as("value"))
-        .localCheckpoint()
-      val tot = pr.agg(
-        (dsum(col("value")) /
-          count(col("value"))).as("av")
-      )
-      pr.join(broadcast(tot))
-        .filter(col("value") > col("av") * 1.5)
-        .select(col("l_partkey"), col("value"))
-        .orderBy(col("value").desc, col("l_partkey"))
-    },
-
-    // ---- B42: multi-stage event funnel (view -> click -> purchase ordering
-    // per user, microsecond-exact).
-    "q_event_funnel" -> { (s, dir) =>
-      val stages = T(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-          min(when(col("event_type") === "click", col("ts"))).as("t_click"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase")
-        )
-      stages.agg(
-        count(col("t_view")).as("n_view"),
-        sum(
-          when(
-            col("t_click") > col("t_view"), 1L
-          ).otherwise(0L)
-        ).as("n_view_click"),
-        sum(
-          when(
-            col("t_click") > col("t_view") && col("t_purchase") > col("t_click"),
-            1L
-          ).otherwise(0L)
-        ).as("n_full_funnel")
-      )
-    },
-
-    // ---- B43: vocabulary extraction — top bigrams by frequency (the
-    // corpus-statistics side of a training-data pipeline).
-    "text_vocab_ngrams" -> { (s, dir) =>
-      T(s, dir, "documents")
-        .select(
-          explode(functions.TextFunctions.wordShingles(col("text"), 2)).as("ngram")
-        )
-        .groupBy(col("ngram"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("ngram"))
-        .limit(100)
-    },
-
-    // ---- B36: CUBE with grouping() indicators.
-    "q_cube" -> { (s, dir) =>
-      T(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(
-          count(lit(1)).as("n"),
-          grouping(col("o_orderstatus")).cast("int").as("g_status"),
-          grouping(col("o_orderpriority")).cast("int").as("g_prio")
-        )
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n"),
-          col("g_status"),
-          col("g_prio")
-        )
-        .orderBy(col("status"), col("priority"), col("g_status"), col("g_prio"))
-    },
-
-    // ---- B37: window navigation (lead / first_value per partition).
-    "q_window_nav" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      T(s, dir, "orders")
-        .select(
-          col("o_custkey"),
-          col("o_orderkey"),
-          col("o_orderdate"),
-          lead(col("o_orderkey"), 1).over(w).as("next_orderkey"),
-          first_value(col("o_orderkey")).over(w).as("first_orderkey")
-        )
-        .filter(col("o_custkey") < 100)
-        .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-    },
-
-    // ---- B38: higher-order array functions over the embedding column.
-    "q_vector_norms" -> { (s, dir) =>
-      T(s, dir, "embeddings")
-        .select(
-          col("label"),
-          expr(
-            "round(sqrt(aggregate(embedding, cast(0.0 AS double), " +
-              "(acc, x) -> acc + cast(x AS double) * cast(x AS double))), 6)"
-          ).as("norm"),
-          size(col("embedding")).as("dims")
-        )
-        .groupBy(col("label"))
-        .agg(
-          count(lit(1)).as("n"),
-          rsum(col("norm"), 4).as("sum_norm"),
-          max(col("dims")).as("dims")
-        )
-        .orderBy(col("label"))
-    },
-
-    // ---- B35: left-outer join + count-of-counts histogram (Q13 shape).
-    "q13_customer_distribution" -> { (s, dir) =>
-      val perCust = T(s, dir, "customer")
-        .join(
-          T(s, dir, "orders")
-            .filter(col("o_orderpriority") =!= "5-LOW")
-            .select("o_orderkey", "o_custkey"),
-          col("c_custkey") === col("o_custkey"),
-          "left_outer"
-        )
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-      perCust
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    },
-
-    // ---- B34: the same engine surface through spark.sql text — the views
-    // registered by GlueCatalogProvider serve SQL directly.
-    "q_sql_surface" -> { (s, dir) =>
-      Tables.provider(s, dir) // ensure registration
-      s.sql(
-        """SELECT o_orderstatus,
-          | count(*) AS n,
-          | CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,10))),2) AS DOUBLE) AS total
-          |FROM orders
-          |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |GROUP BY o_orderstatus
-          |ORDER BY o_orderstatus""".stripMargin
-      )
-    },
-
-    // ---- B57: explicit GROUPING SETS (neither rollup nor cube): chosen
-    // grouping combinations in one pass over the fact table.
-    "q_grouping_sets" -> { (s, dir) =>
-      Tables.provider(s, dir)
-      graft.functions.GraftFunctions.register(s)
-      // Pre-aggregate by the full key BEFORE the grouping sets: Spark plans
-      // GROUPING SETS as Expand (one input copy per set), so expanding the
-      // fact table triples the scanned rows — 18M Expand rows at sf1 for a
-      // 6-combination key. Aggregating to the ~|rf|x|ls| pre-image first
-      // makes Expand run on a handful of rows; count(*) folds into sum(n).
-      // Identical semantics (grouping() flags derive from the set
-      // expansion, not the base rows): the unchanged oracle hash-matches.
-      // The 60M-row pre-agg sum rides graft_fixed_sum10 (round 11), same
-      // exact-decimal contract as rsum.
-      s.sql(
-        """WITH pre AS (
-          |  SELECT l_returnflag, l_linestatus, count(*) AS pn,
-          |    graft_fixed_sum10(l_quantity) AS pqty
-          |  FROM lineitem GROUP BY l_returnflag, l_linestatus
-          |)
-          |SELECT l_returnflag, l_linestatus,
-          | CAST(grouping(l_returnflag) AS INT) AS g_rf,
-          | CAST(grouping(l_linestatus) AS INT) AS g_ls,
-          | sum(pn) AS n,
-          | CAST(round(sum(pqty), 2) AS DOUBLE) AS qty
-          |FROM pre
-          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-          |ORDER BY g_rf, g_ls, l_returnflag, l_linestatus""".stripMargin
-      )
-    },
-
-    // ---- B30: INTERSECT — nations having both customers and suppliers.
-    "q_intersect" -> { (s, dir) =>
-      T(s, dir, "customer")
-        .select(col("c_nationkey").as("nationkey"))
-        .intersect(T(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-        .orderBy("nationkey")
-    },
-
-    // ---- B31: EXCEPT — customer nations without a high-balance supplier.
-    "q_except" -> { (s, dir) =>
-      T(s, dir, "customer")
-        .select(col("c_nationkey").as("nationkey"))
-        .except(
-          T(s, dir, "supplier")
-            .filter(col("s_acctbal") > 8000.0)
-            .select(col("s_nationkey").as("nationkey"))
-        )
-        .orderBy("nationkey")
-    },
-
-    // ---- B32: scalar subquery — orders above the global average price.
-    "q_scalar_subquery" -> { (s, dir) =>
-      val ord = T(s, dir, "orders")
-      val globalAvg = ord.agg(
-        dsum(col("o_totalprice")) /
-          count(col("o_totalprice"))
-      ).head().getDouble(0)
-      ord
-        .filter(col("o_totalprice") > globalAvg * 1.5)
-        .agg(
-          count(lit(1)).as("n"),
-          rsum(col("o_totalprice")).as("total")
-        )
-    },
-
-    // ---- B33: exact interpolated percentiles per group — via the
-    // histogram+selection two-pass operator, NOT percentile(): the built-in
-    // buffers every value of a group in one agg buffer, which with 3 status
-    // groups over a 100 TB orders table is an unsplittable executor OOM.
-    "q_percentiles" -> { (s, dir) =>
-      operators.ExactQuantiles
-        .groupQuantiles(
-          T(s, dir, "orders"),
-          "o_orderstatus",
-          "o_totalprice",
-          Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)
-        )
-        .groupBy(col("g"))
-        // conditional agg, not pivot(): one row per label per group exists
-        // by construction, and pivot costs an extra exchange + two
-        // aggregate stages for the same 3-column widening
-        .agg(
-          round(min(when(col("lbl") === "p50", col("q"))), 2).as("p50"),
-          round(min(when(col("lbl") === "p90", col("q"))), 2).as("p90"),
-          round(min(when(col("lbl") === "p99", col("q"))), 2).as("p99")
-        )
-        .select(col("g").as("o_orderstatus"), col("p50"), col("p90"), col("p99"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // ---- B29: batch twin of the streaming windowed aggregation (D1): same
-    // tumbling-window plan, verified against an independent engine.
-    "q_stream_windowed_batch" -> { (s, dir) =>
-      // widenIfNarrow on the BATCH side only (round 13): the scan + window
-      // bucketing + fixed-point partial agg ran as one task on the
-      // one-split events scan (JobProbe: 296 ms of a 0.94 s run at sf0.1).
-      // The widening cannot live inside windowedCounts — the streaming
-      // path shares it and a streaming DataFrame cannot answer .rdd.
-      streaming.EventStreams
-        .windowedCounts(
-          operators.Spread.widenIfNarrow(T(s, dir, "events"), "user_id")
-        )
-        .orderBy(col("window_start"), col("event_type"))
-    },
-
-    // ---- B28: semi-structured JSON extraction from the events props column.
-    "q_json_extract" -> { (s, dir) =>
-      T(s, dir, "events")
-        .select(
-          col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k")
-        )
-        .groupBy(col("event_type"))
-        .agg(
-          count(col("k")).as("n"),
-          sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"),
-          max(col("k")).as("max_k")
-        )
-        .orderBy(col("event_type"))
-    },
-
-    // ---- B17: information_schema parity, through the DSv2 catalog — the
-    // reference demo's literal `SELECT * FROM information_schema.tables`
-    // SQL (demo.rs). Oracled with the expected metadata as literal VALUES:
-    // the rows derive from the parquet schemas, which are fixed across
-    // scale factors (TESTDATA.md).
-    "q_info_tables" -> { (s, dir) =>
-      infoSchemaSql(s, dir, "SELECT * FROM glue.information_schema.tables ORDER BY table_name")
-    },
-    "q_info_columns" -> { (s, dir) =>
-      infoSchemaSql(
-        s,
-        dir,
-        "SELECT * FROM glue.information_schema.columns ORDER BY table_name, ordinal_position"
-      )
-    },
-
-    // ---- C1: exact dedup groups by md5 content fingerprint.
-    "dedup_exact" -> { (s, dir) =>
-      operators.Dedup
-        .exactGroups(T(s, dir, "documents"), "text", "doc_id")
-        .orderBy("fingerprint")
-    },
-
-    // ---- C29: canonical-URL dedup. The corpus has no URL column, so both
-    // engines synthesize the SAME messy URL per doc — scheme/host case,
-    // www., default port, tracking params, param order, fragment, trailing
-    // slash all varied deterministically by doc_id — and must collapse them
-    // to identical canonical groups.
-    "dedup_url" -> { (s, dir) =>
-      val d = col("doc_id")
-      val url = concat(
-        when(d % 2 === 0, lit("https://")).otherwise(lit("HTTPS://")),
-        when(d % 3 === 0, lit("www.")).otherwise(lit("")),
-        when(d % 2 === 1, upper(col("source"))).otherwise(col("source")),
-        lit(".Example.COM"),
-        when(d % 4 === 1, lit(":443")).otherwise(lit("")),
-        lit("/Docs/"),
-        (d % 7).cast("string"),
-        when(d % 2 === 0, lit("/")).otherwise(lit("")),
-        when(
-          d % 3 === 0,
-          concat(lit("?page="), (d % 5).cast("string"), lit("&utm_campaign=c"))
-        ).when(
-          d % 3 === 1,
-          concat(lit("?utm_source=feed&page="), (d % 5).cast("string"))
-        ).otherwise(concat(lit("?fbclid=abc"), d.cast("string"))),
-        when(d % 5 === 0, lit("#sec")).otherwise(lit(""))
-      )
-      operators.Dedup
-        .urlGroups(
-          T(s, dir, "documents").withColumn("url", url),
-          "url",
-          "doc_id"
-        )
-        .orderBy("canonical_url")
-    },
-
-    // ---- C30: bloom-gated exact membership dedup. The bloom filter only
-    // prunes (false positives culled by the verify join), so the result is
-    // deterministic and the oracle is a plain NOT IN — while the Spark plan
-    // must route bloom-negative rows around the shuffle entirely.
-    "dedup_bloom" -> { (s, dir) =>
-      val docs = T(s, dir, "documents")
-      operators.Dedup
-        .bloomNewDocs(
-          docs.filter(col("doc_id") % 2 === 1),
-          docs.filter(col("doc_id") % 2 === 0),
-          "text",
-          "doc_id",
-          fpp = 0.01
-        )
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-
-    // ---- C31: paragraph-level exact dedup. The synthetic corpus has no
-    // paragraph breaks, so both engines build the same two-paragraph docs
-    // (own text + text of doc_id % 50) and must drop repeated paragraphs
-    // keeping the first (doc_id, pos) occurrence, reassembling in order.
-    "dedup_paragraph" -> { (s, dir) =>
-      val docs = T(s, dir, "documents")
-      val two = docs
-        .join(
-          docs.select(col("doc_id").as("o_id"), col("text").as("o_text")),
-          col("doc_id") % 50 === col("o_id")
-        )
-        .select(
-          col("doc_id"),
-          concat(col("text"), lit("\n\n"), col("o_text")).as("text")
-        )
-      operators.Dedup.paragraphDedup(two, "text", "doc_id").orderBy("doc_id")
-    },
-
-    // ---- C2: MinHash-LSH candidate pairs. Oracled: at gate scale the
-    // banding candidate set coincides exactly with the O(n²) 3-gram
-    // Jaccard >= 0.8 pair set, so the same quadratic oracle that verifies
-    // C4 verifies the candidates directly. Recall is structural (32 bands
-    // × 4 rows: P(miss) < 1e-7 at j = 0.8); precision is data-dependent —
-    // a benign banding false-positive would surface as a row diff, flagged
-    // deliberately so a collision-rate change is visible, not silent.
-    "dedup_minhash_lsh" -> { (s, dir) =>
-      operators.Dedup
-        .minhashCandidatePairs(T(s, dir, "documents"), "text", "doc_id")
-        .orderBy("a_id", "b_id")
-    },
-
-    // ---- C3: SimHash near-dup candidates with hamming distance (rows-only).
-    "dedup_simhash" -> { (s, dir) =>
-      operators.Dedup
-        .simhashPairs(T(s, dir, "documents"), "text", "doc_id", maxHamming = 7)
-        .orderBy("a_id", "b_id")
-    },
-
-    // ---- C4: LSH candidates + exact 3-gram Jaccard >= 0.8 (oracle: full
-    // O(n^2) Jaccard in DuckDB — the LSH path must find the same pairs).
-    "dedup_ngram_jaccard" -> { (s, dir) =>
-      operators.Dedup
-        .nearDupPairs(T(s, dir, "documents"), "text", "doc_id", threshold = 0.8)
-        .orderBy("a_id", "b_id")
-    },
-
-    // ---- C2b: the at-scale calibration loop as a gate row. Exact pair
-    // ground truth within a deterministic half-sample (quadratic only on
-    // the sample), minhash banding at FULL corpus scale, recall of
-    // sample-internal truth measured and bounded. The oracle recomputes
-    // the sample size and exact pair count (hash-matched values) and pins
-    // the recall bound.
-    "dedup_recall_sample" -> { (s, dir) =>
-      operators.Dedup.minhashSampledRecall(
-        T(s, dir, "documents"),
-        "text",
-        "doc_id",
-        threshold = 0.8,
-        modulus = 2,
-        floor = 0.8
-      )
-    },
-
-    // ---- C4b: pairs → duplicate clusters via connected components (oracle:
-    // recursive-CTE transitive closure over the same verified pair set).
-    "dedup_clusters" -> { (s, dir) =>
-      operators.Dedup
-        .nearDupClusters(T(s, dir, "documents"), "text", "doc_id", threshold = 0.8)
-        .orderBy("id")
-    },
-
-    // ---- C4c: the deduplicated corpus — keep each cluster's canonical
-    // (smallest-id) document; everything else is a near-duplicate drop.
-    "dedup_keep_canonical" -> { (s, dir) =>
-      val clusters = operators.Dedup
-        .nearDupClusters(T(s, dir, "documents"), "text", "doc_id", threshold = 0.8)
-      clusters
-        .filter(col("id") === col("component"))
-        .select(col("id").as("doc_id"))
-        .join(T(s, dir, "documents").select("doc_id", "n_chars"), "doc_id")
-        .orderBy("doc_id")
-    },
-
-    // ---- C5: embedding near-dups via hyperplane LSH buckets with 1-bit
-    // multi-probe on both sides (rows-only: bucket recall is probabilistic
-    // by design; recall + degenerate-bucket bounds spec'd in tests).
-    "dedup_embedding" -> { (s, dir) =>
-      operators.Dedup
-        .embeddingNearDups(
-          T(s, dir, "embeddings"),
-          "embedding",
-          "vec_id",
-          threshold = 0.4
-        )
-        .orderBy("a_id", "b_id")
-    },
-
-    // ---- C5b: EXACT embedding near-dup pairs — the quadratic ground truth
-    // that the LSH form (C5) approximates, and the recall denominator its
-    // spec measures against. Oracled in DuckDB via list_cosine_similarity;
-    // the round-4 threshold cut has measured margin 1.28e-4 to the nearest
-    // pair at sf0.01, so no float-boundary flakiness.
-    "dedup_embedding_exact" -> { (s, dir) =>
-      operators.Dedup
-        .exactEmbeddingPairs(
-          T(s, dir, "embeddings"),
-          "embedding",
-          "vec_id",
-          threshold = 0.4
-        )
-        .orderBy("a_id", "b_id")
-    },
-
-    // ---- C6: exact brute-force top-k cosine for 5 query vectors (oracle).
-    "ann_bruteforce" -> { (s, dir) =>
-      val emb = T(s, dir, "embeddings")
-      operators.SimilaritySearch
-        .bruteForceTopK(emb, emb.filter(col("vec_id") < 5), "embedding", "vec_id", k = 10)
-        .orderBy("query_id", "rank")
-    },
-
-    // ---- C7: LSH-bucketed ANN, same shape (rows-only; recall spec'd and
-    // gate-checked by the ann_lsh_recall contract row). 7 tables × 4 planes
-    // (one packed 28-bit signature, OR-amplified): single-table recall on
-    // this corpus's moderate-cosine neighbors measured 0.2-0.7; the
-    // amplified form measures ≥0.9 per query.
-    "ann_lsh" -> { (s, dir) =>
-      val emb = T(s, dir, "embeddings")
-      operators.SimilaritySearch
-        .lshTopK(
-          emb,
-          emb.filter(col("vec_id") < 5),
-          "embedding",
-          "vec_id",
-          k = 10,
-          numPlanes = 4,
-          numTables = 7
-        )
-        .orderBy("query_id", "rank")
-    },
-
-    // ---- C7 contract row: the LSH path's recall@10 against the exact
-    // top-10, certified per query. The engine runs BOTH paths and emits a
-    // boolean bound; the oracle asserts the bound holds, so a recall
-    // regression (plane/table/probe change, kernel bug) flips this row red
-    // while ann_lsh itself stays free to be approximate. Measured at the
-    // gate params: 1.0 recall on every query; floor 0.8 leaves honest
-    // margin.
-    "ann_lsh_recall" -> { (s, dir) =>
-      val emb = T(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 5)
-      val ss = operators.SimilaritySearch
-      ss.recallContract(
-          ss.bruteForceTopK(emb, qs, "embedding", "vec_id", k = 10),
-          ss.lshTopK(emb, qs, "embedding", "vec_id", k = 10, numPlanes = 4, numTables = 7),
-          k = 10,
-          floor = 0.8
-        )
-        .orderBy("query_id")
-    },
-
-    // ---- C7b: IVF ANN — centroid index + nProbe search (rows-only).
-    "ann_ivf" -> { (s, dir) =>
-      val emb = T(s, dir, "embeddings")
-      operators.SimilaritySearch
-        .ivfTopK(
-          emb,
-          emb.filter(col("vec_id") < 5),
-          "embedding",
-          "vec_id",
-          k = 10,
-          numCentroids = 16,
-          nProbe = 6,
-          refineIterations = 2
-        )
-        .orderBy("query_id", "rank")
-    },
-
-    // ---- C7b contract row: IVF recall@10 certified the same way. Measured
-    // 0.9 per query at 16 centroids / nProbe 6 / 2 Lloyd refinements on the
-    // weakly-clustered gate corpus; floor 0.8.
-    "ann_ivf_recall" -> { (s, dir) =>
-      val emb = T(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 5)
-      val ss = operators.SimilaritySearch
-      ss.recallContract(
-          ss.bruteForceTopK(emb, qs, "embedding", "vec_id", k = 10),
-          ss.ivfTopK(
-            emb,
-            qs,
-            "embedding",
-            "vec_id",
-            k = 10,
-            numCentroids = 16,
-            nProbe = 6,
-            refineIterations = 2
-          ),
-          k = 10,
-          floor = 0.8
-        )
-        .orderBy("query_id")
-    },
-
-    // ---- C8: language-id heuristic, aggregated confusion counts (oracle).
-    "text_langid" -> { (s, dir) =>
-      // widenIfNarrow (round 13): the langid kernel sits below the groupBy
-      // exchange, so a one-split scan ran it as one task (JobProbe: 307 ms
-      // of a 0.63 s run at sf0.1); no-op at scale.
-      operators.Spread
-        .widenIfNarrow(T(s, dir, "documents"), "doc_id")
-        .select(col("lang"), functions.TextFunctions.langId(col("text")).as("predicted"))
-        .groupBy("lang", "predicted")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "predicted")
-    },
-
-    // ---- C9: quality scoring (oracle).
-    "text_quality" -> { (s, dir) =>
-      val tf = functions.TextFunctions
-      T(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          length(tf.normText(col("text"))).as("n_chars_norm"),
-          size(tf.wsTokens(col("text"))).as("n_tokens"),
-          tf.qualityScore(col("text")).as("quality")
-        )
-    // Projection-only full-corpus transforms carry NO final ORDER BY (here
-    // and in the other per-row text/chunk rows): the gate compare sorts
-    // rows itself, the range sort's boundary sampling re-executes the
-    // whole scan+compute stage a second time (the plan has no exchange to
-    // truncate it), and a 100 TB pipeline never globally sorts a per-row
-    // transform's output anyway. ORDER BY stays wherever LIMIT needs it.
-    },
-
-    // ---- C10: token counting, whitespace + BPE-ish (oracle).
-    "text_tokencount" -> { (s, dir) =>
-      val tf = functions.TextFunctions
-      T(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          size(tf.wsTokens(col("text"))).as("ws_tokens"),
-          size(tf.bpeTokens(col("text"))).as("bpe_tokens")
-        ) // no ORDER BY — see text_quality
-    },
-
-    // ---- C11: content fingerprinting (oracle).
-    "text_fingerprint" -> { (s, dir) =>
-      val tf = functions.TextFunctions
-      T(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          tf.fingerprint(col("text")).as("fingerprint"),
-          length(tf.normText(col("text"))).as("n_chars_norm")
-        ) // no ORDER BY — see text_quality
-    },
-
-    // ---- C12: multimodal decode — mixed-modality fixture with REAL
-    // container bytes (PNG-encoded pixels every third doc, WAV-encoded PCM
-    // every third, raw text the rest), decoded by the real javax.imageio /
-    // javax.sound.sampled codecs per partition (rows-only: feature values
-    // aren't SQL-expressible; codec correctness is spec'd on known
-    // pixels/samples in MultimodalSpec).
-    "multimodal_features" -> { (s, dir) =>
-      import s.implicits._
-      operators.Multimodal
-        .extractFeatures(
-          operators.Multimodal.withSyntheticMedia(T(s, dir, "documents"))
-        )
-        .select(
-          col("doc_id"),
-          col("n_bytes"),
-          col("checksum"),
-          size(col("features")).as("n_dims")
-        )
-    // no ORDER BY: the gate compare sorts rows itself, and a range sort
-    // here would re-execute the whole encode+decode chain a second time
-    // just to sample partition boundaries (measured 2.2x on the gate row)
-    },
-
-    // ---- C12 contract row: end-to-end decode verification. Modality is
-    // whichever REAL codec accepted the bytes; pixel channel sums, audio
-    // container facts and raw byte lengths are all independently
-    // recomputable by the oracle from doc_id/text arithmetic — so this row
-    // hash-checks that javax.imageio/javax.sound round-trip the synthetic
-    // containers bit-exactly, through the same per-partition plumbing the
-    // feature extractor uses.
-    "multimodal_decode_check" -> { (s, dir) =>
-      operators.Multimodal
-        .decodeCheck(
-          operators.Multimodal.withSyntheticMedia(T(s, dir, "documents"))
-        )
-        .toDF()
-    // no ORDER BY — same double-execution argument as multimodal_features
-    },
-
-    // ---- C19: boilerplate span detection — 8-token spans repeated across
-    // >= 3 distinct documents (the cross-doc repeated-substring signal that
-    // drives template/boilerplate stripping). Explode is bounded by tokens
-    // per doc; the shuffle is keyed by span.
-    "text_boilerplate_spans" -> { (s, dir) =>
-      // Count on 8-byte span HASHES (native ShingleHashes kernel — span
-      // strings never materialize or shuffle), two-phase to avoid a
-      // countDistinct Expand; then resolve only the qualifying spans back to
-      // strings via a broadcast semi-join on the hash. The hash of a single
-      // 8-token span equals the corresponding element of the full-text
-      // hashing, so the join key is exact (collisions ~n²/2⁶⁴, same argument
-      // as the minhash pipeline; the oracle gate would catch one).
-      // Measured 5.0s -> 1.2s at sf0.1 vs aggregating the strings.
-      locally {
-        val tf = functions.TextFunctions
-        implicit val sp: SparkSession = s
-        val docs = T(s, dir, "documents")
-        // each span hash remembers one exemplar (doc, position); qualifying
-        // hashes then recover their span STRING from just those ~50
-        // exemplar documents — no string ever enters the big shuffle.
-        // widenIfNarrow (round 13): the 8-gram hash kernel + posexplode ran
-        // as one task on the one-split scan (JobProbe: 329 ms of a 1.3 s
-        // run at sf0.1); the exemplar-resolve side is NOT widened — its
-        // kernel evaluates only for broadcast-probe matches (~50 rows).
-        val stats = operators.Spread
-          .widenIfNarrow(docs, "doc_id")
-          .select(
-            col("doc_id"),
-            posexplode(
-              functions.GraftFunctions
-                .shingleHashes(tf.normText(col("text")), 8)
-            ).as(Seq("pos", "h"))
-          )
-          .groupBy(col("h"), col("doc_id"))
-          .agg(count(lit(1)).as("n_in_doc"), min(col("pos")).as("pos0"))
-          .groupBy(col("h"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("n_in_doc")).as("n_occurrences"),
-            min(struct(col("doc_id"), col("pos0"))).as("ex")
-          )
-          .filter(col("n_docs") >= 3)
-          .select(
-            col("n_docs"),
-            col("n_occurrences"),
-            col("ex.doc_id").as("ex_doc"),
-            col("ex.pos0").as("ex_pos")
-          )
-        docs
-          .join(broadcast(stats), col("doc_id") === col("ex_doc"))
-          .select(
-            element_at(tf.wordShingles(col("text"), 8), col("ex_pos") + 1)
-              .as("span"),
-            col("n_docs"),
-            col("n_occurrences")
-          )
-          .orderBy(col("n_docs").desc, col("span"))
-          .limit(50)
-      }
-    },
-
-    // ---- C18: the composed corpus-prep flagship: exact dedup → quality
-    // gate → diversity gate → sequence packing, one declarative plan. Two
-    // shuffles total (fingerprint window, pack window) — Catalyst pipelines
-    // the scalar gates into the scans; every stage is individually oracled
-    // elsewhere and the whole chain is oracled here.
-    "docs_prepare_corpus" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      implicit val sp: SparkSession = s
-      val tf = functions.TextFunctions
-      // n_tok/ttr from the fused diversity kernel, let-bound + inlined so
-      // the ttr gate below cannot re-inline the tokenizer chain
-      val base = T(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          col("lang"),
-          col("source"),
-          tf.normText(col("text")).as("norm"),
-          tf.qualityScore(col("text")).as("quality")
-        )
-        .withColumn("fp", md5(col("norm")))
-        .select(
-          col("*"),
-          inline(
-            array(
-              element_at(
-                transform(
-                  array(functions.GraftFunctions.diversityStats(col("norm"))),
-                  a =>
-                    struct(
-                      element_at(a, 1).cast("int").as("n_tok"),
-                      round(
-                        element_at(a, 2).cast("double") / element_at(a, 1),
-                        4
-                      ).as("ttr")
-                    )
-                ),
-                1
-              )
-            )
-          )
-        )
-      val kept = base
-        .withColumn("keeper", min("doc_id").over(Window.partitionBy("fp")))
-        .filter(col("doc_id") === col("keeper"))
-        .filter(col("quality") >= 0.5 && col("ttr") >= 0.45)
-      val wp = Window
-        .partitionBy("lang", "source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      kept
-        .withColumn("cum", sum(col("n_tok").cast("long")).over(wp))
-        .withColumn("pack_id", expr("(cum - n_tok) div 512"))
-        .select(
-          col("doc_id"),
-          col("lang"),
-          col("source"),
-          col("n_tok"),
-          col("ttr"),
-          col("quality"),
-          col("pack_id")
-        )
-        .orderBy("doc_id")
-    },
-
-    // ---- C17: incremental (batch-vs-corpus) dedup — odd doc_ids are the
-    // incoming batch, even doc_ids the reference corpus. The oracle
-    // re-derives the kept set with a direct O(|in|·|ref|) Jaccard join, so
-    // the gate proves the LSH candidate path finds every cross-corpus
-    // near-dup at the threshold.
-    "dedup_incremental" -> { (s, dir) =>
-      val docs = T(s, dir, "documents")
-      val incoming = docs.filter(col("doc_id") % 2 === 1)
-      val reference = docs.filter(col("doc_id") % 2 === 0)
-      operators.Dedup
-        .dedupAgainstCorpus(incoming, reference, "text", "doc_id", threshold = 0.8)
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-
-    // ---- B56: two-phase salted aggregation (operators.Salt) — the
-    // heavy-hitter-key pattern, oracle-checked against the direct groupBy
-    // (identical results for decomposable aggregates; decimal-exact sums so
-    // both phases are order-independent).
-    "q_salted_agg" -> { (s, dir) =>
-      val li = T(s, dir, "lineitem")
-        .select(
-          col("l_suppkey"),
-          col("l_quantity").cast("decimal(30,10)").as("qty_dec")
-        )
-      operators.Salt
-        .saltedSum(li, Seq("l_suppkey"), "qty_dec", salts = 8)
-        .select(
-          col("l_suppkey"),
-          round(col("sum_qty_dec"), 2).cast("double").as("sum_qty")
-        )
-        .orderBy("l_suppkey")
-    },
-
-    // ---- B53: distribution window functions (ntile / cume_dist /
-    // percent_rank) — exact rational outputs, engine-portable.
-    "q_window_distribution" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
-      T(s, dir, "supplier")
-        .select(
-          col("s_suppkey"),
-          col("s_nationkey"),
-          ntile(4).over(w).as("quartile"),
-          round(cume_dist().over(w), 6).as("cd"),
-          round(percent_rank().over(w), 6).as("pr")
-        )
-        .orderBy("s_suppkey")
-    },
-
-    // ---- B54: ordered string aggregation (listagg): deterministic because
-    // the member list is sorted before joining.
-    "q_listagg" -> { (s, dir) =>
-      T(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .groupBy(col("c_nationkey"))
-        .agg(
-          array_join(sort_array(collect_list(col("c_name"))), ",").as("members"),
-          count(lit(1)).as("n")
-        )
-        .orderBy("c_nationkey")
-    },
-
-    // ---- B55: per-group mode via explicit argmax (count desc, value desc) —
-    // built-in mode() tie-breaking differs across engines, the window
-    // formulation is deterministic on both.
-    "q_mode" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val counts = T(s, dir, "customer")
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window
-        .partitionBy("c_nationkey")
-        .orderBy(col("n").desc, col("c_mktsegment").desc)
-      counts
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("c_nationkey"), col("c_mktsegment").as("mode_seg"), col("n"))
-        .orderBy("c_nationkey")
-    },
-
-    // ---- B50: pivot — wide conditional aggregation with explicit pivot
-    // values (explicit list keeps the plan a single pass, no values-discovery
-    // job, and makes the output schema deterministic for the oracle).
-    "q_pivot" -> { (s, dir) =>
-      T(s, dir, "orders")
-        .groupBy(col("o_orderstatus"))
-        .pivot(
-          "o_orderpriority",
-          Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-        )
-        .count()
-        .orderBy("o_orderstatus")
-    },
-
-    // ---- B51: RANGE-frame window — 7-day moving revenue over the daily
-    // series. Range frames bound state by event-time distance, the window
-    // shape rolling metrics need; day count per partition is bounded so the
-    // single unpartitioned window is safe (pre-aggregated input).
-    "q_window_range" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val daily = T(s, dir, "orders")
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast("decimal(30,10)")).as("rev"))
-      val w = Window.orderBy(unix_date(col("day"))).rangeBetween(-6, 0)
-      daily
-        .select(
-          col("day"),
-          round(sum(col("rev")).over(w), 2).cast("double").as("mov7")
-        )
-        .orderBy("day")
-    },
-
-    // ---- B52: sketch aggregates (rows-only: HLL/KLL internals are
-    // engine-specific; the spec asserts error bounds against exact values).
-    "q_approx_stats" -> { (s, dir) =>
-      T(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(
-          approx_count_distinct(col("user_id"), rsd = 0.02).as("approx_users"),
-          percentile_approx(col("value"), lit(0.5), lit(10000)).as("p50"),
-          percentile_approx(col("value"), lit(0.95), lit(10000)).as("p95")
-        )
-        .orderBy("event_type")
-    },
-
-    // ---- B52 contract row: the sketches' accuracy bounds, certified.
-    // Exact NDV is computed alongside the HLL estimate (hash-matched
-    // value); the approx-percentile values are rank-checked against the
-    // actual distribution in a second keyed pass (fraction <= approx-p50
-    // must reach 0.5-tol, fraction < it must not exceed 0.5+tol — robust
-    // to duplicate values). The oracle recomputes the exact NDV and pins
-    // the booleans, so sketch-accuracy regressions flip a hash-compared
-    // row instead of hiding behind "approximate".
-    "q_approx_stats_check" -> { (s, dir) =>
-      val ev = T(s, dir, "events")
-      val tol = 0.02
-      // Two-consumer `agg` deliberately left UNPINNED (round 13, measured
-      // out): the broadcast rank pass recomputes a column-pruned copy of
-      // this aggregation (percentile sketches only — the optimizer drops
-      // the countDistinct expand on that side), which looks like the
-      // q11/q15 double-evaluation pathology, but both pin mechanisms lose
-      // badly here because they materialize OUTSIDE the AQE-coalesced
-      // path: localCheckpoint ran the sketch chain as one 12.5 s
-      // single-task job, persist built the InMemoryRelation with 512
-      // uncoalesced 256-partition tasks (6.9 s) — vs 2.4 s for the plain
-      // double evaluation (JobProbe, sf0.1). The pruned second evaluation
-      // costs less than any materialization of it.
-      val agg = ev
-        .groupBy("event_type")
-        .agg(
-          countDistinct(col("user_id")).as("exact_users"),
-          approx_count_distinct(col("user_id"), rsd = 0.02).as("approx_users"),
-          percentile_approx(col("value"), lit(0.5), lit(10000)).as("p50a"),
-          percentile_approx(col("value"), lit(0.95), lit(10000)).as("p95a")
-        )
-      val ranks = ev
-        .join(broadcast(agg.select("event_type", "p50a", "p95a")), "event_type")
-        .groupBy("event_type")
-        .agg(
-          avg(when(col("value") <= col("p50a"), 1d).otherwise(0d)).as("le50"),
-          avg(when(col("value") < col("p50a"), 1d).otherwise(0d)).as("lt50"),
-          avg(when(col("value") <= col("p95a"), 1d).otherwise(0d)).as("le95"),
-          avg(when(col("value") < col("p95a"), 1d).otherwise(0d)).as("lt95")
-        )
-      agg
-        .join(ranks, "event_type")
-        .select(
-          col("event_type"),
-          col("exact_users"),
-          (abs(col("approx_users") - col("exact_users"))
-            <= col("exact_users") * 0.05).as("ndv_ok"),
-          (col("le50") >= 0.5 - tol && col("lt50") <= 0.5 + tol).as("p50_ok"),
-          (col("le95") >= 0.95 - tol && col("lt95") <= 0.95 + tol).as("p95_ok")
-        )
-        .orderBy("event_type")
-    },
-
-    // ---- B48: as-of join (see operators.AsOfJoin): every purchase event
-    // aligned to the user's most recent prior-or-equal view. One keyed
-    // shuffle + sort, no range cross-join.
-    "q_asof_join" -> { (s, dir) =>
-      val ev = T(s, dir, "events")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id")
-      val views = ev
-        .filter(col("event_type") === "view")
-        .select("user_id", "ts", "event_id", "value")
-      operators.AsOfJoin
-        .asOf(
-          purchases,
-          views,
-          keyCols = Seq("user_id"),
-          tsCol = "ts",
-          rightTieCol = "event_id",
-          rightPayload = Seq("event_id", "value"),
-          leftCols = Seq("user_id", "ts", "event_id")
-        )
-        .select(
-          col("user_id"),
-          col("event_id"),
-          col("asof_event_id").as("view_id"),
-          col("asof_value").as("view_value")
-        )
-        .orderBy("event_id")
-    },
-
-    // ---- B49: range join (see operators.AsOfJoin.rangeJoin): clicks within
-    // 10 minutes after each view, per user — bucketed equi-join, candidate
-    // space bounded by bucket co-residents instead of |L|x|R|.
-    "q_range_join" -> { (s, dir) =>
-      val ev = T(s, dir, "events")
-      val views = ev
-        .filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("view_id"))
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-      operators.AsOfJoin
-        .rangeJoin(views, clicks, Seq("user_id"), "ts", 600000000L)
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_pairs"),
-          countDistinct(col("view_id")).as("n_views_with_click")
-        )
-        .orderBy("user_id")
-    },
-
-    // ---- C13: deterministic stratified sampling — per-language rates via a
-    // content-hash nibble (md5, engine-portable). No rand(): resampling under
-    // stage retries would break exactly-once semantics at scale; a hash of
-    // the key is idempotent, uniformly distributed, and needs no shuffle.
-    "docs_stratified_sample" -> { (s, dir) =>
-      val tf = functions.TextFunctions
-      T(s, dir, "documents")
-        .withColumn("nib", tf.sampleNibble(col("doc_id"), "s42"))
-        .filter(
-          (col("lang") === "en" && col("nib").isin("0", "1", "2", "3")) ||
-            (col("lang") =!= "en" &&
-              col("nib").isin("0", "1", "2", "3", "4", "5", "6", "7"))
-        )
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
-    },
-
-    // ---- C33: token-budget mixture sampling — weighted sources, global
-    // token budget, deterministic per-stratum hash-order prefix. The
-    // production two-pass histogram-cutoff path (operators.Mixture) is
-    // bit-identical to the naive per-stratum window the oracle runs; the
-    // weights are exact binary fractions summing to 1.0 so the per-stratum
-    // budgets (floor(w x 4000): 1000/1000/500/500/250 x4) are float-exact
-    // in both engines.
-    "docs_mixture_budget" -> { (s, dir) =>
-      val tf = functions.TextFunctions
-      operators.Mixture
-        .sampleToTokenBudget(
-          T(s, dir, "documents"),
-          "source",
-          size(tf.wsTokens(col("text"))),
-          "doc_id",
-          weights = Map(
-            "src0" -> 0.25,
-            "src1" -> 0.25,
-            "src2" -> 0.125,
-            "src3" -> 0.125,
-            "src4" -> 0.0625,
-            "src5" -> 0.0625,
-            "src6" -> 0.0625,
-            "src7" -> 0.0625
-          ),
-          totalBudget = 4000L
-        ) // no ORDER BY — see text_quality
-    },
-
-    // ---- C35: epoch materialization — the over-budget half of a mixture
-    // spec ("2.4 epochs of source X"): floor(budget/total) full copies of
-    // each stratum plus a fractional final epoch = the C33 hash-prefix of
-    // the remainder. 12000 tokens over these weights gives src0/src1 two
-    // full epochs + a sliver, src2/src3 one, src4–7 a sub-epoch fraction —
-    // every arm of the operator exercised at gate scale.
-    "docs_mixture_epochs" -> { (s, dir) =>
-      val tf = functions.TextFunctions
-      operators.Mixture
-        .materializeEpochs(
-          T(s, dir, "documents"),
-          "source",
-          size(tf.wsTokens(col("text"))),
-          "doc_id",
-          weights = Map(
-            "src0" -> 0.25,
-            "src1" -> 0.25,
-            "src2" -> 0.125,
-            "src3" -> 0.125,
-            "src4" -> 0.0625,
-            "src5" -> 0.0625,
-            "src6" -> 0.0625,
-            "src7" -> 0.0625
-          ),
-          totalBudget = 12000L
-        ) // no ORDER BY — see text_quality
-    },
-
-    // ---- B63: scalable global sequence ids — the zipWithIndex two-pass
-    // (range repartition -> per-partition counts -> offset broadcast ->
-    // partitioned window) replacing the single-task global-ORDER
-    // row_number; bit-identical to it for a total order, which the oracle
-    // recomputes directly.
-    "q_global_ids" -> { (s, dir) =>
-      operators.GlobalIds
-        .sequentialIds(
-          T(s, dir, "documents").select(col("doc_id"), col("lang")),
-          Seq("lang", "doc_id")
-        )
-        .orderBy("seq_id")
-    },
-
-    // ---- C36: token-window chunking — fixed-size overlapping windows
-    // (chunkSize 40, overlap 8 → stride 32), the unit RAG indexing and
-    // long-document prep consume. Pure map-side explode, no shuffle; the
-    // oracle recomputes membership from the same closed-form integer
-    // arithmetic and list slicing.
-    "docs_chunk_windows" -> { (s, dir) =>
-      operators.Chunk
-        .tokenWindows(T(s, dir, "documents"), "text", "doc_id", chunkSize = 40, overlap = 8)
-    // no ORDER BY — see text_quality (the sort would re-run the explode)
-    },
-
-    // ---- C34: quality-prefix curation — keep each source's BEST documents
-    // (by the C9 quality score, hash-matched in text_quality) until its
-    // token-budget share is spent. Same two-pass cutoff machinery as C33
-    // with value-range cells in place of hash-prefix buckets; the oracle
-    // recomputes the naive (quality DESC, md5, id) window selection.
-    "docs_quality_budget" -> { (s, dir) =>
-      val tf = functions.TextFunctions
-      operators.Mixture
-        .takeBestToBudget(
-          T(s, dir, "documents"),
-          "source",
-          tf.qualityScore(col("text")),
-          size(tf.wsTokens(col("text"))),
-          "doc_id",
-          weights = Map(
-            "src0" -> 0.25,
-            "src1" -> 0.25,
-            "src2" -> 0.125,
-            "src3" -> 0.125,
-            "src4" -> 0.0625,
-            "src5" -> 0.0625,
-            "src6" -> 0.0625,
-            "src7" -> 0.0625
-          ),
-          totalBudget = 4000L
-        ) // no ORDER BY — see text_quality
-    },
-
-    // ---- C14: lexical-diversity filter (type-token ratio + top-token
-    // share). The three exact counts come from ONE codegen kernel call per
-    // row (graft_diversity_stats — tokenize + distinct + top-frequency
-    // fused); the ratios are assembled in Column space so values stay
-    // bit-identical to the HOF formulation the oracle mirrors. The counts
-    // array rides the let-binding + inline-generator shape (same as
-    // Repetition.signals) so the ttr filter below cannot re-inline the
-    // kernel (see the round-6 quadratic-inlining note in SURVEY §5).
-    "text_diversity_filter" -> { (s, dir) =>
-      implicit val sp: SparkSession = s
-      val tf = functions.TextFunctions
-      val counts = functions.GraftFunctions.diversityStats(tf.normText(col("text")))
-      val stats = element_at(
-        transform(
-          array(counts),
-          a =>
-            struct(
-              element_at(a, 1).cast("int").as("n_tokens"),
-              element_at(a, 2).cast("int").as("n_distinct"),
-              round(
-                element_at(a, 2).cast("double") / element_at(a, 1),
-                4
-              ).as("ttr"),
-              round(
-                element_at(a, 3).cast("double") / element_at(a, 1),
-                4
-              ).as("top_share")
-            )
-        ),
-        1
-      )
-      T(s, dir, "documents")
-        .select(col("doc_id"), inline(array(stats)))
-        .filter(col("ttr") >= 0.45)
-        .orderBy("doc_id")
-    },
-
-    // ---- C15: sequence packing — assign documents to fixed token-budget
-    // training packs (capacity 512) by cumulative token count within
-    // (lang, source), ordered by doc_id. The window key is the natural shard
-    // key: packing parallelism grows with the number of (lang, source)
-    // shards, so no single-partition window bottleneck at scale.
-    "docs_pack_sequences" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val tf = functions.TextFunctions
-      val w = Window
-        .partitionBy("lang", "source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          col("lang"),
-          col("source"),
-          size(tf.wsTokens(col("text"))).cast("long").as("n_tok")
-        )
-        .withColumn("cum", sum(col("n_tok")).over(w))
-        .withColumn("pack_id", expr("(cum - n_tok) div 512"))
-        .groupBy(col("lang"), col("source"), col("pack_id"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).as("total_tokens")
-        )
-        .orderBy("lang", "source", "pack_id")
-    },
-
-    // ---- B44: min-cost supplier min-price rows (Q2 shape). lineitem stands
-    // in for partsupp as the part↔supplier price list: for each qualifying
-    // part, the EUROPE suppliers offering its minimum price. Single-pass
-    // window-min over p_partkey instead of the classic agg + join-back: the
-    // join-back derivation consumed the fact-joined frame TWICE (two full
-    // lineitem scans — offers is fact-scale, so pinning it is not the
-    // scale-safe fix), while the window shuffles only the dim-filtered
-    // offers once and reads the fact once. Measured same-window at all
-    // three scales: 2.0x / 1.8x / 1.75x faster (sf0.1 0.56→0.28 s, sf1
-    // 1.02→0.57 s, sf10 1.31→0.75 s); rows identical at sf0.1 and sf10.
-    // At 100 TB the trade is the same: one extra shuffle of the ~1%
-    // surviving offers beats a second full-fact scan, and the window key
-    // (p_partkey) is the natural parallelism unit with per-part row counts
-    // bounded by suppliers × orders per part.
-    "q2_min_cost" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val es = broadcast(
-        T(s, dir, "supplier")
-          .join(T(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-          .join(
-            T(s, dir, "region").filter(col("r_name") === "EUROPE"),
-            col("n_regionkey") === col("r_regionkey")
-          )
-          .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-      )
-      val px = broadcast(
-        T(s, dir, "part")
-          .filter(col("p_size").between(10, 20) && col("p_type") === "STANDARD")
-          .select("p_partkey", "p_name")
-      )
-      val w = Window.partitionBy("p_partkey")
-      T(s, dir, "lineitem")
-        .select("l_partkey", "l_suppkey", "l_extendedprice")
-        .join(es, col("l_suppkey") === col("s_suppkey"))
-        .join(px, col("l_partkey") === col("p_partkey"))
-        .withColumn("min_price", min(col("l_extendedprice")).over(w))
-        .filter(col("l_extendedprice") === col("min_price"))
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_name", "min_price")
-        .distinct()
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"), col("p_partkey"))
-        .limit(100)
-    },
-
-    // ---- B45: distinct-supplier counts with NOT IN exclusion (Q16 shape).
-    // The exclusion list (suppliers in deficit) is tiny -> broadcast anti-join;
-    // count(distinct) shuffles once on the grouping key.
-    "q16_supplier_counts" -> { (s, dir) =>
-      val px = broadcast(
-        T(s, dir, "part")
-          .filter(
-            col("p_brand") =!= "Brand#1" &&
-              !col("p_type").like("MEDIUM%") &&
-              col("p_size").isin(1, 4, 7, 10, 14, 19, 23, 36)
-          )
-          .select("p_partkey", "p_brand", "p_type", "p_size")
-      )
-      val bad = broadcast(
-        T(s, dir, "supplier")
-          .filter(col("s_acctbal") < 0.0)
-          .select(col("s_suppkey").as("bad_suppkey"))
-      )
-      T(s, dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .join(px, col("l_partkey") === col("p_partkey"))
-        .join(bad, col("l_suppkey") === col("bad_suppkey"), "left_anti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-    },
-
-    // ---- B46: nested IN-subquery with HAVING threshold (Q20 shape):
-    // suppliers who shipped a significant volume of 'small%' parts in 1996.
-    // The qualifying-supplier set is an aggregate over the fact table; the
-    // outer supplier side is dim-sized, so the semi-join broadcasts the
-    // aggregate, not the fact.
-    "q20_promotion_candidates" -> { (s, dir) =>
-      val px = broadcast(
-        T(s, dir, "part").filter(col("p_name").like("small%")).select("p_partkey")
-      )
-      val qual = T(s, dir, "lineitem")
-        .filter(
-          col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("l_shipdate") < lit("1997-01-01").cast("timestamp")
-        )
-        .select("l_partkey", "l_suppkey", "l_quantity")
-        .join(px, col("l_partkey") === col("p_partkey"))
-        .groupBy(col("l_suppkey"))
-        .agg(dsum(col("l_quantity")).as("qty"))
-        .filter(col("qty") > 40.0)
-        .select("l_suppkey")
-      T(s, dir, "supplier")
-        .join(T(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-        .join(
-          T(s, dir, "region").filter(col("r_name") === "EUROPE"),
-          col("n_regionkey") === col("r_regionkey")
-        )
-        .join(broadcast(qual), col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
-    },
-
-    // ---- B47: sole-late-supplier detection (Q21 shape). The classic
-    // EXISTS / NOT EXISTS pair over the same-order lineitems is rewritten as
-    // ONE aggregation per order (distinct suppliers, distinct late suppliers,
-    // late-item count): same semantics, one fact shuffle instead of two
-    // correlated self-joins — the rewrite that matters when lineitem is the
-    // 100 TB table. The DuckDB oracle runs the classic correlated form, so
-    // the gate independently proves the rewrite equivalent.
-    "q21_waiting_supplier" -> { (s, dir) =>
-      val supEuro = broadcast(
-        T(s, dir, "supplier")
-          .join(T(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
-          .join(
-            T(s, dir, "region").filter(col("r_name") === "EUROPE"),
-            col("n_regionkey") === col("r_regionkey")
-          )
-          .select("s_suppkey", "s_name")
-      )
-      val fOrders = T(s, dir, "orders")
-        .filter(col("o_orderstatus") === "F")
-        .select("o_orderkey", "o_orderdate")
-      val flagged = T(s, dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(fOrders, col("l_orderkey") === col("o_orderkey"))
-        .withColumn(
-          "late",
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS")
-        )
-      // two-phase aggregation instead of two countDistinct()s in one groupBy:
-      // distinct aggregates plan an Expand (one input row per distinct agg, 3x
-      // the fact rows through the hash aggregate). Pre-aggregating per
-      // (order, supplier) needs no Expand, and the second aggregate runs on
-      // the already-tiny per-order-supplier rows.
-      //
-      // Shared-exchange variant MEASURED OUT (round 13): an explicit
-      // repartition(o_orderkey) satisfies both aggregates' clustering and
-      // collapses the two exchanges to one, and the (order, supplier) grain
-      // (~1.0 rows/group) makes the forgone map-side partials look free —
-      // but the sf10 paired window regressed 7.1 → 9.6 s (mins): one
-      // full-width aggregate over raw fact rows builds a far larger
-      // per-task hash state than partial-then-final, and the second
-      // exchange it saves is the already-tiny per-order frame. Keep the
-      // two-phase shape.
-      flagged
-        .groupBy(col("o_orderkey"), col("l_suppkey"))
-        .agg(
-          max(col("late")).as("supp_late"),
-          count(when(col("late"), lit(1))).as("supp_late_items")
-        )
-        .groupBy(col("o_orderkey"))
-        .agg(
-          count(lit(1)).as("ns"),
-          sum(when(col("supp_late"), 1L).otherwise(0L)).as("nls"),
-          max(when(col("supp_late"), col("l_suppkey"))).as("late_supp"),
-          sum(col("supp_late_items")).as("n_late_items")
-        )
-        .filter(col("ns") > 1 && col("nls") === 1)
-        .join(supEuro, col("late_supp") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(sum(col("n_late_items")).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-    },
-
-    // ---- B60: MERGE/upsert (CDC apply) — a change batch with inserts,
-    // updates and deletes applied to the orders snapshot in ONE keyed
-    // full-outer join (operators.Merge.applyCdc). The oracle re-derives the
-    // merge with a plain FULL JOIN + coalesce.
-    "q_merge_upsert" -> { (s, dir) =>
-      val base = T(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val updates = base
-        .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 13 =!= 0)
-        .select(
-          col("o_orderkey"),
-          col("o_orderstatus"),
-          (col("o_totalprice") + lit(100.0)).as("o_totalprice"),
-          lit("U").as("op")
-        )
-      val inserts = base
-        .filter(col("o_orderkey") % 11 === 0)
-        .select(
-          (col("o_orderkey") + lit(100000000L)).as("o_orderkey"),
-          lit("I").as("o_orderstatus"),
-          col("o_totalprice"),
-          lit("I").as("op")
-        )
-      val deletes = base
-        .filter(col("o_orderkey") % 13 === 0)
-        .select(
-          col("o_orderkey"),
-          lit(null).cast("string").as("o_orderstatus"),
-          lit(null).cast("double").as("o_totalprice"),
-          lit("D").as("op")
-        )
-      operators.Merge
-        .applyCdc(base, updates.unionByName(inserts).unionByName(deletes), Seq("o_orderkey"))
-        .filter(col("o_orderkey") % 17 === 0)
-        .orderBy("o_orderkey")
-    },
-
-    // ---- B61: SCD type-2 dimension build (operators.Merge.scd2) — version
-    // rows with validity intervals from the purchase change log; lead()
-    // window per key, tie-broken by event_id.
-    "q_scd2_dimension" -> { (s, dir) =>
-      val log = T(s, dir, "events")
-        .filter(col("event_type") === "purchase" && col("user_id") % 50 === 0)
-        .select("user_id", "event_id", "ts", "value")
-      operators.Merge
-        .scd2(log, "user_id", "ts", "event_id")
-        .select("user_id", "version", "valid_from", "valid_to", "is_current", "value")
-        .orderBy("user_id", "version")
-    },
-
-    // ---- B62: equi-width histogram over a broadcast min/max scalar —
-    // two scans total (one for the stats, one for the bucketing), no shuffle
-    // beyond the 10-row aggregate.
-    "q_price_histogram" -> { (s, dir) =>
-      val o = T(s, dir, "orders")
-      val stats = o.agg(
-        min(col("o_totalprice")).as("mn"),
-        max(col("o_totalprice")).as("mx")
-      )
-      o.crossJoin(broadcast(stats))
-        .select(
-          least(
-            lit(9L),
-            floor((col("o_totalprice") - col("mn")) * lit(10.0) / (col("mx") - col("mn")))
-          ).as("bucket"),
-          col("o_totalprice")
-        )
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), rsum(col("o_totalprice")).as("total"))
-        .orderBy("bucket")
-    },
-
-    // ---- C20: deterministic train/val/test split + shard assignment via
-    // md5 hex nibbles — stable under retries/replays (no rand()), uniformly
-    // distributed, and portable (md5 is identical across engines). First
-    // nibble picks the split (12/2/2 of 16), second picks 1 of 16 shards.
-    "docs_split_shard" -> { (s, dir) =>
-      val h = md5(col("doc_id").cast("string"))
-      val c1 = substring(h, 1, 1)
-      T(s, dir, "documents")
-        .select(
-          when(c1.isin("c", "d"), "val")
-            .when(c1.isin("e", "f"), "test")
-            .otherwise("train")
-            .as("split"),
-          substring(h, 2, 1).as("shard"),
-          col("n_chars")
-        )
-        .groupBy("split", "shard")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("split", "shard")
-    },
-
-    // ---- C21: per-domain cap — keep each (source, lang)'s top-5 documents
-    // by quality score (dedup against over-represented domains). The
-    // row_number idiom is TopKRewriteRule's input shape, so it plans as a
-    // bounded heap per group, not a full sort.
-    "docs_domain_cap" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val tf = functions.TextFunctions
-      val w = Window.partitionBy("source", "lang").orderBy(col("quality").desc, col("doc_id"))
-      T(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          col("source"),
-          col("lang"),
-          tf.qualityScore(col("text")).as("quality")
-        )
-        .withColumn("cap_rank", row_number().over(w).cast("long"))
-        .filter(col("cap_rank") <= 5)
-        .orderBy("source", "lang", "cap_rank")
-    },
-
-    // ---- C22: benchmark decontamination — training docs sharing 5-gram
-    // shingles with the eval set (doc_id % 5 == 0), counted on hashed
-    // shingles with the eval shingle set broadcast
-    // (operators.Decontaminate). Oracle re-derives on shingle STRINGS.
-    "docs_decontaminate" -> { (s, dir) =>
-      val d = T(s, dir, "documents")
-      operators.Decontaminate
-        .overlaps(
-          d.filter(col("doc_id") % 5 =!= 0),
-          d.filter(col("doc_id") % 5 === 0),
-          "text",
-          "doc_id",
-          k = 5
-        )
-        .orderBy("doc_id")
-    },
-
-    // ---- C23: tf-idf top terms per document — the keyword-extraction /
-    // relevance-scoring pass. Counts are exact integers; the only double is
-    // the final score, quantized to 6 decimals on both engines BEFORE
-    // ranking so ulp-level ln() differences cannot flip an order.
-    "text_tfidf_terms" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val tfn = functions.TextFunctions
-      val docsT = T(s, dir, "documents")
-      val toks = docsT
-        .select(col("doc_id"), explode(tfn.wsTokens(col("text"))).as("term"))
-      val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      // df per term WITHOUT the (doc_id, term) distinct exchange (round 13,
-      // guide §2.3 — aggregate before you shuffle): a term's distinct-doc
-      // count is one row per (doc, distinct term), and "distinct within the
-      // doc" is a per-ROW array_distinct — map-side, no exchange — so the
-      // groupBy(term) is the only shuffle (was: distinct exchange on
-      // (doc_id, term) + groupBy(term) exchange, fed by a SECOND full
-      // tokenize+explode pass).
-      val dfreq = docsT
-        .select(
-          col("doc_id"),
-          explode(array_distinct(tfn.wsTokens(col("text")))).as("term")
-        )
-        .groupBy("term")
-        .agg(count(lit(1)).as("df"))
-      // nd = number of documents with >= 1 token. countDistinct(doc_id) over
-      // the exploded tokens computed exactly this (doc_ids are unique per
-      // document) through a THIRD full tokenize + explode + two-phase
-      // distinct aggregate; a scan-level conditional count is the same value
-      // with no explode and no distinct machinery.
-      val nDocs = docsT
-        .agg(
-          sum(
-            when(size(tfn.wsTokens(col("text"))) > 0, 1L).otherwise(0L)
-          ).as("nd")
-        )
-      val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
-      tf.join(dfreq, "term")
-        .crossJoin(broadcast(nDocs))
-        .select(
-          col("doc_id"),
-          col("term"),
-          col("tf"),
-          col("df"),
-          round(col("tf") * log(col("nd").cast("double") / col("df")), 6).as("score")
-        )
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5 && col("doc_id") < 50)
-        .orderBy("doc_id", "rn")
-    },
-
-    // ---- C32: unigram-LM perplexity quality scoring (the CCNet signal) —
-    // per-document mean negative log-likelihood under an add-one-smoothed
-    // unigram model (1000-term vocabulary cap) trained on the corpus
-    // itself; high-mean_nll docs are the out-of-distribution tail that
-    // heuristic ratio scores (C9) cannot see. Per-term log-probs are
-    // quantized to integer micro-nats BEFORE aggregation
-    // (operators.Perplexity), so the per-doc sum is exact integer math —
-    // associative under any partitioning — and the only output float is
-    // one correctly-rounded IEEE division both engines compute identically.
-    "text_perplexity" -> { (s, dir) =>
-      operators.Perplexity
-        .scoreSelf(T(s, dir, "documents"), "text", "doc_id", cap = 1000)
-    // no ORDER BY on the scoring pass — see text_quality (the model-build
-    // side is pinned, so only the per-row scoring stage would re-run)
-    },
-
-    // ---- C24: two Lloyd iterations of k-means over the embeddings
-    // (operators.KMeans) — every step engine-portable (rounded distances,
-    // decimal-exact centroid means), so the ORACLE verifies whole
-    // iterations, not just the final labels.
-    "emb_kmeans" -> { (s, dir) =>
-      val e = T(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val c0 = operators.KMeans.seeds(e, "v", "vec_id", 8)
-      val a1 = operators.KMeans.assign(e, c0, "v", "vec_id")
-      val c1 = operators.KMeans.updateCentroids(e, a1, "v", "vec_id")
-      val a2 = operators.KMeans
-        .assign(e, c1, "v", "vec_id")
-        .withColumnRenamed("cluster", "c2")
-      a1.withColumnRenamed("cluster", "c1")
-        .join(a2, "vec_id")
-        .filter(col("vec_id") < 100)
-        .orderBy("vec_id")
-    },
-
-    // ---- A4 activated: an avro-backed Glue table read end-to-end through
-    // the serde-triple dispatch (GlueFormats -> graft.sources.AvroRead).
-    // Fixture: nation rewritten as avro container files, then served by a
-    // fresh provider off an InMemory catalog; the oracle reads the SAME
-    // rows from the parquet twin, so a hash match proves the avro path
-    // returns byte-identical data.
-    "q_avro_scan" -> { (s, dir) =>
-      // deterministic fixture: build once, reuse on repeat invocations so
-      // bench medians time the avro READ path, not fixture I/O; the source
-      // file size keys the path so regenerated testdata invalidates it,
-      // and a sentinel written LAST guards against reusing a partial build
-      val srcLen = new java.io.File(dir, "nation.parquet").length()
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_avro_scan_${math.abs(dir.hashCode)}_$srcLen"
-      ).getPath
-      val done = new java.io.File(tmp, ".graft_fixture_complete")
-      if (!done.isFile) {
-        sources.AvroRead.write(T(s, dir, "nation"), tmp)
-        done.createNewFile()
-      }
-      val table = catalog.GlueTable(
-        "avrodb",
-        "nation_avro",
-        catalog.GlueStorageDescriptor(
-          location = tmp,
-          inputFormat = "org.apache.hadoop.hive.ql.io.avro.AvroContainerInputFormat",
-          outputFormat = "org.apache.hadoop.hive.ql.io.avro.AvroContainerOutputFormat",
-          serdeInfo =
-            catalog.GlueSerDeInfo("org.apache.hadoop.hive.serde2.avro.AvroSerDe"),
-          columns = Seq(
-            catalog.GlueColumn("n_nationkey", "int"),
-            catalog.GlueColumn("n_name", "string"),
-            catalog.GlueColumn("n_regionkey", "int")
-          )
-        )
-      )
-      new catalog.GlueCatalogProvider(new catalog.InMemoryGlueClient(Seq(table)), s)
-        .load(table)
-        .orderBy("n_nationkey")
-    },
-
-    // ---- A4 activated for CSV: a text-format Glue table with BOTH serde
-    // options the reference honours — `field.delim` (a pipe, so the option
-    // is provably load-bearing: the default comma would misparse every
-    // row) and `skip.header.line.count=1` — read end-to-end through the
-    // LazySimpleSerDe dispatch branch (GlueFormats -> Spark csv source;
-    // reference: glue.rs:375-406 CsvFormat::with_delimiter/with_has_header).
-    // The oracle reads the SAME rows from the parquet twin, so a hash
-    // match proves the text round-trip (delimiter, header skip, quoting,
-    // bigint/int/double/string parsing) returns byte-identical data.
-    "q_csv_scan" -> { (s, dir) =>
-      // deterministic fixture: build once, reuse on repeat invocations so
-      // bench medians time the csv READ path, not fixture I/O (same keying
-      // discipline as q_avro_scan: source size invalidates, sentinel last)
-      val srcLen = new java.io.File(dir, "customer.parquet").length()
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_csv_scan_${math.abs(dir.hashCode)}_$srcLen"
-      ).getPath
-      val done = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s".graft_csv_scan_${math.abs(dir.hashCode)}_${srcLen}_complete"
-      )
-      if (!done.isFile) {
-        T(s, dir, "customer")
-          .coalesce(1)
-          .write
-          .mode("overwrite")
-          .option("header", "true")
-          .option("sep", "|")
-          .csv(tmp)
-        done.createNewFile()
-      }
-      val table = catalog.GlueTable(
-        "csvdb",
-        "customer_csv",
-        catalog.GlueStorageDescriptor(
-          location = tmp,
-          inputFormat = "org.apache.hadoop.mapred.TextInputFormat",
-          outputFormat = "org.apache.hadoop.hive.ql.io.HiveIgnoreKeyTextOutputFormat",
-          serdeInfo = catalog.GlueSerDeInfo(
-            "org.apache.hadoop.hive.serde2.lazy.LazySimpleSerDe",
-            parameters = Map("field.delim" -> "|")
-          ),
-          // CSV is positional: declared order must match the written order
-          columns = Seq(
-            catalog.GlueColumn("c_custkey", "bigint"),
-            catalog.GlueColumn("c_name", "string"),
-            catalog.GlueColumn("c_nationkey", "int"),
-            catalog.GlueColumn("c_acctbal", "double"),
-            catalog.GlueColumn("c_mktsegment", "string")
-          ),
-          parameters = Map("skip.header.line.count" -> "1")
-        )
-      )
-      new catalog.GlueCatalogProvider(new catalog.InMemoryGlueClient(Seq(table)), s)
-        .load(table)
-    },
-
-    // ---- A4 activated for JSON: a text-format Glue table through the
-    // hcatalog JsonSerDe dispatch branch (GlueFormats -> Spark json source;
-    // reference: glue.rs:407-426 maps all three JSON serdes to JsonFormat).
-    // Schema comes from the Glue columns (name-based binding, unlike CSV's
-    // positional), and the parquet-twin oracle makes the hash match prove
-    // bigint/int/double/string survive the JSON text round-trip exactly.
-    "q_json_scan" -> { (s, dir) =>
-      val srcLen = new java.io.File(dir, "supplier.parquet").length()
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_json_scan_${math.abs(dir.hashCode)}_$srcLen"
-      ).getPath
-      val done = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s".graft_json_scan_${math.abs(dir.hashCode)}_${srcLen}_complete"
-      )
-      if (!done.isFile) {
-        T(s, dir, "supplier").coalesce(1).write.mode("overwrite").json(tmp)
-        done.createNewFile()
-      }
-      val table = catalog.GlueTable(
-        "jsondb",
-        "supplier_json",
-        catalog.GlueStorageDescriptor(
-          location = tmp,
-          inputFormat = "org.apache.hadoop.mapred.TextInputFormat",
-          outputFormat = "org.apache.hadoop.hive.ql.io.HiveIgnoreKeyTextOutputFormat",
-          serdeInfo =
-            catalog.GlueSerDeInfo("org.apache.hive.hcatalog.data.JsonSerDe"),
-          columns = Seq(
-            catalog.GlueColumn("s_suppkey", "bigint"),
-            catalog.GlueColumn("s_name", "string"),
-            catalog.GlueColumn("s_nationkey", "int"),
-            catalog.GlueColumn("s_acctbal", "double")
-          )
-        )
-      )
-      new catalog.GlueCatalogProvider(new catalog.InMemoryGlueClient(Seq(table)), s)
-        .load(table)
-    },
-
-    // ---- D5 batch twin: the streaming interval join's OWN code path
-    // (EventStreams.clickAttribution — watermarks are analyzer-eliminated on
-    // batch inputs) under the DuckDB gate, mirroring the B27/B29/B58
-    // batch-twin pattern: the join predicate the streaming query runs is
-    // exactly what DuckDB verifies here.
-    "q_click_attribution" -> { (s, dir) =>
-      val ev = T(s, dir, "events")
-      streaming.EventStreams
-        .clickAttribution(
-          ev.filter(col("event_type") === "view"),
-          ev.filter(col("event_type") === "click")
-        )
-        .select(
-          col("user_id"),
-          col("view_id"),
-          col("click_id"),
-          unix_micros(col("view_ts")).as("view_us"),
-          unix_micros(col("click_ts")).as("click_us")
-        )
-        .orderBy("user_id", "view_id", "click_id")
-    },
-
-    // ---- A-suite: ANALYZE-style catalog statistics (catalog.TableStatistics)
-    // — exact per-column n_rows/nulls/ndv/min/max, the numbers the provider
-    // turns into broadcast decisions at registration (see
-    // TableStatisticsSpec for the plan-flip proof).
-    "q_table_stats" -> { (s, dir) =>
-      catalog.TableStatistics
-        .collect(
-          T(s, dir, "part"),
-          Seq("p_partkey", "p_brand", "p_retailprice", "p_size")
-        )
-        .orderBy("column_name")
-    },
-
-    // ---- Delta activated: a delta-backed Glue table (table_type=delta)
-    // read end-to-end through GlueFormats dispatch -> DeltaRead transaction-
-    // log replay (reference registers these via the deltalake crate,
-    // glue.rs:195-237). Fixture: supplier bootstrapped as a delta table,
-    // served by a fresh provider; the oracle reads the SAME rows from the
-    // parquet twin, so a hash match proves the log-replay path returns
-    // byte-identical data.
-    "q_delta_scan" -> { (s, dir) =>
-      // deterministic fixture: build once, reuse on repeat invocations so
-      // bench medians time the log-replay READ path, not fixture I/O; the
-      // source file size keys the path so regenerated testdata invalidates
-      // it, and a sentinel written LAST guards against a partial build
-      val srcLen = new java.io.File(dir, "supplier.parquet").length()
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_delta_scan_${math.abs(dir.hashCode)}_$srcLen"
-      ).getPath
-      val done = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s".graft_delta_scan_${math.abs(dir.hashCode)}_${srcLen}_complete"
-      )
-      if (!done.isFile) {
-        sources.DeltaRead.create(T(s, dir, "supplier"), tmp)
-        done.createNewFile()
-      }
-      val table = catalog.GlueTable(
-        "deltadb",
-        "supplier_delta",
-        catalog.GlueStorageDescriptor(
-          location = tmp,
-          inputFormat = "",
-          outputFormat = "",
-          serdeInfo = catalog.GlueSerDeInfo(""),
-          columns = Seq(
-            catalog.GlueColumn("s_suppkey", "bigint"),
-            catalog.GlueColumn("s_name", "string"),
-            catalog.GlueColumn("s_nationkey", "int"),
-            catalog.GlueColumn("s_acctbal", "double")
-          )
-        ),
-        parameters = Map("table_type" -> "delta")
-      )
-      new catalog.GlueCatalogProvider(new catalog.InMemoryGlueClient(Seq(table)), s)
-        .load(table)
-        .orderBy("s_suppkey")
-    },
-
-    // ---- Delta deletion vectors (protocol reader version 3): row-level
-    // soft deletes via roaring bitmaps, applied on read as a row-index
-    // filter over only the DV-carrying files. The fixture composes two
-    // deleteWhere commits AROUND a checkpoint, so the hash match proves
-    // vectors replay correctly from both the folded parquet checkpoint and
-    // the JSON tail — the merge-on-read shape the reference gets from the
-    // deltalake crate (glue.rs:214-237).
-    "q_delta_dv" -> { (s, dir) =>
-      val srcLen = new java.io.File(dir, "supplier.parquet").length()
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_delta_dv_${math.abs(dir.hashCode)}_$srcLen"
-      ).getPath
-      val done = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s".graft_delta_dv_${math.abs(dir.hashCode)}_${srcLen}_complete"
-      )
-      if (!done.isFile) {
-        sources.DeltaRead.create(T(s, dir, "supplier").repartition(4), tmp)
-        sources.DeltaRead.deleteWhere(s, tmp, col("s_suppkey") % 7 === 0)
-        sources.DeltaRead.checkpoint(s, tmp)
-        sources.DeltaRead.deleteWhere(s, tmp, col("s_suppkey") % 11 === 3)
-        done.createNewFile()
-      }
-      sources.DeltaRead.read(s, tmp).orderBy("s_suppkey")
-    },
-
-    // ---- Delta column mapping (delta.columnMapping.mode=name): physical
-    // col-<uuid> names on disk, logical names in metaData.schemaString; the
-    // hash match proves the physical->logical rename returns byte-identical
-    // data to the plain parquet twin.
-    "q_delta_cmap" -> { (s, dir) =>
-      val srcLen = new java.io.File(dir, "nation.parquet").length()
-      val tmp = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_delta_cmap_${math.abs(dir.hashCode)}_$srcLen"
-      ).getPath
-      val done = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s".graft_delta_cmap_${math.abs(dir.hashCode)}_${srcLen}_complete"
-      )
-      if (!done.isFile) {
-        sources.DeltaRead.create(T(s, dir, "nation"), tmp, columnMapping = true)
-        done.createNewFile()
-      }
-      sources.DeltaRead.read(s, tmp).orderBy("n_nationkey")
-    },
-
-    // ---- C25: Gopher/MassiveText repetition-quality signals — per-row
-    // higher-order-function projections, zero shuffles.
-    "text_repetition" -> { (s, dir) =>
-      operators.Repetition
-        .signals(T(s, dir, "documents"), "text", "doc_id")
-    // no ORDER BY — see text_quality
-    },
-
-    // ---- C26: exact duplicate-substring spans (token-10-gram form of
-    // Lee et al. suffix-array dedup): corpus-duplicated 10-grams merged
-    // into maximal removable spans per document.
-    "dedup_substring_spans" -> { (s, dir) =>
-      operators.Dedup
-        .duplicateSpans(T(s, dir, "documents"), "text", "doc_id", k = 10)
-        .orderBy("doc_id", "span_start")
-    },
-
-    // ---- C26b: the actionable keep-first form — each duplicated gram's
-    // globally-first occurrence survives, later copies become removable
-    // spans (Lee et al.'s actual dedup semantics).
-    "dedup_substring_keep_first" -> { (s, dir) =>
-      operators.Dedup
-        .duplicateSpans(T(s, dir, "documents"), "text", "doc_id", k = 10,
-          keepFirst = true)
-        .orderBy("doc_id", "span_start")
-    },
-
-    // ---- C27: semantic dedup (SemDeDup shape): k-means cluster, then drop
-    // within-cluster vectors with a lower-id mate at cosine >= threshold.
-    "dedup_semantic" -> { (s, dir) =>
-      // k auto-scales with the corpus (max(8, n/625)); at gate scale
-      // (sf0.01, 500 vectors) that resolves to exactly the k=8 the SQL
-      // oracle mirrors, while larger corpora keep clusters bounded
-      operators.Dedup
-        .semanticDedup(T(s, dir, "embeddings"), "embedding", "vec_id",
-          threshold = 0.4) // no ORDER BY — see text_quality
-    },
-
-    // ---- C25+C26 composed: the repetition gate a corpus-prep pipeline
-    // applies — per-doc repetition signals joined with the fraction of
-    // tokens covered by corpus-duplicated substring spans, folded into a
-    // deterministic pass/fail verdict.
-    "docs_repetition_gate" -> { (s, dir) =>
-      val d = T(s, dir, "documents")
-      val sig = operators.Repetition.signals(d, "text", "doc_id")
-      val spans = operators.Dedup
-        .duplicateSpans(d, "text", "doc_id", k = 10)
-        .groupBy("doc_id")
-        .agg(sum(col("span_end") - col("span_start")).as("dup_toks"))
-      sig
-        .join(spans, Seq("doc_id"), "left")
-        .select(
-          col("doc_id"),
-          col("n_tokens"),
-          col("max_run"),
-          col("top_bigram_frac"),
-          round(
-            coalesce(col("dup_toks"), lit(0L)).cast("double") / col("n_tokens"),
-            6
-          ).as("dup_span_frac")
-        )
-        .withColumn(
-          "pass",
-          col("max_run") <= 5 && col("top_bigram_frac") <= 0.2 &&
-            col("dup_span_frac") <= 0.5
-        )
-        .orderBy("doc_id")
-    },
-
-    // ---- D10 batch twin: the composed streaming corpus-ingestion pipeline
-    // (repetition gate -> exact dedup -> MinHash-LSH dedup against the live
-    // corpus) run as one batch over a split of `documents` — odd doc_ids are
-    // the incoming micro-batch, even doc_ids the existing corpus. Same code
-    // path CorpusIngest.ingest executes per micro-batch (foreachBatch runs
-    // batch DataFrame logic; the delta read/append ends are covered by
-    // DeltaSink/CorpusIngest specs), mirroring how B27/B29/B58 oracle the
-    // other streaming operators. The full-chain CTE oracle recomputes all
-    // three stages exactly.
-    "docs_ingest_batch" -> { (s, dir) =>
-      val docs = T(s, dir, "documents")
-      val incoming = docs.filter(col("doc_id") % 2 === 1)
-      val corpus = docs.filter(col("doc_id") % 2 === 0)
-      streaming.CorpusIngest
-        .prepareBatch(
-          incoming,
-          Some(corpus),
-          "text",
-          "doc_id",
-          jaccardThreshold = 0.8,
-          streaming.CorpusIngest.Gate(maxRun = 5, maxTopBigramFrac = 0.2)
-        )
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-
-    // ---- C16 under the gate: PII scrubbing. The corpus has no natural
-    // PII, so both engines append the SAME deterministic contact string
-    // (email + phone + IPv4 derived from doc_id) and must scrub it
-    // identically — the patterns live in the Java-regex ∩ RE2 intersection
-    // precisely so this oracle is possible.
-    "q_pii_scrub" -> { (s, dir) =>
-      val raw = concat(
-        col("text"),
-        lit(" reach user"),
-        col("doc_id").cast("string"),
-        lit("@mail.example.org, call +49 (30) 1234"),
-        col("doc_id").cast("string"),
-        lit(", server 192.168."),
-        (col("doc_id") % 256).cast("string"),
-        lit(".42")
-      )
-      T(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          functions.TextFunctions.piiScrub(raw).as("scrubbed")
-        ) // no ORDER BY — see text_quality
-    }
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(round(sum(CAST(l_quantity AS DECIMAL(30,10))),2) AS DOUBLE) AS sum_qty,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(30,10))),2) AS DOUBLE) AS sum_base_price,
-        | CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))),2) AS DOUBLE) AS sum_disc_price,
-        | CAST(round(sum(CAST(l_extendedprice*(1-l_discount)*(1+l_tax) AS DECIMAL(30,10))),2) AS DOUBLE) AS sum_charge,
-        | round(CAST(sum(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE)/count(l_quantity),4) AS avg_qty,
-        | round(CAST(sum(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)/count(l_extendedprice),4) AS avg_price,
-        | round(CAST(sum(CAST(l_discount AS DECIMAL(30,10))) AS DOUBLE)/count(l_discount),4) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))),2) AS DOUBLE) AS revenue,
-        | o_orderdate, o_orderpriority
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        | AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        | AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q5_local_volume" ->
-      """SELECT n_name, CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))),2) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        | AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        | AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT CAST(round(sum(CAST(l_extendedprice*l_discount AS DECIMAL(30,10))),2) AS DOUBLE) AS revenue, count(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        | AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        | AND l_discount BETWEEN 0.02 AND 0.04
-        | AND l_quantity < 24""".stripMargin,
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name,
-        | CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))),2) AS DOUBLE) AS revenue, n_name
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        | AND o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-        | AND l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "q_topk_orders" ->
-      """SELECT o_orderkey, o_totalprice, o_orderdate
-        |FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 25""".stripMargin,
-    "q_distinct_count" ->
-      """SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust,
-        | CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS n_prio,
-        | count(*) AS n_orders
-        |FROM orders""".stripMargin,
-    "q_window_rank" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rnk FROM (
-        | SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_orderpriority
-        |                     ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-        | FROM orders) t
-        |WHERE rnk <= 3
-        |ORDER BY o_orderpriority, rnk""".stripMargin,
-    "q_rollup" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        | coalesce(o_orderpriority, 'ALL') AS priority,
-        | count(*) AS n, CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,10))),2) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "q_having" ->
-      """SELECT o_custkey, count(*) AS n_orders, CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,10))),2) AS DOUBLE) AS spend
-        |FROM orders
-        |GROUP BY o_custkey
-        |HAVING count(*) >= 14
-        |ORDER BY o_custkey""".stripMargin,
-    "q_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_totalprice > 400000.0)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_union" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |UNION
-        |SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "q_case_agg" ->
-      """SELECT l_returnflag, count(*) AS n,
-        | CAST(sum(CASE WHEN l_quantity > 25 THEN 1 ELSE 0 END) AS BIGINT) AS big_qty,
-        | CAST(round(sum(CAST(CASE WHEN l_discount > 0.05 THEN l_extendedprice ELSE 0.0 END AS DECIMAL(30,10))),2) AS DOUBLE) AS discounted_rev
-        |FROM lineitem
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q_string_funcs" ->
-      """SELECT p_partkey, upper(p_brand) AS brand_u, substr(p_name,1,10) AS name10,
-        | concat(p_type, '-', p_brand) AS label,
-        | CAST(length(p_name) AS INTEGER) AS name_len
-        |FROM part
-        |WHERE p_name LIKE '%a%'
-        |ORDER BY p_partkey
-        |LIMIT 100""".stripMargin,
-    "q_date_agg" ->
-      """SELECT CAST(ts AS DATE) AS day, event_type,
-        | count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(30,10))),2) AS DOUBLE) AS total_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH r AS (
-        |  SELECT l_suppkey,
-        |    CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))),2) AS DOUBLE) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY l_suppkey
-        |), m AS (SELECT max(total_rev) AS mx FROM r)
-        |SELECT s_suppkey, s_name, total_rev
-        |FROM supplier JOIN r ON s_suppkey = l_suppkey, m
-        |WHERE total_rev = mx
-        |ORDER BY s_suppkey""".stripMargin,
-    "q22_sales_opportunity" ->
-      """WITH ab AS (
-        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(30,10))) AS DOUBLE)
-        |         / count(c_acctbal) AS ab
-        |  FROM customer WHERE c_acctbal > 0.0
-        |)
-        |SELECT c_nationkey, count(*) AS numcust,
-        | CAST(round(sum(CAST(c_acctbal AS DECIMAL(30,10))),2) AS DOUBLE) AS totacctbal
-        |FROM customer, ab
-        |WHERE c_acctbal > ab
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-    "q11_important_parts" ->
-      """WITH pr AS (
-        |  SELECT l_partkey,
-        |    CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))),2) AS DOUBLE) AS value
-        |  FROM lineitem GROUP BY l_partkey
-        |), tot AS (
-        |  SELECT CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE)
-        |         / count(value) AS av
-        |  FROM pr
-        |)
-        |SELECT l_partkey, value
-        |FROM pr, tot
-        |WHERE value > av * 1.5
-        |ORDER BY value DESC, l_partkey""".stripMargin,
-    "q_event_funnel" ->
-      """WITH s AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-        |    min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-        |  FROM events GROUP BY user_id
-        |)
-        |SELECT count(t_view) AS n_view,
-        | CAST(sum(CASE WHEN t_click > t_view THEN 1 ELSE 0 END) AS BIGINT) AS n_view_click,
-        | CAST(sum(CASE WHEN t_click > t_view AND t_purchase > t_click
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS n_full_funnel
-        |FROM s""".stripMargin,
-    "text_vocab_ngrams" ->
-      """WITH t AS (
-        |  SELECT string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), n AS (
-        |  SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS ngram
-        |  FROM t
-        |)
-        |SELECT ngram, count(*) AS n FROM n
-        |GROUP BY ngram
-        |ORDER BY n DESC, ngram
-        |LIMIT 100""".stripMargin,
-    "q_cube" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        | coalesce(o_orderpriority, 'ALL') AS priority,
-        | count(*) AS n,
-        | CAST(grouping(o_orderstatus) AS INTEGER) AS g_status,
-        | CAST(grouping(o_orderpriority) AS INTEGER) AS g_prio
-        |FROM orders
-        |GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority, g_status, g_prio""".stripMargin,
-    "q_window_nav" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        | lead(o_orderkey, 1) OVER w AS next_orderkey,
-        | first_value(o_orderkey) OVER w AS first_orderkey
-        |FROM orders
-        |WHERE o_custkey < 100
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin,
-    "q_vector_norms" ->
-      """WITH v AS (
-        |  SELECT label,
-        |    round(sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]),
-        |                                       x -> x * x))), 6) AS norm,
-        |    CAST(len(embedding) AS INTEGER) AS dims
-        |  FROM embeddings
-        |)
-        |SELECT label, count(*) AS n,
-        | CAST(round(sum(CAST(norm AS DECIMAL(30,10))),4) AS DOUBLE) AS sum_norm,
-        | max(dims) AS dims
-        |FROM v
-        |GROUP BY label
-        |ORDER BY label""".stripMargin,
-    "q13_customer_distribution" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-        |  GROUP BY c_custkey
-        |) t
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q_sql_surface" ->
-      """SELECT o_orderstatus,
-        | count(*) AS n,
-        | CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,10))),2) AS DOUBLE) AS total
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "q_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT
-        |SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "q_except" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |EXCEPT
-        |SELECT s_nationkey AS nationkey FROM supplier WHERE s_acctbal > 8000.0
-        |ORDER BY nationkey""".stripMargin,
-    "q_scalar_subquery" ->
-      """SELECT count(*) AS n,
-        | CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,10))),2) AS DOUBLE) AS total
-        |FROM orders
-        |WHERE o_totalprice > (
-        |  SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(30,10))) AS DOUBLE)
-        |         / count(o_totalprice) FROM orders) * 1.5""".stripMargin,
-    "q_percentiles" ->
-      """SELECT o_orderstatus,
-        | round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-        | round(quantile_cont(o_totalprice, 0.9), 2) AS p90,
-        | round(quantile_cont(o_totalprice, 0.99), 2) AS p99
-        |FROM orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "q_stream_windowed_batch" ->
-      """SELECT time_bucket(INTERVAL '1 minute', ts) AS window_start,
-        | event_type, count(*) AS n,
-        | CAST(round(sum(CAST(value AS DECIMAL(30,10))),2) AS DOUBLE) AS total_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q_json_extract" ->
-      """SELECT event_type,
-        | count(k) AS n,
-        | CAST(sum(k) AS BIGINT) AS sum_k,
-        | min(k) AS min_k,
-        | max(k) AS max_k
-        |FROM (
-        |  SELECT event_type,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |  FROM events
-        |) t
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > TIMESTAMP '1999-01-01 00:00:00')
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q7_nation_volume" ->
-      """SELECT supp_nation, cust_nation, l_year, CAST(round(sum(CAST(volume AS DECIMAL(30,10))),2) AS DOUBLE) AS volume
-        |FROM (
-        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |    CAST(year(l_shipdate) AS INTEGER) AS l_year,
-        |    l_extendedprice*(1-l_discount) AS volume
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  WHERE (n1.n_regionkey = 2 AND n2.n_regionkey = 3)
-        |     OR (n1.n_regionkey = 3 AND n2.n_regionkey = 2)
-        |) t
-        |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q8_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        | round(CAST(sum(CAST(CASE WHEN n_name = 'NATION_3' THEN l_extendedprice*(1-l_discount) ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE)
-        |       / CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))) AS DOUBLE), 6) AS mkt_share
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE o_custkey IN (
-        |  SELECT c_custkey FROM customer
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  JOIN region ON n2.n_regionkey = r_regionkey
-        |  WHERE r_name = 'ASIA')
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q9_profit" ->
-      """SELECT nation, o_year, CAST(round(sum(CAST(amount AS DECIMAL(30,10))),2) AS DOUBLE) AS profit
-        |FROM (
-        |  SELECT n_name AS nation, CAST(year(l_shipdate) AS INTEGER) AS o_year,
-        |    l_extendedprice*(1-l_discount) - l_quantity*p_retailprice*0.1 AS amount
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE p_name LIKE '%a%'
-        |) t
-        |GROUP BY nation, o_year
-        |ORDER BY nation, o_year DESC""".stripMargin,
-    "q12_priority_class" ->
-      """SELECT l_linestatus,
-        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |               THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        | CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-        |               THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_linestatus
-        |ORDER BY l_linestatus""".stripMargin,
-    "q14_promo_revenue" ->
-      """SELECT round(CAST(sum(CAST(CASE WHEN p_type = 'ECONOMY' THEN l_extendedprice*(1-l_discount) ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE) * 100.0
-        |       / CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))) AS DOUBLE), 6) AS promo_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'""".stripMargin,
-    "q17_small_quantity" ->
-      """WITH pa AS (
-        |  SELECT l_partkey AS pk, avg(l_quantity) AS avg_qty
-        |  FROM lineitem GROUP BY 1
-        |)
-        |SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)/7.0, 2) AS avg_yearly, count(*) AS n
-        |FROM lineitem JOIN pa ON l_partkey = pk
-        |WHERE l_quantity < avg_qty * 0.5""".stripMargin,
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(l_quantity) AS total_qty
-        |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 180.0
-        |)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
-        |  round(total_qty, 2) AS total_qty
-        |FROM orders
-        |JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-    "q19_discounted" ->
-      """SELECT CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,10))),2) AS DOUBLE) AS revenue,
-        | count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 1 AND 20)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
-        |       AND l_quantity BETWEEN 10 AND 40)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
-        |       AND l_quantity BETWEEN 20 AND 50)""".stripMargin,
-    "q_sessionize_batch" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events
-        |), s AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN prev_ts IS NULL
-        |           OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e
-        |), t AS (
-        |  SELECT user_id, value,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                           ROWS UNBOUNDED PRECEDING) AS session_no
-        |  FROM s
-        |), g AS (
-        |  SELECT user_id, session_no, count(*) AS n_events,
-        |    CAST(round(sum(CAST(value AS DECIMAL(30,10))),2) AS DOUBLE) AS session_value
-        |  FROM t GROUP BY user_id, session_no
-        |)
-        |SELECT user_id, count(*) AS n_sessions,
-        |  CAST(max(n_events) AS BIGINT) AS max_session_events,
-        |  CAST(round(sum(CAST(session_value AS DECIMAL(30,10))),2) AS DOUBLE) AS total_value
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_session_window" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events
-        |), s AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN prev_ts IS NULL
-        |           OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e
-        |), t AS (
-        |  SELECT user_id, value,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                           ROWS UNBOUNDED PRECEDING) AS session_no
-        |  FROM s
-        |), g AS (
-        |  SELECT user_id, session_no, count(*) AS n_events,
-        |    CAST(round(sum(CAST(value AS DECIMAL(30,10))),2) AS DOUBLE) AS session_value
-        |  FROM t GROUP BY user_id, session_no
-        |)
-        |SELECT user_id, count(*) AS n_sessions,
-        |  CAST(max(n_events) AS BIGINT) AS max_session_events,
-        |  CAST(round(sum(CAST(session_value AS DECIMAL(30,10))),2) AS DOUBLE) AS total_value
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "dedup_exact" ->
-      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint,
-        | count(*) AS n_docs, min(doc_id) AS keeper_id
-        |FROM documents
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "dedup_url" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'HTTPS://' END)
-        |    || (CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END)
-        |    || (CASE WHEN doc_id % 2 = 1 THEN upper(source) ELSE source END)
-        |    || '.Example.COM'
-        |    || (CASE WHEN doc_id % 4 = 1 THEN ':443' ELSE '' END)
-        |    || '/Docs/' || (doc_id % 7)
-        |    || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END)
-        |    || (CASE WHEN doc_id % 3 = 0 THEN '?page=' || (doc_id % 5) || '&utm_campaign=c'
-        |             WHEN doc_id % 3 = 1 THEN '?utm_source=feed&page=' || (doc_id % 5)
-        |             ELSE '?fbclid=abc' || doc_id END)
-        |    || (CASE WHEN doc_id % 5 = 0 THEN '#sec' ELSE '' END) AS url
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id,
-        |    lower(regexp_extract(trim(url), '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |    regexp_replace(regexp_replace(trim(url), '^[A-Za-z][A-Za-z0-9+.-]*://', ''), '#.*$', '') AS nofrag
-        |  FROM u
-        |), d AS (
-        |  SELECT doc_id, scheme,
-        |    regexp_replace(lower(regexp_extract(nofrag, '^([^/?]*)', 1)), '^www\.', '') AS auth,
-        |    regexp_replace(nofrag, '^[^/?]*', '') AS pathq
-        |  FROM c
-        |), e AS (
-        |  SELECT doc_id, scheme,
-        |    CASE WHEN scheme = 'http' THEN regexp_replace(auth, ':80$', '')
-        |         WHEN scheme = 'https' THEN regexp_replace(auth, ':443$', '')
-        |         ELSE auth END AS host,
-        |    regexp_replace(regexp_extract(pathq, '^([^?]*)', 1), '/+$', '') AS path,
-        |    regexp_extract(pathq, '\?(.*)$', 1) AS query
-        |  FROM d
-        |), f AS (
-        |  SELECT doc_id, scheme, host, path,
-        |    coalesce(array_to_string(list_sort(list_filter(str_split(query, '&'),
-        |      p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|ref)(=|$)'))), '&'), '') AS qs
-        |  FROM e
-        |)
-        |SELECT scheme || '://' || host || path
-        |    || (CASE WHEN qs = '' THEN '' ELSE '?' || qs END) AS canonical_url,
-        |  count(*) AS n_docs, min(doc_id) AS keeper_id
-        |FROM f
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "dedup_bloom" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id % 2 = 1
-        |  AND md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) NOT IN (
-        |    SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |    FROM documents WHERE doc_id % 2 = 0)
-        |ORDER BY doc_id""".stripMargin,
-    "dedup_paragraph" ->
-      """WITH two AS (
-        |  SELECT d.doc_id, d.text || chr(10) || chr(10) || o.text AS text
-        |  FROM documents d JOIN documents o ON d.doc_id % 50 = o.doc_id
-        |), p AS (
-        |  SELECT doc_id, unnest(parts) AS para,
-        |    unnest(generate_series(1, len(parts))) AS pos
-        |  FROM (SELECT doc_id, str_split(text, chr(10) || chr(10)) AS parts FROM two)
-        |), r AS (
-        |  SELECT doc_id, pos, para, row_number() OVER (
-        |    PARTITION BY lower(trim(regexp_replace(para, '\s+', ' ', 'g')))
-        |    ORDER BY doc_id, pos) AS rn
-        |  FROM p
-        |), agg AS (
-        |  SELECT doc_id, string_agg(para, chr(10) || chr(10) ORDER BY pos) AS text_dedup,
-        |    count(*) AS n_kept
-        |  FROM r WHERE rn = 1 GROUP BY doc_id
-        |)
-        |SELECT t.doc_id, coalesce(a.text_dedup, '') AS text_dedup,
-        |  len(str_split(t.text, chr(10) || chr(10))) AS n_paras,
-        |  coalesce(a.n_kept, 0) AS n_kept
-        |FROM two t LEFT JOIN agg a ON t.doc_id = a.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-    // C2's candidates carry no jaccard column; the exact pair set IS the
-    // expected candidate set at gate scale (see the queries-side comment).
-    // CORPUS-COUPLED: banding precision is data-dependent, so a benign
-    // hash-collision false positive on a REGENERATED gate corpus can flip
-    // this row red with the operator behaving as designed — before
-    // trusting a red row after a testdata change, re-run DedupSpec's
-    // candidates==exact assertion on the new corpus.
-    "dedup_minhash_lsh" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)]) AS s
-        |  FROM t
-        |)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE round(CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |  ELSE len(list_intersect(a.s, b.s))::DOUBLE
-        |       / len(list_distinct(list_concat(a.s, b.s))) END, 4) >= 0.8
-        |ORDER BY a_id, b_id""".stripMargin,
-    // Sampled-recall calibration row: sample size and exact-pair count are
-    // hash-matched values; the recall bound is pinned (engine-computed).
-    "dedup_recall_sample" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents WHERE doc_id % 2 = 0
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)]) AS s
-        |  FROM t
-        |), e AS (
-        |  SELECT count(*) AS exact_pairs
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE round(CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |    ELSE len(list_intersect(a.s, b.s))::DOUBLE
-        |         / len(list_distinct(list_concat(a.s, b.s))) END, 4) >= 0.8
-        |), n AS (
-        |  SELECT count(*) AS n_sample FROM documents WHERE doc_id % 2 = 0
-        |)
-        |SELECT n.n_sample, e.exact_pairs, true AS recall_ok FROM n, e""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)]) AS s
-        |  FROM t
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    round(CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |      ELSE len(list_intersect(a.s, b.s))::DOUBLE
-        |           / len(list_distinct(list_concat(a.s, b.s))) END, 4) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |)
-        |SELECT a_id, b_id, jaccard FROM pairs
-        |WHERE jaccard >= 0.8
-        |ORDER BY a_id, b_id""".stripMargin,
-    "dedup_clusters" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)]) AS s
-        |  FROM t
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE round(CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |    ELSE len(list_intersect(a.s, b.s))::DOUBLE
-        |         / len(list_distinct(list_concat(a.s, b.s))) END, 4) >= 0.8
-        |), edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pairs
-        |  UNION
-        |  SELECT b_id AS src, a_id AS dst FROM pairs
-        |), reach AS (
-        |  SELECT doc_id AS id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT reach.id, edges.dst AS r
-        |  FROM reach JOIN edges ON reach.r = edges.src
-        |)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin,
-    "dedup_keep_canonical" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)]) AS s
-        |  FROM t
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE round(CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |    ELSE len(list_intersect(a.s, b.s))::DOUBLE
-        |         / len(list_distinct(list_concat(a.s, b.s))) END, 4) >= 0.8
-        |), edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pairs
-        |  UNION
-        |  SELECT b_id AS src, a_id AS dst FROM pairs
-        |), reach AS (
-        |  SELECT doc_id AS id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT reach.id, edges.dst AS r
-        |  FROM reach JOIN edges ON reach.r = edges.src
-        |), comp AS (
-        |  SELECT id, min(r) AS component FROM reach GROUP BY id
-        |)
-        |SELECT d.doc_id, d.n_chars
-        |FROM comp JOIN documents d ON comp.id = d.doc_id
-        |WHERE comp.id = comp.component
-        |ORDER BY d.doc_id""".stripMargin,
-    "dedup_embedding_exact" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        |)
-        |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |  round(list_cosine_similarity(a.e, b.e), 4) AS cos
-        |FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(a.e, b.e), 4) >= 0.4
-        |ORDER BY a_id, b_id""".stripMargin,
-    // Sketch-accuracy contract row: exact NDV is hash-matched outright;
-    // the error-bound booleans are pinned true (see the queries-side
-    // comment for why that is not a tautology).
-    "q_approx_stats_check" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-        |  true AS ndv_ok, true AS p50_ok, true AS p95_ok
-        |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    // Decode contract row: every value is recomputed from first principles —
-    // pixel channel sums by replaying the synthetic (id*31 + pos) & 0xffffff
-    // pattern the PNG encodes (lossless round-trip => bit-equal sums),
-    // audio container facts from the synthesis constants, raw lengths from
-    // the text bytes.
-    "multimodal_decode_check" ->
-      """WITH p AS (SELECT range AS i FROM range(0, 64))
-        |SELECT d.doc_id,
-        |  CASE d.doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |    ELSE 'raw' END AS modality,
-        |  CASE WHEN d.doc_id % 3 = 0 THEN 8 END AS width,
-        |  CASE WHEN d.doc_id % 3 = 0 THEN 8 END AS height,
-        |  CASE WHEN d.doc_id % 3 = 0 THEN CAST((SELECT
-        |    sum(((d.doc_id * 31 + p.i) % 16777216) // 65536) FROM p)
-        |    AS BIGINT) END AS sum_r,
-        |  CASE WHEN d.doc_id % 3 = 0 THEN CAST((SELECT
-        |    sum(((d.doc_id * 31 + p.i) % 65536) // 256) FROM p)
-        |    AS BIGINT) END AS sum_g,
-        |  CASE WHEN d.doc_id % 3 = 0 THEN CAST((SELECT
-        |    sum((d.doc_id * 31 + p.i) % 256) FROM p)
-        |    AS BIGINT) END AS sum_b,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN CAST(400 AS BIGINT) END AS frames,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN 8000 END AS sample_rate,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN true END AS rms_ok,
-        |  CASE WHEN d.doc_id % 3 = 2 THEN CAST(octet_length(encode(text))
-        |    AS BIGINT) END AS raw_bytes
-        |FROM documents d ORDER BY d.doc_id""".stripMargin,
-    // Recall-contract rows: the engine certifies the accuracy bound by
-    // running exact + approximate internally; the oracle pins the query
-    // set, k, and the asserted bound. `true` is not a tautology — the
-    // Spark side computes the boolean from measured recall, so a
-    // regression produces a value diff on a hash-compared row.
-    "ann_lsh_recall" ->
-      """SELECT vec_id AS query_id, 10 AS k, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 5
-        |ORDER BY query_id""".stripMargin,
-    "ann_ivf_recall" ->
-      """SELECT vec_id AS query_id, 10 AS k, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 5
-        |ORDER BY query_id""".stripMargin,
-    "ann_bruteforce" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id < 5
-        |), scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    round(list_cosine_similarity(q.qv, CAST(e.embedding AS DOUBLE[])), 4) AS cos
-        |  FROM q, embeddings e
-        |  WHERE e.vec_id <> q.query_id
-        |), ranked AS (
-        |  SELECT query_id, vec_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS "rank"
-        |  FROM scored
-        |)
-        |SELECT query_id, vec_id, cos, "rank" FROM ranked
-        |WHERE "rank" <= 10
-        |ORDER BY query_id, "rank"""".stripMargin,
-    "text_langid" ->
-      """WITH t AS (
-        |  SELECT lang,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT lang,
-        |    len(list_filter(w, x -> list_contains(['the','and','of','to','is','that','it','for'], x))) AS s_en,
-        |    len(list_filter(w, x -> list_contains(['le','la','de','et','les','des','une','est'], x))) AS s_fr,
-        |    len(list_filter(w, x -> list_contains(['der','die','und','das','ein','ist','nicht','mit'], x))) AS s_de,
-        |    len(list_filter(w, x -> list_contains(['el','los','las','y','en','que','por','con'], x))) AS s_es,
-        |    len(list_filter(w, x -> list_contains(['的','了','是','我','不','在','有','人'], x))) AS s_zh
-        |  FROM t
-        |), p AS (
-        |  SELECT lang, CASE
-        |    WHEN s_en >= s_fr AND s_en >= s_de AND s_en >= s_es AND s_en >= s_zh THEN 'en'
-        |    WHEN s_fr >= s_de AND s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
-        |    WHEN s_de >= s_es AND s_de >= s_zh THEN 'de'
-        |    WHEN s_es >= s_zh THEN 'es'
-        |    ELSE 'zh' END AS predicted
-        |  FROM s
-        |)
-        |SELECT lang, predicted, count(*) AS n FROM p
-        |GROUP BY lang, predicted
-        |ORDER BY lang, predicted""".stripMargin,
-    "text_quality" ->
-      """WITH t AS (
-        |  SELECT doc_id, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-        |  FROM documents
-        |), u AS (
-        |  SELECT doc_id, norm, string_split(norm, ' ') AS w FROM t
-        |)
-        |SELECT doc_id,
-        |  CAST(length(norm) AS INTEGER) AS n_chars_norm,
-        |  CAST(len(w) AS INTEGER) AS n_tokens,
-        |  round(0.5 * (CASE WHEN len(w) = 0 THEN 0.0
-        |               ELSE len(list_distinct(w))::DOUBLE / len(w) END)
-        |      + 0.5 * least(length(norm)::DOUBLE / 200.0, 1.0), 4) AS quality
-        |FROM u
-        |ORDER BY doc_id""".stripMargin,
-    "text_tokencount" ->
-      """WITH t AS (
-        |  SELECT doc_id, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(string_split(norm, ' ')) AS INTEGER) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(norm, '[a-z]+|[0-9]|[^a-z0-9 ]')) AS INTEGER) AS bpe_tokens
-        |FROM t
-        |ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
-      """WITH t AS (
-        |  SELECT doc_id, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-        |  FROM documents
-        |)
-        |SELECT doc_id, md5(norm) AS fingerprint,
-        |  CAST(length(norm) AS INTEGER) AS n_chars_norm
-        |FROM t
-        |ORDER BY doc_id""".stripMargin,
-    "q_dsv2_catalog" ->
-      """SELECT r_name, count(*) AS n_nations,
-        |  CAST(round(sum(CAST(s_acctbal AS DECIMAL(30,10))),2) AS DOUBLE) AS total_bal
-        |FROM region
-        |JOIN nation ON n_regionkey = r_regionkey
-        |JOIN supplier ON s_nationkey = n_nationkey
-        |GROUP BY r_name
-        |ORDER BY r_name""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_rf,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_ls,
-        |  count(*) AS n,
-        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(30,10))),2) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY g_rf, g_ls, l_returnflag, l_linestatus""".stripMargin,
-    "text_boilerplate_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), g AS (
-        |  SELECT doc_id,
-        |    unnest([array_to_string(w[i:i+7], ' ')
-        |            for i in range(1, len(w) - 6)]) AS span
-        |  FROM t
-        |)
-        |SELECT span, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
-        |FROM g
-        |GROUP BY span
-        |HAVING count(DISTINCT doc_id) >= 3
-        |ORDER BY n_docs DESC, span
-        |LIMIT 50""".stripMargin,
-    "docs_prepare_corpus" ->
-      """WITH n AS (
-        |  SELECT doc_id, lang, source,
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-        |  FROM documents
-        |), f AS (
-        |  SELECT *, md5(norm) AS fp, string_split(norm, ' ') AS w FROM n
-        |), k1 AS (
-        |  SELECT *, min(doc_id) OVER (PARTITION BY fp) AS keeper FROM f
-        |), k2 AS (
-        |  SELECT doc_id, lang, source,
-        |    CAST(len(w) AS INTEGER) AS n_tok,
-        |    round(len(list_distinct(w))::DOUBLE / len(w), 4) AS ttr,
-        |    round(0.5 * (len(list_distinct(w))::DOUBLE / len(w))
-        |          + 0.5 * least(length(norm)::DOUBLE / 200.0, 1.0), 4) AS quality
-        |  FROM k1 WHERE doc_id = keeper
-        |), k3 AS (
-        |  SELECT * FROM k2 WHERE quality >= 0.5 AND ttr >= 0.45
-        |), p AS (
-        |  SELECT *, CAST(sum(n_tok) OVER (PARTITION BY lang, source
-        |    ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        |  FROM k3
-        |)
-        |SELECT doc_id, lang, source, n_tok, ttr, quality,
-        |  (cum - n_tok) // 512 AS pack_id
-        |FROM p
-        |ORDER BY doc_id""".stripMargin,
-    "dedup_incremental" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)]) AS s
-        |  FROM t
-        |), matched AS (
-        |  SELECT DISTINCT a.doc_id
-        |  FROM sh a JOIN sh b
-        |    ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-        |   AND (CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |        ELSE len(list_intersect(a.s, b.s))::DOUBLE
-        |             / len(list_distinct(list_concat(a.s, b.s))) END) >= 0.8
-        |)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id % 2 = 1
-        |  AND doc_id NOT IN (SELECT doc_id FROM matched)
-        |ORDER BY doc_id""".stripMargin,
-    "q_salted_agg" ->
-      // the direct (unsalted) aggregation — proves the two-phase salted plan
-      // computes the same result
-      """SELECT l_suppkey,
-        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(30,10))), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |GROUP BY l_suppkey
-        |ORDER BY l_suppkey""".stripMargin,
-    "q_window_distribution" ->
-      """SELECT s_suppkey, s_nationkey,
-        |  CAST(ntile(4) OVER w AS INT) AS quartile,
-        |  round(cume_dist() OVER w, 6) AS cd,
-        |  round(percent_rank() OVER w, 6) AS pr
-        |FROM supplier
-        |WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal, s_suppkey)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_listagg" ->
-      """SELECT c_nationkey,
-        |  string_agg(c_name, ',' ORDER BY c_name) AS members,
-        |  count(*) AS n
-        |FROM customer
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-    "q_mode" ->
-      """WITH c AS (
-        |  SELECT c_nationkey, c_mktsegment, count(*) AS n
-        |  FROM customer GROUP BY 1, 2
-        |), r AS (
-        |  SELECT *, row_number() OVER
-        |    (PARTITION BY c_nationkey ORDER BY n DESC, c_mktsegment DESC) AS rn
-        |  FROM c
-        |)
-        |SELECT c_nationkey, c_mktsegment AS mode_seg, n
-        |FROM r WHERE rn = 1
-        |ORDER BY c_nationkey""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderstatus,
-        |  count(*) FILTER (o_orderpriority = '1-URGENT') AS "1-URGENT",
-        |  count(*) FILTER (o_orderpriority = '2-HIGH') AS "2-HIGH",
-        |  count(*) FILTER (o_orderpriority = '3-MEDIUM') AS "3-MEDIUM",
-        |  count(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS "4-NOT SPECIFIED",
-        |  count(*) FILTER (o_orderpriority = '5-LOW') AS "5-LOW"
-        |FROM orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "q_window_range" ->
-      """WITH d AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    sum(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
-        |  FROM orders GROUP BY 1
-        |)
-        |SELECT day,
-        |  CAST(round(sum(rev) OVER (ORDER BY day
-        |    RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW), 2)
-        |    AS DOUBLE) AS mov7
-        |FROM d
-        |ORDER BY day""".stripMargin,
-    "q_asof_join" ->
-      // same union-merge formulation; per-column last_value is safe here
-      // because the view payload has no nulls
-      """WITH l AS (
-        |  SELECT user_id, ts, event_id,
-        |    CAST(NULL AS BIGINT) AS r_id, CAST(NULL AS DOUBLE) AS r_value,
-        |    1 AS is_left
-        |  FROM events WHERE event_type = 'purchase'
-        |), r AS (
-        |  SELECT user_id, ts, CAST(NULL AS BIGINT) AS event_id,
-        |    event_id AS r_id, value AS r_value, 0 AS is_left
-        |  FROM events WHERE event_type = 'view'
-        |), u AS (
-        |  SELECT * FROM l UNION ALL SELECT * FROM r
-        |), w AS (
-        |  SELECT user_id, event_id, is_left,
-        |    last_value(r_id IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY ts, is_left, r_id
-        |       ROWS UNBOUNDED PRECEDING) AS view_id,
-        |    last_value(r_value IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY ts, is_left, r_id
-        |       ROWS UNBOUNDED PRECEDING) AS view_value
-        |  FROM u
-        |)
-        |SELECT user_id, event_id, view_id, view_value
-        |FROM w WHERE is_left = 1
-        |ORDER BY event_id""".stripMargin,
-    "q_range_join" ->
-      // direct range-predicate join — independently verifies the bucketed
-      // equi-join decomposition on the Spark side
-      """SELECT v.user_id, count(*) AS n_pairs,
-        |  count(DISTINCT v.event_id) AS n_views_with_click
-        |FROM (SELECT user_id, ts, event_id FROM events WHERE event_type='view') v
-        |JOIN (SELECT user_id, ts, event_id FROM events WHERE event_type='click') c
-        |  ON v.user_id = c.user_id
-        | AND c.ts >= v.ts AND c.ts < v.ts + INTERVAL 10 MINUTE
-        |GROUP BY v.user_id
-        |ORDER BY v.user_id""".stripMargin,
-    "docs_stratified_sample" ->
-      """SELECT doc_id, lang, source
-        |FROM documents
-        |WHERE (lang = 'en'
-        |       AND substr(md5('s42' || CAST(doc_id AS VARCHAR)), 1, 1)
-        |           IN ('0','1','2','3'))
-        |   OR (lang <> 'en'
-        |       AND substr(md5('s42' || CAST(doc_id AS VARCHAR)), 1, 1)
-        |           IN ('0','1','2','3','4','5','6','7'))
-        |ORDER BY doc_id""".stripMargin,
-    // The oracle recomputes the mixture selection from first principles as
-    // the NAIVE per-stratum window (see Mixture.sampleToTokenBudgetNaive);
-    // hash-matching it certifies the production histogram-cutoff path end
-    // to end. Token counts reuse the ws_tokens normalization both engines
-    // already hash-agree on (text_tokencount).
-    "docs_mixture_budget" ->
-      """WITH w(source, wt) AS (
-        |  VALUES ('src0', 0.25), ('src1', 0.25), ('src2', 0.125),
-        |         ('src3', 0.125), ('src4', 0.0625), ('src5', 0.0625),
-        |         ('src6', 0.0625), ('src7', 0.0625)
-        |), tok AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT) AS tokens
-        |  FROM documents
-        |), j AS (
-        |  SELECT t.doc_id, t.source, t.tokens,
-        |    md5('mix' || CAST(t.doc_id AS VARCHAR)) AS rk,
-        |    CAST(floor(w.wt / 1.0 * 4000) AS BIGINT) AS budget
-        |  FROM tok t JOIN w ON t.source = w.source
-        |), c AS (
-        |  SELECT doc_id, source, tokens, budget,
-        |    sum(tokens) OVER (PARTITION BY source ORDER BY rk, doc_id
-        |                      ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM j
-        |)
-        |SELECT doc_id, source, tokens FROM c WHERE cum <= budget
-        |ORDER BY doc_id""".stripMargin,
-    // C35: full epochs from first principles (budget // total copies via a
-    // bounded sequence join) + the remainder as the same naive window the
-    // C33 oracle uses, tagged epoch n_full.
-    "docs_mixture_epochs" ->
-      """WITH w(source, wt) AS (
-        |  VALUES ('src0', 0.25), ('src1', 0.25), ('src2', 0.125),
-        |         ('src3', 0.125), ('src4', 0.0625), ('src5', 0.0625),
-        |         ('src6', 0.0625), ('src7', 0.0625)
-        |), tok AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT) AS tokens
-        |  FROM documents
-        |), tot AS (
-        |  -- §6 rule: DuckDB sum(BIGINT) returns HUGEINT; cast so n_full (and
-        |  -- therefore the epoch column after UNION ALL) stays BIGINT like the
-        |  -- engine's, or the driver hash sees float64 "2.0" vs long "2".
-        |  SELECT source, CAST(sum(tokens) AS BIGINT) AS total FROM tok GROUP BY source
-        |), ep AS (
-        |  SELECT tot.source,
-        |    CAST(floor(w.wt / 1.0 * 12000) AS BIGINT) // tot.total AS n_full,
-        |    CAST(floor(w.wt / 1.0 * 12000) AS BIGINT) % tot.total AS rem
-        |  FROM w JOIN tot ON w.source = tot.source
-        |), seq AS (
-        |  -- bound derived from the data, not a fixture-scale constant: a
-        |  -- stratum repeated >=1000 epochs would silently truncate a fixed
-        |  -- range(1000) and report a false mismatch at larger SFs.
-        |  SELECT unnest(range((SELECT coalesce(max(n_full), 0) + 1 FROM ep))) AS epoch
-        |), full_e AS (
-        |  SELECT t.doc_id, t.source, t.tokens, s.epoch
-        |  FROM tok t
-        |  JOIN ep ON t.source = ep.source
-        |  JOIN seq s ON s.epoch < ep.n_full
-        |), frac AS (
-        |  SELECT doc_id, source, tokens, n_full AS epoch FROM (
-        |    SELECT t.doc_id, t.source, t.tokens, ep.n_full, ep.rem,
-        |      sum(t.tokens) OVER (PARTITION BY t.source
-        |                          ORDER BY md5('mix' || CAST(t.doc_id AS VARCHAR)), t.doc_id
-        |                          ROWS UNBOUNDED PRECEDING) AS cum
-        |    FROM tok t JOIN ep ON t.source = ep.source
-        |  ) WHERE cum <= rem
-        |)
-        |SELECT doc_id, source, tokens, epoch FROM full_e
-        |UNION ALL
-        |SELECT doc_id, source, tokens, epoch FROM frac
-        |ORDER BY doc_id, epoch""".stripMargin,
-    // B63: the oracle IS the naive global window the operator replaces.
-    "q_global_ids" ->
-      """SELECT doc_id, lang,
-        |  CAST(row_number() OVER (ORDER BY lang, doc_id) AS BIGINT) AS seq_id
-        |FROM documents
-        |ORDER BY seq_id""".stripMargin,
-    // C36: chunk membership from the same integer arithmetic (DuckDB `//`
-    // == Spark's truncating cast on positive ints) + 1-based inclusive
-    // list slicing (both engines clamp at the array end).
-    "docs_chunk_windows" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), n AS (
-        |  SELECT doc_id, w,
-        |    CASE WHEN len(w) <= 40 THEN 1
-        |         ELSE (len(w) - 40 + 31) // 32 + 1 END AS nc
-        |  FROM t
-        |), seq AS (
-        |  -- bound derived from max chunk count: a document over ~32k tokens
-        |  -- (nc > 1000) would silently truncate a fixed range(1000).
-        |  SELECT unnest(range((SELECT coalesce(max(nc), 0) FROM n))) AS chunk_id
-        |), c AS (
-        |  SELECT n.doc_id, s.chunk_id,
-        |    n.w[(s.chunk_id * 32 + 1):(s.chunk_id * 32 + 40)] AS ct
-        |  FROM n JOIN seq s ON s.chunk_id < n.nc
-        |)
-        |SELECT doc_id, CAST(chunk_id AS INTEGER) AS chunk_id,
-        |  CAST(len(ct) AS INTEGER) AS n_chunk_tokens,
-        |  array_to_string(ct, ' ') AS chunk_text
-        |FROM c
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-    // Naive-window recomputation of the C34 quality-prefix selection; the
-    // quality expression is byte-identical to text_quality's (already
-    // hash-matched), so the (quality DESC, md5, id) order is engine-stable.
-    "docs_quality_budget" ->
-      """WITH w(source, wt) AS (
-        |  VALUES ('src0', 0.25), ('src1', 0.25), ('src2', 0.125),
-        |         ('src3', 0.125), ('src4', 0.0625), ('src5', 0.0625),
-        |         ('src6', 0.0625), ('src7', 0.0625)
-        |), t AS (
-        |  SELECT doc_id, source,
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-        |  FROM documents
-        |), u AS (
-        |  SELECT doc_id, source, norm, string_split(norm, ' ') AS wd FROM t
-        |), q AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(wd) AS BIGINT) AS tokens,
-        |    round(0.5 * (CASE WHEN len(wd) = 0 THEN 0.0
-        |                 ELSE len(list_distinct(wd))::DOUBLE / len(wd) END)
-        |        + 0.5 * least(length(norm)::DOUBLE / 200.0, 1.0), 4) AS quality
-        |  FROM u
-        |), j AS (
-        |  SELECT q.doc_id, q.source, q.tokens, q.quality,
-        |    md5('mix' || CAST(q.doc_id AS VARCHAR)) AS rk,
-        |    CAST(floor(w.wt / 1.0 * 4000) AS BIGINT) AS budget
-        |  FROM q JOIN w ON q.source = w.source
-        |), c AS (
-        |  SELECT doc_id, source, tokens, quality, budget,
-        |    sum(tokens) OVER (PARTITION BY source
-        |                      ORDER BY quality DESC, rk, doc_id
-        |                      ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM j
-        |)
-        |SELECT doc_id, source, tokens, quality FROM c WHERE cum <= budget
-        |ORDER BY doc_id""".stripMargin,
-    "text_diversity_filter" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id,
-        |    CAST(len(toks) AS INTEGER) AS n_tokens,
-        |    CAST(len(list_distinct(toks)) AS INTEGER) AS n_distinct,
-        |    round(len(list_distinct(toks))::DOUBLE / len(toks), 4) AS ttr,
-        |    round(list_max(list_transform(list_distinct(toks),
-        |            t2 -> len(list_filter(toks, x -> x = t2))))::DOUBLE
-        |          / len(toks), 4) AS top_share
-        |  FROM t
-        |)
-        |SELECT * FROM m WHERE ttr >= 0.45 ORDER BY doc_id""".stripMargin,
-    "docs_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, source,
-        |    CAST(len(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT) AS n_tok
-        |  FROM documents
-        |), w AS (
-        |  SELECT *, CAST(sum(n_tok) OVER (PARTITION BY lang, source ORDER BY doc_id
-        |              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        |  FROM t
-        |)
-        |SELECT lang, source, (cum - n_tok) // 512 AS pack_id,
-        |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS total_tokens
-        |FROM w
-        |GROUP BY lang, source, pack_id
-        |ORDER BY lang, source, pack_id""".stripMargin,
-    "q2_min_cost" ->
-      """WITH es AS (
-        |  SELECT s_suppkey, s_name, s_acctbal, n_name
-        |  FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'
-        |), px AS (
-        |  SELECT p_partkey, p_name FROM part
-        |  WHERE p_size BETWEEN 10 AND 20 AND p_type = 'STANDARD'
-        |), offers AS (
-        |  SELECT p_partkey, p_name, s_suppkey, s_name, s_acctbal, n_name,
-        |         l_extendedprice
-        |  FROM lineitem
-        |  JOIN es ON l_suppkey = s_suppkey
-        |  JOIN px ON l_partkey = p_partkey
-        |), mn AS (
-        |  SELECT p_partkey AS mpk, min(l_extendedprice) AS min_price
-        |  FROM offers GROUP BY 1
-        |)
-        |SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey, p_name, min_price
-        |FROM offers JOIN mn ON p_partkey = mpk AND l_extendedprice = min_price
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "q16_supplier_counts" ->
-      """SELECT p_brand, p_type, p_size,
-        |  count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#1'
-        |  AND p_type NOT LIKE 'MEDIUM%'
-        |  AND p_size IN (1, 4, 7, 10, 14, 19, 23, 36)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q20_promotion_candidates" ->
-      """SELECT s_suppkey, s_name
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_name LIKE 'small%'
-        |    AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  GROUP BY l_suppkey
-        |  HAVING CAST(sum(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) > 40.0
-        |)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q21_waiting_supplier" ->
-      // classic correlated EXISTS / NOT EXISTS form — independently verifies
-      // the Spark side's single-aggregation rewrite
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name""".stripMargin,
-    "q_merge_upsert" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |), changes AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice + 100.0 AS o_totalprice, 'U' AS op
-        |  FROM base WHERE o_orderkey % 7 = 0 AND o_orderkey % 13 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 100000000, 'I', o_totalprice, 'I'
-        |  FROM base WHERE o_orderkey % 11 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, NULL, NULL, 'D'
-        |  FROM base WHERE o_orderkey % 13 = 0
-        |), merged AS (
-        |  SELECT coalesce(c.o_orderkey, b.o_orderkey) AS o_orderkey,
-        |         coalesce(c.o_orderstatus, b.o_orderstatus) AS o_orderstatus,
-        |         coalesce(c.o_totalprice, b.o_totalprice) AS o_totalprice
-        |  FROM base b FULL JOIN changes c ON b.o_orderkey = c.o_orderkey
-        |  WHERE c.op IS NULL OR c.op <> 'D'
-        |)
-        |SELECT o_orderkey, o_orderstatus, o_totalprice FROM merged
-        |WHERE o_orderkey % 17 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_scd2_dimension" ->
-      """WITH log AS (
-        |  SELECT user_id, event_id, ts, value FROM events
-        |  WHERE event_type = 'purchase' AND user_id % 50 = 0
-        |)
-        |SELECT user_id,
-        |  row_number() OVER w AS version,
-        |  ts AS valid_from,
-        |  lead(ts) OVER w AS valid_to,
-        |  lead(ts) OVER w IS NULL AS is_current,
-        |  value
-        |FROM log
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, version""".stripMargin,
-    "q_price_histogram" ->
-      """WITH s AS (
-        |  SELECT min(o_totalprice) AS mn, max(o_totalprice) AS mx FROM orders
-        |)
-        |SELECT
-        |  CAST(least(9, floor((o_totalprice - mn) * 10.0 / (mx - mn))) AS BIGINT) AS bucket,
-        |  count(*) AS n,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,10))),2) AS DOUBLE) AS total
-        |FROM orders, s
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "docs_split_shard" ->
-      """WITH d AS (
-        |  SELECT md5(CAST(doc_id AS VARCHAR)) AS h, n_chars FROM documents
-        |)
-        |SELECT CASE WHEN substr(h,1,1) IN ('c','d') THEN 'val'
-        |            WHEN substr(h,1,1) IN ('e','f') THEN 'test'
-        |            ELSE 'train' END AS split,
-        |  substr(h,2,1) AS shard,
-        |  count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM d
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "docs_domain_cap" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, lang,
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-        |  FROM documents
-        |), u AS (
-        |  SELECT doc_id, source, lang, norm, string_split(norm, ' ') AS w FROM t
-        |), q AS (
-        |  SELECT doc_id, source, lang,
-        |    round(0.5 * (CASE WHEN len(w) = 0 THEN 0.0
-        |                 ELSE len(list_distinct(w))::DOUBLE / len(w) END)
-        |        + 0.5 * least(length(norm)::DOUBLE / 200.0, 1.0), 4) AS quality
-        |  FROM u
-        |), r AS (
-        |  SELECT doc_id, source, lang, quality,
-        |    row_number() OVER (PARTITION BY source, lang
-        |                       ORDER BY quality DESC, doc_id) AS cap_rank
-        |  FROM q
-        |)
-        |SELECT doc_id, source, lang, quality, cap_rank FROM r
-        |WHERE cap_rank <= 5
-        |ORDER BY source, lang, cap_rank""".stripMargin,
-    "docs_decontaminate" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]
-        |                   for i in range(1, len(w)-3)]) AS s
-        |  FROM t
-        |), ev AS (
-        |  SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 5 = 0
-        |), tr AS (
-        |  SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 5 <> 0
-        |)
-        |SELECT tr.doc_id, count(*) AS n_shared
-        |FROM tr JOIN ev USING (g)
-        |GROUP BY tr.doc_id
-        |ORDER BY tr.doc_id""".stripMargin,
-    "text_tfidf_terms" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(w) AS term FROM t
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term
-        |), dfreq AS (
-        |  SELECT term, count(*) AS df
-        |  FROM (SELECT DISTINCT doc_id, term FROM tok) GROUP BY term
-        |), n AS (
-        |  SELECT count(DISTINCT doc_id) AS nd FROM tok
-        |), scored AS (
-        |  SELECT doc_id, term, tf, df,
-        |    round(tf * ln(nd::DOUBLE / df), 6) AS score
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN n
-        |), r AS (
-        |  SELECT doc_id, term, tf, df, score,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rn
-        |  FROM scored
-        |)
-        |SELECT doc_id, term, tf, df, score, rn FROM r
-        |WHERE rn <= 5 AND doc_id < 50
-        |ORDER BY doc_id, rn""".stripMargin,
-    // C32: identical model — same smoothing, same 1000-term cap with the
-    // same (count desc, term) tie-break, same micro-nat quantization; the
-    // final mean is integer-sum / count / 1e6, so both engines divide the
-    // same exact operands.
-    "text_perplexity" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
-        |  FROM documents
-        |), cnt AS (
-        |  SELECT term, count(*) AS c FROM t GROUP BY term
-        |), tot AS (
-        |  SELECT CAST(sum(c) AS DOUBLE) AS n, CAST(count(*) AS DOUBLE) AS v FROM cnt
-        |), lp AS (
-        |  SELECT k.term,
-        |    CAST(round(-ln((k.c + 1) / (tot.n + tot.v)) * 1e6) AS BIGINT) AS lp_micro
-        |  FROM (SELECT term, c FROM cnt ORDER BY c DESC, term LIMIT 1000) k
-        |  CROSS JOIN tot
-        |), ov AS (
-        |  SELECT CAST(round(-ln(1 / (n + v)) * 1e6) AS BIGINT) AS oov_lp_micro FROM tot
-        |)
-        |SELECT t.doc_id,
-        |  count(*) AS n_tokens,
-        |  CAST(sum(CASE WHEN lp.lp_micro IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS oov_tokens,
-        |  round(CAST(sum(coalesce(lp.lp_micro, ov.oov_lp_micro)) AS DOUBLE)
-        |        / count(*) / 1e6, 6) AS mean_nll
-        |FROM t LEFT JOIN lp ON t.term = lp.term CROSS JOIN ov
-        |GROUP BY t.doc_id
-        |ORDER BY doc_id""".stripMargin,
-    "emb_kmeans" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), c0 AS (
-        |  -- the k lowest vec_ids, exactly KMeans.seeds (orderBy(id).limit(k));
-        |  -- no assumption of a 0-based dense id domain
-        |  SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8
-        |), d1 AS (
-        |  SELECT e.vec_id, c0.cid,
-        |    round(list_sum([ (e.v[i]-c0.cv[i])*(e.v[i]-c0.cv[i])
-        |                     for i in range(1, len(e.v)+1)]), 4) AS d
-        |  FROM e, c0
-        |), a1 AS (
-        |  SELECT vec_id, cid AS c1 FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |    FROM d1
-        |  ) WHERE rn = 1
-        |), x AS (
-        |  SELECT a1.c1, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS val
-        |  FROM e JOIN a1 USING (vec_id)
-        |), m AS (
-        |  SELECT c1, pos,
-        |    round(CAST(sum(CAST(val AS DECIMAL(30,10))) AS DOUBLE) / count(*), 6) AS mv
-        |  FROM x GROUP BY c1, pos
-        |), c1t AS (
-        |  SELECT c1 AS cid, array_agg(mv ORDER BY pos) AS cv FROM m GROUP BY c1
-        |), d2 AS (
-        |  SELECT e.vec_id, c1t.cid,
-        |    round(list_sum([ (e.v[i]-c1t.cv[i])*(e.v[i]-c1t.cv[i])
-        |                     for i in range(1, len(e.v)+1)]), 4) AS d
-        |  FROM e, c1t
-        |), a2 AS (
-        |  SELECT vec_id, cid AS c2 FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |    FROM d2
-        |  ) WHERE rn = 1
-        |)
-        |SELECT a1.vec_id, a1.c1, a2.c2
-        |FROM a1 JOIN a2 USING (vec_id)
-        |WHERE vec_id < 100
-        |ORDER BY vec_id""".stripMargin,
-
-    "q_info_tables" ->
-      """SELECT * FROM (VALUES
-        |  ('glue','graft','customer','BASE TABLE'),
-        |  ('glue','graft','documents','BASE TABLE'),
-        |  ('glue','graft','embeddings','BASE TABLE'),
-        |  ('glue','graft','events','BASE TABLE'),
-        |  ('glue','graft','lineitem','BASE TABLE'),
-        |  ('glue','graft','nation','BASE TABLE'),
-        |  ('glue','graft','orders','BASE TABLE'),
-        |  ('glue','graft','part','BASE TABLE'),
-        |  ('glue','graft','region','BASE TABLE'),
-        |  ('glue','graft','supplier','BASE TABLE')
-        |) AS t(table_catalog, table_schema, table_name, table_type)
-        |ORDER BY table_name""".stripMargin,
-
-    "q_info_columns" ->
-      """SELECT * FROM (VALUES
-        |  ('glue','graft','customer','c_custkey',0,'YES','bigint'),
-        |  ('glue','graft','customer','c_name',1,'YES','string'),
-        |  ('glue','graft','customer','c_nationkey',2,'YES','int'),
-        |  ('glue','graft','customer','c_acctbal',3,'YES','double'),
-        |  ('glue','graft','customer','c_mktsegment',4,'YES','string'),
-        |  ('glue','graft','documents','doc_id',0,'YES','bigint'),
-        |  ('glue','graft','documents','text',1,'YES','string'),
-        |  ('glue','graft','documents','lang',2,'YES','string'),
-        |  ('glue','graft','documents','source',3,'YES','string'),
-        |  ('glue','graft','documents','n_chars',4,'YES','bigint'),
-        |  ('glue','graft','embeddings','vec_id',0,'YES','bigint'),
-        |  ('glue','graft','embeddings','embedding',1,'YES','array<float>'),
-        |  ('glue','graft','embeddings','label',2,'YES','int'),
-        |  ('glue','graft','events','event_id',0,'YES','bigint'),
-        |  ('glue','graft','events','ts',1,'YES','timestamp'),
-        |  ('glue','graft','events','user_id',2,'YES','bigint'),
-        |  ('glue','graft','events','event_type',3,'YES','string'),
-        |  ('glue','graft','events','value',4,'YES','double'),
-        |  ('glue','graft','events','props',5,'YES','string'),
-        |  ('glue','graft','lineitem','l_orderkey',0,'YES','bigint'),
-        |  ('glue','graft','lineitem','l_partkey',1,'YES','bigint'),
-        |  ('glue','graft','lineitem','l_suppkey',2,'YES','bigint'),
-        |  ('glue','graft','lineitem','l_linenumber',3,'YES','int'),
-        |  ('glue','graft','lineitem','l_quantity',4,'YES','double'),
-        |  ('glue','graft','lineitem','l_extendedprice',5,'YES','double'),
-        |  ('glue','graft','lineitem','l_discount',6,'YES','double'),
-        |  ('glue','graft','lineitem','l_tax',7,'YES','double'),
-        |  ('glue','graft','lineitem','l_returnflag',8,'YES','string'),
-        |  ('glue','graft','lineitem','l_linestatus',9,'YES','string'),
-        |  ('glue','graft','lineitem','l_shipdate',10,'YES','timestamp'),
-        |  ('glue','graft','nation','n_nationkey',0,'YES','int'),
-        |  ('glue','graft','nation','n_name',1,'YES','string'),
-        |  ('glue','graft','nation','n_regionkey',2,'YES','int'),
-        |  ('glue','graft','orders','o_orderkey',0,'YES','bigint'),
-        |  ('glue','graft','orders','o_custkey',1,'YES','bigint'),
-        |  ('glue','graft','orders','o_orderstatus',2,'YES','string'),
-        |  ('glue','graft','orders','o_totalprice',3,'YES','double'),
-        |  ('glue','graft','orders','o_orderdate',4,'YES','timestamp'),
-        |  ('glue','graft','orders','o_orderpriority',5,'YES','string'),
-        |  ('glue','graft','part','p_partkey',0,'YES','bigint'),
-        |  ('glue','graft','part','p_name',1,'YES','string'),
-        |  ('glue','graft','part','p_brand',2,'YES','string'),
-        |  ('glue','graft','part','p_type',3,'YES','string'),
-        |  ('glue','graft','part','p_size',4,'YES','int'),
-        |  ('glue','graft','part','p_retailprice',5,'YES','double'),
-        |  ('glue','graft','region','r_regionkey',0,'YES','int'),
-        |  ('glue','graft','region','r_name',1,'YES','string'),
-        |  ('glue','graft','supplier','s_suppkey',0,'YES','bigint'),
-        |  ('glue','graft','supplier','s_name',1,'YES','string'),
-        |  ('glue','graft','supplier','s_nationkey',2,'YES','int'),
-        |  ('glue','graft','supplier','s_acctbal',3,'YES','double')
-        |) AS t(table_catalog, table_schema, table_name, column_name,
-        |       ordinal_position, is_nullable, data_type)
-        |ORDER BY table_name, ordinal_position""".stripMargin,
-
-    "q_avro_scan" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-    // parquet twins of the csv/json-backed Glue tables: a hash match proves
-    // the text read paths return byte-identical data (see the query docs)
-    "q_csv_scan" ->
-      "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer",
-    "q_json_scan" ->
-      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier",
-
-    "q_delta_scan" ->
-      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-
-    "q_delta_dv" ->
-      """SELECT * FROM supplier
-        |WHERE s_suppkey % 7 <> 0 AND s_suppkey % 11 <> 3
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_delta_cmap" ->
-      "SELECT * FROM nation ORDER BY n_nationkey",
-
-    "text_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, generate_subscripts(w, 1) AS pos, unnest(w) AS tok FROM t
-        |), runs AS (
-        |  SELECT doc_id, count(*) AS run
-        |  FROM (SELECT doc_id, tok,
-        |          pos - row_number() OVER (PARTITION BY doc_id, tok ORDER BY pos) AS grp
-        |        FROM tok)
-        |  GROUP BY doc_id, tok, grp
-        |), mr AS (
-        |  SELECT doc_id, CAST(max(run) AS INTEGER) AS max_run FROM runs GROUP BY doc_id
-        |), ng AS (
-        |  SELECT doc_id, CAST(len(w) AS INTEGER) AS n_tokens,
-        |    [w[i] || ' ' || w[i+1] for i in range(1, len(w))] AS bg,
-        |    [w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w)-1)] AS tg
-        |  FROM t
-        |)
-        |SELECT ng.doc_id, ng.n_tokens, mr.max_run,
-        |  CASE WHEN len(bg) = 0 THEN 0.0 ELSE
-        |    round(CAST(list_max([len(list_filter(bg, x -> x = d)) for d in list_distinct(bg)]) AS DOUBLE) / len(bg), 6)
-        |  END AS top_bigram_frac,
-        |  CASE WHEN len(tg) = 0 THEN 0.0 ELSE
-        |    round(CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / len(tg), 6)
-        |  END AS dup_trigram_frac
-        |FROM ng JOIN mr USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "dedup_substring_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), g AS (
-        |  SELECT doc_id, CAST(generate_subscripts(gs, 1) - 1 AS INTEGER) AS pos,
-        |         unnest(gs) AS gram
-        |  FROM (SELECT doc_id,
-        |          [array_to_string(w[i:i+9], ' ') for i in range(1, len(w)-8)] AS gs
-        |        FROM t WHERE len(w) >= 10)
-        |), d AS (
-        |  SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2
-        |), p AS (
-        |  SELECT doc_id, pos FROM g JOIN d USING (gram)
-        |), w2 AS (
-        |  SELECT doc_id, pos,
-        |    max(pos + 10) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |  FROM p
-        |), f AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END AS flag
-        |  FROM w2
-        |), isl AS (
-        |  SELECT doc_id, pos,
-        |    sum(flag) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM f
-        |)
-        |SELECT doc_id, CAST(min(pos) AS INTEGER) AS span_start,
-        |  CAST(max(pos) + 10 AS INTEGER) AS span_end, count(*) AS n_grams
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    "docs_repetition_gate" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, generate_subscripts(w, 1) AS pos, unnest(w) AS tok FROM t
-        |), runs AS (
-        |  SELECT doc_id, count(*) AS run
-        |  FROM (SELECT doc_id, tok,
-        |          pos - row_number() OVER (PARTITION BY doc_id, tok ORDER BY pos) AS grp
-        |        FROM tok)
-        |  GROUP BY doc_id, tok, grp
-        |), mr AS (
-        |  SELECT doc_id, CAST(max(run) AS INTEGER) AS max_run FROM runs GROUP BY doc_id
-        |), ng AS (
-        |  SELECT doc_id, CAST(len(w) AS INTEGER) AS n_tokens,
-        |    [w[i] || ' ' || w[i+1] for i in range(1, len(w))] AS bg
-        |  FROM t
-        |), sig AS (
-        |  SELECT ng.doc_id, ng.n_tokens, mr.max_run,
-        |    CASE WHEN len(bg) = 0 THEN 0.0 ELSE
-        |      round(CAST(list_max([len(list_filter(bg, x -> x = d)) for d in list_distinct(bg)]) AS DOUBLE) / len(bg), 6)
-        |    END AS top_bigram_frac
-        |  FROM ng JOIN mr USING (doc_id)
-        |), g AS (
-        |  SELECT doc_id, CAST(generate_subscripts(gs, 1) - 1 AS INTEGER) AS pos,
-        |         unnest(gs) AS gram
-        |  FROM (SELECT doc_id,
-        |          [array_to_string(w[i:i+9], ' ') for i in range(1, len(w)-8)] AS gs
-        |        FROM t WHERE len(w) >= 10)
-        |), dup AS (
-        |  SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2
-        |), p AS (
-        |  SELECT doc_id, pos FROM g JOIN dup USING (gram)
-        |), w2 AS (
-        |  SELECT doc_id, pos,
-        |    max(pos + 10) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |  FROM p
-        |), f AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END AS flag
-        |  FROM w2
-        |), isl AS (
-        |  SELECT doc_id, pos,
-        |    sum(flag) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM f
-        |), spans AS (
-        |  SELECT doc_id, min(pos) AS span_start, max(pos) + 10 AS span_end
-        |  FROM isl GROUP BY doc_id, island
-        |), cover AS (
-        |  SELECT doc_id, sum(span_end - span_start) AS dup_toks
-        |  FROM spans GROUP BY doc_id
-        |)
-        |SELECT sig.doc_id, sig.n_tokens, sig.max_run, sig.top_bigram_frac,
-        |  round(CAST(coalesce(cover.dup_toks, 0) AS DOUBLE) / sig.n_tokens, 6)
-        |    AS dup_span_frac,
-        |  (sig.max_run <= 5 AND sig.top_bigram_frac <= 0.2 AND
-        |   round(CAST(coalesce(cover.dup_toks, 0) AS DOUBLE) / sig.n_tokens, 6) <= 0.5)
-        |    AS pass
-        |FROM sig LEFT JOIN cover USING (doc_id)
-        |ORDER BY sig.doc_id""".stripMargin,
-
-    // full-chain recompute of the D10 ingest pipeline: gate (max_run,
-    // top_bigram_frac over odd doc_ids) -> exact dedup (min doc_id per md5
-    // fingerprint) -> exact 3-shingle Jaccard vs the even-doc_id corpus
-    "docs_ingest_batch" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, generate_subscripts(w, 1) AS pos, unnest(w) AS tok
-        |  FROM (SELECT * FROM t WHERE doc_id % 2 = 1)
-        |), runs AS (
-        |  SELECT doc_id, count(*) AS run
-        |  FROM (SELECT doc_id, tok,
-        |          pos - row_number() OVER (PARTITION BY doc_id, tok ORDER BY pos) AS grp
-        |        FROM tok)
-        |  GROUP BY doc_id, tok, grp
-        |), mr AS (
-        |  SELECT doc_id, max(run) AS max_run FROM runs GROUP BY doc_id
-        |), bgf AS (
-        |  SELECT t.doc_id,
-        |    CASE WHEN len(bg) = 0 THEN 0.0 ELSE
-        |      round(CAST(list_max([len(list_filter(bg, x -> x = d)) for d in list_distinct(bg)]) AS DOUBLE) / len(bg), 6)
-        |    END AS top_bigram_frac
-        |  FROM (SELECT doc_id,
-        |          [w[i] || ' ' || w[i+1] for i in range(1, len(w))] AS bg
-        |        FROM t WHERE doc_id % 2 = 1) AS t
-        |), gated AS (
-        |  SELECT mr.doc_id FROM mr JOIN bgf USING (doc_id)
-        |  WHERE mr.max_run <= 5 AND bgf.top_bigram_frac <= 0.2
-        |), ex AS (
-        |  SELECT min(doc_id) AS doc_id
-        |  FROM documents JOIN gated USING (doc_id)
-        |  GROUP BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)]) AS s
-        |  FROM t
-        |), matched AS (
-        |  SELECT DISTINCT a.doc_id
-        |  FROM (SELECT sh.doc_id, sh.s FROM sh JOIN ex USING (doc_id)) a
-        |  JOIN sh b
-        |    ON b.doc_id % 2 = 0
-        |   AND (CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-        |        ELSE len(list_intersect(a.s, b.s))::DOUBLE
-        |             / len(list_distinct(list_concat(a.s, b.s))) END) >= 0.8
-        |)
-        |SELECT doc_id FROM ex
-        |WHERE doc_id NOT IN (SELECT doc_id FROM matched)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_pii_scrub" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    text || ' reach user' || CAST(doc_id AS VARCHAR)
-        |      || '@mail.example.org, call +49 (30) 1234'
-        |      || CAST(doc_id AS VARCHAR)
-        |      || ', server 192.168.' || CAST(doc_id % 256 AS VARCHAR) || '.42' AS raw
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(raw,
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\+?[0-9][0-9 ()-]{6,}[0-9]', '<PHONE>', 'g'),
-        |    '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g') AS scrubbed
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "dedup_substring_keep_first" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        |  FROM documents
-        |), g AS (
-        |  SELECT doc_id, CAST(generate_subscripts(gs, 1) - 1 AS INTEGER) AS pos,
-        |         unnest(gs) AS gram
-        |  FROM (SELECT doc_id,
-        |          [array_to_string(w[i:i+9], ' ') for i in range(1, len(w)-8)] AS gs
-        |        FROM t WHERE len(w) >= 10)
-        |), ranked AS (
-        |  SELECT doc_id, pos,
-        |    count(*) OVER (PARTITION BY gram) AS cnt,
-        |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-        |  FROM g
-        |), p AS (
-        |  SELECT doc_id, pos FROM ranked WHERE cnt >= 2 AND rn > 1
-        |), w2 AS (
-        |  SELECT doc_id, pos,
-        |    max(pos + 10) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |  FROM p
-        |), f AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END AS flag
-        |  FROM w2
-        |), isl AS (
-        |  SELECT doc_id, pos,
-        |    sum(flag) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM f
-        |)
-        |SELECT doc_id, CAST(min(pos) AS INTEGER) AS span_start,
-        |  CAST(max(pos) + 10 AS INTEGER) AS span_end, count(*) AS n_grams
-        |FROM isl GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-
-    "dedup_semantic" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), c0 AS (
-        |  SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8
-        |), d1 AS (
-        |  SELECT e.vec_id, c0.cid,
-        |    round(list_sum([ (e.v[i]-c0.cv[i])*(e.v[i]-c0.cv[i])
-        |                     for i in range(1, len(e.v)+1)]), 4) AS d
-        |  FROM e, c0
-        |), a1 AS (
-        |  SELECT vec_id, cid AS c1 FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |    FROM d1
-        |  ) WHERE rn = 1
-        |), x AS (
-        |  SELECT a1.c1, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS val
-        |  FROM e JOIN a1 USING (vec_id)
-        |), m AS (
-        |  SELECT c1, pos,
-        |    round(CAST(sum(CAST(val AS DECIMAL(30,10))) AS DOUBLE) / count(*), 6) AS mv
-        |  FROM x GROUP BY c1, pos
-        |), c1t AS (
-        |  SELECT c1 AS cid, array_agg(mv ORDER BY pos) AS cv FROM m GROUP BY c1
-        |), d2 AS (
-        |  SELECT e.vec_id, c1t.cid,
-        |    round(list_sum([ (e.v[i]-c1t.cv[i])*(e.v[i]-c1t.cv[i])
-        |                     for i in range(1, len(e.v)+1)]), 4) AS d
-        |  FROM e, c1t
-        |), a2 AS (
-        |  SELECT vec_id, cid AS cluster FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |    FROM d2
-        |  ) WHERE rn = 1
-        |), nrm AS (
-        |  SELECT vec_id, sqrt(list_sum([ v[i]*v[i] for i in range(1, len(v)+1)])) AS nr
-        |  FROM e
-        |), dropped AS (
-        |  SELECT DISTINCT b.vec_id
-        |  FROM a2 a JOIN a2 b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-        |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-        |  JOIN nrm na ON na.vec_id = a.vec_id JOIN nrm nb ON nb.vec_id = b.vec_id
-        |  WHERE na.nr > 0 AND nb.nr > 0
-        |    AND round(list_sum([ ea.v[i]*eb.v[i] for i in range(1, len(ea.v)+1)])
-        |              / (na.nr * nb.nr), 4) >= 0.4
-        |)
-        |SELECT a2.vec_id, a2.cluster,
-        |  a2.vec_id NOT IN (SELECT vec_id FROM dropped) AS kept
-        |FROM a2 ORDER BY vec_id""".stripMargin,
-
-    "q_click_attribution" ->
-      """WITH v AS (
-        |  SELECT user_id, event_id AS view_id, ts AS view_ts
-        |  FROM events WHERE event_type = 'view'
-        |), c AS (
-        |  SELECT user_id AS c_user_id, event_id AS click_id, ts AS click_ts
-        |  FROM events WHERE event_type = 'click'
-        |)
-        |SELECT user_id, view_id, click_id,
-        |  epoch_us(view_ts) AS view_us, epoch_us(click_ts) AS click_us
-        |FROM v JOIN c ON user_id = c_user_id
-        |  AND epoch_us(click_ts) >= epoch_us(view_ts)
-        |  AND epoch_us(click_ts) < epoch_us(view_ts) + 600000000
-        |ORDER BY user_id, view_id, click_id""".stripMargin,
-
-    "q_table_stats" -> {
-      def one(c: String, isNum: Boolean) = {
-        val minNum = if (isNum) s"CAST(MIN($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-        val maxNum = if (isNum) s"CAST(MAX($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-        val minStr = if (isNum) "CAST(NULL AS VARCHAR)" else s"CAST(MIN($c) AS VARCHAR)"
-        val maxStr = if (isNum) "CAST(NULL AS VARCHAR)" else s"CAST(MAX($c) AS VARCHAR)"
-        s"""SELECT '$c' AS column_name, COUNT(*) AS n_rows,
-           |  COUNT(*) - COUNT($c) AS n_nulls, COUNT(DISTINCT $c) AS ndv,
-           |  $minNum AS min_num, $maxNum AS max_num,
-           |  $minStr AS min_str, $maxStr AS max_str FROM part""".stripMargin
-      }
-      Seq(
-        one("p_partkey", isNum = true),
-        one("p_brand", isNum = false),
-        one("p_retailprice", isNum = true),
-        one("p_size", isNum = true)
-      ).mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-    }
-  )
-
-  /** The queries that deliberately ship WITHOUT a DuckDB oracle, each with
-    * the reason and the compensating verification. Machine-readable: Verify
-    * dumps this next to oracle_sql.json so the correctness artifact is
-    * self-documenting — a gate row reading "no_oracle" has its
-    * justification in the same directory. Every entry here must point at
-    * either a hash-matched contract row or a spec; QueriesSpec enforces
-    * that this map and oracleSql exactly partition the query set. */
-  def oracleExempt: Map[String, String] = Map(
-    "dedup_simhash" ->
-      ("simhash bit internals are not portable SQL; the band guarantee is " +
-        "pigeonhole (hamming <= d implies a band collision) and is spec'd " +
-        "on planted fixtures (DedupSpec); emitted hamming distances are " +
-        "exact in-engine values"),
-    "dedup_embedding" ->
-      ("bucketed LSH recall is probabilistic by design; precision is " +
-        "structural (in-bucket exact cosine verify) and spec'd as a subset " +
-        "of the HASH-MATCHED dedup_embedding_exact ground truth, with a " +
-        "measured recall floor (DedupSpec)"),
-    "ann_lsh" ->
-      ("approximate top-k; accuracy is gate-checked by the HASH-MATCHED " +
-        "ann_lsh_recall contract row (recall floor 0.8 per query, measured " +
-        "1.0 at the gate params)"),
-    "ann_ivf" ->
-      ("approximate top-k; accuracy is gate-checked by the HASH-MATCHED " +
-        "ann_ivf_recall contract row (recall floor 0.8 per query, measured " +
-        "0.9 at the gate params)"),
-    "multimodal_features" ->
-      ("float feature vectors are not portable SQL; the codec round-trip " +
-        "is gate-checked by the HASH-MATCHED multimodal_decode_check " +
-        "contract row (pixel channel sums, container facts and byte " +
-        "lengths recomputed by the oracle from first principles), and the " +
-        "codecs are spec'd on known pixels/samples (MultimodalSpec)"),
-    "q_approx_stats" ->
-      ("HLL/KLL sketch values are engine-specific; the accuracy bounds are " +
-        "gate-checked by the HASH-MATCHED q_approx_stats_check contract " +
-        "row (exact NDV value plus rank-checked percentile booleans)")
-  )
-
-  /** The compensating check for each [[oracleExempt]] entry, machine-
-    * readable: either the NAME of a hash-matched gate query (a key of
-    * [[oracleSql]]) that pins the exempt operator's accuracy, or a
-    * `spec:<SuiteName>` pointer for the one case whose guarantee is
-    * fixture-based. Verify emits this alongside the reasons so a
-    * `no_oracle` row in the correctness artifact is tied to its passing
-    * contract row by key, not by prose. QueriesSpec enforces the keyset
-    * matches oracleExempt and that every named contract row is oracled. */
-  def oracleExemptContract: Map[String, String] = Map(
-    "dedup_simhash" -> "spec:DedupSpec",
-    "dedup_embedding" -> "dedup_embedding_exact",
-    "ann_lsh" -> "ann_lsh_recall",
-    "ann_ivf" -> "ann_ivf_recall",
-    "multimodal_features" -> "multimodal_decode_check",
-    "q_approx_stats" -> "q_approx_stats_check"
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.map(r => r.name -> r.build).toMap
+
+  val oracleSql: Map[String, String] =
+    rows.collect { case GateQuery(n, _, Oracle(sql)) => n -> sql }.toMap
 }

@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.gate.{Contract, GateQuery}
+
+/** Driver-run correctness dump: each gate row's result → parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -14,10 +17,9 @@ object Verify {
     val spark = BenchSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.nonEmpty && !only.contains(name)) ()
-      else
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    for (GateQuery(name, build, _) <- SparkEntry.rows
+         if only.isEmpty || only.contains(name)) {
+      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
@@ -43,10 +45,11 @@ object Verify {
     // contract row (or spec) verifies it instead — so a "no_oracle" row in
     // the correctness artifact is tied to its passing contract row by key,
     // machine-readably, in the same directory
-    val exempt = SparkEntry.oracleExempt
-      .map { case (k, v) =>
-        val c = SparkEntry.oracleExemptContract.getOrElse(k, "")
-        s"""${q(k)}: {"reason": ${q(v)}, "contract": ${q(c)}}"""
+    // (a Map, like oracleSql, so the key order is the artifact's historical one)
+    val exempt = SparkEntry.rows
+      .collect { case GateQuery(k, _, c: Contract) => k -> c }.toMap
+      .map { case (k, Contract(row, why)) =>
+        s"""${q(k)}: {"reason": ${q(why)}, "contract": ${q(row)}}"""
       }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_exempt.json"), exempt)
     spark.stop()

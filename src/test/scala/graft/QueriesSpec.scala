@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.gate.{Contract, GateQuery, Oracle}
+
 /** Smoke + plan-shape checks for the oracle-backed query suite. Value-level
   * correctness is enforced by the driver's DuckDB gate (and its local replica
   * tools/check_oracle.py); here we assert each query runs, returns rows, and
@@ -11,39 +13,26 @@ class QueriesSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   private val dir = SparkFixture.sfDir
 
-  test("oracleSql and oracleExempt exactly partition the query set") {
-    val missing = SparkEntry.queries.keySet --
-      SparkEntry.oracleSql.keySet -- SparkEntry.oracleExempt.keySet
-    assert(missing.isEmpty, s"queries without oracle or exemption: $missing")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without query: $orphans")
-    val both = SparkEntry.oracleSql.keySet & SparkEntry.oracleExempt.keySet
-    assert(both.isEmpty, s"exempt queries that actually have oracles: $both")
-    val danglingExempt =
-      SparkEntry.oracleExempt.keySet -- SparkEntry.queries.keySet
-    assert(danglingExempt.isEmpty, s"exemptions without query: $danglingExempt")
-    // every exemption names its compensating evidence
-    SparkEntry.oracleExempt.foreach { case (k, why) =>
+  test("registry: unique names, contracts chain to oracle rows, specs resolve") {
+    val names = SparkEntry.rows.map(_.name)
+    assert(names.distinct == names, s"duplicate gate query names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    val oracled = SparkEntry.rows.collect { case GateQuery(n, _, Oracle(_)) => n }.toSet
+    for (GateQuery(n, _, Contract(row, why)) <- SparkEntry.rows) {
+      // every exemption names its compensating evidence…
       assert(
         why.contains("HASH-MATCHED") || why.contains("spec"),
-        s"$k exemption cites neither a contract row nor a spec"
+        s"$n exemption cites neither a contract row nor a spec"
       )
-    }
-    // …and the machine-readable contract map mirrors it exactly: same keys,
-    // and every named contract row is itself an ORACLED gate query (so the
-    // exemption chains to a hash-matched row, never to another exemption)
-    assert(
-      SparkEntry.oracleExemptContract.keySet == SparkEntry.oracleExempt.keySet,
-      "oracleExemptContract keys must equal oracleExempt keys"
-    )
-    SparkEntry.oracleExemptContract.foreach { case (k, c) =>
-      if (c.startsWith("spec:"))
-        assert(c.length > "spec:".length, s"$k names an empty spec")
-      else
-        assert(
-          SparkEntry.oracleSql.contains(c),
-          s"$k's contract row '$c' is not an oracled gate query"
-        )
+      // …which is either an existing suite or an ORACLED gate row (so the
+      // exemption chains to a hash-matched row, never to another exemption)
+      if (row.startsWith("spec:")) {
+        val suite = row.stripPrefix("spec:")
+        val pkgs = Seq("", "catalog.", "functions.", "operators.", "plans.", "sources.", "streaming.")
+        assert(pkgs.exists(p => scala.util.Try(Class.forName(s"graft.$p$suite")).toOption
+          .exists(classOf[org.scalatest.Suite].isAssignableFrom)), s"$n names a missing suite '$row'")
+      } else
+        assert(oracled(row), s"$n's contract row '$row' is not an oracled gate query")
     }
   }
 

@@ -53,7 +53,7 @@ class SessionEquivalenceSpec extends AnyFunSuite {
     "events table, bit-for-bit (fixed-point rounding included)") {
     val events = Tables.t(spark, dir, "events")
     val native = rows(nativeRollup(events))
-    val lagForm = rows(SparkEntry.sessionRollup(events))
+    val lagForm = rows(gate.sessionRollup(events))
     val onePass =
       rows(operators.Sessionize.userSessionStats(events, 1800000000L))
     assert(native.nonEmpty && lagForm == native)
@@ -79,7 +79,7 @@ class SessionEquivalenceSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     val native = sessions(nativeRollup(events))
-    val rollup = sessions(SparkEntry.sessionRollup(events))
+    val rollup = sessions(gate.sessionRollup(events))
     val onePass =
       sessions(operators.Sessionize.userSessionStats(events, 1800000000L))
 
@@ -125,7 +125,7 @@ class SessionEquivalenceSpec extends AnyFunSuite {
         )
       }.sortBy(_._1)
 
-    val lagForm = canon(SparkEntry.sessionRollup(events))
+    val lagForm = canon(gate.sessionRollup(events))
     val onePass =
       canon(operators.Sessionize.userSessionStats(events, 1800000000L))
     assert(

@@ -73,7 +73,7 @@ class SessionizePropertySpec extends AnyFunSuite {
         .repartition(5, col("event_id"))
       // Sessionize's output order is unspecified (no gate-only sort), so
       // both sides canonicalize by user_id before comparing.
-      val expected = graft.SparkEntry
+      val expected = graft.gate
         .sessionRollup(df)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -6,6 +6,15 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Reads <verifyOutDir>/<name>/ parquet (written by graft.Verify), re-runs
 <verifyOutDir>/oracle_sql.json in DuckDB with views named after the tables in
 <sfDir>, and compares: columns sorted by name, rows sorted, exact values.
+
+<verifyOutDir>/oracle_exempt.json lists the rows that ship without an oracle,
+each with the contract row that checks it instead. Beyond the value compare,
+the gate fails:
+  - a key of either JSON with no output dir (a row that threw in Verify
+    writes none);
+  - a rows-only dir with no exemption, or with no rows;
+  - an exemption whose contract row did not come out OK in this run
+    (`spec:<Suite>` contracts are checked by the test suite, not here).
 """
 import glob
 import json
@@ -41,12 +50,18 @@ def main(sf_dir, out_dir):
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{f}'")
     with open(os.path.join(out_dir, "oracle_sql.json")) as fh:
         oracles = json.load(fh)
+    with open(os.path.join(out_dir, "oracle_exempt.json")) as fh:
+        exempt = json.load(fh)
 
     failures = 0
-    for name in sorted(os.listdir(out_dir)):
+    ok = set()
+    dirs = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+    for name in sorted(set(oracles) | set(exempt)):
+        if name not in dirs:
+            print(f"{name:24s} !! NO OUTPUT (the row failed in Verify)")
+            failures += 1
+    for name in sorted(dirs):
         qdir = os.path.join(out_dir, name)
-        if not os.path.isdir(qdir):
-            continue
         rel = con.sql(f"SELECT * FROM '{qdir}/*.parquet'")
         spark_cols = [c.lower() for c in rel.columns]
         spark_rows = rel.fetchall()
@@ -54,6 +69,9 @@ def main(sf_dir, out_dir):
             status = f"rows-only ({len(spark_rows)} rows)"
             if len(spark_rows) == 0:
                 status += "  !! EMPTY"
+                failures += 1
+            if name not in exempt:
+                status += "  !! NO ORACLE AND NO EXEMPTION"
                 failures += 1
             print(f"{name:24s} {status}")
             continue
@@ -66,6 +84,7 @@ def main(sf_dir, out_dir):
             continue
         a, b = canon(spark_rows, spark_cols), canon(ora_rows, ora_cols)
         if a == b:
+            ok.add(name)
             print(f"{name:24s} OK ({len(a)} rows)")
         else:
             failures += 1
@@ -80,6 +99,19 @@ def main(sf_dir, out_dir):
                 print(f"   only-spark : {only_a}")
             if only_b:
                 print(f"   only-oracle: {only_b}")
+    linked = 0
+    for name in sorted(exempt):
+        contract = exempt[name]["contract"]
+        if contract.startswith("spec:"):
+            print(f"{name:24s} exempt -> {contract} (checked by the test suite)")
+            linked += 1
+        elif contract in ok:
+            print(f"{name:24s} exempt -> {contract} OK")
+            linked += 1
+        else:
+            print(f"{name:24s} exempt -> {contract}  !! CONTRACT ROW NOT OK")
+            failures += 1
+    print(f"OK: {len(ok)}  EXEMPT LINKED: {linked}/{len(exempt)}")
     print("FAILURES:", failures)
     return 1 if failures else 0
 
