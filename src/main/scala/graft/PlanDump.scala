@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: formatted physical plans for the flagship queries,
   * the evidence that the plans have the shape §5 of SURVEY.md claims
   * (broadcast dims, pushdown, codegen fusion, single-shuffle LSH).
@@ -91,14 +89,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench session's confs (hash-first joins, 256-way AQE shuffle
+    // width) at a fixed width of 4, so the plans do not depend on the host
+    val spark = BenchSession.builder("4").appName("graft-plans").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val sb = new StringBuilder
