@@ -118,7 +118,7 @@ object Probe {
         val df = fn(spark, dir)
         val formatted = df.queryExecution.explainString(FormattedMode)
         force(df) // so the executed plan is the AQE-final one
-        println(s"== $q @ $dir — explain(formatted) ==\n$formatted")
+        println(s"== $q @ $dir: explain(formatted) ==\n$formatted")
         println(s"== AQE-final executedPlan ==\n${df.queryExecution.executedPlan}")
       }
       if (a.stages) {
