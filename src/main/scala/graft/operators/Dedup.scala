@@ -331,8 +331,7 @@ object Dedup {
       shingleK: Int = 3,
       numHashes: Int = 128,
       bands: Int = 32,
-      maxBucketSize: Int = 1000,
-      largeInputBytes: Long = Spread.DefaultLargeInputBytes
+      maxBucketSize: Int = 1000
   ): DataFrame = {
     implicit val spark: SparkSession = incoming.sparkSession
     def bandTable(df: DataFrame) = minhashBands(
@@ -363,7 +362,7 @@ object Dedup {
       sort_array(
         array_distinct(GraftFunctions.shingleHashes(TF.normText(c), shingleK))
       )
-    if (!Spread.isLarge(reference, largeInputBytes)) {
+    if (Spread.scale(reference) < Spread.Scale.Large) {
       // Small corpora (the gate-scale regime): the flat overhead of the
       // pinned shape below — an eager checkpoint plus broadcast-build
       // jobs — costs more than the corpus-text shuffle it avoids. Plan
@@ -444,13 +443,15 @@ object Dedup {
     * `expectedItems` sizes the filter; pass the corpus row estimate (from
     * table statistics at scale). When <= 0 it is measured with a count job.
     *
-    * The fingerprint projection of the reference corpus is persisted
-    * (MEMORY_AND_DISK) for the duration of this call's three uses — the
-    * optional count, the filter build, and the verify join embedded in the
-    * lazy result — so the reference text is scanned and fingerprinted once,
-    * not three times. It stays cached until the caller's action completes;
-    * repeated ingest batches at scale should instead pre-build the filter
-    * once and use the `bloomNewDocs(incoming, bloom, refFp, ...)` overload.
+    * The fingerprint projection of the reference corpus is a lazy
+    * `localCheckpoint` shared by its three uses — the optional count, the
+    * filter build, and the verify join embedded in the lazy result — so
+    * the reference text is scanned and fingerprinted once, not three
+    * times. The first of those jobs materializes it (no extra job), and it
+    * registers no `CacheManager` entry, so nothing outlives the result's
+    * lineage and no later query reads it back. Repeated ingest batches at
+    * scale should instead pre-build the filter once and use the
+    * `bloomNewDocs(incoming, bloom, refFp, ...)` overload.
     */
   def bloomNewDocs(
       incoming: DataFrame,
@@ -463,7 +464,7 @@ object Dedup {
     val refFp = reference
       .select(TF.fingerprint(col(textCol)).as("__fp"))
       .where(col("__fp").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val n = if (expectedItems > 0) expectedItems else math.max(refFp.count(), 1L)
     val bloom = refFp
       .select(xxhash64(col("__fp")).as("__k"))
@@ -573,9 +574,7 @@ object Dedup {
       idCol: String,
       k: Int = 10,
       minOccurrences: Long = 2L,
-      keepFirst: Boolean = false,
-      pinMinInputBytes: Long = Spread.PinMinInputBytes,
-      largeInputBytes: Long = Spread.DefaultLargeInputBytes
+      keepFirst: Boolean = false
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1 && k <= 16, "k must be in [1,16] (shingle-kernel bound)")
@@ -598,22 +597,17 @@ object Dedup {
     // Round 14 (guide §3.3 materialize vs recompute, VERDICT r13 item 3):
     // the gram table feeds TWO consumers (the per-gram stats aggregate and
     // the join probe), so an unpinned plan runs the tokenize+hash kernel
-    // over every document twice. In the mid-band [pinMin, large) the
-    // (id, pos, gh) frame is tens of MB of longs — pin it once and share;
-    // the join-back then broadcasts the cnt>=2 gram dictionary explicitly
-    // (the pin is a LogicalRDD with no stats, so the plan-time broadcast
-    // the raw shape already got would otherwise be lost until AQE
-    // re-derives it). OUTSIDE the band the shape is byte-identical to
-    // round 13, for opposite measured reasons: below pinMin the pin's
-    // fixed barrier costs more than the tiny kernel pass it saves
-    // (sf0.1: +0.13 s/query), while above the cap the gram table is
-    // O(corpus tokens) — materializing it would write corpus-scale bytes
-    // to executor storage, whereas the second kernel pass is
-    // embarrassingly parallel and touches no exchange (sf1, inside the
-    // band: −45..−49%/query; sf10 plan verified unchanged).
-    val pinSmall =
-      Spread.isLarge(docs, pinMinInputBytes) &&
-        !Spread.isLarge(docs, largeInputBytes)
+    // over every document twice. In the Mid band the (id, pos, gh) frame
+    // is tens of MB of longs — pin it once and share; the join-back then
+    // broadcasts the cnt>=2 gram dictionary explicitly. The pin keeps the
+    // gram table's estimate, so the hint is not about lost statistics: the
+    // dictionary's estimate ignores the cnt>=2 filter and grows with the
+    // docs (3.8 MB from a 2.9 MB estimate of sf1's (doc_id, text), pinned
+    // or not), so toward the band's top it passes the 10 MB auto-broadcast
+    // threshold, and the hint keeps the broadcast across the whole band.
+    // OUTSIDE the band the shape is byte-identical to round 13, for the
+    // opposite reasons written at [[Spread.scale]].
+    val pinSmall = Spread.scale(docs) == Spread.Scale.Mid
     val gramsOf = if (pinSmall) gramsRaw.localCheckpoint() else gramsRaw
     // Per-gram stats come from a partially-aggregating groupBy, NOT a
     // window over the gram hash: a window partitioned by "gh" would pull

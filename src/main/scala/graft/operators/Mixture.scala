@@ -128,35 +128,15 @@ object Mixture {
       col("tok").as("tokens")
     )
 
-  /** Inputs whose optimizer-estimated size is at or below this many bytes
-    * take the ONE-WINDOW cutoff instead of the two-pass histogram
-    * machinery (0 or negative disables the switch — always machinery).
-    * The two formulations are bit-identical (spec + oracle proven); the
-    * choice is pure plan adaptivity, the same class of decision as AQE's
-    * join-strategy re-plan: below the threshold even a 100%-hot stratum
-    * is a few seconds of one-task window work, while the machinery's
-    * fixed cost — two aggregate passes, a checkpoint, three input reads —
-    * dominates. A 100 TB input exceeds any sane setting by orders of
-    * magnitude and always gets the machinery. */
-  val OneWindowMaxBytesKey = "graft.mixture.oneWindowMaxBytes"
-  private val OneWindowMaxBytesDefault: Long = 256L << 20
-
-  /** Plan-stats size gate (no job: file-size based for scans). Measured on
-    * the parent `docs` frame, whose width upper-bounds the skinny
-    * (s, id, tok, rk) frame the window would actually sort. */
-  private def oneWindowOk(docs: DataFrame): Boolean = {
-    val raw = docs.sparkSession.conf
-      .get(OneWindowMaxBytesKey, OneWindowMaxBytesDefault.toString)
-    val limit =
-      try raw.toLong
-      catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$OneWindowMaxBytesKey must be a byte count, got '$raw'"
-          )
-      }
-    limit > 0 && docs.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
-  }
+  /** Small inputs (below [[Spread.Scale]] `Huge`, measured on the parent
+    * `docs` frame, whose width upper-bounds the skinny (s, id, tok, rk)
+    * frame the window would actually sort) take the ONE-WINDOW cutoff
+    * instead of the two-pass histogram machinery. The two formulations are
+    * bit-identical (spec + oracle proven); the choice is pure plan
+    * adaptivity, the same class of decision as AQE's join-strategy
+    * re-plan. A 100 TB input always gets the machinery. */
+  private def oneWindowOk(docs: DataFrame): Boolean =
+    Spread.scale(docs) < Spread.Scale.Huge
 
   /** Reference formulation: ONE cumulative window per stratum. Semantics
     * ground truth for the spec and the shape of the DuckDB oracle; not the

@@ -31,40 +31,56 @@ object Spread {
     else df
   }
 
-  /** Scale gate for pin/semi-filter shapes (round 14): true when the
-    * frame's optimizer size estimate reaches `minBytes`. Reads plan-time
-    * statistics only — file sizes for scans, no job, no data touched — the
-    * same no-job discipline as [[widenIfNarrow]]'s split-count check.
+  /** Plan-stats size bands, in order. See [[scale]]. */
+  object Scale extends Enumeration { val Small, Mid, Large, Huge = Value }
+  type Scale = Scale.Value
+
+  /** The one scale gate: the band of `df`'s optimizer size estimate. Reads
+    * `optimizedPlan.stats.sizeInBytes` once — file sizes for scans, no job,
+    * no data touched — the same no-job discipline as [[widenIfNarrow]]'s
+    * split-count check. The sites that branch on it:
+    *   - [[Dedup.dedupAgainstCorpus]] and `CorpusIngest.prepareBatch` pin
+    *     ids and semi-filter text at `>= Large`;
+    *   - [[Dedup.duplicateSpans]] pins its gram table at `Mid` only;
+    *   - [[Mixture]] takes the one-window cutoff below `Huge`.
     *
-    * Used to keep fixed-overhead constructs (an eager localCheckpoint of a
-    * small multi-consumer frame, broadcast semi-filters ahead of a verify
-    * join) OUT of small-input plans, where a handful of extra driver
-    * round-trips costs more than the kernel re-derivations and text
-    * shuffles they remove, and IN at scale, where those re-derivations and
-    * shuffles grow linearly with the corpus while the overhead stays flat.
-    * The default threshold (16 MB of estimated — compressed — input) is
-    * the break-even's order of magnitude, not a tuned constant: ~4 extra
-    * driver round-trips cost ~0.1 s locally, while ≥16 MB of snappy
-    * parquet text is ~100+ MB decompressed, so ONE avoided per-row text
-    * kernel pass already costs more than the overhead on any plausible
-    * kernel throughput — and the avoided term keeps growing with the
-    * corpus while the overhead does not; both sides of the comparison
-    * move together on a bigger cluster. Callers expose it as a parameter.
+    * Every pin or cutoff it guards pays a flat price (an eager barrier job,
+    * a few driver round-trips, ~0.1 s locally) to save work that grows with
+    * the input, so each edge sits where that work first outgrows the price:
+    *   - `Mid` (2 MB): a pin of the duplicate-span gram table LOSES
+    *     ~0.13 s/query at 0.58 MB of compressed docs (sf0.1) and WINS
+    *     ~1.0 s/query (−45..−49%) at 6.7 MB (sf1); 2 MB is the order of
+    *     magnitude where one saved kernel pass first covers the barrier.
+    *   - `Large` (16 MB): ≥16 MB of snappy parquet text is ~100+ MB
+    *     decompressed, so one avoided per-row text kernel pass or text
+    *     shuffle costs more than the pin on any plausible kernel
+    *     throughput. It is also where the duplicate-span gram table,
+    *     O(corpus tokens), stops being worth writing to executor storage:
+    *     the second kernel pass is embarrassingly parallel and touches no
+    *     exchange (sf10 plan verified unchanged).
+    *   - `Huge` (>256 MB): below it even a 100%-hot stratum is a few
+    *     seconds of one-task window work, while the mixture machinery's
+    *     fixed cost (two aggregate passes, a checkpoint, three input reads)
+    *     dominates (docs_quality_budget 0.93 → 0.21 s at sf0.1, and still a
+    *     win at sf10's 59 MB).
+    * Both sides of each comparison move together on a bigger cluster.
+    *
+    * An unknown estimate (`spark.sql.defaultSizeInBytes`, `Long.MaxValue`
+    * by default, e.g. an RDD-backed frame) reads `Huge` on purpose: that is
+    * every site's scale-safe branch. Streaming micro-batches and
+    * `localCheckpoint`ed frames are not unknown: on Spark 4.1 they keep the
+    * estimate of the plan they came from (pinned by `CorpusIngestSpec`).
+    * Boundaries: `>=` at 2 MB and 16 MB, `<=` at 256 MB.
     */
-  def isLarge(df: DataFrame, minBytes: Long): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
+  def scale(df: DataFrame): Scale = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes < MidBytes) Scale.Small
+    else if (bytes < LargeBytes) Scale.Mid
+    else if (bytes <= HugeBytes) Scale.Large
+    else Scale.Huge
+  }
 
-  /** The shared default for [[isLarge]] gates. */
-  val DefaultLargeInputBytes: Long = 16L << 20
-
-  /** Lower bound for mid-band materialization gates (round 14,
-    * [[Dedup.duplicateSpans]]'s gram-table pin): a pin pays a fixed price —
-    * an eager barrier job plus ~2 driver round-trips, ~0.1 s locally — while
-    * the kernel re-derivation it saves grows with input bytes. Measured at
-    * the break-even's two sides: 0.58 MB compressed docs (sf0.1) the pin
-    * LOSES ~0.13 s/query (overhead > one widened kernel pass); 6.7 MB (sf1)
-    * it WINS ~1.0 s/query (−45..−49%). 2 MB is the order of magnitude where
-    * one saved pass first covers the barrier on any plausible kernel
-    * throughput — below it the unpinned shape is kept on purpose. */
-  val PinMinInputBytes: Long = 2L << 20
+  private val MidBytes: Long = 2L << 20
+  private val LargeBytes: Long = 16L << 20
+  private val HugeBytes: Long = 256L << 20
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.{Dedup, Repetition}
+import graft.operators.{Dedup, Repetition, Spread}
 import graft.sources.DeltaRead
 
 /** The composed streaming ingestion pipeline a training-data corpus runs
@@ -48,8 +48,7 @@ object CorpusIngest {
       textCol: String,
       idCol: String,
       jaccardThreshold: Double,
-      gate: Gate,
-      largeInputBytes: Long = graft.operators.Spread.DefaultLargeInputBytes
+      gate: Gate
   ): DataFrame = {
     val sig = Repetition.signals(batch, textCol, idCol)
     val passing = sig
@@ -76,22 +75,24 @@ object CorpusIngest {
         // scale, eagerly checkpointed inside the timed query — and rebuild
         // the batch side as batch ⋈ ids: every downstream re-derivation is
         // then a scan + id semi-join with zero kernel work. Gated on batch
-        // size (Spread.isLarge): below the gate the pin's flat driver
+        // size (Spread.scale >= Large): below it the pin's flat driver
         // round-trips cost more than the duplicated kernels, and the plan
         // stays byte-identical to round 13's.
         val selfDeduped =
-          if (!graft.operators.Spread.isLarge(batch, largeInputBytes))
-            selfDeduped0
+          if (Spread.scale(batch) < Spread.Scale.Large) selfDeduped0
           else {
             val width = batch.sparkSession.sparkContext.defaultParallelism
             val survivorIds =
               selfDeduped0.select(col(idCol)).coalesce(width).localCheckpoint()
-            // explicit broadcast: a checkpointed frame is a LogicalRDD with
-            // no size statistics, and without the hint the planner paired
-            // it with the batch TEXT in a ShuffledHashJoin — re-shuffling
-            // the whole batch payload to attach an id list (and running
-            // the downstream minhash kernel on the join's narrow coalesced
-            // output: a single-task 2.6 s stage at sf10). The ids are
+            // explicit broadcast: the checkpointed ids keep the size
+            // estimate of the gated batch join they were cut from (a
+            // non-CBO join estimate is the product of its sides), far above
+            // the id list's real size, and without the hint the planner
+            // paired them with the batch TEXT in a ShuffledHashJoin —
+            // re-shuffling the whole batch payload to attach an id list
+            // (and running the downstream minhash kernel on the join's
+            // narrow coalesced output: a single-task 2.6 s stage at
+            // sf10). The ids are
             // ∝ the bounded micro-batch, the same size contract the
             // candidate-pair broadcast downstream already relies on.
             batch.join(broadcast(survivorIds), idCol)
@@ -101,8 +102,7 @@ object CorpusIngest {
           ref.select(col(idCol), col(textCol)),
           textCol,
           idCol,
-          jaccardThreshold,
-          largeInputBytes = largeInputBytes
+          jaccardThreshold
         )
       case None => selfDeduped0
     }

@@ -37,9 +37,14 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("all queries execute and return rows at sf0.001") {
+    // no row may leave a CacheManager entry behind: a later run would read
+    // it back as an InMemoryTableScan, which is cross-run caching
+    val cache = spark.sharedState.cacheManager
+    assert(cache.isEmpty, "cache entries before the first row")
     for ((name, fn) <- SparkEntry.queries) {
       val n = fn(spark, dir).count()
       assert(n > 0, s"$name returned no rows")
+      assert(cache.isEmpty, s"$name left a cache entry")
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -261,12 +262,12 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("dedupAgainstCorpus: the large-corpus pinned/semi-filtered verification is row-identical") {
-    // Round 14: above the Spread.isLarge gate the verification pins the
+    // Round 14: at Spread.scale >= Large the verification pins the
     // candidate pair frame and semi-filters both text sides before the
-    // per-doc shingle kernel. Forcing the gate ON (largeInputBytes = 0)
-    // must produce exactly the rows of the small-corpus branch — same
-    // columns, same values — on a corpus with exact dups, near dups above
-    // and below threshold, and novel docs.
+    // per-doc shingle kernel. An RDD-backed reference (no estimate of its
+    // own: Huge) takes that branch and must produce exactly the rows of
+    // the small-corpus branch — same columns, same values — on a corpus
+    // with exact dups, near dups above and below threshold, and novel docs.
     val reference = Seq(
       (100L, "alpha beta gamma delta epsilon zeta eta theta"),
       (101L, "one two three four five six seven eight nine ten"),
@@ -279,17 +280,18 @@ class DedupSpec extends AnyFunSuite {
       (4L, "one two three four five six seven eight nine ten"), // exact dup
       (5L, "one two three four completely different tail words here now")
     ).toDF("doc_id", "text")
-    def run(gate: Long) = Dedup
-      .dedupAgainstCorpus(
-        incoming, reference, "text", "doc_id",
-        threshold = 0.5, largeInputBytes = gate
-      )
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-      .sortBy(_._1)
-      .toSeq
-    val small = run(Long.MaxValue) // gate forced OFF: the r13 broadcast shape
-    val large = run(0L) // gate forced ON: pinned + semi-filtered shape
+    def run(ref: DataFrame, band: Spread.Scale) = {
+      assert(Spread.scale(ref) == band)
+      Dedup
+        .dedupAgainstCorpus(incoming, ref, "text", "doc_id", threshold = 0.5)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+        .sortBy(_._1)
+        .toSeq
+    }
+    val small = run(reference, Spread.Scale.Small) // the r13 broadcast shape
+    val large = run( // pinned + semi-filtered shape
+      spark.createDataFrame(reference.rdd, reference.schema), Spread.Scale.Huge)
     assert(small == large, s"shapes diverged:\nsmall=$small\nlarge=$large")
     assert(small.map(_._1) == Seq(3L, 5L))
   }
@@ -420,30 +422,39 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("duplicate substring spans: mid-band gram-table pin is row-identical") {
-    // Round 14: inside the [pinMin, large) band the (id, pos, gh) gram
-    // table is pinned once (one tokenize+hash kernel pass instead of two)
-    // and the join-back broadcasts the gram dictionary explicitly. Forcing
-    // the band both ways must produce exactly the same spans — cross-doc
+    // Round 14: in the Mid band the (id, pos, gh) gram table is pinned
+    // once (one tokenize+hash kernel pass instead of two) and the
+    // join-back broadcasts the gram dictionary explicitly. Driving the
+    // band both ways must produce exactly the same spans — cross-doc
     // dups, within-doc repetition, keepFirst canonicalization, and a
-    // no-dup doc.
+    // no-dup doc. An RDD-backed frame's estimate is
+    // spark.sql.defaultSizeInBytes: Long.MaxValue (Huge) by default, Mid
+    // when set to 4 MB. Each run builds a fresh frame, because a plan
+    // caches its statistics.
     val phrase = (1 to 12).map(i => s"g$i").mkString(" ")
     val docs = Seq(
       (1L, s"$phrase tail1 tail2 $phrase"),
       (2L, s"lead1 lead2 $phrase"),
       (3L, "entirely different words with no shared ten gram at all right")
     ).toDF("doc_id", "text")
+    def rddBacked = spark.createDataFrame(docs.rdd, docs.schema)
+    val defaultSize = "spark.sql.defaultSizeInBytes"
     for (keepFirst <- Seq(false, true)) {
-      def run(pinMin: Long, large: Long) = Dedup
-        .duplicateSpans(docs, "text", "doc_id", k = 10,
-          keepFirst = keepFirst,
-          pinMinInputBytes = pinMin, largeInputBytes = large)
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2))
-        .toSeq
-      val pinned = run(0L, Long.MaxValue) // inside the band => pin ON
-      val below = run(Long.MaxValue, Long.MaxValue) // under pinMin => r13 shape
-      val above = run(0L, 0L) // over the cap => r13 shape
+      def run(input: DataFrame, band: Spread.Scale) = {
+        assert(Spread.scale(input) == band)
+        Dedup
+          .duplicateSpans(input, "text", "doc_id", k = 10, keepFirst = keepFirst)
+          .collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
+          .sortBy(t => (t._1, t._2))
+          .toSeq
+      }
+      spark.conf.set(defaultSize, (4L << 20).toString)
+      val pinned = // inside the band => pin ON
+        try run(rddBacked, Spread.Scale.Mid)
+        finally spark.conf.unset(defaultSize)
+      val below = run(docs, Spread.Scale.Small) // r13 shape
+      val above = run(rddBacked, Spread.Scale.Huge) // r13 shape
       assert(pinned == below,
         s"keepFirst=$keepFirst diverged:\npinned=$pinned\nbelow=$below")
       assert(pinned == above,

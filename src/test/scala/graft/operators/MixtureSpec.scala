@@ -19,11 +19,12 @@ class MixtureSpec extends AnyFunSuite {
   /** Force the two-pass histogram machinery regardless of input size: the
     * fixtures here are tiny, so without this every "machinery == naive"
     * assertion would silently test the adaptive one-window path against
-    * itself. 0 disables the small-input switch. */
-  private def forceMachinery[T](body: => T): T = {
-    spark.conf.set(Mixture.OneWindowMaxBytesKey, "0")
-    try body
-    finally spark.conf.unset(Mixture.OneWindowMaxBytesKey)
+    * itself. An RDD-backed frame has no size estimate of its own, which
+    * [[Spread.scale]] reads as `Huge`. */
+  private def forceMachinery(df: DataFrame): DataFrame = {
+    val rddBacked = spark.createDataFrame(df.rdd, df.schema)
+    assert(Spread.scale(rddBacked) == Spread.Scale.Huge)
+    rddBacked
   }
 
   // Deterministic synthetic corpus: stratum, id, token count. Token counts
@@ -43,18 +44,17 @@ class MixtureSpec extends AnyFunSuite {
       .toSet
 
   test("two-pass cutoff is bit-identical to the naive window, all bucket widths") {
-    forceMachinery {
-      val docs = corpus(Map("a" -> 300, "b" -> 120, "c" -> 40, "unweighted" -> 25))
-      val naive =
-        Mixture.sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", weights, 2000L)
-      val naiveSet = keptSet(naive)
-      assert(naiveSet.nonEmpty, "boundary must actually cut (budget < corpus)")
-      for (buckets <- Seq(4096, 256, 16, 1)) {
-        val prod = Mixture.sampleToTokenBudget(
-          docs, "src", col("tok"), "id", weights, 2000L, cutBuckets = buckets
-        )
-        assert(keptSet(prod) == naiveSet, s"cutBuckets=$buckets diverged from naive")
-      }
+    val docs =
+      forceMachinery(corpus(Map("a" -> 300, "b" -> 120, "c" -> 40, "unweighted" -> 25)))
+    val naive =
+      Mixture.sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", weights, 2000L)
+    val naiveSet = keptSet(naive)
+    assert(naiveSet.nonEmpty, "boundary must actually cut (budget < corpus)")
+    for (buckets <- Seq(4096, 256, 16, 1)) {
+      val prod = Mixture.sampleToTokenBudget(
+        docs, "src", col("tok"), "id", weights, 2000L, cutBuckets = buckets
+      )
+      assert(keptSet(prod) == naiveSet, s"cutBuckets=$buckets diverged from naive")
     }
   }
 
@@ -97,18 +97,16 @@ class MixtureSpec extends AnyFunSuite {
   }
 
   test("result is invariant to input partition layout") {
-    forceMachinery {
-      val docs = corpus(Map("a" -> 300, "b" -> 120, "c" -> 40))
-      val one = keptSet(
-        Mixture.sampleToTokenBudget(docs.repartition(1), "src", col("tok"), "id", weights, 2000L)
+    val docs = forceMachinery(corpus(Map("a" -> 300, "b" -> 120, "c" -> 40)))
+    val one = keptSet(
+      Mixture.sampleToTokenBudget(docs.repartition(1), "src", col("tok"), "id", weights, 2000L)
+    )
+    val many = keptSet(
+      Mixture.sampleToTokenBudget(
+        docs.repartition(13, col("tok")), "src", col("tok"), "id", weights, 2000L
       )
-      val many = keptSet(
-        Mixture.sampleToTokenBudget(
-          docs.repartition(13, col("tok")), "src", col("tok"), "id", weights, 2000L
-        )
-      )
-      assert(one == many)
-    }
+    )
+    assert(one == many)
   }
 
   test("budgets normalize weights in key-sorted order, Map-order independent") {
@@ -122,20 +120,18 @@ class MixtureSpec extends AnyFunSuite {
   }
 
   test("hot stratum: boundary window sees only a 1/cutBuckets slice") {
-    forceMachinery {
-      // 96% of docs in one stratum — the shape that serializes the naive
-      // window. The production path must still match it exactly.
-      val docs = corpus(Map("hot" -> 2400, "cold" -> 100))
-      val w = Map("hot" -> 0.9375, "cold" -> 0.0625)
-      val naive = keptSet(
-        Mixture.sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", w, 8000L)
-      )
-      val prod = keptSet(
-        Mixture.sampleToTokenBudget(docs, "src", col("tok"), "id", w, 8000L, cutBuckets = 64)
-      )
-      assert(prod == naive)
-      assert(naive.count(_._2 == "hot") > 0 && naive.count(_._2 == "cold") > 0)
-    }
+    // 96% of docs in one stratum — the shape that serializes the naive
+    // window. The production path must still match it exactly.
+    val docs = forceMachinery(corpus(Map("hot" -> 2400, "cold" -> 100)))
+    val w = Map("hot" -> 0.9375, "cold" -> 0.0625)
+    val naive = keptSet(
+      Mixture.sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", w, 8000L)
+    )
+    val prod = keptSet(
+      Mixture.sampleToTokenBudget(docs, "src", col("tok"), "id", w, 8000L, cutBuckets = 64)
+    )
+    assert(prod == naive)
+    assert(naive.count(_._2 == "hot") > 0 && naive.count(_._2 == "cold") > 0)
   }
 
   // C34: value-ordered curation. Quality here is deliberately COARSE
@@ -159,20 +155,18 @@ class MixtureSpec extends AnyFunSuite {
       .toSet
 
   test("quality cutoff is bit-identical to the naive window, ties and all bucket widths") {
-    forceMachinery {
-      val docs = qCorpus(Map("a" -> 300, "b" -> 120, "c" -> 40))
-      val naive = keptSetQ(
-        Mixture.takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", weights, 2000L)
-      )
-      assert(naive.nonEmpty)
-      for (buckets <- Seq(4096, 64, 1)) {
-        val prod = keptSetQ(
-          Mixture.takeBestToBudget(
-            docs, "src", col("q"), col("tok"), "id", weights, 2000L, cutBuckets = buckets
-          )
+    val docs = forceMachinery(qCorpus(Map("a" -> 300, "b" -> 120, "c" -> 40)))
+    val naive = keptSetQ(
+      Mixture.takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", weights, 2000L)
+    )
+    assert(naive.nonEmpty)
+    for (buckets <- Seq(4096, 64, 1)) {
+      val prod = keptSetQ(
+        Mixture.takeBestToBudget(
+          docs, "src", col("q"), col("tok"), "id", weights, 2000L, cutBuckets = buckets
         )
-        assert(prod == naive, s"cutBuckets=$buckets diverged from naive")
-      }
+      )
+      assert(prod == naive, s"cutBuckets=$buckets diverged from naive")
     }
   }
 
@@ -204,19 +198,19 @@ class MixtureSpec extends AnyFunSuite {
   }
 
   test("constant-quality stratum falls back to hash order, still matches naive") {
-    forceMachinery {
-      val docs = qCorpus(Map("a" -> 200, "b" -> 60))
+    val docs = forceMachinery(
+      qCorpus(Map("a" -> 200, "b" -> 60))
         .withColumn("q", when(col("src") === "b", lit(0.5)).otherwise(col("q")))
-      val w2 = Map("a" -> 0.5, "b" -> 0.5)
-      val naive = keptSetQ(
-        Mixture.takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", w2, 1200L)
-      )
-      val prod = keptSetQ(
-        Mixture.takeBestToBudget(docs, "src", col("q"), col("tok"), "id", w2, 1200L, cutBuckets = 64)
-      )
-      assert(prod == naive)
-      assert(naive.exists(_._2 == "b") && naive.size < 260, "stratum b must be cut mid-tie")
-    }
+    )
+    val w2 = Map("a" -> 0.5, "b" -> 0.5)
+    val naive = keptSetQ(
+      Mixture.takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", w2, 1200L)
+    )
+    val prod = keptSetQ(
+      Mixture.takeBestToBudget(docs, "src", col("q"), col("tok"), "id", w2, 1200L, cutBuckets = 64)
+    )
+    assert(prod == naive)
+    assert(naive.exists(_._2 == "b") && naive.size < 260, "stratum b must be cut mid-tie")
   }
 
   // C35: epoch materialization.
@@ -339,28 +333,19 @@ class MixtureSpec extends AnyFunSuite {
   test("adaptive small-input switch: one-window plan by default, machinery when disabled, same rows") {
     val docs = corpus(Map("a" -> 300, "b" -> 120, "c" -> 40))
     def plan(df: DataFrame): String = df.queryExecution.optimizedPlan.toString
-    // tiny input + default threshold -> the single-window path: no
-    // keptWhole/keptBoundary Union in the plan
+    // a Small input -> the single-window path: no keptWhole/keptBoundary
+    // Union in the plan
+    assert(Spread.scale(docs) == Spread.Scale.Small)
     val small = Mixture.sampleToTokenBudget(docs, "src", col("tok"), "id", weights, 2000L)
     assert(!plan(small).contains("Union"), "small input must take the one-window path")
-    // disabled switch -> the two-pass machinery (whole/boundary Union)
-    val big = forceMachinery {
-      val df = Mixture.sampleToTokenBudget(docs, "src", col("tok"), "id", weights, 2000L)
-      assert(plan(df).contains("Union"), "disabled switch must take the machinery")
-      df
-    }
+    // an RDD-backed (Huge) input -> the two-pass machinery (whole/boundary Union)
+    val big =
+      Mixture.sampleToTokenBudget(forceMachinery(docs), "src", col("tok"), "id", weights, 2000L)
+    assert(plan(big).contains("Union"), "a Huge input must take the machinery")
     assert(keptSet(small) == keptSet(big), "the two paths must select identical rows")
     // takeBestToBudget switches the same way
     val q = qCorpus(Map("a" -> 100, "b" -> 50))
     val smallQ = Mixture.takeBestToBudget(q, "src", col("q"), col("tok"), "id", weights, 900L)
     assert(!plan(smallQ).contains("Union"))
-    // a malformed threshold fails fast with the conf key in the message
-    spark.conf.set(Mixture.OneWindowMaxBytesKey, "lots")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Mixture.sampleToTokenBudget(docs, "src", col("tok"), "id", weights, 2000L)
-      }
-      assert(e.getMessage.contains(Mixture.OneWindowMaxBytesKey))
-    } finally spark.conf.unset(Mixture.OneWindowMaxBytesKey)
   }
 }

@@ -2,10 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
+import graft.operators.Spread
 import graft.sources.DeltaRead
 
 class CorpusIngestSpec extends AnyFunSuite {
@@ -57,11 +60,13 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("prepareBatch: the large-batch survivor-id pin is row-identical") {
-    // Round 14: above the Spread.isLarge gate the gated + self-deduped
-    // batch is rebuilt as batch ⋈ pinned survivor ids so downstream
-    // re-derivations carry no kernel work. Forcing the gate ON must give
-    // exactly the un-pinned rows — schema and values — across gate drops,
-    // in-batch exact dups, and corpus near-dups.
+    // Round 14: at Spread.scale >= Large the gated + self-deduped batch
+    // is rebuilt as batch ⋈ pinned survivor ids so downstream
+    // re-derivations carry no kernel work. RDD-backed inputs (no estimate
+    // of their own: Huge) take that branch, and dedupAgainstCorpus's
+    // pinned one, and must give exactly the un-pinned rows — schema and
+    // values — across gate drops, in-batch exact dups, and corpus
+    // near-dups.
     import spark.implicits._
     val batch = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -73,16 +78,46 @@ class CorpusIngestSpec extends AnyFunSuite {
     val corpus = Seq(
       (100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa")
     ).toDF("doc_id", "text")
-    def run(gate: Long) = CorpusIngest
-      .prepareBatch(batch, Some(corpus), "text", "doc_id", 0.5,
-        CorpusIngest.Gate(), largeInputBytes = gate)
-    val unpinned = run(Long.MaxValue)
-    val pinned = run(0L)
+    def run(b: DataFrame, c: DataFrame, band: Spread.Scale) = {
+      assert(Spread.scale(b) == band && Spread.scale(c) == band)
+      CorpusIngest.prepareBatch(b, Some(c), "text", "doc_id", 0.5, CorpusIngest.Gate())
+    }
+    def rddBacked(df: DataFrame) = spark.createDataFrame(df.rdd, df.schema)
+    val unpinned = run(batch, corpus, Spread.Scale.Small)
+    val pinned = run(rddBacked(batch), rddBacked(corpus), Spread.Scale.Huge)
     assert(unpinned.schema == pinned.schema,
       s"schemas diverged: ${unpinned.schema} vs ${pinned.schema}")
     val a = unpinned.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     val b = pinned.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     assert(a == b, s"rows diverged:\nunpinned=$a\npinned=$b")
     assert(a.map(_._1) == Seq(2L))
+  }
+
+  test("streaming gate input: a parquet micro-batch keeps its plan estimate") {
+    // On Spark 4.1 a foreachBatch micro-batch over a file source is a
+    // LogicalRDD carrying the batch read's own size estimate, not
+    // spark.sql.defaultSizeInBytes, and a localCheckpoint of it keeps
+    // that estimate. Spread.scale depends on this: were it lost, every
+    // tiny streaming batch would read as Huge and take the pinned shapes.
+    import spark.implicits._
+    val landing = Files.createTempDirectory("graft_landing").toString
+    val ckpt = Files.createTempDirectory("graft_landing_ck").toString
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
+      .toDF("doc_id", "text")
+    docs.write.mode("overwrite").parquet(landing)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Spread.Scale, Spread.Scale)]
+    spark.readStream
+      .schema(docs.schema)
+      .parquet(landing)
+      .writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        seen += ((Spread.scale(batch), Spread.scale(batch.localCheckpoint())))
+        ()
+      }
+      .start()
+      .awaitTermination()
+    assert(seen.toSeq == Seq((Spread.Scale.Small, Spread.Scale.Small)), s"bands: $seen")
   }
 }
