@@ -30,16 +30,54 @@ import org.apache.spark.sql.SparkSession
   *     bound: 57 s → 25 s with this conf alone). One fixed setting at every
   *     scale factor — the same move a real cluster makes by having more
   *     reduce slots than one box — not per-SF tuning.
+  *   - [[CodegenReuse]], which every graft session applies, not only the
+  *     measurement ones; see there.
   */
 object BenchSession {
+
+  /** Keep compiled code for the life of the JVM. Spark compiles each
+    * distinct generated class (whole-stage stages, projections, orderings)
+    * with Janino and caches the class in ONE JVM-wide LRU map, keyed by
+    * `(context class loader, source)`. Two things made graft's long-lived
+    * session recompile on every op (counted with
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`, 4-core VM, sf0.01):
+    *   - `spark.sql.codegen.cache.maxEntries`: Spark's default is 100. An
+    *     LRU cache smaller than a cyclic working set misses on nearly every
+    *     access, and loopbench's five llm_ops rows alone need 124 classes:
+    *     every timed pass recompiled 103 of them. One pass over the whole
+    *     119-row registry compiles 1,415 distinct classes, so the cache
+    *     holds 2048. A cached class costs about 29 KB of settled heap plus
+    *     8 KB of metaspace: +39 MB of heap with the whole registry cached.
+    *   - `spark.sql.artifact.isolation.enabled`: with isolation on, each
+    *     Spark session carries its own artifact state, and tasks of a
+    *     session run under that session's executor class loader. Every
+    *     streaming query runs on a CLONE of its session, so each
+    *     `foreachBatch` stream run got a fresh loader and missed the cache
+    *     for its task-side classes: 14-45 per corpus_ingest micro-batch,
+    *     about 100 of the 120 that each timed pass recompiled. With a cache
+    *     large enough to hold them, every dead loader's classes stayed
+    *     alive (+7 MB of settled heap over two passes). graft adds no
+    *     session artifacts (no `addArtifact`/`addJar`), so it loses
+    *     nothing.
+    *
+    * Both are read when the session is built (the cache size once per JVM,
+    * by whichever session first generates code), so they go on the builder,
+    * through [[reuseCodegen]], wherever graft builds a session. */
+  val CodegenReuse: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "2048",
+    "spark.sql.artifact.isolation.enabled" -> "false"
+  )
+
+  /** `b` with [[CodegenReuse]] set. */
+  def reuseCodegen(b: SparkSession.Builder): SparkSession.Builder =
+    b.config(CodegenReuse)
 
   /** A builder carrying the exact bench session confs. Callers may append
     * further `.config(...)` overrides before `getOrCreate()`. */
   def builder(
       cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
   ): SparkSession.Builder =
-    SparkSession
-      .builder()
+    reuseCodegen(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

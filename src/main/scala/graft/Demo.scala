@@ -14,8 +14,8 @@ import graft.catalog.{GlueCatalogProvider, LocalDirectoryGlueClient}
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession
-      .builder()
+    val spark = BenchSession
+      .reuseCodegen(SparkSession.builder())
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
       .appName("graft-demo")
       .config("spark.sql.shuffle.partitions", "32")

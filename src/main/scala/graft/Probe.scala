@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -24,6 +25,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * Re-running an action on one Dataset lets Spark skip map stages whose
   * shuffle outputs already exist (q11 at sf10 read 0.48 s reused vs 4.35 s
   * true), and `collect()` times a different action from the bench's.
+  * The TIME line lists each timed run's seconds and generated classes
+  * compiled (`compiles=[…]`), in run order: after the warm-up a run should
+  * compile 0, and a run that compiles is paying for a codegen cache miss
+  * (see [[BenchSession.CodegenReuse]]).
   */
 object Probe {
 
@@ -48,6 +53,25 @@ object Probe {
   def force(df: DataFrame): DataFrame = {
     df.write.mode("overwrite").format("noop").save()
     df
+  }
+
+  /** `body`'s result and the number of generated classes compiled while it
+    * ran: the delta of Spark's JVM-wide codegen compile histogram, which
+    * counts driver-side compiles and, in local mode, task-side ones. */
+  def countCompiles[A](body: => A): (A, Long) = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val a = body
+    (a, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+  }
+
+  final case class TimedRun(s: Double, compiles: Long)
+
+  /** `runs` timed runs of a fresh `build`, each after a GC and an 80 ms settle. */
+  def timeRuns(build: => DataFrame, runs: Int): Seq[TimedRun] = Seq.fill(runs) {
+    System.gc(); Thread.sleep(80)
+    val t0 = System.nanoTime()
+    val (_, n) = countCompiles(force(build))
+    TimedRun((System.nanoTime() - t0) / 1e9, n)
   }
 
   final case class JobSpan(id: Int, start: Long, end: Long)
@@ -105,15 +129,13 @@ object Probe {
     for (q <- a.queries) {
       val fn = SparkEntry.queries.getOrElse(q, sys.error(s"unknown gate query '$q'"))
       force(fn(spark, dir)) // warm-up: codegen, JIT, fixture builds
-      val times = Seq.fill(a.runs) {
-        System.gc(); Thread.sleep(80)
-        val t0 = System.nanoTime()
-        force(fn(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      if (times.nonEmpty)
+      val runs = timeRuns(fn(spark, dir), a.runs)
+      if (runs.nonEmpty) {
+        val times = runs.map(_.s).sorted
         println(f"TIME $q @ $dir: median=${times(times.size / 2)}%.3f min=${times.head}%.3f " +
-          times.map(t => f"$t%.3f").mkString("runs=[", " ", "] s"))
+          runs.map(r => f"${r.s}%.3f").mkString("runs=[", " ", "] s ") +
+          runs.map(_.compiles).mkString("compiles=[", " ", "]"))
+      }
       if (a.plan) {
         val df = fn(spark, dir)
         val formatted = df.queryExecution.explainString(FormattedMode)

@@ -31,8 +31,8 @@ object ScaleUp {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val tableFilter = args.lift(3).map(_.split(",").toSet)
     def wanted(name: String): Boolean = tableFilter.forall(_.contains(name))
-    val spark = SparkSession
-      .builder()
+    val spark = BenchSession
+      .reuseCodegen(SparkSession.builder())
       .master("local[32]")
       .appName("graft-scaleup")
       .config("spark.sql.shuffle.partitions", "32")

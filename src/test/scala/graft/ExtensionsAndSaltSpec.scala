@@ -9,8 +9,8 @@ class ExtensionsAndSaltSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
   test("GraftSparkExtensions installs functions on a fresh session") {
-    val s2 = SparkSession
-      .builder()
+    val s2 = BenchSession
+      .reuseCodegen(SparkSession.builder())
       .master("local[2]")
       .appName("graft-ext-test")
       .config("spark.sql.extensions", "graft.GraftSparkExtensions")

@@ -28,6 +28,13 @@ class ProbeSpec extends AnyFunSuite {
     assert(t.stages.map(_.job).toSet.subsetOf(t.jobs.map(_.id).toSet))
   }
 
+  test("TIME line: a run after the warm-up compiles no generated class") {
+    val build = SparkEntry.queries("q5_local_volume")
+    Probe.force(build(spark, dir)) // the warm-up, as in Probe.main
+    val runs = Probe.timeRuns(build(spark, dir), 1)
+    assert(runs.map(_.compiles) == Seq(0L), s"timed runs: $runs")
+  }
+
   test("args: queries plus the five flags, nothing else") {
     val a = Probe.parse(
       Seq("q1_pricing_summary", "--sf", "d", "--runs", "5", "q6_forecast_revenue",

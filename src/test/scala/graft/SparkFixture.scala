@@ -6,8 +6,10 @@ import org.apache.spark.sql.SparkSession
   * suites must not stop it). */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
+    // the shipped codegen-cache policy: whichever session generates code
+    // first sizes the JVM-wide cache, so every session here applies it
+    val s = BenchSession
+      .reuseCodegen(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
