@@ -90,8 +90,7 @@ object Bench {
     )
     def measure(name: String): QueryMeasure = {
       val fn = SparkEntry.queries(name)
-      def force(): Unit =
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      def force(): Unit = Probe.force(fn(spark, sfDir))
       /** One measurement block: settle + discarded run + `runs` timed
         * executions, sorted ascending.
         *
@@ -106,19 +105,7 @@ object Bench {
       def block(): Seq[Double] = {
         settle()
         force()
-        Seq.fill(runs) {
-          // A full GC between timed runs (outside the timer) stops run i's
-          // garbage from being billed to run i+1 — round 6/8 findings. The
-          // short sleep after it lets the ContextCleaner finish unpersisting
-          // run i's broadcasts/shuffles BEFORE the timer starts: the cleaner
-          // is triggered by exactly this GC (weak references), and without
-          // the pause its unpersist RPCs land inside run i+1's window.
-          System.gc()
-          Thread.sleep(80)
-          val t0 = System.nanoTime()
-          force()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
+        Probe.timeRuns(fn(spark, sfDir), runs).map(_.s).sorted
       }
       try {
         force() // warmup: codegen + JIT

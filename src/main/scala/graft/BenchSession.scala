@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the measurement-session configuration, shared by
   * every entry point that times, verifies or plans gate queries (Bench,
-  * Verify, Probe, PlanDump). Round 11 taught the cost of drift: a plan
+  * Verify, Probe, PlanDump) and by the Demo and ScaleUp mains, which add
+  * only their own confs on top. Round 11 taught the cost of drift: a plan
   * probe missed one conf (`initialPartitionNum`) that Bench had gained,
   * and the shuffled-hash-join bound (broadcast threshold × shuffle partition
   * count) is 8× larger at 256 than at 32 — so the probe could show a

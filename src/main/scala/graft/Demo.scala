@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.{GlueCatalogProvider, LocalDirectoryGlueClient}
 
 /** End-to-end demo, mirroring the reference's examples/demo.rs flow:
@@ -15,12 +13,8 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = BenchSession
-      .reuseCodegen(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.catalog.glue", "graft.catalog.GlueTableCatalog")
       .config("spark.sql.catalog.glue.root", dir)
       .getOrCreate()

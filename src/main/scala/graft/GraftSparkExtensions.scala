@@ -1,118 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
 
-import graft.functions._
+import graft.functions.GraftFunctions
 
-/** Session-extension entry point: install the graft SQL functions on every
-  * session of a cluster with
-  * `spark.sql.extensions=graft.GraftSparkExtensions` (pairs with
+/** Session-extension entry point: install [[graft.plans.TopKRewriteRule]] and
+  * every graft SQL function of [[GraftFunctions.Table]] on every session of a
+  * cluster with `spark.sql.extensions=graft.GraftSparkExtensions` (pairs with
   * `spark.sql.catalog.glue=graft.catalog.GlueTableCatalog` for the catalog).
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def intLit(e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other =>
-      throw new IllegalArgumentException(s"expected int literal, got $other")
-  }
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(
-      "graft",
-      null,
-      name,
-      usage,
-      "",
-      "",
-      "",
-      "",
-      "4.0.0",
-      "",
-      "scala_udf"
-    )
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_cosine"),
-        info("graft_cosine", "cosine similarity of two float vectors"),
-        (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_hyperplane_bucket"),
-        info("graft_hyperplane_bucket", "random-hyperplane LSH bucket id"),
-        (es: Seq[Expression]) => HyperplaneBucket(es(0), intLit(es(1)))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_minhash"),
-        info("graft_minhash", "minhash signature of pre-hashed shingles"),
-        (es: Seq[Expression]) => MinHashSignature(es(0), intLit(es(1)))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_simhash"),
-        info("graft_simhash", "64-bit simhash of pre-hashed tokens"),
-        (es: Seq[Expression]) => SimHash64(es(0))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_shingle_hashes"),
-        info("graft_shingle_hashes", "hashes of word k-gram shingles"),
-        (es: Seq[Expression]) => ShingleHashes(es(0), intLit(es(1)))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_topk"),
-        info("graft_topk", "bounded-heap per-group top-k (id, score) pairs"),
-        (es: Seq[Expression]) => TopKAggregate(es(0), es(1), intLit(es(2)))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_repetition_stats"),
-        info("graft_repetition_stats", "one-pass repetition-signal counts"),
-        (es: Seq[Expression]) => RepetitionStats(es(0))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_diversity_stats"),
-        info("graft_diversity_stats", "one-pass lexical-diversity counts"),
-        (es: Seq[Expression]) => DiversityStats(es(0))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_dotd"),
-        info("graft_dotd", "double-precision dot product of two vectors"),
-        (es: Seq[Expression]) => DotProductD(es(0), es(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_sqdistd"),
-        info("graft_sqdistd", "double-precision squared euclidean distance"),
-        (es: Seq[Expression]) => SqDistD(es(0), es(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_bloom_contains"),
-        info("graft_bloom_contains", "probe a serialized bloom filter literal"),
-        (es: Seq[Expression]) => BloomMightContain(es(0), es(1))
-      )
-    )
+    GraftFunctions.Table.foreach(f => ext.injectFunction((f.id, f.info, f.build)))
   }
 }

@@ -66,7 +66,12 @@ object Probe {
 
   final case class TimedRun(s: Double, compiles: Long)
 
-  /** `runs` timed runs of a fresh `build`, each after a GC and an 80 ms settle. */
+  /** `runs` timed runs of a fresh `build`, each after a GC and an 80 ms
+    * settle (Bench's timed loop too). The full GC, outside the timer, stops
+    * run i's garbage from being billed to run i+1. The sleep after it lets
+    * the ContextCleaner, which this GC triggers through weak references,
+    * finish unpersisting run i's broadcasts and shuffles before the timer
+    * starts, so its unpersist RPCs stay out of run i+1's window. */
   def timeRuns(build: => DataFrame, runs: Int): Seq[TimedRun] = Seq.fill(runs) {
     System.gc(); Thread.sleep(80)
     val t0 = System.nanoTime()

@@ -3,11 +3,13 @@ package graft.catalog
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** A [[GlueClient]] that synthesizes a Glue catalog from a directory of data
   * files — the stand-in for the AWS Glue API in this environment (the
@@ -51,13 +53,14 @@ final class LocalDirectoryGlueClient(
 
   override def getDatabases(): Seq[GlueDatabase] = Seq(GlueDatabase(database))
 
-  // Memoized catalog snapshot. Building a GlueTable entry costs a schema
-  // inference + a footer read per table, and the GlueClient.getTable default
-  // resolves ONE table by listing ALL of them — uncached, a 3-table query
-  // paid ~30 schema inferences (~2s measured at sf0.1; BENCH_r02
-  // q_dsv2_catalog). Real Glue deployments cache GetTables responses for the
-  // same reason (API rate limits at cluster scale); call [[refresh]] after
-  // adding/altering tables under `root` to invalidate.
+  // Memoized catalog snapshot. Building a GlueTable entry costs a footer
+  // read per table (a schema-inference job each, before footerSchema), and
+  // the GlueClient.getTable default resolves ONE table by listing ALL of
+  // them — uncached, a 3-table query paid ~30 schema inferences (~2s
+  // measured at sf0.1; BENCH_r02 q_dsv2_catalog). Real Glue deployments
+  // cache GetTables responses for the same reason (API rate limits at
+  // cluster scale); call [[refresh]] after adding/altering tables under
+  // `root` to invalidate.
   @volatile private var snapshot: Option[Seq[GlueTable]] = None
 
   /** Drop the memoized table list so the next call re-scans the directory. */
@@ -90,8 +93,7 @@ final class LocalDirectoryGlueClient(
         val tableName = s.getPath.getName.stripSuffix(".parquet")
         val location = s.getPath.toString
         val partitionKeys = hivePartitionKeys(f, s)
-        val schema = spark.read.parquet(location).schema
-        val nanos = nanosTimestampColumns(f, s)
+        val (schema, nanos) = footerSchema(f, s)
         val partNames = partitionKeys.map(_.name).toSet
         val columns = schema.fields.toSeq
           .filterNot(fld => partNames.contains(fld.name))
@@ -151,10 +153,13 @@ final class LocalDirectoryGlueClient(
     }
   }
 
-  /** Top-level column names whose parquet logical type is TIMESTAMP(NANOS),
-    * read straight from the footer of one data file (descending through
-    * partition directories to find one). */
-  private def nanosTimestampColumns(f: FileSystem, s: FileStatus): Set[String] = {
+  /** The Spark schema of one data file's footer (descending through
+    * partition directories to find one), with the top-level column names
+    * whose parquet logical type is TIMESTAMP(NANOS). The schema is converted
+    * as `spark.read.parquet` infers it, under the session's parquet confs
+    * (nanos-as-long, timestamp-NTZ inference), but without the footer job
+    * that inference starts: one footer read per table, on the driver. */
+  private def footerSchema(f: FileSystem, s: FileStatus): (StructType, Set[String]) = {
     def firstDataFile(p: FileStatus): Option[Path] =
       if (p.isFile && p.getPath.getName.endsWith(".parquet")) Some(p.getPath)
       else if (p.isDirectory)
@@ -164,14 +169,18 @@ final class LocalDirectoryGlueClient(
           .flatMap(firstDataFile)
           .nextOption()
       else None
-    val dataFile = firstDataFile(s) match {
-      case Some(p) => p
-      case None    => return Set.empty
-    }
+    val dataFile = firstDataFile(s).getOrElse(
+      throw new IllegalStateException(s"${s.getPath}: no parquet data file to read a schema from")
+    )
     val in = HadoopInputFile.fromPath(dataFile, spark.sessionState.newHadoopConf())
     val reader = ParquetFileReader.open(in)
     try {
-      reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
+      val footer = reader.getFooter
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(dataFile, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      )
+      val nanos = footer.getFileMetaData.getSchema.getFields.asScala.collect {
         case field
             if field.isPrimitive &&
               (field.getLogicalTypeAnnotation match {
@@ -181,6 +190,7 @@ final class LocalDirectoryGlueClient(
               }) =>
           field.getName
       }.toSet
+      (schema, nanos)
     } finally reader.close()
   }
 }

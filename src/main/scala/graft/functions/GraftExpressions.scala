@@ -1,11 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{
   BinaryExpression,
   Expression,
+  ExpressionInfo,
   ImplicitCastInputTypes,
+  Literal,
   TernaryExpression,
   UnaryExpression
 }
@@ -18,7 +21,7 @@ import org.apache.spark.sql.types._
   * operator stays inside whole-stage codegen (no iterator break, no
   * row↔object conversion — the reason these beat Scala UDFs at scale).
   *
-  * Registered as SQL functions by [[GraftFunctions.register]]; use the column
+  * Installed as SQL functions from [[GraftFunctions.Table]]; use the column
   * helpers in [[GraftFunctions]].
   */
 case class CosineSimilarity(left: Expression, right: Expression)
@@ -601,172 +604,132 @@ case class LmScore(
     copy(child = newChild)
 }
 
-/** Registration + typed column helpers for the graft expressions. */
+/** The graft SQL function table, its installer and the typed column helpers
+  * for the graft expressions. */
 object GraftFunctions {
 
-  private def lit(e: Expression): Int =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-      case other =>
-        throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
+  /** One graft SQL function: its name, a one-line usage (`_FUNC_` stands for
+    * the name, as in Spark's own) and the builder from the call's argument
+    * expressions to the graft expression. */
+  final case class SqlFunction(
+      name: String,
+      usage: String,
+      build: Seq[Expression] => Expression
+  ) {
+    val id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo =
+      new ExpressionInfo(
+        "graft.functions.GraftFunctions", null, name, usage,
+        "", "", "", "", "4.0.0", "", "scala_udf"
+      )
+  }
 
-  private def litD(e: Expression): Double =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, DoubleType) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType)   => v.toDouble
-      case other =>
-        throw new IllegalArgumentException(s"expected double literal, got $other")
-    }
+  private def intLit(e: Expression): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(s"expected int literal, got $other")
+  }
 
-  /** Idempotently register graft_* SQL functions on the session. The
-    * already-registered check asks the session's own functionRegistry (rather
-    * than tracking sessions in a static set, which would leak across GC'd
-    * sessions and collide on identity hashes). */
+  private def doubleLit(e: Expression): Double = e match {
+    case Literal(v: Double, DoubleType) => v
+    case Literal(v: Int, IntegerType)   => v.toDouble
+    case other => throw new IllegalArgumentException(s"expected double literal, got $other")
+  }
+
+  /** Every graft_* SQL function. [[graft.GraftSparkExtensions]] injects them
+    * into extension-built sessions and [[register]] installs them on any
+    * other session, so both install the same surface. */
+  val Table: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_cosine", "_FUNC_(a, b) - cosine similarity of two float vectors",
+      es => CosineSimilarity(es(0), es(1))),
+    SqlFunction("graft_dotd", "_FUNC_(a, b) - double-precision dot product of two vectors",
+      es => DotProductD(es(0), es(1))),
+    SqlFunction("graft_sqdistd", "_FUNC_(a, b) - double-precision squared euclidean distance",
+      es => SqDistD(es(0), es(1))),
+    SqlFunction("graft_hyperplane_bucket", "_FUNC_(vec, planes) - random-hyperplane LSH bucket id",
+      es => HyperplaneBucket(es(0), intLit(es(1)))),
+    SqlFunction("graft_argmax_cos",
+      "_FUNC_(vec, ids, centroids) - id of the nearest centroid by cosine, ties high",
+      es => ArgmaxCos(es(0), es(1), es(2))),
+    SqlFunction("graft_argmin_sqdist4",
+      "_FUNC_(vec, ids, centroids) - id of the nearest centroid by rounded squared distance, ties low",
+      es => ArgminSqDist4(es(0), es(1), es(2))),
+    SqlFunction("graft_vector_fixed_mean",
+      "_FUNC_(vec) - per-group element-wise 2^20 fixed-point mean as array<float>",
+      es => VectorFixedMean(es(0))),
+    SqlFunction("graft_vector_fixed_mean10",
+      "_FUNC_(vec) - per-group element-wise exact-decimal mean as array<double>",
+      es => VectorFixedMean10(es(0))),
+    SqlFunction("graft_cosine_pairs",
+      "_FUNC_(ids, vecs, norms, threshold) - a bucket's i<j pairs within the cosine threshold",
+      es => CosinePairs(es(0), es(1), es(2), doubleLit(es(3)))),
+    SqlFunction("graft_cosine_pairs_canon",
+      "_FUNC_(ids, vecs, norms, bucket0s, bucket, threshold) - graft_cosine_pairs, each pair once across probed buckets",
+      es => CosinePairsCanon(es(0), es(1), es(2), es(3), es(4), doubleLit(es(5)))),
+    SqlFunction("graft_shingle_hashes", "_FUNC_(text, k) - hashes of word k-gram shingles",
+      es => ShingleHashes(es(0), intLit(es(1)))),
+    SqlFunction("graft_minhash", "_FUNC_(hashes, n) - minhash signature of pre-hashed shingles",
+      es => MinHashSignature(es(0), intLit(es(1)))),
+    SqlFunction("graft_simhash", "_FUNC_(hashes) - 64-bit simhash of pre-hashed tokens",
+      es => SimHash64(es(0))),
+    SqlFunction("graft_hamming_pairs",
+      "_FUNC_(ids, hashes, maxHamming) - a bucket's i<j pairs within maxHamming bits",
+      es => HammingPairs(es(0), es(1), intLit(es(2)))),
+    SqlFunction("graft_jaccard_sorted",
+      "_FUNC_(a, b) - Jaccard similarity of two sorted distinct long arrays",
+      es => JaccardSorted(es(0), es(1))),
+    SqlFunction("graft_bloom_contains", "_FUNC_(bloom, key) - probe a serialized bloom filter literal",
+      es => BloomMightContain(es(0), es(1))),
+    SqlFunction("graft_squeeze_ws", "_FUNC_(text) - whitespace runs squeezed to one space, trimmed",
+      es => SqueezeWs(es(0))),
+    SqlFunction("graft_repetition_stats", "_FUNC_(text) - one-pass repetition-signal counts",
+      es => RepetitionStats(es(0))),
+    SqlFunction("graft_diversity_stats", "_FUNC_(text) - one-pass lexical-diversity counts",
+      es => DiversityStats(es(0))),
+    SqlFunction("graft_lm_score",
+      "_FUNC_(tokens, terms, lp_micros, oov_lp_micro) - token, OOV and log-prob sums under a literal unigram model",
+      lmScore),
+    SqlFunction("graft_topk", "_FUNC_(id, score, k) - bounded-heap per-group top-k (id, score) pairs",
+      es => TopKAggregate(es(0), es(1), intLit(es(2)))),
+    SqlFunction("graft_fixed_sum10",
+      "_FUNC_(x) - exact scale-10 fixed-point sum of a double column as decimal(38,10)",
+      es => FixedPointSum(es(0))),
+    SqlFunction("graft_double_bucket", "_FUNC_(x, bits) - order-preserving bucket of a double",
+      es => DoubleOrderBucket(es(0), intLit(es(1))))
+  )
+
+  /** graft_lm_score's builder: the model arguments must be literals, because
+    * the scorer map is built at planning. */
+  private def lmScore(es: Seq[Expression]): Expression = {
+    require(
+      es.length == 4 && es(1).foldable && es(2).foldable && es(3).foldable,
+      "graft_lm_score(tokens, terms, lp_micros, oov_lp_micro): the model " +
+        "arguments must be literals (the scorer map is built at planning)"
+    )
+    val t = es(1).eval().asInstanceOf[ArrayData]
+    val l = es(2).eval().asInstanceOf[ArrayData]
+    require(t != null && l != null, "graft_lm_score: model arrays must not be null")
+    val terms = (0 until t.numElements()).map(i => t.getUTF8String(i).toString)
+    val lps = l.toLongArray().toSeq
+    val oov = es(3).eval() match {
+      case x: Long => x
+      case x: Int  => x.toLong
+      case other =>
+        throw new IllegalArgumentException(
+          s"graft_lm_score: oov_lp_micro must be an integer literal, got $other"
+        )
+    }
+    LmScore(es(0), terms, lps, oov)
+  }
+
+  /** Idempotently install every [[Table]] function on the session. The
+    * already-installed check asks the session's own functionRegistry for
+    * every name in the table (rather than tracking sessions in a static set,
+    * which would leak across GC'd sessions and collide on identity hashes),
+    * so a session missing any entry gets the whole table. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    // sentinel = the newest function, so sessions registered by an older
-    // code path pick up additions (createOrReplace is idempotent)
-    if (
-      reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_argmin_sqdist4")
-      )
-    ) return
-    reg.createOrReplaceTempFunction(
-      "graft_lm_score",
-      { es =>
-        require(
-          es.length == 4 && es(1).foldable && es(2).foldable && es(3).foldable,
-          "graft_lm_score(tokens, terms, lp_micros, oov_lp_micro): the model " +
-            "arguments must be literals (the scorer map is built at planning)"
-        )
-        val t = es(1).eval().asInstanceOf[ArrayData]
-        val l = es(2).eval().asInstanceOf[ArrayData]
-        require(t != null && l != null, "graft_lm_score: model arrays must not be null")
-        val terms = (0 until t.numElements()).map(i => t.getUTF8String(i).toString)
-        val lps = l.toLongArray().toSeq
-        val oov = es(3).eval() match {
-          case x: Long => x
-          case x: Int  => x.toLong
-          case other =>
-            throw new IllegalArgumentException(
-              s"graft_lm_score: oov_lp_micro must be an integer literal, got $other"
-            )
-        }
-        LmScore(es(0), terms, lps, oov)
-      },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_hamming_pairs",
-      es => HammingPairs(es(0), es(1), lit(es(2))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_cosine_pairs",
-      es => CosinePairs(es(0), es(1), es(2), litD(es(3))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_cosine_pairs_canon",
-      es => CosinePairsCanon(es(0), es(1), es(2), es(3), es(4), litD(es(5))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_squeeze_ws",
-      es => SqueezeWs(es(0)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_cosine",
-      es => CosineSimilarity(es(0), es(1)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_hyperplane_bucket",
-      es => HyperplaneBucket(es(0), lit(es(1))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_minhash",
-      es => MinHashSignature(es(0), lit(es(1))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_simhash",
-      es => SimHash64(es(0)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      es => ShingleHashes(es(0), lit(es(1))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_repetition_stats",
-      es => RepetitionStats(es(0)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_diversity_stats",
-      es => DiversityStats(es(0)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_dotd",
-      es => DotProductD(es(0), es(1)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_sqdistd",
-      es => SqDistD(es(0), es(1)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      es => BloomMightContain(es(0), es(1)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_topk",
-      es => TopKAggregate(es(0), es(1), lit(es(2))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_fixed_sum10",
-      es => FixedPointSum(es(0)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_vector_fixed_mean",
-      es => VectorFixedMean(es(0)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_vector_fixed_mean10",
-      es => VectorFixedMean10(es(0)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_double_bucket",
-      es => DoubleOrderBucket(es(0), lit(es(1))),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_jaccard_sorted",
-      es => JaccardSorted(es(0), es(1)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_argmax_cos",
-      es => ArgmaxCos(es(0), es(1), es(2)),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "graft_argmin_sqdist4",
-      es => ArgminSqDist4(es(0), es(1), es(2)),
-      "built-in"
-    )
+    if (Table.exists(f => !reg.functionExists(f.id)))
+      Table.foreach(f => reg.registerFunction(f.id, f.info, f.build))
   }
 
   /** Exact fixed-point decimal sum (scale 10, 128-bit buffer) of a double

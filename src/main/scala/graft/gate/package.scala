@@ -34,10 +34,8 @@ package object gate {
     * rounded values (gate-verified), at 4.4x less aggregation cost (the
     * decimal path's per-row BigDecimal.valueOf + non-compact sum buffers
     * were ~80% of q1 at sf10). */
-  private[gate] def fsum(c: Column): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
-    call_function("graft_fixed_sum10", c)
-  }
+  private[gate] def fsum(c: Column): Column =
+    graft.functions.GraftFunctions.fixedSum10(c)(SparkSession.active)
 
   private[gate] def rsum(c: Column, scale: Int = 2): Column =
     round(fsum(c), scale).cast("double")

@@ -25,8 +25,10 @@ import graft.functions.RowTopKAggregate
   * and whose condition constrains only the rank attribute (`<= k`, `< k`,
   * `= 1`). Everything else is left to Spark.
   *
-  * Install via `spark.experimental.extraOptimizations` (done by
-  * [[graft.Tables]]) or `GraftSparkExtensions`.
+  * Two install points: [[graft.Tables]] appends it to the session's
+  * `spark.experimental.extraOptimizations` on first table access, and
+  * [[graft.GraftSparkExtensions]] injects it with `injectOptimizerRule` into
+  * every session built with `spark.sql.extensions=graft.GraftSparkExtensions`.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] {
 

@@ -1,16 +1,43 @@
 package graft.catalog
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkFixture
+import graft.{SparkEntry, SparkFixture}
 
 class GlueCatalogSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
   private def newProvider(dir: String = SparkFixture.sfDir) =
     new GlueCatalogProvider(new LocalDirectoryGlueClient(spark, dir), spark)
+
+  /** Spark jobs started while `body` runs. The listener bus delivers events
+    * in order, so once a marker job run after `body` has been seen, every
+    * job `body` started has been counted. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "jobs-marker"))
+          markerSeen.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobs-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never reached the listener")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("registerAll registers every table in the directory") {
     val p = newProvider()
@@ -48,6 +75,36 @@ class GlueCatalogSpec extends AnyFunSuite {
     assert(df.schema("ts").dataType.typeName == "timestamp")
     val minTs = df.agg(org.apache.spark.sql.functions.min("ts")).head.getTimestamp(0)
     assert(minTs.toString.startsWith("2024-01-01"))
+  }
+
+  test("directory client: Glue columns from the footer equal spark.read.parquet's") {
+    for (dir <- Seq(SparkFixture.sfDir, SparkFixture.sfDirMid)) {
+      val tables = new LocalDirectoryGlueClient(spark, dir).getTables("graft")
+      assert(tables.size == 10, dir)
+      for (t <- tables) {
+        // the reference: Spark's own schema inference, rendered to Glue
+        // strings (a TIMESTAMP(NANOS) column infers as bigint under
+        // nanosAsLong and is a Glue timestamp)
+        val nanos = t.parameters.get(GlueCatalogProvider.NanosColumnsParam).toSeq.flatMap(_.split(",")).toSet
+        val expected = spark.read.parquet(t.storageDescriptor.location).schema.fields.toSeq.map { f =>
+          GlueColumn(f.name, if (nanos(f.name)) "timestamp" else GlueTypeParser.toGlueType(f.dataType))
+        }
+        assert(t.storageDescriptor.columns == expected, s"$dir ${t.name}")
+      }
+      // events.ts is a timezone-less parquet timestamp: the session's
+      // inferTimestampNTZ=false makes it a Glue timestamp, not timestamp_ntz
+      val events = tables.find(_.name == "events").get.storageDescriptor.columns
+      assert(events.contains(GlueColumn("ts", "timestamp")), events)
+    }
+  }
+
+  test("registering a non-partitioned directory starts no Spark job") {
+    val registered = jobsStartedBy(assert(newProvider().registerAll().forall(_.isRight)))
+    // q_dsv2_catalog in a session whose glue_v catalog is not built yet: its
+    // first use scans the directory while the DataFrame is built
+    val built = jobsStartedBy(SparkEntry.queries("q_dsv2_catalog")(spark.newSession(), SparkFixture.sfDir))
+    assert((registered, built) == ((0, 0)),
+      s"registerAll started $registered jobs, building q_dsv2_catalog $built")
   }
 
   test("unknown table error carries db.table context") {
