@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * (defaults: /root/testdata/sf0.1 target/sf1 10 all; `tables` is a
   * comma-separated subset for disk-bounded probes — e.g. `documents` for
   * the Spark-only fourth-decade pipeline sweep, where full sf300 of every
-  * table would not fit the box). The session is [[BenchSession.builder]]'s,
-  * `SPARK_GRAFT_CPUS` wide (default 32).
+  * table would not fit the box)
   */
 object ScaleUp {
 
@@ -32,7 +31,7 @@ object ScaleUp {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val tableFilter = args.lift(3).map(_.split(",").toSet)
     def wanted(name: String): Boolean = tableFilter.forall(_.contains(name))
-    val spark = BenchSession.builder().appName("graft-scaleup").getOrCreate()
+    val spark = BenchSession.builder("32").appName("graft-scaleup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def t(name: String): DataFrame = Tables.t(spark, src, name)

@@ -53,14 +53,13 @@ final class LocalDirectoryGlueClient(
 
   override def getDatabases(): Seq[GlueDatabase] = Seq(GlueDatabase(database))
 
-  // Memoized catalog snapshot. Building a GlueTable entry costs a footer
-  // read per table (a schema-inference job each, before footerSchema), and
-  // the GlueClient.getTable default resolves ONE table by listing ALL of
-  // them — uncached, a 3-table query paid ~30 schema inferences (~2s
-  // measured at sf0.1; BENCH_r02 q_dsv2_catalog). Real Glue deployments
-  // cache GetTables responses for the same reason (API rate limits at
-  // cluster scale); call [[refresh]] after adding/altering tables under
-  // `root` to invalidate.
+  // Memoized catalog snapshot. Building a GlueTable entry costs a directory
+  // listing and one footer read on the driver per table, and the
+  // GlueClient.getTable default resolves ONE table by listing ALL of them,
+  // so uncached every table lookup would re-read every footer. Real Glue
+  // deployments cache GetTables responses for the same reason (API rate
+  // limits at cluster scale); call [[refresh]] after adding/altering tables
+  // under `root` to invalidate.
   @volatile private var snapshot: Option[Seq[GlueTable]] = None
 
   /** Drop the memoized table list so the next call re-scans the directory. */
@@ -160,17 +159,26 @@ final class LocalDirectoryGlueClient(
     * (nanos-as-long, timestamp-NTZ inference), but without the footer job
     * that inference starts: one footer read per table, on the driver. */
   private def footerSchema(f: FileSystem, s: FileStatus): (StructType, Set[String]) = {
+    // The rule Spark lists table files by (HadoopFSUtils.
+    // shouldFilterOutPathName): `_`/`.` names are metadata or leftovers
+    // (_SUCCESS, _temporary, .crc) unless they are a `_key=value` partition
+    // directory; every other file is data, whatever its suffix (Hive and
+    // Athena write `000000_0`).
+    def isData(p: Path): Boolean = {
+      val n = p.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    }
     def firstDataFile(p: FileStatus): Option[Path] =
-      if (p.isFile && p.getPath.getName.endsWith(".parquet")) Some(p.getPath)
-      else if (p.isDirectory)
+      if (p.isFile) Some(p.getPath)
+      else
         listStatus(f, p.getPath)
+          .filter(c => isData(c.getPath))
           .sortBy(_.getPath.getName)
           .iterator
           .flatMap(firstDataFile)
           .nextOption()
-      else None
     val dataFile = firstDataFile(s).getOrElse(
-      throw new IllegalStateException(s"${s.getPath}: no parquet data file to read a schema from")
+      throw new IllegalStateException(s"${s.getPath}: no data file to read a schema from")
     )
     val in = HadoopInputFile.fromPath(dataFile, spark.sessionState.newHadoopConf())
     val reader = ParquetFileReader.open(in)

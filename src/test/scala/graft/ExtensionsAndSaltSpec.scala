@@ -16,20 +16,31 @@ class ExtensionsAndSaltSpec extends AnyFunSuite {
     * (made first, so this spec never picks the shared context's master).
     * Spark reads `spark.sql.extensions` from the context's conf when it
     * builds a session, so on a running context that conf on the builder is
-    * ignored; `withExtensions` applies the same class to this one session. */
+    * ignored; `withExtensions` applies the same class to this one session.
+    * The suites that run after this one in the same JVM reach the fixture
+    * through `SparkSession.active`, so it must stay the active and default
+    * session. Spark 4.1's `create()` keeps an existing one of each (3.x's
+    * replaced both); setting them back states the invariant whatever the
+    * version, and the first test asserts it. */
   private lazy val ext: SparkSession = {
     spark
-    BenchSession
+    val s = BenchSession
       .builder("4")
       .appName("graft-ext-test")
       .withExtensions(new GraftSparkExtensions)
       .create()
+    SparkSession.setActiveSession(spark)
+    SparkSession.setDefaultSession(spark)
+    s
   }
 
   test("the extension and register install every function of the table") {
     val names = GraftFunctions.Table.map(_.name)
     assert(names.distinct == names && names.forall(_.startsWith("graft_")), names)
     GraftFunctions.register(spark)
+    assert(ext ne spark)
+    assert(SparkSession.active eq spark, "building the extension session left it active")
+    assert(SparkSession.getDefaultSession.exists(_ eq spark), "building the extension session left it the default")
     for ((path, s) <- Seq("GraftSparkExtensions" -> ext, "GraftFunctions.register" -> spark)) {
       val reg = s.sessionState.functionRegistry
       val missing = names.filterNot(n => reg.functionExists(FunctionIdentifier(n)))

@@ -1,43 +1,18 @@
 package graft.catalog
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, SparkFixture}
+import graft.{Probe, SparkEntry, SparkFixture}
 
 class GlueCatalogSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
   private def newProvider(dir: String = SparkFixture.sfDir) =
     new GlueCatalogProvider(new LocalDirectoryGlueClient(spark, dir), spark)
-
-  /** Spark jobs started while `body` runs. The listener bus delivers events
-    * in order, so once a marker job run after `body` has been seen, every
-    * job `body` started has been counted. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "jobs-marker"))
-          markerSeen.countDown()
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription("jobs-marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never reached the listener")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("registerAll registers every table in the directory") {
     val p = newProvider()
@@ -99,6 +74,7 @@ class GlueCatalogSpec extends AnyFunSuite {
   }
 
   test("registering a non-partitioned directory starts no Spark job") {
+    def jobsStartedBy(body: => Unit): Int = Probe.traceStages(spark)(body).jobs.size
     val registered = jobsStartedBy(assert(newProvider().registerAll().forall(_.isRight)))
     // q_dsv2_catalog in a session whose glue_v catalog is not built yet: its
     // first use scans the directory while the DataFrame is built
@@ -305,6 +281,34 @@ class GlueCatalogSpec extends AnyFunSuite {
     val p = new GlueCatalogProvider(client, spark)
     val df = p.registerTable("db2", "measurements")
     assert(df.filter(df("bucket_no") === 7).count() == 1)
+  }
+
+  test("directory client reads the schema from suffix-less files, not leftovers") {
+    // Hive/Athena-style data files carry no .parquet suffix, and a failed
+    // write can leave _temporary/ behind (it sorts before `ds=...`); Spark
+    // lists the first as data and skips the second
+    val root = Files.createTempDirectory("graft_hive_names").toFile
+    import spark.implicits._
+    val t = root.getAbsolutePath + "/sales"
+    Seq((1L, "x", "a"), (2L, "y", "b"), (3L, "z", "b"))
+      .toDF("id", "v", "ds")
+      .write
+      .partitionBy("ds")
+      .parquet(t)
+    Seq(9.5).toDF("junk").write.parquet(t + "/_temporary/0")
+    for (part <- Seq("ds=a", "ds=b")) {
+      val dir = new java.io.File(t, part).toPath
+      val files = Files.list(dir).iterator.asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+      for ((f, i) <- files.zipWithIndex) Files.move(f, dir.resolve(f"$i%06d_0"))
+    }
+    val client = new LocalDirectoryGlueClient(spark, root.getAbsolutePath, "db4")
+    val tables = client.getTables("db4")
+    assert(tables.map(_.name) == Seq("sales"))
+    assert(tables.head.storageDescriptor.columns == Seq(GlueColumn("id", "bigint"), GlueColumn("v", "string")))
+    assert(tables.head.partitionKeys == Seq(GlueColumn("ds", "string")))
+    val df = new GlueCatalogProvider(client, spark).registerTable("db4", "sales")
+    assert(df.filter(df("ds") === "b").count() == 2)
   }
 
   test("directory client behind a file:/// root discovers and serves tables") {
