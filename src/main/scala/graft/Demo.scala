@@ -27,8 +27,10 @@ object Demo {
       case Right(_) => ()
     }
 
-    provider.informationSchemaTables().show(truncate = false)
-    provider.informationSchemaColumns().show(60, truncate = false)
+    // the reference demo's literal information_schema SQL, through the
+    // glue catalog
+    spark.sql("SELECT * FROM glue.information_schema.tables").show(truncate = false)
+    spark.sql("SELECT * FROM glue.information_schema.columns").show(60, truncate = false)
 
     for (t <- provider.registeredTables.map(_.name).sorted) {
       println(s"sampling graft.$t")

@@ -106,7 +106,7 @@ object PlanDump {
       sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode
-      ).take(6000))
+      ))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get(outFile), sb.toString)

@@ -2,7 +2,6 @@ package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, StructType}
 
 /** How to obtain a table's schema at registration time, mirroring the
   * reference's TableRegistrationOptions (reference:
@@ -61,80 +60,47 @@ final class GlueCatalogProvider(client: GlueClient, spark: SparkSession) {
   ): Seq[Either[Throwable, DataFrame]] =
     client.getDatabases().flatMap(db => registerTables(db.name, options))
 
-  /** Build the lazy DataFrame for a Glue table without registering views. */
+  /** Build the lazy DataFrame for a Glue table without registering views:
+    * read what [[GlueFormats.resolve]] decides, then convert nanos columns. */
   def load(
       table: GlueTable,
       options: TableRegistrationOptions = DeriveSchemaFromGlueTable
   ): DataFrame = {
-    val fmt = GlueFormats.resolve(table)
-    // Avro rides its own reader (avro-core container files, one task per
-    // file; flat directory layout — Hive-partitioned Avro dirs are not
-    // supported). DeriveSchema casts the embedded writer schema to the
-    // Glue-declared one, InferSchema trusts the files.
-    if (fmt.source == GlueFormats.GraftAvro || fmt.source == GlueFormats.GraftDelta) {
-      val raw =
-        if (fmt.source == GlueFormats.GraftAvro)
-          graft.sources.AvroRead.read(spark, table.storageDescriptor.location)
-        else
-          // Delta's own metaData schema governs the files; DeriveSchema
-          // below then casts to the Glue-declared shape like any format
-          graft.sources.DeltaRead.read(spark, table.storageDescriptor.location)
-      val shaped = options match {
-        case DeriveSchemaFromGlueTable =>
-          // partitioned delta: partition keys surface as columns too. Avro
-          // stays flat — its reader does not materialize hive partition
-          // dirs, so declared partition keys would name missing columns.
-          val declaredCols =
-            if (fmt.source == GlueFormats.GraftDelta)
-              table.storageDescriptor.columns ++ table.partitionKeys
-            else table.storageDescriptor.columns
-          val declared = GlueTypeParser.toSchema(declaredCols)
-          raw.select(declared.map(f => col(f.name).cast(f.dataType)): _*)
-        case InferSchemaFromData => raw
-      }
-      return applyCatalogStatistics(table, shaped)
+    val read = GlueFormats.resolve(table, spark.sessionState.newHadoopConf(), options)
+    val location = table.storageDescriptor.location
+    val df = read.source match {
+      // Avro rides its own reader (avro-core container files, one task per
+      // file; flat directory layout — Hive-partitioned Avro dirs are not
+      // supported); Delta's own metaData schema governs its files. Both
+      // are cast to the declared shape under DeriveSchema.
+      case GlueFormats.GraftAvro | GlueFormats.GraftDelta =>
+        val raw =
+          if (read.source == GlueFormats.GraftAvro) graft.sources.AvroRead.read(spark, location)
+          else graft.sources.DeltaRead.read(spark, location)
+        read.schema.fold(raw)(s => raw.select(s.map(f => col(f.name).cast(f.dataType)): _*))
+      case source =>
+        val reader = spark.read.format(source).options(read.options)
+        read.schema match {
+          case Some(s) => reader.schema(s).load(location)
+          case None =>
+            // InferSchema discovers partition columns from directory names;
+            // cast them to the Glue-declared partition-key types
+            table.partitionKeys.foldLeft(reader.load(location)) { (acc, pk) =>
+              if (acc.columns.contains(pk.name))
+                acc.withColumn(pk.name, col(pk.name).cast(GlueTypeParser.parse(pk.dataType)))
+              else acc
+            }
+        }
     }
-    // Parquet TIMESTAMP(NANOS) columns (named in table parameters by the
-    // client) cannot be read as Spark timestamps; read them as raw nanos
-    // longs and truncate to microseconds below — the same ns→µs truncation
-    // other engines (DuckDB, Arrow) apply.
-    val nanosCols: Set[String] = table.parameters
-      .get(GlueCatalogProvider.NanosColumnsParam)
-      .map(_.split(",").toSet)
-      .getOrElse(Set.empty)
-    val reader = spark.read.format(fmt.source).options(fmt.options)
-    val withSchema = options match {
-      case DeriveSchemaFromGlueTable =>
-        val declared = GlueTypeParser.toSchema(table.storageDescriptor.columns)
-        val readSchema = StructType(declared.map { f =>
-          if (nanosCols.contains(f.name)) f.copy(dataType = LongType) else f
-        })
-        reader.schema(readSchema)
-      case InferSchemaFromData => reader
-    }
-    // basePath keeps Hive-style partition directories (key=value) visible as
-    // typed partition columns of the table root, matching the reference's
-    // table_partition_cols handling (glue.rs:433-442). Only valid for
-    // directory locations (single-file tables have no partition dirs).
-    val withBase =
-      if (table.partitionKeys.nonEmpty ||
-          new java.io.File(table.storageDescriptor.location).isDirectory)
-        withSchema.option("basePath", table.storageDescriptor.location)
-      else withSchema
-    val df0 = withBase.load(table.storageDescriptor.location)
-    val df = nanosCols.foldLeft(df0) { (acc, c) =>
+    // Parquet TIMESTAMP(NANOS) columns cannot be read as Spark timestamps;
+    // they are read as raw nanos longs and truncated to microseconds here —
+    // the same ns→µs truncation other engines (DuckDB, Arrow) apply.
+    val converted = read.nanosColumns.foldLeft(df) { (acc, c) =>
       if (acc.columns.contains(c))
         acc.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
       else acc
     }
-    // Partition columns are discovered from directory names; cast them to the
-    // Glue-declared partition-key types so the schema matches the catalog.
-    val typed = table.partitionKeys.foldLeft(df) { (acc, pk) =>
-      if (acc.columns.contains(pk.name))
-        acc.withColumn(pk.name, col(pk.name).cast(GlueTypeParser.parse(pk.dataType)))
-      else acc
-    }
-    applyCatalogStatistics(table, typed)
+    applyCatalogStatistics(table, converted)
   }
 
   /** Catalog statistics → plan decisions: when the Glue parameters carry
@@ -158,11 +124,6 @@ final class GlueCatalogProvider(client: GlueClient, spark: SparkSession) {
         if (threshold > 0 && size <= threshold) df.hint("broadcast") else df
       case None => df
     }
-
-  def schemaOf(table: GlueTable): StructType =
-    GlueTypeParser.toSchema(
-      table.storageDescriptor.columns ++ table.partitionKeys
-    )
 
   private def registerGlueTable(
       table: GlueTable,
@@ -188,49 +149,6 @@ final class GlueCatalogProvider(client: GlueClient, spark: SparkSession) {
     df.createOrReplaceTempView(s"${table.databaseName}_${table.name}")
     registered += ((table.databaseName, table.name) -> table)
     df
-  }
-
-  // ---- information_schema (reference demo.rs queries these views) ----
-
-  /** `information_schema.tables` over everything registered here. */
-  def informationSchemaTables(catalogName: String = "glue"): DataFrame = {
-    import spark.implicits._
-    registered.keys.toSeq
-      .sortBy(identity)
-      .map { case (db, t) => (catalogName, db, t, "BASE TABLE") }
-      .toDF("table_catalog", "table_schema", "table_name", "table_type")
-  }
-
-  /** `information_schema.columns`: one row per column, ordinal_position and
-    * Glue-declared type string included (demo.rs's second query). */
-  def informationSchemaColumns(catalogName: String = "glue"): DataFrame = {
-    import spark.implicits._
-    registered.toSeq
-      .sortBy(_._1)
-      .flatMap { case ((db, t), table) =>
-        val cols =
-          table.storageDescriptor.columns ++ table.partitionKeys
-        cols.zipWithIndex.map { case (c, i) =>
-          (
-            catalogName,
-            db,
-            t,
-            c.name,
-            i,
-            "YES",
-            GlueTypeParser.parse(c.dataType).simpleString
-          )
-        }
-      }
-      .toDF(
-        "table_catalog",
-        "table_schema",
-        "table_name",
-        "column_name",
-        "ordinal_position",
-        "is_nullable",
-        "data_type"
-      )
   }
 }
 

@@ -1,14 +1,47 @@
 package graft.catalog
 
-/** Resolved source format for a Glue table: a Spark DataSource name plus
-  * reader options.
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{LongType, StructType}
+
+/** What Spark reads for a Glue table, decided once by [[GlueFormats.resolve]]
+  * for both catalog surfaces ([[GlueCatalogProvider.load]] and
+  * [[GlueTableCatalog.loadTable]]).
+  *
+  * @param source  a Spark DataSource name, or [[GlueFormats.GraftAvro]] /
+  *                [[GlueFormats.GraftDelta]]
+  * @param options reader options, `basePath` included
+  * @param schema  the Glue-declared read schema; None under
+  *                InferSchemaFromData (the files decide)
+  * @param nanosColumns parquet TIMESTAMP(NANOS) columns, read as `bigint`
   */
-final case class ResolvedFormat(source: String, options: Map[String, String])
+final case class ResolvedFormat(
+    source: String,
+    options: Map[String, String],
+    schema: Option[StructType],
+    nanosColumns: Set[String]
+)
 
 /** Dispatch from the Hive (input_format, output_format, serialization_library)
   * triple stored in a Glue StorageDescriptor to a Spark data source, mirroring
   * the reference's match table (reference: src/catalog_provider/glue.rs:348-430)
   * plus its `table_type=delta` branch (glue.rs:191-197).
+  *
+  * [[resolve]] is the one place a Glue table's read is decided; both catalog
+  * surfaces read what it decides:
+  *   - the source and its reader options (the serde triple below);
+  *   - `basePath`, set when the location is a directory on its Hadoop
+  *     [[org.apache.hadoop.fs.FileSystem]] (any registered scheme), so
+  *     Hive-style `key=value` directories stay partition columns of the
+  *     table root;
+  *   - the read schema: the declared columns, TIMESTAMP(NANOS) columns as
+  *     `bigint`, then the partition keys with their Glue types (reference:
+  *     glue.rs:433-442). Spark parses partition directory values straight
+  *     to those types, so a Glue `string` key over `ds=01` stays "01".
+  *     Avro tables get no partition keys: their reader does not
+  *     materialize partition directories.
   *
   * Spark-side differences from the DataFusion version:
   *   - CSV honours `field.delim` and `skip.header.line.count` via reader
@@ -53,7 +86,43 @@ object GlueFormats {
     "com.amazon.ionhiveserde.IonHiveSerDe"
   )
 
-  def resolve(table: GlueTable): ResolvedFormat = {
+  /** The read decision for `table` under `registration`; `hadoopConf` opens
+    * the location's filesystem for the directory check. */
+  def resolve(
+      table: GlueTable,
+      hadoopConf: Configuration,
+      registration: TableRegistrationOptions
+  ): ResolvedFormat = {
+    val (source, options) = format(table)
+    val location = table.storageDescriptor.location
+    val path = new Path(location)
+    val isDir =
+      try path.getFileSystem(hadoopConf).getFileStatus(path).isDirectory
+      catch { case _: FileNotFoundException => false }
+    val nanos = table.parameters
+      .get(GlueCatalogProvider.NanosColumnsParam)
+      .map(_.split(",").toSet)
+      .getOrElse(Set.empty[String])
+    val schema = registration match {
+      case TableRegistrationOptions.DeriveSchemaFromGlueTable =>
+        val declared = GlueTypeParser.toSchema(
+          if (source == GraftAvro) table.storageDescriptor.columns
+          else table.storageDescriptor.columns ++ table.partitionKeys
+        )
+        Some(StructType(declared.map { f =>
+          if (nanos.contains(f.name)) f.copy(dataType = LongType) else f
+        }))
+      case TableRegistrationOptions.InferSchemaFromData => None
+    }
+    ResolvedFormat(
+      source,
+      if (isDir) options + ("basePath" -> location) else options,
+      schema,
+      nanos
+    )
+  }
+
+  private def format(table: GlueTable): (String, Map[String, String]) = {
     val sd = table.storageDescriptor
     val serde = sd.serdeInfo
 
@@ -61,11 +130,11 @@ object GlueFormats {
     // registers them via the deltalake crate); served here by the
     // transaction-log replay reader.
     if (table.parameters.get("table_type").exists(_.equalsIgnoreCase("delta")))
-      return ResolvedFormat(GraftDelta, Map.empty)
+      return (GraftDelta, Map.empty)
 
     (sd.inputFormat, sd.outputFormat, serde.serializationLibrary) match {
       case ParquetTriple =>
-        ResolvedFormat("parquet", Map.empty)
+        ("parquet", Map.empty)
       case (TextTriple._1, TextTriple._2, LazySimpleSerde) =>
         val delim = serde.parameters.getOrElse(
           "field.delim",
@@ -75,18 +144,15 @@ object GlueFormats {
         )
         val hasHeader =
           sd.parameters.get("skip.header.line.count").contains("1")
-        ResolvedFormat(
-          "csv",
-          Map("sep" -> delim.take(1), "header" -> hasHeader.toString)
-        )
+        ("csv", Map("sep" -> delim.take(1), "header" -> hasHeader.toString))
       case AvroTriple =>
         // Served by graft.sources.AvroRead (built on avro-core, which IS on
         // Spark's classpath — the spark-avro connector module is not).
         // "graft-avro" is dispatched by GlueCatalogProvider.load; it is not
         // a DataSourceRegister short name.
-        ResolvedFormat(GlueFormats.GraftAvro, Map.empty)
+        (GraftAvro, Map.empty)
       case (TextTriple._1, TextTriple._2, s) if JsonSerdes.contains(s) =>
-        ResolvedFormat("json", Map.empty)
+        ("json", Map.empty)
       case (in, out, s) =>
         throw notImplemented(table, s"No support for: $in, $out, $s yet.")
     }

@@ -35,7 +35,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * vectorized readers, filter pushdown, column pruning and partition pruning —
   * the same property the reference gets from DataFusion's ListingTable. The
   * catalog is read-only, like the reference (its `register_schema` is
-  * `unimplemented!()`, glue.rs:564-570).
+  * `unimplemented!()`, glue.rs:564-570). What it reads — source, options
+  * with `basePath`, read schema — is [[GlueFormats.resolve]]'s decision, the
+  * same one [[GlueCatalogProvider.load]] reads, so both surfaces return the
+  * same schema and rows.
+  *
+  * A file table can only serve files as they are, so this route refuses,
+  * with a [[GlueNotImplementedException]] naming the table, what needs the
+  * provider's readers:
+  *   - Avro tables: a DSv2 file table needs the spark-avro module, which is
+  *     not on the classpath;
+  *   - Delta tables with deletion vectors (the raw files would resurrect
+  *     deleted rows) or column mapping (they carry physical column names);
+  *   - under the declared schema, tables with parquet TIMESTAMP(NANOS)
+  *     columns: the file table would serve the `bigint` they are read as
+  *     against the catalog's `timestamp`; the provider converts them.
   *
   * NOTE: when backed by [[LocalDirectoryGlueClient]], first use sets two
   * session-wide parquet timestamp confs (nanosAsLong, inferTimestampNTZ off) —
@@ -133,42 +147,35 @@ final class GlueTableCatalog extends TableCatalog with SupportsNamespaces {
     }
     val spark = SparkSession.active
     val glueTable = client.getTable(ident.namespace().mkString("."), ident.name())
-    val fmt = GlueFormats.resolve(glueTable)
     // inferSchema=true — the DSv2 twin of InferSchemaFromData: pass no
     // user schema and let the file table infer from the data files.
-    val schema: Option[StructType] =
+    val registration =
       if (java.lang.Boolean.parseBoolean(options.getOrDefault("inferSchema", "false")))
-        None
-      else Some(GlueTypeParser.toSchema(glueTable.storageDescriptor.columns))
+        TableRegistrationOptions.InferSchemaFromData
+      else TableRegistrationOptions.DeriveSchemaFromGlueTable
+    val read = GlueFormats.resolve(glueTable, spark.sessionState.newHadoopConf(), registration)
     val location = glueTable.storageDescriptor.location
     val paths = Seq(location)
-    // Hadoop FS, not java.io.File: the location may carry any registered
-    // scheme (file://, hdfs://, s3a://)
-    val baseOpt = {
-      val p = new org.apache.hadoop.fs.Path(location)
-      val isDir =
-        try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p)
-          .isDirectory
-        catch { case _: java.io.FileNotFoundException => false }
-      if (isDir) Map("basePath" -> location) else Map.empty[String, String]
-    }
-    val opts = new CaseInsensitiveStringMap((fmt.options ++ baseOpt).asJava)
+    val opts = new CaseInsensitiveStringMap(read.options.asJava)
     val fullName = s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}"
-    fmt.source match {
+    if (read.schema.isDefined && read.nanosColumns.nonEmpty)
+      throw new GlueNotImplementedException(
+        s"$fullName: parquet TIMESTAMP(NANOS) columns " +
+          s"(${read.nanosColumns.toSeq.sorted.mkString(", ")}); read it via " +
+          "GlueCatalogProvider.load (converts them to microsecond timestamps)"
+      )
+    read.source match {
       case "parquet" =>
-        ParquetTable(fullName, spark, opts, paths, schema, classOf[ParquetFileFormat])
+        ParquetTable(fullName, spark, opts, paths, read.schema, classOf[ParquetFileFormat])
       case "csv" =>
-        CSVTable(fullName, spark, opts, paths, schema, classOf[CSVFileFormat])
+        CSVTable(fullName, spark, opts, paths, read.schema, classOf[CSVFileFormat])
       case "json" =>
-        JsonTable(fullName, spark, opts, paths, schema, classOf[JsonFileFormat])
+        JsonTable(fullName, spark, opts, paths, read.schema, classOf[JsonFileFormat])
       case GlueFormats.GraftDelta =>
         // delta data files ARE parquet: replay the log (driver-side
         // metadata, same as delta-spark's Snapshot) and serve the ACTIVE
         // files through the native ParquetTable, so pushdown/pruning/
-        // vectorization apply unchanged. Partition keys belong in the
-        // declared schema here — otherwise Spark re-infers their types
-        // from directory names, diverging from the catalog's declaration.
+        // vectorization apply unchanged.
         val snap = graft.sources.DeltaRead.snapshot(spark, location)
         // feature tables need the full reader (row-index delete filters /
         // physical->logical rename) — serving their raw files through
@@ -189,21 +196,12 @@ final class GlueTableCatalog extends TableCatalog with SupportsNamespaces {
           )
         val active =
           snap.files.map(p => new org.apache.hadoop.fs.Path(location, p).toString)
-        val deltaSchema = schema
-          .map(s =>
-            StructType(
-              s ++ GlueTypeParser
-                .toSchema(glueTable.partitionKeys)
-                .filterNot(f => s.fieldNames.contains(f.name))
-            )
-          )
-          .orElse(snap.schema)
         ParquetTable(
           fullName,
           spark,
           opts,
           active,
-          deltaSchema,
+          read.schema.orElse(snap.schema),
           classOf[ParquetFileFormat]
         )
       case GlueFormats.GraftAvro =>

@@ -19,10 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * the driver from the already-fetched Glue listing, no job, no shuffle —
   * the DSv2 analog of how the reference's information_schema is computed
   * from the in-memory catalog snapshot.
-  *
-  * Shapes match [[GlueCatalogProvider.informationSchemaTables]] /
-  * [[GlueCatalogProvider.informationSchemaColumns]] column-for-column, so
-  * the temp-view route and the DSv2 route return identical DataFrames.
   */
 object InfoSchemaTables {
 

@@ -109,10 +109,6 @@ object TableStatistics {
     numRows ++ colStats
   }
 
-  /** Attach collected stats to a [[GlueTable]]'s parameters. */
-  def withStatistics(table: GlueTable, stats: DataFrame): GlueTable =
-    table.copy(parameters = table.parameters ++ asParameters(stats))
-
   /** The catalog's best size estimate for a table, from its parameters:
     * `totalSize` when persisted, else `numRows` × a conservative per-row
     * width from the declared schema. None when the catalog has no stats.

@@ -755,13 +755,6 @@ object GraftFunctions {
     call_function("graft_vector_fixed_mean", vec)
   }
 
-  /** Per-group element-wise exact-decimal vector mean (scale-10 128-bit
-    * sums, round 6) as array<double> — see [[VectorFixedMean10]]. */
-  def vectorFixedMean10(vec: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_vector_fixed_mean10", vec)
-  }
-
   def shingleHashes(text: Column, k: Int)(implicit spark: SparkSession): Column = {
     register(spark)
     call_function(

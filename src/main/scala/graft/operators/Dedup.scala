@@ -47,13 +47,6 @@ object Dedup {
       .groupBy(UF.urlCanonical(col(urlCol)).as("canonical_url"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keeper_id"))
 
-  /** Documents minus URL duplicates (keep smallest id per canonical URL). */
-  def urlDedup(docs: DataFrame, urlCol: String, idCol: String): DataFrame =
-    docs.join(
-      urlGroups(docs, urlCol, idCol).select(col("keeper_id").as(idCol)),
-      idCol
-    )
-
   /** Paragraph-level exact dedup (the CCNet / RefinedWeb unit): split each
     * document on `sep`, drop every paragraph whose normalized content
     * already occurred earlier in the corpus — "earlier" = smaller
@@ -133,12 +126,6 @@ object Dedup {
       )
   }
 
-  /** See [[Spread.widenIfNarrow]] — the one-row-group bench scans ran the
-    * 128-hash signature kernel as ONE task (JobProbe: 0.5–0.75 s of each
-    * dedup row's wall) until the widening. */
-  private def widenIfNarrow(df: DataFrame, byCol: String): DataFrame =
-    Spread.widenIfNarrow(df, byCol)
-
   /** MinHash signatures: (id, sig array<bigint>). */
   def minhashSignatures(
       docs: DataFrame,
@@ -148,7 +135,7 @@ object Dedup {
       numHashes: Int = 128
   ): DataFrame = {
     implicit val spark: SparkSession = docs.sparkSession
-    widenIfNarrow(docs, idCol).select(
+    Spread.widenIfNarrow(docs, idCol).select(
       col(idCol),
       GraftFunctions
         .minhashSignature(
@@ -587,7 +574,7 @@ object Dedup {
     // tokenize+hash kernel below the first exchange — single-task on a
     // one-split scan (JobProbe: 250 ms + 130 ms single-task stages per
     // dedup_substring row at sf0.1).
-    val gramsRaw = widenIfNarrow(docs, idCol)
+    val gramsRaw = Spread.widenIfNarrow(docs, idCol)
       .select(
         col(idCol),
         posexplode(
@@ -664,7 +651,7 @@ object Dedup {
     // widenIfNarrow (round 13): the simhash-over-shingles kernel was the
     // single biggest single-task stage of dedup_simhash (JobProbe: 368 ms
     // of a 1.05 s run on the one-split sf0.1 scan).
-    widenIfNarrow(docs, idCol).select(
+    Spread.widenIfNarrow(docs, idCol).select(
       col(idCol),
       GraftFunctions
         .simhash64(GraftFunctions.shingleHashes(TF.normText(col(textCol)), 2))
@@ -895,7 +882,7 @@ object Dedup {
     // row's wall in a single-task stage) and only the pair loop ran wide;
     // widening the raw (id, text) rows first runs the kernel at cluster
     // width on BOTH the stream and the broadcast build sides.
-    val sh = widenIfNarrow(docs, idCol).select(
+    val sh = Spread.widenIfNarrow(docs, idCol).select(
       col(idCol).as("id"),
       sort_array(
         array_distinct(
@@ -1072,7 +1059,7 @@ object Dedup {
     // widenIfNarrow (round 13): hyperplane hashing + the (planes+1)-way
     // multi-probe explode sit below the bucket groupBy's exchange —
     // single-task on a one-split scan; no-op at scale.
-    val base = widenIfNarrow(emb, idCol)
+    val base = Spread.widenIfNarrow(emb, idCol)
       .select(
         col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"),

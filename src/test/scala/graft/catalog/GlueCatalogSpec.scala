@@ -44,7 +44,7 @@ class GlueCatalogSpec extends AnyFunSuite {
     assert(df.count() == 5)
   }
 
-  test("nanos timestamp column (events.ts) loads as microsecond timestamp") {
+  test("events.ts (a microsecond timestamp) loads as timestamp") {
     val p = newProvider()
     val df = p.registerTable("graft", "events")
     assert(df.schema("ts").dataType.typeName == "timestamp")
@@ -397,9 +397,7 @@ class GlueCatalogSpec extends AnyFunSuite {
   }
 
   test("information_schema.tables matches demo shape") {
-    val p = newProvider()
-    p.registerAll()
-    val rows = p.informationSchemaTables().collect()
+    val rows = spark.sql("SELECT * FROM glue.information_schema.tables").collect()
     assert(rows.length == 10)
     assert(
       rows.forall(r =>
@@ -410,9 +408,7 @@ class GlueCatalogSpec extends AnyFunSuite {
   }
 
   test("information_schema.columns carries ordinal positions and types") {
-    val p = newProvider()
-    p.registerAll()
-    val cols = p.informationSchemaColumns()
+    val cols = spark.sql("SELECT * FROM glue.information_schema.columns")
     val li = cols
       .filter(cols("table_name") === "lineitem")
       .orderBy("ordinal_position")
@@ -465,16 +461,109 @@ class GlueCatalogSpec extends AnyFunSuite {
       .collect()
     assert(c.head.getString(0) == "o_orderkey" && c.head.getInt(1) == 0)
     assert(c.map(_.getString(0)).contains("o_totalprice"))
+  }
 
-    // the DSv2 route and the provider temp-view route agree column-for-column
-    val p = newProvider()
-    p.registerAll()
-    val viaProvider = p.informationSchemaTables().collect().map(_.toSeq).toSet
-    val viaDsv2 = spark
-      .sql("SELECT * FROM glue.information_schema.tables")
-      .collect()
-      .map(_.toSeq)
-      .toSet
-    assert(viaProvider == viaDsv2)
+  private val ParquetIn = "org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat"
+  private val ParquetOut = "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat"
+  private val ParquetSerde = "org.apache.hadoop.hive.ql.io.parquet.serde.ParquetHiveSerDe"
+  private val TextIn = "org.apache.hadoop.mapred.TextInputFormat"
+  private val TextOut = "org.apache.hadoop.hive.ql.io.HiveIgnoreKeyTextOutputFormat"
+
+  /** `body` with `client` served as DSv2 catalog `catalog`, a name no other
+    * test uses (catalog instances are cached by name). */
+  private def withCatalog[A](catalog: String, client: GlueClient)(body: => A): A = {
+    GlueTableCatalog.injectClient(client)
+    try {
+      spark.conf.set(s"spark.sql.catalog.$catalog", classOf[GlueTableCatalog].getName)
+      body
+    } finally {
+      GlueTableCatalog.clearInjectedClient()
+      spark.conf.unset(s"spark.sql.catalog.$catalog")
+    }
+  }
+
+  test("provider and DSv2 catalog read the same schema and rows") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_parity").toFile.getAbsolutePath
+    // a Glue string key over numeric directory values: ds=01, ds=2
+    Seq((1L, "x", "01"), (2L, "y", "01"), (3L, "z", "2"))
+      .toDF("id", "v", "ds")
+      .write
+      .partitionBy("ds")
+      .parquet(root + "/parted")
+    Files.createDirectories(java.nio.file.Paths.get(root, "csv"))
+    Files.writeString(java.nio.file.Paths.get(root, "csv", "pets.csv"), "id;name\n1;rex\n2;milo\n")
+    Files.writeString(java.nio.file.Paths.get(root, "items.json"),
+      "{\"id\":1,\"tags\":[\"a\",\"b\"]}\n{\"id\":2,\"tags\":[\"c\"]}\n")
+    def sd(location: String, in: String, out: String, serde: GlueSerDeInfo, cols: (String, String)*) =
+      GlueStorageDescriptor(location, in, out, serde, cols.map { case (n, t) => GlueColumn(n, t) })
+    val parted = GlueTable(
+      "dbp", "parted",
+      sd(root + "/parted", ParquetIn, ParquetOut, GlueSerDeInfo(ParquetSerde), "id" -> "bigint", "v" -> "string"),
+      partitionKeys = Seq(GlueColumn("ds", "string"))
+    )
+    val region = new LocalDirectoryGlueClient(spark, SparkFixture.sfDir)
+      .getTable("graft", "region").copy(databaseName = "dbp")
+    val matrix = Seq(
+      parted,
+      parted.copy(
+        name = "parted_uri",
+        storageDescriptor = parted.storageDescriptor.copy(location = "file://" + root + "/parted")
+      ),
+      GlueTable(
+        "dbp", "pets",
+        sd(root + "/csv", TextIn, TextOut,
+          GlueSerDeInfo("org.apache.hadoop.hive.serde2.lazy.LazySimpleSerDe", Map("field.delim" -> ";")),
+          "id" -> "bigint", "name" -> "string"
+        ).copy(parameters = Map("skip.header.line.count" -> "1"))
+      ),
+      GlueTable(
+        "dbp", "items",
+        sd(root + "/items.json", TextIn, TextOut, GlueSerDeInfo("org.apache.hive.hcatalog.data.JsonSerDe"),
+          "id" -> "bigint", "tags" -> "array<string>")
+      ),
+      region
+    )
+    val client = new InMemoryGlueClient(matrix)
+    val provider = new GlueCatalogProvider(client, spark)
+    for ((t, i) <- matrix.zipWithIndex) withCatalog(s"glue_parity_$i", client) {
+      val viaProvider = provider.load(t)
+      val viaCatalog = spark.table(s"glue_parity_$i.dbp.${t.name}")
+      assert(viaCatalog.schema == viaProvider.schema, t.name)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(viaCatalog) == rows(viaProvider), t.name)
+    }
+    val ds = provider.load(parted).select("ds").distinct().as[String].collect().sorted.toSeq
+    assert(ds == Seq("01", "2"))
+  }
+
+  test("parquet TIMESTAMP(NANOS): provider converts, DSv2 catalog refuses") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val root = Files.createTempDirectory("graft_nanos").toFile.getAbsolutePath
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional int64 ts (TIMESTAMP(NANOS,false)); }"
+    )
+    val writer = ExampleParquetWriter.builder(new Path(root + "/ev.parquet")).withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup().append("id", 1L).append("ts", 1700000000123456789L))
+    finally writer.close()
+
+    val client = new LocalDirectoryGlueClient(spark, root, "dbn")
+    val t = client.getTable("dbn", "ev")
+    assert(t.storageDescriptor.columns == Seq(GlueColumn("id", "bigint"), GlueColumn("ts", "timestamp")))
+    assert(t.parameters.get(GlueCatalogProvider.NanosColumnsParam).contains("ts"))
+
+    val df = new GlueCatalogProvider(client, spark).load(t)
+    assert(df.schema("ts").dataType.typeName == "timestamp")
+    assert(df.selectExpr("cast(ts AS string)").head.getString(0) == "2023-11-14 22:13:20.123456")
+
+    withCatalog("glue_nanos", client) {
+      val e = intercept[Throwable](spark.table("glue_nanos.dbn.ev").collect())
+      val refusal = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case g: GlueNotImplementedException => g }
+      assert(refusal.exists(_.getMessage.contains("dbn.ev")), e)
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft.catalog
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GlueFormatsSpec extends AnyFunSuite {
@@ -16,7 +18,7 @@ class GlueFormatsSpec extends AnyFunSuite {
       "db",
       "t",
       GlueStorageDescriptor(
-        location = "/tmp/x",
+        location = "/graft-formats-spec/absent",
         inputFormat = in,
         outputFormat = out,
         serdeInfo = GlueSerDeInfo(serde, serdeParams),
@@ -26,22 +28,27 @@ class GlueFormatsSpec extends AnyFunSuite {
       parameters = tableParams
     )
 
+  private val conf = new Configuration()
+  private def resolve(t: GlueTable): ResolvedFormat =
+    GlueFormats.resolve(t, conf, TableRegistrationOptions.DeriveSchemaFromGlueTable)
+  private val declared = Some(StructType(Seq(StructField("a", IntegerType))))
+
   private val TextIn = "org.apache.hadoop.mapred.TextInputFormat"
   private val TextOut = "org.apache.hadoop.hive.ql.io.HiveIgnoreKeyTextOutputFormat"
 
   test("parquet triple") {
-    val f = GlueFormats.resolve(
+    val f = resolve(
       table(
         "org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat",
         "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat",
         "org.apache.hadoop.hive.ql.io.parquet.serde.ParquetHiveSerDe"
       )
     )
-    assert(f == ResolvedFormat("parquet", Map.empty))
+    assert(f == ResolvedFormat("parquet", Map.empty, declared, Set.empty))
   }
 
   test("csv triple honours delimiter and header") {
-    val f = GlueFormats.resolve(
+    val f = resolve(
       table(
         TextIn,
         TextOut,
@@ -50,12 +57,12 @@ class GlueFormatsSpec extends AnyFunSuite {
         sdParams = Map("skip.header.line.count" -> "1")
       )
     )
-    assert(f == ResolvedFormat("csv", Map("sep" -> "|", "header" -> "true")))
+    assert(f == ResolvedFormat("csv", Map("sep" -> "|", "header" -> "true"), declared, Set.empty))
   }
 
   test("csv without field.delim fails like the reference") {
     assertThrows[GlueCatalogException](
-      GlueFormats.resolve(
+      resolve(
         table(TextIn, TextOut, "org.apache.hadoop.hive.serde2.lazy.LazySimpleSerDe")
       )
     )
@@ -67,35 +74,65 @@ class GlueFormatsSpec extends AnyFunSuite {
         "org.openx.data.jsonserde.JsonSerDe",
         "com.amazon.ionhiveserde.IonHiveSerDe"
       )) {
-      assert(GlueFormats.resolve(table(TextIn, TextOut, serde)).source == "json")
+      assert(resolve(table(TextIn, TextOut, serde)).source == "json")
     }
   }
 
   test("avro serde triple resolves to the graft-avro reader") {
-    val fmt = GlueFormats.resolve(
+    val fmt = resolve(
       table(
         "org.apache.hadoop.hive.ql.io.avro.AvroContainerInputFormat",
         "org.apache.hadoop.hive.ql.io.avro.AvroContainerOutputFormat",
         "org.apache.hadoop.hive.serde2.avro.AvroSerDe"
       )
     )
-    assert(fmt == ResolvedFormat(GlueFormats.GraftAvro, Map.empty))
+    assert(fmt == ResolvedFormat(GlueFormats.GraftAvro, Map.empty, declared, Set.empty))
   }
 
   test("delta table_type resolves to the graft-delta log-replay reader") {
-    val fmt = GlueFormats.resolve(
+    val fmt = resolve(
       table(
         "", "", "",
         tableParams = Map("table_type" -> "DELTA")
       )
     )
-    assert(fmt == ResolvedFormat(GlueFormats.GraftDelta, Map.empty))
+    assert(fmt == ResolvedFormat(GlueFormats.GraftDelta, Map.empty, declared, Set.empty))
   }
 
   test("unknown triple fails with db.table context, like the reference") {
     val e = intercept[GlueNotImplementedException](
-      GlueFormats.resolve(table("in.x", "out.y", "serde.z"))
+      resolve(table("in.x", "out.y", "serde.z"))
     )
     assert(e.getMessage.startsWith("db.t: No support for: in.x, out.y"))
+  }
+
+  test("read schema: nanos as bigint, typed partition keys, basePath on dirs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_formats").toString
+    val parquet = table(
+      "org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat",
+      "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat",
+      "org.apache.hadoop.hive.ql.io.parquet.serde.ParquetHiveSerDe"
+    )
+    val t = parquet.copy(
+      storageDescriptor = parquet.storageDescriptor.copy(
+        location = "file://" + dir,
+        columns = Seq(GlueColumn("a", "int"), GlueColumn("ts", "timestamp"))
+      ),
+      partitionKeys = Seq(GlueColumn("ds", "string")),
+      parameters = Map(GlueCatalogProvider.NanosColumnsParam -> "ts")
+    )
+    assert(resolve(t) == ResolvedFormat(
+      "parquet",
+      Map("basePath" -> ("file://" + dir)),
+      Some(StructType(Seq(
+        StructField("a", IntegerType),
+        StructField("ts", LongType),
+        StructField("ds", StringType)
+      ))),
+      Set("ts")
+    ))
+    val inferred =
+      GlueFormats.resolve(t, conf, TableRegistrationOptions.InferSchemaFromData)
+    assert(inferred.schema.isEmpty && inferred.options.contains("basePath"))
   }
 }
