@@ -1,11 +1,14 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
 import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev tool: run gate rows under the exact bench session and explain them —
   * the loop behind every per-query audit in SURVEY §5 (lost broadcasts,
@@ -16,7 +19,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *   - `--sf`: the sf dir (default: `SPARK_GRAFT_SF_DIR`);
   *   - `--runs`: timed runs per query (default 3), after one warm-up;
   *   - `--plan`: `explain("formatted")` and the AQE-final `executedPlan` of
-  *     one more run (redirect stdout to produce `plans/rNN` evidence);
+  *     one more run's write (see [[planReport]]; redirect stdout to produce
+  *     `plans/rNN` evidence);
   *   - `--stages`: one more run, traced per stage (see [[traceStages]]);
   *   - `--conf k=v`: a session conf on top of [[BenchSession]]'s.
   *
@@ -53,6 +57,33 @@ object Probe {
   def force(df: DataFrame): DataFrame = {
     df.write.mode("overwrite").format("noop").save()
     df
+  }
+
+  /** [[force]] `df` and return the executed plan of the write that ran.
+    * The noop write plans `df` under a new QueryExecution, so
+    * `df.queryExecution` never executes and its plan stays AQE's initial
+    * one; the write's own QueryExecution is caught by a listener.
+    * Listener delivery is asynchronous, hence the wait. */
+  private def forcedPlan(df: DataFrame): SparkPlan = {
+    val ran = new LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    df.sparkSession.listenerManager.register(listener)
+    try {
+      force(df)
+      Option(ran.poll(30, TimeUnit.SECONDS))
+        .getOrElse(sys.error("no QueryExecution reported for the forced write"))
+        .executedPlan
+    } finally df.sparkSession.listenerManager.unregister(listener)
+  }
+
+  /** The `--plan` report: `df`'s formatted explain, then the AQE-final
+    * executed plan of one forced write of it. */
+  def planReport(df: DataFrame, title: String): String = {
+    val formatted = df.queryExecution.explainString(FormattedMode)
+    s"== $title: explain(formatted) ==\n$formatted\n== AQE-final executedPlan ==\n${forcedPlan(df)}"
   }
 
   /** `body`'s result and the number of generated classes compiled while it
@@ -141,13 +172,7 @@ object Probe {
           runs.map(r => f"${r.s}%.3f").mkString("runs=[", " ", "] s ") +
           runs.map(_.compiles).mkString("compiles=[", " ", "]"))
       }
-      if (a.plan) {
-        val df = fn(spark, dir)
-        val formatted = df.queryExecution.explainString(FormattedMode)
-        force(df) // so the executed plan is the AQE-final one
-        println(s"== $q @ $dir: explain(formatted) ==\n$formatted")
-        println(s"== AQE-final executedPlan ==\n${df.queryExecution.executedPlan}")
-      }
+      if (a.plan) println(planReport(fn(spark, dir), s"$q @ $dir"))
       if (a.stages) {
         val t = traceStages(spark)(force(fn(spark, dir)))
         println(f"== $q: one traced run ${t.wallS}%.3f s, ${t.jobs.size} jobs, ${t.stages.size} stages ==")

@@ -25,13 +25,19 @@ object Dedup {
       .groupBy(TF.fingerprint(col(textCol)).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keeper_id"))
 
-  /** Documents minus exact duplicates (keep smallest id per fingerprint).
-    * One shuffle on the fingerprint; map-side partial aggregation. */
+  /** Documents minus exact duplicates: one row per fingerprint, the one
+    * with the smallest id (when rows tie on both, which copy survives is
+    * unspecified). One aggregate, `min_by` over the whole row, with
+    * map-side partials and no join back, so each output row is one input
+    * row even when ids repeat, and `docs` is derived once. Output columns:
+    * the id first, then the rest in `docs`' order, nullability kept
+    * (`array_compact` types the one-element array non-null). */
   def exactDedup(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val keepers = exactGroups(docs, textCol, idCol).select(
-      col("keeper_id").as(idCol)
-    )
-    docs.join(keepers, idCol)
+    val row = struct((idCol +: docs.columns.filter(_ != idCol)).map(col): _*)
+    docs
+      .groupBy(TF.fingerprint(col(textCol)))
+      .agg(min_by(row, col(idCol)).as("row"))
+      .select(inline(array_compact(array(col("row")))))
   }
 
   /** Canonical-URL duplicate groups: (canonical_url, n_docs, keeper_id).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
@@ -96,10 +96,22 @@ object Repetition {
     * shuffles, still embarrassingly parallel. */
   def signals(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     implicit val spark = docs.sparkSession
-    val counts = graft.functions.GraftFunctions.repetitionStats(
-      TF.normText(col(textCol))
-    )
-    val sig = element_at(
+    // widenIfNarrow (round 13): the fused repetition kernel is zero-shuffle,
+    // so on a one-split scan the WHOLE operator ran as one task while 31
+    // slots idled (JobProbe at sf0.1: 224 ms of docs_repetition_gate's
+    // wall). At scale the guard is false and no exchange is added.
+    Spread.widenIfNarrow(docs, idCol)
+      .select(col(idCol), inline(array(signalStruct(col(textCol)))))
+  }
+
+  /** The one definition of the [[signals]] struct, (n_tokens, max_run,
+    * top_bigram_frac, dup_trigram_frac) of `text`. Emit it only through
+    * `inline(array(...))`, as [[signals]] and `CorpusIngest`'s per-row gate
+    * do: that Generate evaluates the kernel once per row and stops
+    * predicate pushdown from re-inlining it. */
+  def signalStruct(text: Column)(implicit spark: SparkSession): Column = {
+    val counts = graft.functions.GraftFunctions.repetitionStats(TF.normText(text))
+    element_at(
       transform(
         array(counts),
         a =>
@@ -120,10 +132,5 @@ object Repetition {
       ),
       1
     )
-    // widenIfNarrow (round 13): the fused repetition kernel is zero-shuffle,
-    // so on a one-split scan the WHOLE operator ran as one task while 31
-    // slots idled (JobProbe at sf0.1: 224 ms of docs_repetition_gate's
-    // wall). At scale the guard is false and no exchange is added.
-    Spread.widenIfNarrow(docs, idCol).select(col(idCol), inline(array(sig)))
   }
 }

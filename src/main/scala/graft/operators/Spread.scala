@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** Input-width guard for kernel-heavy subtrees (guide §2.5 input skew:
@@ -24,11 +26,26 @@ object Spread {
     * plan is untouched: NO exchange is added, so this can never become a
     * full-corpus text shuffle at 100 TB. Same spread guard shape as
     * [[Multimodal]]'s synthetic-media widening.
+    *
+    * The rule decides from the physical plan and starts no job:
+    *   - a plan that is AQE-wrapped or holds an `Exchange` is returned
+    *     unchanged. Its width is set by the exchange (and AQE's coalescing),
+    *     not by a scan, and asking an AQE plan for its split count runs
+    *     every query stage under it — once here, and again in the query
+    *     that consumes the frame. AQE wraps a plan exactly when the plan
+    *     needs an exchange or holds a subquery;
+    *   - any other plan is asked for its split count through
+    *     `executedPlan.execute()`, which builds the RDD and runs nothing.
     */
   def widenIfNarrow(df: DataFrame, byCol: String): DataFrame = {
+    val plan = df.queryExecution.executedPlan
+    val exchangeFed = plan match {
+      case _: AdaptiveSparkPlanExec => true
+      case p                        => p.exists(_.isInstanceOf[Exchange])
+    }
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < cores) df.repartition(cores, col(byCol))
-    else df
+    if (exchangeFed || plan.execute().getNumPartitions >= cores) df
+    else df.repartition(cores, col(byCol))
   }
 
   /** Plan-stats size bands, in order. See [[scale]]. */
@@ -36,9 +53,9 @@ object Spread {
   type Scale = Scale.Value
 
   /** The one scale gate: the band of `df`'s optimizer size estimate. Reads
-    * `optimizedPlan.stats.sizeInBytes` once — file sizes for scans, no job,
-    * no data touched — the same no-job discipline as [[widenIfNarrow]]'s
-    * split-count check. The sites that branch on it:
+    * `optimizedPlan.stats.sizeInBytes` once — file sizes for scans, no data
+    * touched — and, like [[widenIfNarrow]], starts no job. The sites that
+    * branch on it:
     *   - [[Dedup.dedupAgainstCorpus]] and `CorpusIngest.prepareBatch` pin
     *     ids and semi-filter text at `>= Large`;
     *   - [[Dedup.duplicateSpans]] pins its gram table at `Mid` only;

@@ -10,8 +10,8 @@ import graft.sources.DeltaRead
 /** The composed streaming ingestion pipeline a training-data corpus runs
   * continuously: every micro-batch of incoming documents is
   *
-  *   1. repetition-quality gated ([[Repetition.signals]] — degenerate
-  *      spam/boilerplate never enters the corpus),
+  *   1. repetition-quality gated, row by row ([[Repetition.signalStruct]] —
+  *      degenerate spam/boilerplate never enters the corpus),
   *   2. exact-deduplicated within the batch,
   *   3. near-dup-deduplicated AGAINST THE CURRENT CORPUS
   *      ([[Dedup.dedupAgainstCorpus]] — MinHash-LSH cross-corpus candidates,
@@ -50,34 +50,38 @@ object CorpusIngest {
       jaccardThreshold: Double,
       gate: Gate
   ): DataFrame = {
-    val sig = Repetition.signals(batch, textCol, idCol)
-    val passing = sig
+    implicit val spark = batch.sparkSession
+    // The gate filters each batch row on its own signals, so a gated-out
+    // doc cannot ride through on the id of a passing one.
+    val gated = Spread
+      .widenIfNarrow(batch, idCol)
+      .select(col("*"), inline(array(Repetition.signalStruct(col(textCol)))))
       .filter(
         col("max_run") <= gate.maxRun &&
           col("top_bigram_frac") <= gate.maxTopBigramFrac
       )
-      .select(col(idCol))
-    val gated = batch.join(passing, idCol)
+      .select(batch.columns.map(col): _*)
     val selfDeduped0 = Dedup.exactDedup(gated, textCol, idCol)
     corpus match {
       case Some(ref) =>
-        // Round 14 (guide §3.3: materialize a multiply-consumed
-        // intermediate to truncate the plan): dedupAgainstCorpus references
-        // its incoming side THREE times (candidate band table, verify text
-        // join, final anti-join), and each re-derivation of the gated +
-        // self-deduped frame re-runs the repetition-signals text kernel and
-        // the exact-dedup fingerprint aggregate — the sf10 executed plan
-        // carried SIX graft_repetition_stats kernel passes over the batch
-        // for one query, the dominant term of docs_ingest_batch's +23%
-        // decade regression (r13 verdict item 1; candidate pairs measured
-        // only 2.4% of corpus, so the verification shape was not it).
-        // Pin the SURVIVOR IDS once — an id-only frame, ~8 bytes/row at any
-        // scale, eagerly checkpointed inside the timed query — and rebuild
-        // the batch side as batch ⋈ ids: every downstream re-derivation is
-        // then a scan + id semi-join with zero kernel work. Gated on batch
-        // size (Spread.scale >= Large): below it the pin's flat driver
-        // round-trips cost more than the duplicated kernels, and the plan
-        // stays byte-identical to round 13's.
+        // dedupAgainstCorpus references its incoming side THREE times
+        // (candidate band table, verify text join, final anti-join). All
+        // three plan the same fingerprint-aggregate exchange, so AQE reuses
+        // it and the repetition kernel runs once per query
+        // (docs_ingest_batch's final plan, sf0.01). When the gate and the
+        // dedup were self-joins, each reference derived the frame twice: SIX
+        // kernel passes at sf10 in round 14.
+        // At Spread.scale >= Large the round-14 pin stays: the SURVIVOR IDS
+        // (an id-only frame, ~8 bytes/row at any scale, eagerly checkpointed
+        // inside the timed query) rebuild the batch side as batch ⋈ ids, so
+        // the three references read a scan plus an id semi-join instead of
+        // the aggregate's full-row shuffle output, and the downstream
+        // minhash kernel runs on the widened scan rather than on the
+        // aggregate's partitions. It was measured against the self-join
+        // shape; against the reused exchange it is not yet (no sf10
+        // window). Below Large the pin's flat driver round-trips cost more
+        // than it saves. The pin assumes unique batch ids: batch ⋈ ids
+        // re-admits every batch row of a surviving id.
         val selfDeduped =
           if (Spread.scale(batch) < Spread.Scale.Large) selfDeduped0
           else {
@@ -85,8 +89,7 @@ object CorpusIngest {
             val survivorIds =
               selfDeduped0.select(col(idCol)).coalesce(width).localCheckpoint()
             // explicit broadcast: the checkpointed ids keep the size
-            // estimate of the gated batch join they were cut from (a
-            // non-CBO join estimate is the product of its sides), far above
+            // estimate of the full-row frame they were cut from, far above
             // the id list's real size, and without the hint the planner
             // paired them with the batch TEXT in a ShuffledHashJoin —
             // re-shuffling the whole batch payload to attach an id list

@@ -35,6 +35,12 @@ class ProbeSpec extends AnyFunSuite {
     assert(runs.map(_.compiles) == Seq(0L), s"timed runs: $runs")
   }
 
+  test("--plan: the executed plan is the AQE-final plan of the write that ran") {
+    val report = Probe.planReport(SparkEntry.queries("q5_local_volume")(spark, dir), "q5")
+    val section = report.split("== AQE-final executedPlan ==\n")
+    assert(section.length == 2 && section(1).contains("isFinalPlan=true"), report)
+  }
+
   test("args: queries plus the five flags, nothing else") {
     val a = Probe.parse(
       Seq("q1_pricing_summary", "--sf", "d", "--runs", "5", "q6_forecast_revenue",

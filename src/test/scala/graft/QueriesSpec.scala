@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gate.{Contract, GateQuery, Oracle}
 
 /** Smoke + plan-shape checks for the oracle-backed query suite. Value-level
   * correctness is enforced by the driver's DuckDB gate (and its local replica
-  * tools/check_oracle.py); here we assert each query runs, returns rows, and
-  * the hot plans have the shape we want at scale (broadcast dims, pushdown).
+  * tools/check_oracle.py); here we assert each query runs, returns rows,
+  * starts no more jobs while it is built than its budget allows, and the hot
+  * plans have the shape we want at scale (broadcast dims, pushdown).
   */
 class QueriesSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -36,16 +38,42 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  /** Jobs a row may start while its DataFrame is built, before any action
+    * (ROADMAP item 3). A row missing here has a budget of 0. Entries may
+    * only come down: lower one when its row gets cheaper. */
+  private val BuildJobBudget: Map[String, Int] = Map(
+    "text_perplexity" -> 7,
+    "dedup_clusters" -> 6,
+    "dedup_keep_canonical" -> 6,
+    "ann_ivf" -> 5,
+    "ann_ivf_recall" -> 5,
+    "dedup_bloom" -> 4,
+    "docs_mixture_epochs" -> 3,
+    "q_global_ids" -> 3,
+    "q_percentiles" -> 3,
+    "dedup_embedding" -> 2,
+    "dedup_semantic" -> 2,
+    "q11_important_parts" -> 2,
+    "q15_top_supplier" -> 2,
+    "q_delta_dv" -> 2,
+    "q_scalar_subquery" -> 2
+  )
+
   test("all queries execute and return rows at sf0.001") {
     // no row may leave a CacheManager entry behind: a later run would read
     // it back as an InMemoryTableScan, which is cross-run caching
     val cache = spark.sharedState.cacheManager
     assert(cache.isEmpty, "cache entries before the first row")
-    for ((name, fn) <- SparkEntry.queries) {
-      val n = fn(spark, dir).count()
+    val builds = for ((name, fn) <- SparkEntry.queries.toSeq) yield {
+      var df: DataFrame = null
+      val built = Probe.traceStages(spark) { df = fn(spark, dir) }.jobs.size
+      val n = df.count()
       assert(n > 0, s"$name returned no rows")
       assert(cache.isEmpty, s"$name left a cache entry")
+      (name, built, BuildJobBudget.getOrElse(name, 0))
     }
+    val over = builds.filter { case (_, built, budget) => built > budget }
+    assert(over.isEmpty, "build-time jobs over budget (row, jobs, budget): " + over.mkString(", "))
   }
 
   test("entry() flagship returns rows") {

@@ -93,6 +93,27 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(a.map(_._1) == Seq(2L))
   }
 
+  test("prepareBatch: the gate and the exact dedup act per row when ids repeat") {
+    // A gated-out doc sharing its id with a passing doc must stay out, and
+    // an exact-duplicate pair sharing an id must come out once: a join
+    // back on ids lets the spam row through and doubles the pair.
+    import spark.implicits._
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val spam = "spam spam spam spam spam spam spam spam spam spam"
+    val b = "one two three four five six seven eight nine ten"
+    val c = "carrots peas onions leeks beans corn kale chard basil mint"
+    val batch = Seq((1L, a), (1L, spam), (2L, b), (2L, b), (3L, c)).toDF("doc_id", "text")
+    val corpus = Seq(
+      (100L, "totally new content about completely different things here")
+    ).toDF("doc_id", "text")
+    for (ref <- Seq(None, Some(corpus))) {
+      val out = CorpusIngest.prepareBatch(batch, ref, "text", "doc_id", 0.5, CorpusIngest.Gate())
+      assert(out.schema == batch.schema, s"corpus=${ref.isDefined}: ${out.schema}")
+      val rows = out.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      assert(rows == Seq((1L, a), (2L, b), (3L, c)), s"corpus=${ref.isDefined}")
+    }
+  }
+
   test("streaming gate input: a parquet micro-batch keeps its plan estimate") {
     // On Spark 4.1 a foreachBatch micro-batch over a file source is a
     // LogicalRDD carrying the batch read's own size estimate, not
