@@ -1,9 +1,8 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import scala.collection.mutable
 
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -62,20 +61,19 @@ object Probe {
   /** [[force]] `df` and return the executed plan of the write that ran.
     * The noop write plans `df` under a new QueryExecution, so
     * `df.queryExecution` never executes and its plan stays AQE's initial
-    * one; the write's own QueryExecution is caught by a listener.
-    * Listener delivery is asynchronous, hence the wait. */
+    * one; the write's own QueryExecution is caught by a listener, whose
+    * events arrive through the listener bus, hence the drain. */
   private def forcedPlan(df: DataFrame): SparkPlan = {
-    val ran = new LinkedBlockingQueue[QueryExecution]
+    @volatile var ran: Option[QueryExecution] = None
     val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran.put(qe)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran = Some(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     df.sparkSession.listenerManager.register(listener)
     try {
       force(df)
-      Option(ran.poll(30, TimeUnit.SECONDS))
-        .getOrElse(sys.error("no QueryExecution reported for the forced write"))
-        .executedPlan
+      GraftListenerBus.drain(df.sparkSession.sparkContext)
+      ran.getOrElse(sys.error("no QueryExecution reported for the forced write")).executedPlan
     } finally df.sparkSession.listenerManager.unregister(listener)
   }
 
@@ -117,40 +115,36 @@ object Probe {
   /** Run `body` once, keying each completed stage to its owning job through
     * the job-start event's `stageIds`. Attributing a stage to "the last
     * started job" is wrong whenever AQE materializes independent query
-    * stages concurrently. Listener delivery is asynchronous, so the trace
-    * returns once every job it saw has ended and the bus has been quiet for
-    * 200 ms. */
+    * stages concurrently. Listener delivery is asynchronous: the bus is
+    * drained before the trace starts, so no earlier event reaches it, and
+    * after `body`, whose jobs have all posted their events by the time it
+    * returns. */
   def traceStages(spark: SparkSession)(body: => Unit): StageTrace = {
     val stageToJob = mutable.Map.empty[Int, Int]
     val jobs = mutable.LinkedHashMap.empty[Int, JobSpan]
     val stages = mutable.ArrayBuffer.empty[StageRow]
-    var lastEvent = System.nanoTime()
-    def record(f: => Unit): Unit = jobs.synchronized { f; lastEvent = System.nanoTime() }
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = record {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
         jobs(e.jobId) = JobSpan(e.jobId, e.time, -1L)
         e.stageIds.foreach(stageToJob(_) = e.jobId)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        record(jobs.get(e.jobId).foreach(j => jobs(j.id) = j.copy(end = e.time)))
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = record {
+        jobs.synchronized(jobs.get(e.jobId).foreach(j => jobs(j.id) = j.copy(end = e.time)))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = jobs.synchronized {
         val si = e.stageInfo
         val ms = si.completionTime.zip(si.submissionTime).map { case (a, b) => a - b }
         stages += StageRow(stageToJob.getOrElse(si.stageId, -1), si.stageId,
           ms.getOrElse(-1L), si.numTasks, si.name.take(90))
       }
     }
+    GraftListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
-      System.gc(); Thread.sleep(100)
+      System.gc()
       val t0 = System.nanoTime()
       body
       val wall = (System.nanoTime() - t0) / 1e9
-      val deadline = System.nanoTime() + 30000000000L
-      def settled = jobs.synchronized {
-        jobs.values.forall(_.end >= 0) && System.nanoTime() - lastEvent > 200000000L
-      }
-      while (!settled && System.nanoTime() < deadline) Thread.sleep(20)
+      GraftListenerBus.drain(spark.sparkContext)
       jobs.synchronized(StageTrace(wall, jobs.values.toSeq, stages.toSeq))
     } finally spark.sparkContext.removeSparkListener(listener)
   }

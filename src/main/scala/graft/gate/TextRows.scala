@@ -427,8 +427,9 @@ object TextRows {
     GateQuery("text_perplexity", { (s, dir) =>
       operators.Perplexity
         .scoreSelf(T(s, dir, "documents"), "text", "doc_id", cap = 1000)
-    // no ORDER BY on the scoring pass — see text_quality (the model-build
-    // side is pinned, so only the per-row scoring stage would re-run)
+    // no ORDER BY on the scoring pass — see text_quality (the model is
+    // collected while the frame is built, so only the per-row scoring
+    // stage would re-run)
     }, Oracle(
       // C32: identical model — same smoothing, same 1000-term cap with the
       // same (count desc, term) tie-break, same micro-nat quantization; the

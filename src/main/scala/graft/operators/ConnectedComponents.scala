@@ -91,6 +91,7 @@ object ConnectedComponents {
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
+      // pin, loop lineage: every round joins sym; no round re-derives it
       .localCheckpoint()
 
     // Iterate only over nodes that touch an edge — in dedup workloads that
@@ -100,6 +101,7 @@ object ConnectedComponents {
       .select(col("src").as("id"))
       .distinct()
       .withColumn("component", col("id"))
+      // pin, loop lineage: round 1's labels, as each round's `updated` below
       .localCheckpoint()
 
     var changed = 1L
@@ -131,6 +133,7 @@ object ConnectedComponents {
           coalesce(least(col("component"), col("jumped")), col("component"))
             .as("component")
         )
+        // pin, loop lineage: round N+1 must not re-run rounds 1..N
         .localCheckpoint()
       changed = updated
         .join(labels.withColumnRenamed("component", "old"), "id")

@@ -398,6 +398,7 @@ object Dedup {
       // The checkpoint runs inside the timed query (every bench run
       // re-executes it; nothing persists across runs).
       val width = spark.sparkContext.defaultParallelism
+      // pin, measured exchange that cannot be reused: the id broadcasts re-key it
       val pinned = cands.coalesce(width).localCheckpoint()
       val inSel = incoming
         .join(broadcast(pinned.select(col("in_id").as(idCol)).distinct()), idCol)
@@ -457,6 +458,7 @@ object Dedup {
     val refFp = reference
       .select(TF.fingerprint(col(textCol)).as("__fp"))
       .where(col("__fp").isNotNull)
+      // pin, sharing across actions: the count, the filter build, the verify
       .localCheckpoint(eager = false)
     val n = if (expectedItems > 0) expectedItems else math.max(refFp.count(), 1L)
     val bloom = refFp
@@ -601,6 +603,7 @@ object Dedup {
     // OUTSIDE the band the shape is byte-identical to round 13, for the
     // opposite reasons written at [[Spread.scale]].
     val pinSmall = Spread.scale(docs) == Spread.Scale.Mid
+    // pin, measured exchange that cannot be reused: stats and probe differ
     val gramsOf = if (pinSmall) gramsRaw.localCheckpoint() else gramsRaw
     // Per-gram stats come from a partially-aggregating groupBy, NOT a
     // window over the gram hash: a window partitioned by "gh" would pull
@@ -800,6 +803,7 @@ object Dedup {
     // scale), and the n count is already paid for the k heuristic. Values
     // are identical pinned or not — the pin only truncates lineage.
     def pin(df: DataFrame): DataFrame =
+      // pin, sharing across actions: the count() jobs each Lloyd frame feeds
       if (n >= 100000L) df.localCheckpoint() else df
     val a1 = pin(assign(e, c0))
     val c1 = pin(KMeans.updateCentroids(e, a1, "v", "id"))

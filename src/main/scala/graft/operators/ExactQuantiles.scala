@@ -58,12 +58,9 @@ object ExactQuantiles {
       .withColumn("b", expr(s"graft_double_bucket(v, $bucketBits)"))
 
     // Histogram pass: fixed order-preserving buckets, partial-agg counts,
-    // cumulative window per group. localCheckpoint pins the aggregate-scale
-    // result to ONE evaluation: it sits under multiple consumers (stats,
-    // located, and through them cand), and without the checkpoint Spark
-    // re-derives the whole scan+agg subtree per consumer (the round-8
-    // executed plan scanned the input four times; 27 codegen stages of
-    // pure scheduling overhead).
+    // cumulative window per group. It sits under two consumers (cand's
+    // broadcast and picked's join); both plan the same exchange and AQE
+    // reuses it, so the histogram scan runs once per query.
     val wB = Window
       .partitionBy("g")
       .orderBy("b")
@@ -72,7 +69,6 @@ object ExactQuantiles {
       .groupBy("g", "b")
       .agg(count(lit(1)).as("bc"))
       .withColumn("before", coalesce(sum("bc").over(wB), lit(0L)))
-      .localCheckpoint()
 
     // Per-group n rides the histogram as an unbounded window over the SAME
     // g-partitioning the cumulative window already forced — round 12: this

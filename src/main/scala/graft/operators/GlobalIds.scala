@@ -72,6 +72,7 @@ object GlobalIds {
     val ranged = df
       .repartitionByRange(parts, cols: _*)
       .withColumn("__gid_part", spark_partition_id())
+      // pin, correctness: one range sampling for the count and rank passes
       .localCheckpoint()
 
     // offsets: rows before each range partition (aggregate-scale window)

@@ -212,9 +212,8 @@ object Mixture {
         .drop("cum")
     }
     // Pass 1: per-(stratum, bucket) token mass; cumulative over bucket ids.
-    // Aggregate scale (≤ strata × cutBuckets rows) — localCheckpoint pins it
-    // to one evaluation under its two consumers below, exactly the
-    // ExactQuantiles multi-consumer rule.
+    // Aggregate scale (≤ strata × cutBuckets rows). Its two consumers below
+    // plan the same exchange, and AQE reuses it.
     val wB = Window
       .partitionBy("s")
       .orderBy("bkt")
@@ -223,7 +222,6 @@ object Mixture {
       .groupBy("s", "bkt")
       .agg(sum("tok").as("btok"), max("budget").as("budget"))
       .withColumn("before", coalesce(sum("btok").over(wB), lit(0L)))
-      .localCheckpoint()
 
     // Whole buckets inside budget keep every row; the (≤ one per stratum)
     // boundary bucket carries its cumulative offset into pass 2.
@@ -334,7 +332,6 @@ object Mixture {
     val stats = base
       .groupBy("s")
       .agg(min("qv").as("vmin"), max("qv").as("vmax"))
-      .localCheckpoint()
 
     // Consumption bucket: DESCENDING cell index — cell 0 is the TOP of the
     // value range so ascending-`cb` cumulative windows walk best-first.
@@ -357,7 +354,7 @@ object Mixture {
 
     // Token-mass histogram per (stratum, cell) + cumulative mass in cells
     // strictly before (better than) each cell. Bounded window (≤ cutBuckets
-    // rows per stratum); localCheckpoint pins it under its two consumers.
+    // rows per stratum); its two consumers share one reused exchange.
     val wB = Window
       .partitionBy("s")
       .orderBy("cb")
@@ -366,7 +363,6 @@ object Mixture {
       .groupBy("s", "cb")
       .agg(sum("tok").as("btok"), max("budget").as("budget"))
       .withColumn("before", coalesce(sum("btok").over(wB), lit(0L)))
-      .localCheckpoint()
 
     val fullKeep = hist
       .where(col("before") + col("btok") <= col("budget"))
@@ -430,6 +426,11 @@ object Mixture {
       prepared(docs, strataCol, tokensCol, idCol, weights, totalBudget, seed, cutBuckets)
 
     // Per-stratum token totals -> full-epoch count + remainder budget.
+    // Unpinned, a consumer that keeps only n_full or only rem gets its
+    // projection folded into the aggregate, whose buffers then come out in
+    // another order than the other consumers': below Huge the exchange is
+    // still shared, yet docs_mixture_epochs ran 0.283 → 0.290 s at sf0.1;
+    // at Huge the totals ran twice (RDD-backed sf1 documents: +13%).
     val plan = base
       .groupBy("s")
       .agg(sum("tok").as("total"), max("budget").as("budget"))
@@ -442,6 +443,7 @@ object Mixture {
         expr("budget DIV total").as("n_full"),
         (col("budget") % col("total")).as("rem")
       )
+      // pin, measured exchange that cannot be reused: the consumers' aggregates differ
       .localCheckpoint()
 
     // Full epochs: per-row explode of [0, n_full) — no shuffle, the

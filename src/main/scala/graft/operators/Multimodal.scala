@@ -517,14 +517,11 @@ object Multimodal {
     * bytes — so a pipeline over the result exercises all three codec
     * branches on genuine bytes. Encoding happens distributed, per row.
     *
-    * The skinny (id, text) projection is spread to full core parallelism
-    * BEFORE the encode when the source has fewer splits than cores: codec
-    * work is CPU-dense scan-stage work, and a small corpus arriving as one
-    * parquet row group would otherwise serialize every encode AND every
-    * downstream decode onto a single task (the gate's sf0.1 documents table
-    * is exactly that shape). At scale the input already carries thousands
-    * of splits and the guard leaves the plan untouched; hash-partitioning
-    * on the id keeps the exchange deterministic under retries. */
+    * The skinny (id, text) projection goes through [[Spread.widenIfNarrow]]
+    * BEFORE the encode: codec work is CPU-dense scan-stage work, and a
+    * small corpus arriving as one parquet row group would otherwise
+    * serialize every encode AND every downstream decode onto a single task
+    * (the gate's sf0.1 documents table is exactly that shape). */
   def withSyntheticMedia(
       docs: DataFrame,
       textCol: String = "text",
@@ -534,12 +531,8 @@ object Multimodal {
     import spark.implicits._
     val skinny = docs
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val cores = spark.sparkContext.defaultParallelism
-    val spread =
-      if (skinny.rdd.getNumPartitions < cores)
-        skinny.repartition(cores, col("id"))
-      else skinny
-    spread
+    Spread
+      .widenIfNarrow(skinny, "id")
       .as[(Long, String)]
       .mapPartitions { rows =>
         val enc = SyntheticMedia.open() // writers reused across the partition

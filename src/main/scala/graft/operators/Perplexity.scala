@@ -48,17 +48,15 @@ object Perplexity {
     * log-prob. `docs` is the REFERENCE corpus (often the corpus itself;
     * at scale, a sampled or curated slice). */
   def model(docs: DataFrame, textCol: String, cap: Int): (DataFrame, DataFrame) = {
-    // localCheckpoint: cnt is vocabulary-bounded and sits under THREE
-    // consumers (totals, the top-cap TakeOrdered, and totals again via the
-    // lp cross join) — without it Spark re-derives the corpus tokenize +
-    // groupBy per consumer (the executed plan scanned the corpus four
-    // times; same fix as ExactQuantiles). With it: one counting scan, one
-    // scoring scan.
+    // cnt is vocabulary-bounded and sits under three consumers (totals,
+    // the top-cap TakeOrdered, and totals again via the lp cross join).
+    // [[score]] collects lp and oov in one query, where all three plan the
+    // same term exchange and AQE reuses it: one counting scan (the
+    // vocabulary-sized final aggregate above it runs per consumer).
     val cnt = docs
       .select(explode(TextFunctions.wsTokens(col(textCol))).as("term"))
       .groupBy("term")
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
     // N and V derive from the counts frame (vocab-sized), not a second
     // corpus scan; count(*) here is exact distinct-term count for free.
     val totals = cnt.agg(
@@ -111,8 +109,15 @@ object Perplexity {
       idCols: Seq[String]
   ): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val m = lp.collect() // cap-bounded (vocabulary model), by construction
-    val oovMicro = oov.collect()(0).getLong(0)
+    // One action for the model and the OOV value, so a subtree the two
+    // share runs once. cap-bounded (vocabulary model), by construction; the
+    // OOV row is the one with a null term.
+    val (oovRows, m) = lp
+      .select(col("term"), col("lp_micro"))
+      .union(oov.select(lit(null).cast("string"), col("oov_lp_micro")))
+      .collect()
+      .partition(_.isNullAt(0))
+    val oovMicro = oovRows(0).getLong(1)
     val termsLit = typedlit(m.map(_.getString(0)).toSeq)
     val lpsLit = typedlit(m.map(_.getLong(1)).toSeq)
     docs

@@ -129,6 +129,7 @@ object SimilaritySearch {
         // round-trips per run (JobProbe: ann_ivf 17 -> 15 jobs, job-wall
         // 655 -> 399 ms; bench-wall flat at sf0.1, where scheduling is
         // cheap — the saving is the barrier count on a real cluster)
+        // pin, loop lineage: iteration i+1 must not re-run iterations 1..i
         .localCheckpoint(false)
     }
     cents

@@ -24,8 +24,7 @@ object Spread {
     * the sort-before-repartition a keyless exchange pays. At scale the
     * guard is false — the scan already carries >= slots splits — and the
     * plan is untouched: NO exchange is added, so this can never become a
-    * full-corpus text shuffle at 100 TB. Same spread guard shape as
-    * [[Multimodal]]'s synthetic-media widening.
+    * full-corpus text shuffle at 100 TB.
     *
     * The rule decides from the physical plan and starts no job:
     *   - a plan that is AQE-wrapped or holds an `Exchange` is returned
@@ -56,8 +55,8 @@ object Spread {
     * `optimizedPlan.stats.sizeInBytes` once — file sizes for scans, no data
     * touched — and, like [[widenIfNarrow]], starts no job. The sites that
     * branch on it:
-    *   - [[Dedup.dedupAgainstCorpus]] and `CorpusIngest.prepareBatch` pin
-    *     ids and semi-filter text at `>= Large`;
+    *   - [[Dedup.dedupAgainstCorpus]] pins candidate ids and semi-filters
+    *     text at `>= Large`;
     *   - [[Dedup.duplicateSpans]] pins its gram table at `Mid` only;
     *   - [[Mixture]] takes the one-window cutoff below `Huge`.
     *

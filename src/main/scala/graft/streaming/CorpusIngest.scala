@@ -61,45 +61,16 @@ object CorpusIngest {
           col("top_bigram_frac") <= gate.maxTopBigramFrac
       )
       .select(batch.columns.map(col): _*)
-    val selfDeduped0 = Dedup.exactDedup(gated, textCol, idCol)
+    val selfDeduped = Dedup.exactDedup(gated, textCol, idCol)
     corpus match {
       case Some(ref) =>
         // dedupAgainstCorpus references its incoming side THREE times
         // (candidate band table, verify text join, final anti-join). All
         // three plan the same fingerprint-aggregate exchange, so AQE reuses
         // it and the repetition kernel runs once per query
-        // (docs_ingest_batch's final plan, sf0.01). When the gate and the
-        // dedup were self-joins, each reference derived the frame twice: SIX
-        // kernel passes at sf10 in round 14.
-        // At Spread.scale >= Large the round-14 pin stays: the SURVIVOR IDS
-        // (an id-only frame, ~8 bytes/row at any scale, eagerly checkpointed
-        // inside the timed query) rebuild the batch side as batch ⋈ ids, so
-        // the three references read a scan plus an id semi-join instead of
-        // the aggregate's full-row shuffle output, and the downstream
-        // minhash kernel runs on the widened scan rather than on the
-        // aggregate's partitions. It was measured against the self-join
-        // shape; against the reused exchange it is not yet (no sf10
-        // window). Below Large the pin's flat driver round-trips cost more
-        // than it saves. The pin assumes unique batch ids: batch ⋈ ids
-        // re-admits every batch row of a surviving id.
-        val selfDeduped =
-          if (Spread.scale(batch) < Spread.Scale.Large) selfDeduped0
-          else {
-            val width = batch.sparkSession.sparkContext.defaultParallelism
-            val survivorIds =
-              selfDeduped0.select(col(idCol)).coalesce(width).localCheckpoint()
-            // explicit broadcast: the checkpointed ids keep the size
-            // estimate of the full-row frame they were cut from, far above
-            // the id list's real size, and without the hint the planner
-            // paired them with the batch TEXT in a ShuffledHashJoin —
-            // re-shuffling the whole batch payload to attach an id list
-            // (and running the downstream minhash kernel on the join's
-            // narrow coalesced output: a single-task 2.6 s stage at
-            // sf10). The ids are
-            // ∝ the bounded micro-batch, the same size contract the
-            // candidate-pair broadcast downstream already relies on.
-            batch.join(broadcast(survivorIds), idCol)
-          }
+        // (docs_ingest_batch's final plan at sf0.01, and at 22 MB, where the
+        // batch reads Large), so no pin is needed to share it. Rebuilding the batch as batch ⋈ pinned survivor ids
+        // would also re-admit every row of a surviving id when ids repeat.
         Dedup.dedupAgainstCorpus(
           selfDeduped,
           ref.select(col(idCol), col(textCol)),
@@ -107,7 +78,7 @@ object CorpusIngest {
           idCol,
           jaccardThreshold
         )
-      case None => selfDeduped0
+      case None => selfDeduped
     }
   }
 

@@ -59,14 +59,11 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(DeltaRead.lastTxnVersion(dir, "corpus-ingest").contains(1L))
   }
 
-  test("prepareBatch: the large-batch survivor-id pin is row-identical") {
-    // Round 14: at Spread.scale >= Large the gated + self-deduped batch
-    // is rebuilt as batch ⋈ pinned survivor ids so downstream
-    // re-derivations carry no kernel work. RDD-backed inputs (no estimate
-    // of their own: Huge) take that branch, and dedupAgainstCorpus's
-    // pinned one, and must give exactly the un-pinned rows — schema and
-    // values — across gate drops, in-batch exact dups, and corpus
-    // near-dups.
+  test("prepareBatch: a Huge batch and corpus give the Small-band rows") {
+    // RDD-backed inputs (no estimate of their own: Huge) take
+    // dedupAgainstCorpus's pinned, semi-filtered branch, and must give
+    // exactly the Small-band rows — schema and values — across gate drops,
+    // in-batch exact dups, and corpus near-dups.
     import spark.implicits._
     val batch = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -103,14 +100,19 @@ class CorpusIngestSpec extends AnyFunSuite {
     val b = "one two three four five six seven eight nine ten"
     val c = "carrots peas onions leeks beans corn kale chard basil mint"
     val batch = Seq((1L, a), (1L, spam), (2L, b), (2L, b), (3L, c)).toDF("doc_id", "text")
+    // the same batch RDD-backed reads Huge, the band the pinned shapes
+    // key on: it must act per row too
+    val rddBatch = spark.createDataFrame(batch.rdd, batch.schema)
+    assert(Spread.scale(rddBatch) == Spread.Scale.Huge)
     val corpus = Seq(
       (100L, "totally new content about completely different things here")
     ).toDF("doc_id", "text")
-    for (ref <- Seq(None, Some(corpus))) {
-      val out = CorpusIngest.prepareBatch(batch, ref, "text", "doc_id", 0.5, CorpusIngest.Gate())
-      assert(out.schema == batch.schema, s"corpus=${ref.isDefined}: ${out.schema}")
+    for (in <- Seq(batch, rddBatch); ref <- Seq(None, Some(corpus))) {
+      val out = CorpusIngest.prepareBatch(in, ref, "text", "doc_id", 0.5, CorpusIngest.Gate())
+      val what = s"band=${Spread.scale(in)} corpus=${ref.isDefined}"
+      assert(out.schema == batch.schema, s"$what: ${out.schema}")
       val rows = out.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-      assert(rows == Seq((1L, a), (2L, b), (3L, c)), s"corpus=${ref.isDefined}")
+      assert(rows == Seq((1L, a), (2L, b), (3L, c)), what)
     }
   }
 
