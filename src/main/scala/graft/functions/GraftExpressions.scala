@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumns, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{
@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.{
   UnaryExpression
 }
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the hot vector/text paths. Each generates a
@@ -21,8 +22,8 @@ import org.apache.spark.sql.types._
   * operator stays inside whole-stage codegen (no iterator break, no
   * row↔object conversion — the reason these beat Scala UDFs at scale).
   *
-  * Installed as SQL functions from [[GraftFunctions.Table]]; use the column
-  * helpers in [[GraftFunctions]].
+  * Defined once in [[GraftFunctions.Table]]: SQL text calls them by name,
+  * Scala code through the column helpers in [[GraftFunctions]].
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression
@@ -604,8 +605,9 @@ case class LmScore(
     copy(child = newChild)
 }
 
-/** The graft SQL function table, its installer and the typed column helpers
-  * for the graft expressions. */
+/** The graft function table, the installer that puts it in a session's
+  * registry for SQL text, and the typed column helpers, which build each
+  * expression from its table entry with no session or registry. */
 object GraftFunctions {
 
   /** One graft SQL function: its name, a one-line usage (`_FUNC_` stands for
@@ -635,9 +637,10 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(s"expected double literal, got $other")
   }
 
-  /** Every graft_* SQL function. [[graft.GraftSparkExtensions]] injects them
+  /** Every graft_* function. [[graft.GraftSparkExtensions]] injects them
     * into extension-built sessions and [[register]] installs them on any
-    * other session, so both install the same surface. */
+    * other session, so both install the same SQL surface; [[column]] builds
+    * the same expressions for the typed helpers. */
   val Table: Seq[SqlFunction] = Seq(
     SqlFunction("graft_cosine", "_FUNC_(a, b) - cosine similarity of two float vectors",
       es => CosineSimilarity(es(0), es(1))),
@@ -687,7 +690,7 @@ object GraftFunctions {
       es => DiversityStats(es(0))),
     SqlFunction("graft_lm_score",
       "_FUNC_(tokens, terms, lp_micros, oov_lp_micro) - token, OOV and log-prob sums under a literal unigram model",
-      lmScore),
+      buildLmScore),
     SqlFunction("graft_topk", "_FUNC_(id, score, k) - bounded-heap per-group top-k (id, score) pairs",
       es => TopKAggregate(es(0), es(1), intLit(es(2)))),
     SqlFunction("graft_fixed_sum10",
@@ -699,7 +702,7 @@ object GraftFunctions {
 
   /** graft_lm_score's builder: the model arguments must be literals, because
     * the scorer map is built at planning. */
-  private def lmScore(es: Seq[Expression]): Expression = {
+  private def buildLmScore(es: Seq[Expression]): Expression = {
     require(
       es.length == 4 && es(1).foldable && es(2).foldable && es(3).foldable,
       "graft_lm_score(tokens, terms, lp_micros, oov_lp_micro): the model " +
@@ -721,11 +724,24 @@ object GraftFunctions {
     LmScore(es(0), terms, lps, oov)
   }
 
-  /** Idempotently install every [[Table]] function on the session. The
-    * already-installed check asks the session's own functionRegistry for
-    * every name in the table (rather than tracking sessions in a static set,
-    * which would leak across GC'd sessions and collide on identity hashes),
-    * so a session missing any entry gets the whole table. */
+  private val byName: Map[String, SqlFunction] = Table.map(f => f.name -> f).toMap
+
+  /** The [[Table]] function `name` applied to `args`, built by its own
+    * builder: no session and no registry. An aggregate comes back as its
+    * aggregate expression, as the analyzer would wrap a SQL call. */
+  def column(name: String, args: Column*): Column =
+    GraftColumns.column(byName(name).build(args.map(GraftColumns.expression)) match {
+      case agg: AggregateFunction => agg.toAggregateExpression()
+      case e                      => e
+    })
+
+  /** Idempotently install every [[Table]] function on the session, for SQL
+    * text that names a graft function (the column helpers below need no
+    * registry). The already-installed check asks the session's own
+    * functionRegistry for every name in the table (rather than tracking
+    * sessions in a static set, which would leak across GC'd sessions and
+    * collide on identity hashes), so a session missing any entry gets the
+    * whole table. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     if (Table.exists(f => !reg.functionExists(f.id)))
@@ -735,94 +751,41 @@ object GraftFunctions {
   /** Exact fixed-point decimal sum (scale 10, 128-bit buffer) of a double
     * column — the codegen replacement for sum(cast(x as decimal(30,10))),
     * returning DECIMAL(38,10). See [[FixedPointSum]]. */
-  def fixedSum10(c: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_fixed_sum10", c)
-  }
+  def fixedSum10(c: Column): Column = column("graft_fixed_sum10", c)
 
   /** Bounded-heap per-group top-k: array<struct<id,score>> best-first. */
-  def topK(id: Column, score: Column, k: Int)(implicit
-      spark: SparkSession
-  ): Column = {
-    register(spark)
-    call_function("graft_topk", id, score, org.apache.spark.sql.functions.lit(k))
-  }
+  def topK(id: Column, score: Column, k: Int): Column =
+    column("graft_topk", id, score, lit(k))
 
   /** Per-group element-wise 2^20 fixed-point vector mean as array<float>
     * (one-exchange Lloyd centroid update) — see [[VectorFixedMean]]. */
-  def vectorFixedMean(vec: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_vector_fixed_mean", vec)
-  }
+  def vectorFixedMean(vec: Column): Column = column("graft_vector_fixed_mean", vec)
 
-  def shingleHashes(text: Column, k: Int)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function(
-      "graft_shingle_hashes",
-      text,
-      org.apache.spark.sql.functions.lit(k)
-    )
-  }
+  /** Per-group element-wise exact-decimal vector mean as array<double> —
+    * see [[VectorFixedMean10]]. */
+  def vectorFixedMean10(vec: Column): Column = column("graft_vector_fixed_mean10", vec)
 
-  def cosineSim(a: Column, b: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_cosine", a, b)
-  }
+  def shingleHashes(text: Column, k: Int): Column =
+    column("graft_shingle_hashes", text, lit(k))
 
-  def hyperplaneBucket(v: Column, numPlanes: Int)(implicit
-      spark: SparkSession
-  ): Column = {
-    register(spark)
-    call_function(
-      "graft_hyperplane_bucket",
-      v,
-      org.apache.spark.sql.functions.lit(numPlanes)
-    )
-  }
+  def cosineSim(a: Column, b: Column): Column = column("graft_cosine", a, b)
 
-  def minhashSignature(hashes: Column, numHashes: Int)(implicit
-      spark: SparkSession
-  ): Column = {
-    register(spark)
-    call_function(
-      "graft_minhash",
-      hashes,
-      org.apache.spark.sql.functions.lit(numHashes)
-    )
-  }
+  def hyperplaneBucket(v: Column, numPlanes: Int): Column =
+    column("graft_hyperplane_bucket", v, lit(numPlanes))
 
-  def simhash64(hashes: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_simhash", hashes)
-  }
+  def minhashSignature(hashes: Column, numHashes: Int): Column =
+    column("graft_minhash", hashes, lit(numHashes))
+
+  def simhash64(hashes: Column): Column = column("graft_simhash", hashes)
 
   /** In-bucket hamming pair kernel: (ids, hashes) → qualifying i<j pairs. */
-  def hammingPairs(ids: Column, hashes: Column, maxHamming: Int)(implicit
-      spark: SparkSession
-  ): Column = {
-    register(spark)
-    call_function(
-      "graft_hamming_pairs",
-      ids,
-      hashes,
-      org.apache.spark.sql.functions.lit(maxHamming)
-    )
-  }
+  def hammingPairs(ids: Column, hashes: Column, maxHamming: Int): Column =
+    column("graft_hamming_pairs", ids, hashes, lit(maxHamming))
 
   /** In-bucket cosine pair kernel: (ids, vecs, norms) → qualifying i<j
     * pairs with their rounded cosine. */
-  def cosinePairs(ids: Column, vecs: Column, nrms: Column, threshold: Double)(implicit
-      spark: SparkSession
-  ): Column = {
-    register(spark)
-    call_function(
-      "graft_cosine_pairs",
-      ids,
-      vecs,
-      nrms,
-      org.apache.spark.sql.functions.lit(threshold)
-    )
-  }
+  def cosinePairs(ids: Column, vecs: Column, nrms: Column, threshold: Double): Column =
+    column("graft_cosine_pairs", ids, vecs, nrms, lit(threshold))
 
   /** Canonical-bucket cosine pair kernel (see TextOps.cosinePairsCanon):
     * adds the per-element bucket0 array and the processed bucket, emitting
@@ -834,71 +797,41 @@ object GraftFunctions {
       b0s: Column,
       bucket: Column,
       threshold: Double
-  )(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function(
-      "graft_cosine_pairs_canon",
-      ids,
-      vecs,
-      nrms,
-      b0s,
-      bucket,
-      org.apache.spark.sql.functions.lit(threshold)
-    )
-  }
+  ): Column =
+    column("graft_cosine_pairs_canon", ids, vecs, nrms, b0s, bucket, lit(threshold))
 
-  def repetitionStats(text: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_repetition_stats", text)
-  }
+  def repetitionStats(text: Column): Column = column("graft_repetition_stats", text)
 
-  /** Session-less wrapper (registers on the ACTIVE session): normText and
-    * friends are pure Column combinators with no session in scope, and
-    * query construction always happens under an active session on the
-    * driver. */
-  def squeezeWs(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_squeeze_ws", text)
-  }
+  def squeezeWs(text: Column): Column = column("graft_squeeze_ws", text)
 
-  def diversityStats(text: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_diversity_stats", text)
-  }
+  def diversityStats(text: Column): Column = column("graft_diversity_stats", text)
 
   /** Merge-scan Jaccard of two sorted-distinct long-array columns. */
-  def jaccardSorted(a: Column, b: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_jaccard_sorted", a, b)
-  }
+  def jaccardSorted(a: Column, b: Column): Column = column("graft_jaccard_sorted", a, b)
 
   /** Per-row nearest-centroid id by cosine (ties high) over parallel
     * centroid arrays — see [[ArgmaxCos]]. */
-  def argmaxCos(v: Column, ids: Column, cvs: Column)(implicit
-      spark: SparkSession
-  ): Column = {
-    register(spark)
-    call_function("graft_argmax_cos", v, ids, cvs)
-  }
+  def argmaxCos(v: Column, ids: Column, cvs: Column): Column =
+    column("graft_argmax_cos", v, ids, cvs)
 
   /** Per-row nearest-centroid id by rounded sq-distance (ties low) —
     * see [[ArgminSqDist4]]. */
-  def argminSqDist4(v: Column, ids: Column, cvs: Column)(implicit
-      spark: SparkSession
-  ): Column = {
-    register(spark)
-    call_function("graft_argmin_sqdist4", v, ids, cvs)
-  }
+  def argminSqDist4(v: Column, ids: Column, cvs: Column): Column =
+    column("graft_argmin_sqdist4", v, ids, cvs)
 
-  def dotd(a: Column, b: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_dotd", a, b)
-  }
+  def dotd(a: Column, b: Column): Column = column("graft_dotd", a, b)
 
-  def sqDistD(a: Column, b: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_function("graft_sqdistd", a, b)
-  }
+  def sqDistD(a: Column, b: Column): Column = column("graft_sqdistd", a, b)
+
+  /** Order-preserving `2^bits`-way bucket of a double — see
+    * [[DoubleOrderBucket]]. */
+  def doubleBucket(x: Column, bits: Int): Column =
+    column("graft_double_bucket", x, lit(bits))
+
+  /** Token, OOV and log-prob sums of `tokens` under a literal unigram model
+    * — see [[LmScore]]. */
+  def lmScore(tokens: Column, terms: Column, lpMicros: Column, oovLpMicro: Column): Column =
+    column("graft_lm_score", tokens, terms, lpMicros, oovLpMicro)
 
   /** True if `value` (a long key) might be in `bloom`. Serializes the filter
     * into a binary literal so the probe rides whole-stage codegen; see
@@ -906,14 +839,9 @@ object GraftFunctions {
   def bloomMightContain(
       bloom: org.apache.spark.util.sketch.BloomFilter,
       value: Column
-  )(implicit spark: SparkSession): Column = {
-    register(spark)
+  ): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    call_function(
-      "graft_bloom_contains",
-      org.apache.spark.sql.functions.lit(bos.toByteArray),
-      value
-    )
+    column("graft_bloom_contains", lit(bos.toByteArray), value)
   }
 }

@@ -62,16 +62,6 @@ object TextFunctions {
   /** xxhash64 of each element — the long-hash input for minhash/simhash. */
   def tokenHashes(tokens: Column): Column = transform(tokens, t => xxhash64(t))
 
-  /** Exact n-gram Jaccard similarity between two shingle-array columns
-    * (distinct shingles; 0 when union is empty). */
-  def jaccard(a: Column, b: Column): Column = {
-    val da = array_distinct(a)
-    val db = array_distinct(b)
-    val inter = size(array_intersect(da, db)).cast("double")
-    val uni = size(array_union(da, db)).cast("double")
-    when(uni === 0.0, 0.0).otherwise(inter / uni)
-  }
-
   // ---- language id (stopword-count heuristic) ----
 
   /** Tiny per-language stopword lists. A heuristic, not a model: scores are

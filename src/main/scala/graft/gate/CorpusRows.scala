@@ -1,7 +1,7 @@
 package graft
 package gate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus pipeline rows (SURVEY §2 C, `docs_*`). */
@@ -14,7 +14,6 @@ object CorpusRows {
     // elsewhere and the whole chain is oracled here.
     GateQuery("docs_prepare_corpus", { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      implicit val sp: SparkSession = s
       val tf = functions.TextFunctions
       // n_tok/ttr from the fused diversity kernel, let-bound + inlined so
       // the ttr gate below cannot re-inline the tokenizer chain

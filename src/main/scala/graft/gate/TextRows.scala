@@ -1,7 +1,7 @@
 package graft
 package gate
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text and multimodal rows (SURVEY §2 C): per-document signals, PII
@@ -225,7 +225,6 @@ object TextRows {
       // Measured 5.0s -> 1.2s at sf0.1 vs aggregating the strings.
       locally {
         val tf = functions.TextFunctions
-        implicit val sp: SparkSession = s
         val docs = T(s, dir, "documents")
         // each span hash remembers one exemplar (doc, position); qualifying
         // hashes then recover their span STRING from just those ~50
@@ -296,7 +295,6 @@ object TextRows {
     // Repetition.signals) so the ttr filter below cannot re-inline the
     // kernel (see the round-6 quadratic-inlining note in SURVEY §5).
     GateQuery("text_diversity_filter", { (s, dir) =>
-      implicit val sp: SparkSession = s
       val tf = functions.TextFunctions
       val counts = functions.GraftFunctions.diversityStats(tf.normText(col("text")))
       val stats = element_at(

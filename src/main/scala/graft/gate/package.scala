@@ -35,7 +35,7 @@ package object gate {
     * decimal path's per-row BigDecimal.valueOf + non-compact sum buffers
     * were ~80% of q1 at sf10). */
   private[gate] def fsum(c: Column): Column =
-    graft.functions.GraftFunctions.fixedSum10(c)(SparkSession.active)
+    graft.functions.GraftFunctions.fixedSum10(c)
 
   private[gate] def rsum(c: Column, scale: Int = 2): Column =
     round(fsum(c), scale).cast("double")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, TextFunctions => TF}
@@ -27,7 +27,6 @@ object Decontaminate {
       idCol: String,
       k: Int
   ): DataFrame = {
-    implicit val spark: SparkSession = docs.sparkSession
     docs.select(
       col(idCol),
       explode(

@@ -140,7 +140,6 @@ object Dedup {
       shingleK: Int = 3,
       numHashes: Int = 128
   ): DataFrame = {
-    implicit val spark: SparkSession = docs.sparkSession
     Spread.widenIfNarrow(docs, idCol).select(
       col(idCol),
       GraftFunctions
@@ -215,8 +214,8 @@ object Dedup {
 
   /** Near-duplicate pairs with exact n-gram Jaccard verification:
     * (a_id, b_id, jaccard) for jaccard >= threshold. Candidates from
-    * MinHash-LSH; verification joins the shingle sets back in (broadcast-able
-    * when the candidate set is small, keyed shuffle otherwise). */
+    * MinHash-LSH; verification broadcasts the candidate pairs and joins
+    * each side's text back in. */
   def nearDupPairs(
       docs: DataFrame,
       textCol: String,
@@ -224,69 +223,46 @@ object Dedup {
       threshold: Double,
       shingleK: Int = 3,
       numHashes: Int = 128,
-      bands: Int = 32,
-      broadcastCandidates: Boolean = true
+      bands: Int = 32
   ): DataFrame = {
-    implicit val spark: SparkSession = docs.sparkSession
     // Jaccard over 64-bit shingle hashes == Jaccard over the shingle strings
     // (collisions ~n²/2⁶⁴) — and set ops on longs are far cheaper.
     val rawCands =
       minhashCandidatePairs(docs, textCol, idCol, shingleK, numHashes, bands)
-    if (broadcastCandidates) {
-      // Round 13 (guide §2.3/§4 — don't compute what you throw away): the
-      // verification shingle kernel runs per PAIR SIDE after the candidate
-      // joins, not once per corpus document before them. The previous shape
-      // computed array_distinct(shingleHashes(normText(text))) for EVERY doc
-      // in two full streamed passes and then let the broadcast probe discard
-      // all but the candidate rows — at any scale that is 2·|corpus| kernel
-      // evaluations for |pairs|·2 needed sets (pairs ≪ corpus by
-      // construction: banding + bucket caps). Text streams through the two
-      // broadcast joins (never shuffles); the per-pair sets are sorted once
-      // so the Jaccard itself is the merge-scan kernel. Values bit-identical:
-      // size(intersect)/size(union) over distinct arrays ==
-      // inter/(na+nb−inter), same double division, same round(…, 4).
-      val sh = (c: Column) =>
-        sort_array(
-          array_distinct(GraftFunctions.shingleHashes(TF.normText(c), shingleK))
-        )
-      broadcast(rawCands)
-        .join(
-          docs.select(col(idCol).as("a_id"), col(textCol).as("__ta")),
-          "a_id"
-        )
-        .join(
-          docs.select(col(idCol).as("b_id"), col(textCol).as("__tb")),
-          "b_id"
-        )
-        .select(
-          col("a_id"),
-          col("b_id"),
-          round(
-            GraftFunctions.jaccardSorted(sh(col("__ta")), sh(col("__tb"))),
-            4
-          ).as("jaccard")
-        )
-        .filter(col("jaccard") >= threshold)
-    } else {
-      // Duplicate-heavy corpora (pair set too big to broadcast): keep the
-      // per-document shingle tables so the big pair set equi-joins against
-      // doc-grain sets instead of recomputing a kernel per pair occurrence.
-      val shingles = docs.select(
-        col(idCol),
-        array_distinct(
-          GraftFunctions.shingleHashes(TF.normText(col(textCol)), shingleK)
-        ).as("sh")
+    // Round 13 (guide §2.3/§4 — don't compute what you throw away): the
+    // verification shingle kernel runs per PAIR SIDE after the candidate
+    // joins, not once per corpus document before them. The previous shape
+    // computed array_distinct(shingleHashes(normText(text))) for EVERY doc
+    // in two full streamed passes and then let the broadcast probe discard
+    // all but the candidate rows — at any scale that is 2·|corpus| kernel
+    // evaluations for |pairs|·2 needed sets (pairs ≪ corpus by
+    // construction: banding + bucket caps). Text streams through the two
+    // broadcast joins (never shuffles); the per-pair sets are sorted once
+    // so the Jaccard itself is the merge-scan kernel. Values bit-identical:
+    // size(intersect)/size(union) over distinct arrays ==
+    // inter/(na+nb−inter), same double division, same round(…, 4).
+    val sh = (c: Column) =>
+      sort_array(
+        array_distinct(GraftFunctions.shingleHashes(TF.normText(c), shingleK))
       )
-      rawCands
-        .join(shingles.select(col(idCol).as("a_id"), col("sh").as("sh_a")), "a_id")
-        .join(shingles.select(col(idCol).as("b_id"), col("sh").as("sh_b")), "b_id")
-        .select(
-          col("a_id"),
-          col("b_id"),
-          round(TF.jaccard(col("sh_a"), col("sh_b")), 4).as("jaccard")
-        )
-        .filter(col("jaccard") >= threshold)
-    }
+    broadcast(rawCands)
+      .join(
+        docs.select(col(idCol).as("a_id"), col(textCol).as("__ta")),
+        "a_id"
+      )
+      .join(
+        docs.select(col(idCol).as("b_id"), col(textCol).as("__tb")),
+        "b_id"
+      )
+      .select(
+        col("a_id"),
+        col("b_id"),
+        round(
+          GraftFunctions.jaccardSorted(sh(col("__ta")), sh(col("__tb"))),
+          4
+        ).as("jaccard")
+      )
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Full near-dup clustering: verified pairs → connected components →
@@ -326,7 +302,6 @@ object Dedup {
       bands: Int = 32,
       maxBucketSize: Int = 1000
   ): DataFrame = {
-    implicit val spark: SparkSession = incoming.sparkSession
     def bandTable(df: DataFrame) = minhashBands(
       minhashSignatures(df, textCol, idCol, shingleK, numHashes),
       idCol,
@@ -397,7 +372,7 @@ object Dedup {
       // 2·|pairs|, never per pair occurrence and never per corpus row.
       // The checkpoint runs inside the timed query (every bench run
       // re-executes it; nothing persists across runs).
-      val width = spark.sparkContext.defaultParallelism
+      val width = incoming.sparkSession.sparkContext.defaultParallelism
       // pin, measured exchange that cannot be reused: the id broadcasts re-key it
       val pinned = cands.coalesce(width).localCheckpoint()
       val inSel = incoming
@@ -486,7 +461,6 @@ object Dedup {
       textCol: String,
       idCol: String
   ): DataFrame = {
-    implicit val spark: SparkSession = incoming.sparkSession
     val inFp = incoming
       .where(col(textCol).isNotNull)
       .withColumn("__fp", TF.fingerprint(col(textCol)))
@@ -573,7 +547,6 @@ object Dedup {
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1 && k <= 16, "k must be in [1,16] (shingle-kernel bound)")
-    implicit val spark: SparkSession = docs.sparkSession
     // positional gram hashes from the fused tokenize+hash codegen kernel
     // (one pass, no token/gram strings materialized); the span output only
     // carries positions, so the hash family is internal — 64-bit collision
@@ -656,7 +629,6 @@ object Dedup {
     * the blocking buckets degenerate; word-order-sensitive shingles keep the
     * sketch space spread while preserving near-dup locality. */
   def simhashes(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    implicit val spark: SparkSession = docs.sparkSession
     // widenIfNarrow (round 13): the simhash-over-shingles kernel was the
     // single biggest single-task stage of dedup_simhash (JobProbe: 368 ms
     // of a 1.05 s run on the one-split sf0.1 scan).
@@ -681,7 +653,6 @@ object Dedup {
       maxBucketSize: Int = 4096
   ): DataFrame = {
     require(maxHamming < bands, "need maxHamming < bands for pigeonhole recall")
-    implicit val spark: SparkSession = docs.sparkSession
     val width = 64 / bands
     val sh = simhashes(docs, textCol, idCol)
     // Same single-shuffle shape as minhash: bucket by (band, piece), collect
@@ -811,17 +782,13 @@ object Dedup {
     // norms and the in-cluster pair dot products ride the graft_dotd
     // codegen kernel — bit-identical fold order to the previous
     // aggregate(zip_with(...)) Column formulation the oracle mirrors
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val members = a2.join(
-      e.withColumn("nrm", expr("sqrt(graft_dotd(v, v))")),
-      "id"
-    )
+    val members =
+      a2.join(e.withColumn("nrm", sqrt(GraftFunctions.dotd(col("v"), col("v")))), "id")
     // pair loop = graft_cosine_pairs codegen kernel (round 10): the dot
     // product was already the graft_dotd kernel, but the per-pair lambda
     // scaffolding around it was interpreted — same finding and same cure
     // as simhashPairs; bit-identical rows (kernel reuses VectorOps.dotd's
     // fold and Spark's Round-on-double semantics, spec-pinned).
-    implicit val sparkS: SparkSession = emb.sparkSession
     val dropped = members
       .filter(col("nrm") > 0d)
       .groupBy("cluster")
@@ -832,7 +799,7 @@ object Dedup {
       .filter(size(col("xs")) >= 2)
       .select(
         explode(
-          graft.functions.GraftFunctions.cosinePairs(
+          GraftFunctions.cosinePairs(
             expr("transform(xs, x -> x.id)"),
             expr("transform(xs, x -> x.v)"),
             expr("transform(xs, x -> x.nrm)"),
@@ -865,7 +832,6 @@ object Dedup {
       threshold: Double,
       shingleK: Int = 3
   ): DataFrame = {
-    implicit val spark: SparkSession = docs.sparkSession
     // Three things keep the quadratic affordable on its intended inputs
     // (gate corpora / drawn samples). (1) 64-bit shingle HASHES, not
     // strings: Jaccard is identical (collisions ~n²/2⁶⁴ — the same
@@ -979,7 +945,6 @@ object Dedup {
       idCol: String,
       threshold: Double
   ): DataFrame = {
-    implicit val spark: SparkSession = emb.sparkSession
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
     val right = broadcast(
       base.select(col("id").as("b_id"), col("v").as("vb"))
@@ -1056,10 +1021,8 @@ object Dedup {
       idCol: String,
       threshold: Double,
       numPlanes: Int = -1,
-      maxBucketSize: Int = 4096,
-      multiProbe: Boolean = true
+      maxBucketSize: Int = 4096
   ): DataFrame = {
-    implicit val spark: SparkSession = emb.sparkSession
     val planes =
       if (numPlanes > 0) numPlanes
       else {
@@ -1078,31 +1041,21 @@ object Dedup {
       // norm once per vector, not once per pair; zero-norm vectors have
       // cosine 0 to everything (kernel convention) — drop them here rather
       // than let 0/0 produce NaN (which Spark orders ABOVE the threshold)
-      .withColumn("nrm", expr("sqrt(graft_dotd(v, v))"))
+      .withColumn("nrm", sqrt(GraftFunctions.dotd(col("v"), col("v"))))
       .filter(col("nrm") > 0d)
-    val probed =
-      if (multiProbe)
-        base.select(
-          col("id"),
-          col("v"),
-          col("nrm"),
-          col("bucket0"),
-          explode(
-            expr(
-              s"array_union(array(bucket0), " +
-                s"transform(sequence(0, ${planes - 1}), " +
-                s"b -> cast(bucket0 ^ shiftleft(1, b) AS int)))"
-            )
-          ).as("bucket")
+    val probed = base.select(
+      col("id"),
+      col("v"),
+      col("nrm"),
+      col("bucket0"),
+      explode(
+        expr(
+          s"array_union(array(bucket0), " +
+            s"transform(sequence(0, ${planes - 1}), " +
+            s"b -> cast(bucket0 ^ shiftleft(1, b) AS int)))"
         )
-      else
-        base.select(
-          col("id"),
-          col("v"),
-          col("nrm"),
-          col("bucket0"),
-          col("bucket0").as("bucket")
-        )
+      ).as("bucket")
+    )
     val buckets = probed
       .groupBy("bucket")
       .agg(
@@ -1116,8 +1069,7 @@ object Dedup {
     // across the multi-probe exchange (no distinct needed) and skips the
     // dot product for every non-canonical collision — see the kernel's
     // scaladoc; row-set equality with the distinct() formulation is
-    // spec-pinned. (Single-probe: bucket0 == bucket for every element, the
-    // hamming-0 canon rule degenerates to "emit here", same rows as before.)
+    // spec-pinned.
     buckets
       .select(
         explode(

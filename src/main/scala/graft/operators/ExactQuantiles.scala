@@ -51,11 +51,10 @@ object ExactQuantiles {
       bucketBits: Int = 20
   ): DataFrame = {
     require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0.0 && p <= 1.0 })
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val rows = df
       .select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
       .where(col("v").isNotNull) // percentile/quantile_cont ignore nulls
-      .withColumn("b", expr(s"graft_double_bucket(v, $bucketBits)"))
+      .withColumn("b", graft.functions.GraftFunctions.doubleBucket(col("v"), bucketBits))
 
     // Histogram pass: fixed order-preserving buckets, partial-agg counts,
     // cumulative window per group. It sits under two consumers (cand's

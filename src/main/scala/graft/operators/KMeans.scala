@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -53,7 +53,6 @@ object KMeans {
       vecCol: String,
       idCol: String
   ): DataFrame = {
-    implicit val spark: SparkSession = points.sparkSession
     val centsRow = broadcast(
       cents
         .select(struct(col("cid"), col("cv")).as("c"))
@@ -193,7 +192,6 @@ object KMeans {
       vecCol: String,
       idCol: String
   ): DataFrame = {
-    GraftFunctions.register(points.sparkSession)
     // Round 14 (guide §2.3/§2.4): one vector-grain aggregation
     // (graft_vector_fixed_mean10 — map-side partial 128-bit array sums)
     // instead of posexplode → groupBy(cid, pos) → groupBy(cid), which
@@ -210,6 +208,6 @@ object KMeans {
         col(vecCol).cast("array<double>").as("__v")
       )
       .groupBy(col("cid"))
-      .agg(call_function("graft_vector_fixed_mean10", col("__v")).as("cv"))
+      .agg(GraftFunctions.vectorFixedMean10(col("__v")).as("cv"))
   }
 }

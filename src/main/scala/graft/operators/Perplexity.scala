@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{GraftFunctions, TextFunctions}
 
 /** C32: unigram language-model perplexity scoring — the CCNet-style quality
   * signal (score each document by how surprising its tokens are under an
@@ -108,7 +108,6 @@ object Perplexity {
       oov: DataFrame,
       idCols: Seq[String]
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // One action for the model and the OOV value, so a subtree the two
     // share runs once. cap-bounded (vocabulary model), by construction; the
     // OOV row is the one with a null term.
@@ -127,13 +126,8 @@ object Perplexity {
       // explode semantics: a null or empty token array produced no rows
       .where(col("__toks").isNotNull && size(col("__toks")) > 0)
       .select(
-        idCols.map(col) :+ call_function(
-          "graft_lm_score",
-          col("__toks"),
-          termsLit,
-          lpsLit,
-          lit(oovMicro)
-        ).as("__s"): _*
+        idCols.map(col) :+
+          GraftFunctions.lmScore(col("__toks"), termsLit, lpsLit, lit(oovMicro)).as("__s"): _*
       )
       .select(
         idCols.map(col) ++ Seq(

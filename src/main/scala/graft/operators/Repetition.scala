@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
@@ -95,7 +95,6 @@ object Repetition {
     * columns (a Generate is also a pushdown boundary). Still zero
     * shuffles, still embarrassingly parallel. */
   def signals(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    implicit val spark = docs.sparkSession
     // widenIfNarrow (round 13): the fused repetition kernel is zero-shuffle,
     // so on a one-split scan the WHOLE operator ran as one task while 31
     // slots idled (JobProbe at sf0.1: 224 ms of docs_repetition_gate's
@@ -109,7 +108,7 @@ object Repetition {
     * `inline(array(...))`, as [[signals]] and `CorpusIngest`'s per-row gate
     * do: that Generate evaluates the kernel once per row and stops
     * predicate pushdown from re-inlining it. */
-  def signalStruct(text: Column)(implicit spark: SparkSession): Column = {
+  def signalStruct(text: Column): Column = {
     val counts = graft.functions.GraftFunctions.repetitionStats(TF.normText(text))
     element_at(
       transform(

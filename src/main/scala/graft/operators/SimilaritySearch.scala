@@ -27,7 +27,6 @@ object SimilaritySearch {
       idCol: String,
       k: Int
   ): DataFrame = {
-    implicit val spark: SparkSession = corpus.sparkSession
     val q = broadcast(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     )
@@ -65,7 +64,6 @@ object SimilaritySearch {
       vecCol: String,
       idCol: String
   ): DataFrame = {
-    implicit val spark: SparkSession = corpus.sparkSession
     val centsRow = broadcast(
       cents
         .select(struct(col("centroid_id"), col("cv")).as("c"))
@@ -99,7 +97,6 @@ object SimilaritySearch {
       .orderBy(col(idCol))
       .limit(numCentroids)
       .select(col(idCol).as("centroid_id"), col(vecCol).as("cv"))
-    implicit val spark: SparkSession = corpus.sparkSession
     for (_ <- 1 to refineIterations) {
       // assign keeps the vector column, so the former
       // `.join(corpus.select(id, vec), idCol)` re-attach is gone (round 13)
@@ -220,7 +217,6 @@ object SimilaritySearch {
       k: Int,
       nProbe: Int
   ): DataFrame = {
-    implicit val spark: SparkSession = queries.sparkSession
     val cents = broadcast(
       centroids.select(col("centroid_id").as("cid"), col("cv"))
     )
@@ -257,7 +253,6 @@ object SimilaritySearch {
     * and a k-bounded shuffle, instead of window row_number's per-partition
     * sort. Expects (query_id, vec_id, cos); emits + rank (1-based). */
   private def topKPerGroup(scored: DataFrame, k: Int): DataFrame = {
-    implicit val spark: SparkSession = scored.sparkSession
     scored
       .groupBy("query_id")
       .agg(GraftFunctions.topK(col("vec_id"), col("cos"), k).as("topk"))
@@ -344,7 +339,6 @@ object SimilaritySearch {
       numPlanes >= 1 && numTables >= 1 && numPlanes * numTables <= 30,
       "numPlanes*numTables must be in [1,30] (packed int signature)"
     )
-    implicit val spark: SparkSession = corpus.sparkSession
     val total = numPlanes * numTables
     // table t's key: t in the high bits, its p-bit signature slice low
     val sliceKeys =

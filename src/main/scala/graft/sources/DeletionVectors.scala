@@ -347,33 +347,16 @@ object DeletionVectors {
     ): Expression = copy(left = newLeft, right = newRight)
   }
 
-  /** Register (idempotently, keyed by vector content) the codegen'd filter
-    * for this snapshot's DV set and return `keep(file, row)`. The function
-    * name hashes the (path, uniqueId) pairs — uniqueIds pin bitmap content,
-    * so re-reads of the same snapshot reuse the registered builder and a
-    * new snapshot (new vectors) registers a fresh one instead of silently
-    * filtering with stale bitmaps. The broadcast happens only on first
-    * registration. */
+  /** `keep(file, row)` for this snapshot's DV set: the negated
+    * [[DvRowDeleted]] filter over a fresh broadcast of the vectors. Nothing
+    * is registered anywhere, so the broadcast lives exactly as long as the
+    * plans that reference it. */
   def keepFunction(
       spark: org.apache.spark.sql.SparkSession,
       dvMap: Map[String, (String, Array[Byte])]
   ): (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    dvMap.toSeq.sortBy(_._1).foreach { case (p, (id, _)) =>
-      digest.update(p.getBytes("UTF-8"))
-      digest.update(id.getBytes("UTF-8"))
-    }
-    val name = "graft_dv_deleted_" +
-      digest.digest().take(8).map("%02x".format(_)).mkString
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name))) {
-      val probe = new DvProbe(spark.sparkContext.broadcast(dvMap))
-      reg.createOrReplaceTempFunction(
-        name,
-        es => DvRowDeleted(es(0), es(1), probe),
-        "built-in"
-      )
-    }
-    (file, row) => !org.apache.spark.sql.functions.call_function(name, file, row)
+    import org.apache.spark.sql.GraftColumns.{column, expression}
+    val probe = new DvProbe(spark.sparkContext.broadcast(dvMap))
+    (file, row) => !column(DvRowDeleted(expression(file), expression(row), probe))
   }
 }

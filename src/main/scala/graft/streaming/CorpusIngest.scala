@@ -50,7 +50,6 @@ object CorpusIngest {
       jaccardThreshold: Double,
       gate: Gate
   ): DataFrame = {
-    implicit val spark = batch.sparkSession
     // The gate filters each batch row on its own signals, so a gated-out
     // doc cannot ride through on the id of a passing one.
     val gated = Spread
@@ -118,19 +117,14 @@ object CorpusIngest {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // replay guard FIRST: a replayed batch must not re-dedup against a
-        // corpus that already contains its own rows
-        if (!DeltaRead.lastTxnVersion(corpusDir, appId).exists(_ >= batchId)) {
-          val prepared = prepareBatch(
-            batch,
-            corpusDir,
-            textCol,
-            idCol,
-            jaccardThreshold,
-            gate
-          )
-          DeltaRead.appendIdempotent(prepared, corpusDir, appId, batchId)
-        }
+        // appendIdempotent checks the txn marker before it runs the
+        // prepared frame, so a replayed batch commits nothing and its
+        // dedup against a corpus that already holds its rows never runs
+        // (only dedupAgainstCorpus' candidate pin, on a corpus >= Large,
+        // is built eagerly)
+        val prepared =
+          prepareBatch(batch, corpusDir, textCol, idCol, jaccardThreshold, gate)
+        DeltaRead.appendIdempotent(prepared, corpusDir, appId, batchId)
         ()
       }
 }

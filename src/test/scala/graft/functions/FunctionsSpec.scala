@@ -249,4 +249,47 @@ class FunctionsSpec extends AnyFunSuite {
       .head
     assert(r.isNullAt(0))
   }
+
+  test("graft columns need no function registry: exactDedup and normText " +
+    "run on a new session while the fixture is active, and neither " +
+    "session gains a function") {
+    val other = spark.newSession()
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    def names(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.functionRegistry.listFunction().toSet
+    val (mine, theirs) = (names(spark), names(other))
+    val docs = other
+      .createDataFrame(Seq((1L, "A   b"), (2L, " a B"), (3L, "c")))
+      .toDF("doc_id", "text")
+    val norm = docs.select(TextFunctions.normText(col("text"))).collect().map(_.getString(0))
+    assert(norm.toSeq == Seq("a b", "a b", "c"))
+    val kept = graft.operators.Dedup.exactDedup(docs, "text", "doc_id")
+    assert(kept.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
+    val sum = other.range(1, 5).select(GraftFunctions.fixedSum10(col("id").cast("double")))
+    assert(sum.head.getDecimal(0).doubleValue == 10.0)
+    assert(names(spark) == mine && names(other) == theirs)
+  }
+
+  test("a column helper plans the same as SQL text naming the function") {
+    GraftFunctions.register(spark)
+    val df = Seq(
+      (1L, Array(1f, 0f), Array(1f, 1f), "a b c d", 1.5),
+      (2L, Array(0f, 1f), Array(1f, 0f), "b c", 2.5)
+    ).toDF("id", "a", "b", "t", "x")
+    val pairs = Seq(
+      df.select(GraftFunctions.cosineSim($"a", $"b").as("c")) ->
+        df.selectExpr("graft_cosine(a, b) AS c"),
+      df.select(GraftFunctions.shingleHashes($"t", 2).as("c")) ->
+        df.selectExpr("graft_shingle_hashes(t, 2) AS c"),
+      df.groupBy($"t").agg(GraftFunctions.topK($"id", $"x", 1).as("c")) ->
+        df.groupBy($"t").agg(expr("graft_topk(id, x, 1)").as("c")),
+      df.agg(GraftFunctions.fixedSum10($"x").as("c")) ->
+        df.selectExpr("graft_fixed_sum10(x) AS c")
+    )
+    for ((helper, sql) <- pairs) {
+      assert(helper.queryExecution.optimizedPlan.sameResult(sql.queryExecution.optimizedPlan))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(helper) == rows(sql))
+    }
+  }
 }

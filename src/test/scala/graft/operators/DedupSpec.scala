@@ -80,7 +80,7 @@ class DedupSpec extends AnyFunSuite {
     val df = rows.toDF("g", "ids", "hs")
     for (d <- Seq(0, 7, 31)) {
       val kernel = df
-        .select(graft.functions.GraftFunctions.hammingPairs($"ids", $"hs", d)(spark).as("p"))
+        .select(graft.functions.GraftFunctions.hammingPairs($"ids", $"hs", d).as("p"))
         .collect()
         .map(_.getSeq[org.apache.spark.sql.Row](0).map(r => (r.getLong(0), r.getLong(1), r.getInt(2))))
       val lambda = df
@@ -117,7 +117,7 @@ class DedupSpec extends AnyFunSuite {
     for (t <- Seq(0.0, 0.5, 0.9)) {
       val kernel = df
         .select(
-          graft.functions.GraftFunctions.cosinePairs($"ids", $"vs", $"nrms", t)(spark).as("p")
+          graft.functions.GraftFunctions.cosinePairs($"ids", $"vs", $"nrms", t).as("p")
         )
         .collect()
         .map(_.getSeq[org.apache.spark.sql.Row](0).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))

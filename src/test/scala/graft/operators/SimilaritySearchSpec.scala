@@ -154,7 +154,7 @@ class SimilaritySearchSpec extends AnyFunSuite {
     val df = rows.toDF("centroid_id", "v").repartition(8, $"centroid_id" % 3)
     val fused = df
       .groupBy($"centroid_id")
-      .agg(graft.functions.GraftFunctions.vectorFixedMean($"v")(spark).as("cv"))
+      .agg(graft.functions.GraftFunctions.vectorFixedMean($"v").as("cv"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1))
       .toMap
@@ -188,11 +188,11 @@ class SimilaritySearchSpec extends AnyFunSuite {
       .toDF("centroid_id", "v")
     val a = withNull
       .groupBy($"centroid_id")
-      .agg(graft.functions.GraftFunctions.vectorFixedMean($"v")(spark).as("cv"))
+      .agg(graft.functions.GraftFunctions.vectorFixedMean($"v").as("cv"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
     val b = withNull.filter($"v".isNotNull)
       .groupBy($"centroid_id")
-      .agg(graft.functions.GraftFunctions.vectorFixedMean($"v")(spark).as("cv"))
+      .agg(graft.functions.GraftFunctions.vectorFixedMean($"v").as("cv"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
     assert(a == b)
   }

@@ -83,4 +83,20 @@ class DeletionVectorsSpec extends AnyFunSuite {
     finally out.close()
     intercept[IllegalArgumentException](DeletionVectors.read(fs, root, ds(0)))
   }
+
+  test("reading a DV table registers no function: three deleteWhere + read " +
+    "cycles give the right rows and leave no graft_dv_deleted* behind") {
+    val spark = graft.SparkFixture.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_dv_noreg").toString
+    DeltaRead.create(spark.range(0, 60).toDF("id").repartition(3), dir)
+    def dvFunctions = spark.sessionState.functionRegistry
+      .listFunction()
+      .filter(_.funcName.startsWith("graft_dv_deleted"))
+    for ((cond, left) <- Seq(($"id" % 10 === 0, 54L), ($"id" < 5, 50L), ($"id" >= 55, 45L))) {
+      DeltaRead.deleteWhere(spark, dir, cond)
+      assert(DeltaRead.read(spark, dir).count() == left)
+      assert(dvFunctions.isEmpty)
+    }
+  }
 }
