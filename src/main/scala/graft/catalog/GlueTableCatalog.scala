@@ -188,7 +188,7 @@ final class GlueTableCatalog extends TableCatalog with SupportsNamespaces {
               "GlueCatalogProvider.load / DeltaRead.read (the DSv2 file " +
               "route cannot apply row-level deletes)"
           )
-        if (snap.configuration.get("delta.columnMapping.mode").exists(m => m.nonEmpty && m != "none"))
+        if (snap.columnMapped)
           throw new GlueNotImplementedException(
             s"$fullName: delta table uses column mapping; read it via " +
               "GlueCatalogProvider.load / DeltaRead.read (the DSv2 file " +

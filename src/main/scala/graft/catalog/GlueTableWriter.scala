@@ -1,6 +1,7 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Sink side of the catalog: write a DataFrame out as a Glue-described table
   * (format chosen by the same Hive serde triple dispatch the read path uses)
@@ -33,23 +34,17 @@ object GlueTableWriter {
       options: Map[String, String] = Map.empty,
       statsColumns: Seq[String] = Seq.empty
   ): GlueTable = {
-    // delta is log-committed, not serde-dispatched: Overwrite bootstraps a
-    // fresh table (graft.sources.DeltaRead.create), Append adds a commit.
-    // The Glue entry carries table_type=delta — exactly the marker the read
-    // path's format dispatch routes back to the log-replay reader.
+    // delta is log-committed, not serde-dispatched: Overwrite creates a
+    // fresh table (graft.sources.DeltaRead.create), Append adds a commit and
+    // bootstraps the table when the location has no log yet. The Glue entry
+    // carries table_type=delta — exactly the marker the read path's format
+    // dispatch routes back to the log-replay reader.
     if (format == "delta") {
-      val logExists =
-        new java.io.File(location, "_delta_log").isDirectory
       mode match {
         case SaveMode.Overwrite =>
-          graft.sources.DeltaRead
-            .create(df, location, partitionBy = partitionBy)
-        case SaveMode.Append if logExists =>
-          graft.sources.DeltaRead
-            .append(df, location, partitionBy = partitionBy)
+          graft.sources.DeltaRead.create(df, location, partitionBy = partitionBy)
         case SaveMode.Append =>
-          graft.sources.DeltaRead
-            .create(df, location, partitionBy = partitionBy)
+          graft.sources.DeltaRead.append(df, location, partitionBy = partitionBy)
         case other =>
           throw new GlueNotImplementedException(
             s"$database.$table: delta write mode $other is not supported"
@@ -66,7 +61,7 @@ object GlueTableWriter {
             else df
           TableStatistics.asParameters(
             TableStatistics.collect(statsDf, statsColumns)
-          ) + (TableStatistics.TotalSizeParam -> bytesUnder(location).toString)
+          ) + (TableStatistics.TotalSizeParam -> bytesUnder(df.sparkSession, location).toString)
         }
       val partSetD = partitionBy.toSet
       return GlueTable(
@@ -151,7 +146,7 @@ object GlueTableWriter {
               .load(location)
           else df
         TableStatistics.asParameters(TableStatistics.collect(statsDf, statsColumns)) +
-          (TableStatistics.TotalSizeParam -> bytesUnder(location).toString)
+          (TableStatistics.TotalSizeParam -> bytesUnder(df.sparkSession, location).toString)
       }
 
     GlueTable(
@@ -173,13 +168,15 @@ object GlueTableWriter {
   /** Total data bytes under `location` (recursive; commit markers, hidden
     * files AND metadata directories like `_delta_log` excluded — the
     * number feeds broadcast-size estimates, so log/checkpoint bytes must
-    * not inflate it). */
-  private def bytesUnder(location: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L
-      else if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
-      else f.length()
+    * not inflate it). Walks the Hadoop FileSystem of the location's scheme. */
+  private def bytesUnder(spark: SparkSession, location: String): Long = {
+    val root = new Path(location)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(s: FileStatus): Long =
+      if (s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith(".")) 0L
+      else if (s.isDirectory) fs.listStatus(s.getPath).map(walk).sum
+      else s.getLen
     // the root itself may legitimately be named with a leading underscore
-    Option(new java.io.File(location).listFiles()).toSeq.flatten.map(walk).sum
+    if (!fs.exists(root)) 0L else fs.listStatus(root).map(walk).sum
   }
 }

@@ -10,6 +10,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, unescapePathName}
 import org.apache.spark.sql.functions.{coalesce, col, length, lit, sum}
 import org.apache.spark.sql.types._
 
@@ -47,11 +48,18 @@ import org.apache.spark.sql.types._
   * delta-spark populates in both modes). Checkpoints written here carry the
   * full protocol + metaData actions (id / format / schemaString /
   * partitionColumns / configuration), per-file partitionValues / size /
-  * modificationTime, and deletionVector descriptors, so external
-  * protocol-compliant readers can consume them and deletes survive log
-  * compaction. Reader-version-3 tables are accepted when every
+  * modificationTime, deletionVector descriptors and one `txn` per appId, so
+  * external protocol-compliant readers can consume them, and deletes and
+  * exactly-once markers survive log compaction. A checkpoint row replays
+  * through the same action decoder as a commit line (its `toJSON` form is
+  * the commit-line shape). Reader-version-3 tables are accepted when every
   * readerFeature is one we honor (deletionVectors, columnMapping); unknown
   * features still refuse with a clear error.
+  *
+  * Writes share one write-and-commit path: [[create]] replaces the
+  * directory with a version-0 table, and [[append]] (also behind
+  * [[appendIdempotent]]) adds a commit, bootstrapping version 0 when the
+  * directory has no `_delta_log` yet.
   */
 object DeltaRead {
 
@@ -79,19 +87,26 @@ object DeltaRead {
 
   /** The table state at a version: active files (with their add metadata,
     * in replay order), declared schema if any metaData action carried one,
-    * the table's declared partition columns, plus the metaData identity
-    * fields a checkpoint re-emits. */
+    * the table's declared partition columns, the metaData identity fields a
+    * checkpoint re-emits, and the highest `txn` version committed per
+    * appId. */
   final case class Snapshot(
       version: Long,
       adds: Seq[AddFile],
       schema: Option[StructType],
       partitionColumns: Seq[String] = Seq.empty,
       tableId: Option[String] = None,
-      configuration: Map[String, String] = Map.empty
+      configuration: Map[String, String] = Map.empty,
+      txns: Map[String, Long] = Map.empty
   ) {
 
     /** Active data file paths relative to the table root, in replay order. */
     def files: Seq[String] = adds.map(_.path)
+
+    /** True when `delta.columnMapping.mode` is set to a mode other than
+      * `none`: parquet files then carry physical column names. */
+    def columnMapped: Boolean =
+      configuration.get("delta.columnMapping.mode").exists(m => m.nonEmpty && m != "none")
   }
 
   // ---------- Hadoop FS plumbing ----------
@@ -172,9 +187,6 @@ object DeltaRead {
 
   // ---------- protocol feature guards ----------
 
-  private def columnMappingEnabled(mode: String): Boolean =
-    mode != null && mode.nonEmpty && mode != "none"
-
   /** Reader features this replay honors end-to-end. Reader version 3 makes
     * features explicit (delta protocol "Table Features"): a table is
     * readable iff every listed readerFeature is supported — anything else
@@ -192,17 +204,6 @@ object DeltaRead {
         throw new IllegalArgumentException(
           s"unsupported delta readerFeatures: ${unknown.toSeq.sorted.mkString(", ")}"
         )
-    }
-  }
-
-  private def requireSupported(node: JsonNode): Unit = {
-    val protocol = node.get("protocol")
-    if (protocol != null) {
-      val features = Option(protocol.get("readerFeatures"))
-        .filter(_.isArray)
-        .map(_.elements().asScala.map(_.asText()).toSeq)
-        .getOrElse(Seq.empty)
-      checkReaderVersion(protocol.path("minReaderVersion").asInt(1), features)
     }
   }
 
@@ -294,99 +295,103 @@ object DeltaRead {
     var partitionColumns: Seq[String] = Seq.empty
     var tableId: Option[String] = None
     var configuration: Map[String, String] = Map.empty
+    val txns = scala.collection.mutable.Map.empty[String, Long]
+
+    // structured errors: a foreign/corrupt log must name the commit file and
+    // line (or the checkpoint row), never die as a bare Jackson/NPE stack or
+    // — worse — skip the action and return a silently-wrong snapshot
+    def bad(where: String, why: String, cause: Throwable = null) =
+      throw new IllegalArgumentException(s"malformed delta $where: $why", cause)
+    def textual(action: JsonNode, field: String): Boolean =
+      action.hasNonNull(field) && action.get(field).isTextual
+
+    /** The one action decoder: commit lines and checkpoint rows both land
+      * here. A JSON-null action is absent (a checkpoint row serialized
+      * without ignoreNullFields spells out every action it does not carry). */
+    def applyAction(line: String, where: String): Unit = {
+      val node =
+        try mapper.readTree(line)
+        catch {
+          case e: com.fasterxml.jackson.core.JacksonException =>
+            bad(where, s"unparseable JSON (${e.getOriginalMessage})", e)
+        }
+      if (node == null || !node.isObject) bad(where, "line is not a JSON action object")
+      def action(name: String): Option[JsonNode] = Option(node.get(name)).filterNot(_.isNull)
+      action("protocol").foreach { protocol =>
+        val features = Option(protocol.get("readerFeatures"))
+          .filter(_.isArray)
+          .map(_.elements().asScala.map(_.asText()).toSeq)
+          .getOrElse(Seq.empty)
+        checkReaderVersion(protocol.path("minReaderVersion").asInt(1), features)
+      }
+      action("add").foreach { add =>
+        if (!textual(add, "path")) bad(where, "add action without a textual path")
+        val p = add.get("path").asText()
+        val pv = Option(add.get("partitionValues"))
+          .filter(_.isObject)
+          .map(
+            _.properties().asScala.map { e =>
+              e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())
+            }.toMap
+          )
+          .getOrElse(Map.empty[String, String])
+        active(p) = AddFile(
+          p,
+          add.path("size").asLong(0L),
+          add.path("modificationTime").asLong(0L),
+          pv,
+          parseDvNode(add.get("deletionVector"))
+        )
+      }
+      // textuality matters for remove in particular: asText() on an object
+      // node returns "", which would silently no-op the removal and leave a
+      // deleted file live in the snapshot
+      action("remove").foreach { remove =>
+        if (!textual(remove, "path")) bad(where, "remove action without a textual path")
+        active -= remove.get("path").asText()
+      }
+      action("metaData").foreach { meta =>
+        if (meta.hasNonNull("schemaString"))
+          schema = Some(
+            try DataType.fromJson(meta.get("schemaString").asText()).asInstanceOf[StructType]
+            catch {
+              case e: Exception =>
+                bad(where, s"invalid metaData.schemaString: ${e.getMessage}", e)
+            }
+          )
+        if (meta.hasNonNull("partitionColumns"))
+          partitionColumns = meta.get("partitionColumns").elements().asScala.map(_.asText()).toSeq
+        if (meta.hasNonNull("id")) tableId = Some(meta.get("id").asText())
+        if (meta.hasNonNull("configuration"))
+          configuration = meta
+            .get("configuration")
+            .properties()
+            .asScala
+            .map(e => e.getKey -> e.getValue.asText())
+            .toMap
+      }
+      action("txn").foreach { txn =>
+        if (!textual(txn, "appId")) bad(where, "txn action without a textual appId")
+        val appId = txn.get("appId").asText()
+        val v = txn.path("version").asLong()
+        txns(appId) = txns.get(appId).fold(v)(math.max(_, v))
+      }
+    }
 
     checkpoint.foreach { case (cv, parts) =>
       val cpFiles = checkpointPaths(logDir, cv, parts)
       cpFiles.foreach(p => require(fs.exists(p), s"missing checkpoint file $p"))
-      // a checkpoint is a parquet table of the same actions, one per row —
-      // project every column this replay needs and collect ONCE (snapshot()
-      // runs on every read/append, so each extra Spark job here is hot-path
-      // driver latency), applying the same protocol-feature guards as JSON
-      // commits: a table whose only protocol/metaData/deletionVector records
-      // live in the checkpoint must fail just as clearly, not return wrong
-      // rows
-      val cp = spark.read.parquet(cpFiles.map(_.toString): _*)
-      def hasSubField(struct: String, field: String): Boolean =
-        cp.schema
-          .find(_.name == struct)
-          .map(_.dataType)
-          .collect { case s: StructType => s.fieldNames.contains(field) }
-          .getOrElse(false)
-      def subCol(struct: String, field: String, typ: String, as: String): Column =
-        (if (hasSubField(struct, field)) col(s"$struct.$field").cast(typ)
-         else lit(null).cast(typ)).as(as)
-      // the DV descriptor rides inside add as a struct — project its
-      // subfields only when the checkpoint schema actually carries them
-      val dvStruct: Boolean = cp.schema
-        .find(_.name == "add")
-        .map(_.dataType)
-        .collect { case s: StructType =>
-          s.find(_.name == "deletionVector").exists(_.dataType.isInstanceOf[StructType])
-        }
-        .getOrElse(false)
-      def dvCol(field: String, typ: String, as: String): Column =
-        (if (dvStruct) col(s"add.deletionVector.$field").cast(typ)
-         else lit(null).cast(typ)).as(as)
-      val rows = cp
-        .select(
-          subCol("add", "path", "string", "path"),
-          subCol("add", "size", "bigint", "size"),
-          subCol("add", "modificationTime", "bigint", "mtime"),
-          subCol("add", "partitionValues", "map<string,string>", "pv"),
-          dvCol("storageType", "string", "dvStorage"),
-          dvCol("pathOrInlineDv", "string", "dvPath"),
-          dvCol("offset", "int", "dvOffset"),
-          dvCol("sizeInBytes", "int", "dvSize"),
-          dvCol("cardinality", "bigint", "dvCard"),
-          subCol("metaData", "schemaString", "string", "schemaStr"),
-          subCol("metaData", "partitionColumns", "array<string>", "partCols"),
-          subCol("metaData", "id", "string", "metaId"),
-          subCol("metaData", "configuration", "map<string,string>", "metaCfg"),
-          subCol("protocol", "minReaderVersion", "int", "minReader"),
-          subCol("protocol", "readerFeatures", "array<string>", "readerFeatures")
-        )
+      // a checkpoint is a parquet table of the same actions, one per row,
+      // and a row's JSON form is the commit-line shape; collect it in ONE
+      // job (snapshot() runs on every read/append, so each extra Spark job
+      // here is hot-path driver latency)
+      spark.read
+        .parquet(cpFiles.map(_.toString): _*)
+        .toJSON
         .collect()
-      rows.foreach { r =>
-        Option(r.getAs[java.lang.Integer]("minReader")).foreach { v =>
-          val features =
-            Option(r.getAs[scala.collection.Seq[String]]("readerFeatures"))
-              .map(_.toSeq)
-              .getOrElse(Seq.empty)
-          checkReaderVersion(v.intValue, features)
-        }
-        // Row.getAs yields runtime collection types (mutable.ArraySeq,
-        // collection.Map) — widen then copy, never cast to immutable
-        val cfg =
-          Option(r.getAs[scala.collection.Map[String, String]]("metaCfg"))
-            .map(_.toMap)
-        Option(r.getAs[String]("path")).foreach { p =>
-          val dv = Option(r.getAs[String]("dvStorage")).filter(_.nonEmpty).map { st =>
-            DeletionVectors.Descriptor(
-              st,
-              r.getAs[String]("dvPath"),
-              Option(r.getAs[java.lang.Integer]("dvOffset")).map(_.intValue),
-              Option(r.getAs[java.lang.Integer]("dvSize")).map(_.intValue).getOrElse(0),
-              Option(r.getAs[java.lang.Long]("dvCard")).map(_.longValue).getOrElse(0L)
-            )
-          }
-          active(p) = AddFile(
-            p,
-            Option(r.getAs[java.lang.Long]("size")).map(_.longValue).getOrElse(0L),
-            Option(r.getAs[java.lang.Long]("mtime")).map(_.longValue).getOrElse(0L),
-            Option(r.getAs[scala.collection.Map[String, String]]("pv"))
-              .map(_.toMap)
-              .getOrElse(Map.empty),
-            dv
-          )
-        }
-        Option(r.getAs[String]("schemaStr")).foreach(s =>
-          schema = Some(DataType.fromJson(s).asInstanceOf[StructType])
-        )
-        Option(r.getAs[scala.collection.Seq[String]]("partCols"))
-          .foreach(pc => partitionColumns = pc.toSeq)
-        Option(r.getAs[String]("metaId")).foreach(id => tableId = Some(id))
-        cfg.foreach(configuration = _)
-      }
+        .iterator
+        .zipWithIndex
+        .foreach { case (line, i) => applyAction(line, s"checkpoint v$cv row ${i + 1}") }
     }
 
     commitFiles
@@ -395,89 +400,13 @@ object DeltaRead {
         v <= version && checkpoint.forall(v > _._1)
       }
       .foreach { s =>
-        val commitName = s.getPath.getName
-        // structured per-line errors: a foreign/corrupt log must name the
-        // commit file and line, never die as a bare Jackson/NPE stack or —
-        // worse — skip the line and return a silently-wrong snapshot
-        def bad(lineNo: Int, why: String, cause: Throwable = null) =
-          throw new IllegalArgumentException(
-            s"malformed delta commit $commitName line $lineNo: $why",
-            cause
-          )
         readUtf8(fs, s.getPath)
           .split("\n")
           .iterator
           .zipWithIndex
           .filter(_._1.nonEmpty)
           .foreach { case (line, idx) =>
-            val node =
-              try mapper.readTree(line)
-              catch {
-                case e: com.fasterxml.jackson.core.JacksonException =>
-                  bad(idx + 1, s"unparseable JSON (${e.getOriginalMessage})", e)
-              }
-            if (node == null || !node.isObject)
-              bad(idx + 1, "line is not a JSON action object")
-            requireSupported(node)
-            val add = node.get("add")
-            if (add != null) {
-              if (!add.hasNonNull("path") || !add.get("path").isTextual)
-                bad(idx + 1, "add action without a textual path")
-              val p = add.get("path").asText()
-              val pv = Option(add.get("partitionValues"))
-                .filter(_.isObject)
-                .map(
-                  _.properties().asScala.map { e =>
-                    e.getKey -> (if (e.getValue.isNull) null
-                                 else e.getValue.asText())
-                  }.toMap
-                )
-                .getOrElse(Map.empty[String, String])
-              active(p) = AddFile(
-                p,
-                add.path("size").asLong(0L),
-                add.path("modificationTime").asLong(0L),
-                pv,
-                parseDvNode(add.get("deletionVector"))
-              )
-            }
-            val remove = node.get("remove")
-            if (remove != null) {
-              // textuality matters for remove in particular: asText() on an
-              // object node returns "", which would silently no-op the
-              // removal and leave a deleted file live in the snapshot
-              if (!remove.hasNonNull("path") || !remove.get("path").isTextual)
-                bad(idx + 1, "remove action without a textual path")
-              active -= remove.get("path").asText()
-            }
-            val meta = node.get("metaData")
-            if (meta != null && meta.hasNonNull("schemaString"))
-              schema = Some(
-                try
-                  DataType
-                    .fromJson(meta.get("schemaString").asText())
-                    .asInstanceOf[StructType]
-                catch {
-                  case e: Exception =>
-                    bad(idx + 1, s"invalid metaData.schemaString: ${e.getMessage}", e)
-                }
-              )
-            if (meta != null && meta.hasNonNull("partitionColumns"))
-              partitionColumns = meta
-                .get("partitionColumns")
-                .elements()
-                .asScala
-                .map(_.asText())
-                .toSeq
-            if (meta != null && meta.hasNonNull("id"))
-              tableId = Some(meta.get("id").asText())
-            if (meta != null && meta.hasNonNull("configuration"))
-              configuration = meta
-                .get("configuration")
-                .properties()
-                .asScala
-                .map(e => e.getKey -> e.getValue.asText())
-                .toMap
+            applyAction(line, s"commit ${s.getPath.getName} line ${idx + 1}")
           }
       }
 
@@ -487,7 +416,8 @@ object DeltaRead {
       schema,
       partitionColumns,
       tableId,
-      configuration
+      configuration,
+      txns.toMap
     )
   }
 
@@ -523,8 +453,27 @@ object DeltaRead {
     StructField(name, physicalType(f.dataType), f.nullable)
   }
 
-  private def mappingMode(snap: Snapshot): Option[String] =
-    snap.configuration.get("delta.columnMapping.mode").filter(columnMappingEnabled)
+  /** A column-mapped schema's (logical, physical) pair: the parquet files
+    * carry the physical names. */
+  private def mapping(logical: StructType): (StructType, StructType) =
+    logical -> StructType(logical.fields.map(physicalField))
+
+  private def mapping(snap: Snapshot, dir: String): Option[(StructType, StructType)] =
+    if (!snap.columnMapped) None
+    else
+      Some(mapping(snap.schema.getOrElse(
+        throw new IllegalArgumentException(s"column-mapped delta table $dir has no metaData schema")
+      )))
+
+  /** Select `from`'s columns renamed (and, for nested renames, cast) to the
+    * positionally matching fields of `to`: physical -> logical on read,
+    * logical -> physical on write. */
+  private def renameColumns(df: DataFrame, from: StructType, to: StructType, extra: Seq[Column] = Seq.empty): DataFrame =
+    df.select(from.fields.zip(to.fields).map { case (f, t) =>
+      val c = col(s"`${f.name}`")
+      // a cast between same-typed structs renames nested fields
+      (if (f.dataType == t.dataType) c else c.cast(t.dataType)).as(t.name)
+    }.toSeq ++ extra: _*)
 
   /** Read the table at `versionAsOf` (default latest) as a DataFrame: the
     * log replay is driver-side metadata; the data read is a distributed
@@ -567,20 +516,10 @@ object DeltaRead {
     }
 
     val root = new Path(tableDir)
-    val mode = mappingMode(snap)
     // with column mapping the parquet files carry PHYSICAL names; read with
     // the physical schema and rename back to the logical one afterwards
-    val logical: Option[StructType] = snap.schema
-    val readSchema: Option[StructType] = mode match {
-      case Some(_) =>
-        val log = logical.getOrElse(
-          throw new IllegalArgumentException(
-            s"column-mapped delta table $tableDir has no metaData schema"
-          )
-        )
-        Some(StructType(log.fields.map(physicalField)))
-      case None => logical
-    }
+    val mapped = mapping(snap, tableDir)
+    val readSchema: Option[StructType] = mapped.map(_._2).orElse(snap.schema)
 
     // basePath keeps hive-layout partition dirs (key=value) readable as
     // partition columns, the same convention the provider uses for parquet
@@ -629,20 +568,12 @@ object DeltaRead {
 
     val unioned = (plainDf.toSeq ++ dvDf.toSeq).reduce(_.unionByName(_))
 
-    mode match {
+    mapped match {
       case None => unioned
-      case Some(_) =>
-        val log = logical.get
-        val phys = readSchema.get
-        val renamed = phys.fields.zip(log.fields).map { case (pf, lf) =>
-          val c = col(s"`${pf.name}`")
-          // a cast between same-typed structs renames nested fields
-          val cc = if (pf.dataType == lf.dataType) c else c.cast(lf.dataType)
-          cc.as(lf.name)
-        }
+      case Some((log, phys)) =>
         val metaExtra =
           if (withMeta) Seq(col("__graft_file"), col("__graft_row")) else Seq.empty
-        unioned.select(renamed ++ metaExtra: _*)
+        renameColumns(unioned, phys, log, metaExtra)
     }
   }
 
@@ -751,7 +682,7 @@ object DeltaRead {
     val descriptors = DeletionVectors.writeFile(fs, root, affected.map(_._2), uuid)
 
     val readerFeatures = Seq("deletionVectors") ++
-      (if (mappingMode(snap).isDefined) Seq("columnMapping") else Seq.empty)
+      (if (snap.columnMapped) Seq("columnMapping") else Seq.empty)
     val featJson = readerFeatures.map(f => s""""$f"""").mkString(",")
     val protocolLine =
       s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
@@ -762,7 +693,7 @@ object DeltaRead {
     val adds = affected.zip(descriptors).map { case ((a, _), d) =>
       val pv = mapper.writeValueAsString(a.partitionValues.asJava)
       val dv =
-        s"""{"storageType":"${d.storageType}",""" +
+        s"""{"storageType":${mapper.writeValueAsString(d.storageType)},""" +
           s""""pathOrInlineDv":${mapper.writeValueAsString(d.pathOrInlineDv)},""" +
           s""""offset":${d.offset.getOrElse(0)},"sizeInBytes":${d.sizeInBytes},""" +
           s""""cardinality":${d.cardinality}}"""
@@ -776,65 +707,76 @@ object DeltaRead {
     version
   }
 
-  /** Append `df` to an existing delta table as one new commit: the new rows
-    * are written as parquet parts into the table directory, then a single
-    * `<latest+1>.json` commit adds exactly those files. Single-writer only —
-    * real concurrent commits need a coordinator (the reference gets one from
-    * the deltalake crate's LogStore); this covers the ingest-append shape so
-    * log replay, time travel and checkpointing can be exercised end-to-end.
+  /** Append `df` to the delta table at `dir` as one new commit: the new
+    * rows are written as parquet parts into the table directory, then a
+    * single `<latest+1>.json` commit adds exactly those files. A directory
+    * without `_delta_log` is bootstrapped: the append writes version 0
+    * (protocol + metaData, partitioned by `partitionBy`) and never deletes
+    * what the directory already holds. Single-writer only — real
+    * concurrent commits need a coordinator (the reference gets one from the
+    * deltalake crate's LogStore); this covers the ingest-append shape so log
+    * replay, time travel and checkpointing can be exercised end-to-end.
     * Returns the new version. */
-  def append(
+  def append(df: DataFrame, dir: String, partitionBy: Seq[String] = Seq.empty): Long =
+    commit(df, dir, existing(df.sparkSession, dir), partitionBy, Seq.empty)
+
+  /** The snapshot of the table at `dir`, or None when it has no
+    * `_delta_log` yet. */
+  private def existing(spark: SparkSession, dir: String): Option[Snapshot] = {
+    val logDir = new Path(dir, "_delta_log")
+    if (isDir(fsOf(logDir, hadoopConf(Some(spark))), logDir)) Some(snapshot(spark, dir))
+    else None
+  }
+
+  /** The one write-and-commit path behind [[create]], [[append]] and
+    * [[appendIdempotent]]: write `df` as parquet parts into `dir`, then
+    * commit `actions` plus one add per new data file as the version after
+    * `snap` in one atomic commit file. With `snap` None the commit is
+    * version 0 and leads with the protocol and metaData actions for `df`'s
+    * schema, partitioned by `partitionBy`, in column-mapping mode `name`
+    * when `columnMapping` is set. */
+  private def commit(
       df: DataFrame,
       dir: String,
-      extraActions: Seq[String] = Seq.empty,
-      partitionBy: Seq[String] = Seq.empty
+      snap: Option[Snapshot],
+      partitionBy: Seq[String],
+      actions: Seq[String],
+      columnMapping: Boolean = false
   ): Long = {
     val root = new Path(dir)
     val fs = fsOf(root, hadoopConf(Some(df.sparkSession)))
-    val before = dataFileStatuses(fs, root).keySet
-    val snap = snapshot(df.sparkSession, dir)
-    // an append MUST match the table's declared partitioning — a flat
-    // append into a hive-layout table (or vice versa) corrupts the
-    // directory structure for every later read. Defaults to the table's
-    // own partition columns so plain append(df, dir) does the right thing.
-    val effectivePartitionBy =
-      if (partitionBy.nonEmpty) {
+    val (version, header, mapped, partitionColumns) = snap match {
+      case Some(s) =>
+        // an append MUST match the table's declared partitioning — a flat
+        // append into a hive-layout table (or vice versa) corrupts the
+        // directory structure for every later read. Defaults to the table's
+        // own partition columns so plain append(df, dir) does the right thing.
         require(
-          partitionBy == snap.partitionColumns,
-          s"append partitionBy $partitionBy != table partitionColumns ${snap.partitionColumns}"
+          partitionBy.isEmpty || partitionBy == s.partitionColumns,
+          s"append partitionBy $partitionBy != table partitionColumns ${s.partitionColumns}"
         )
-        partitionBy
-      } else snap.partitionColumns
+        (s.version + 1, Seq.empty[String], mapping(s, dir), s.partitionColumns)
+      case None =>
+        val logical = if (columnMapping) withPhysicalNames(df.schema, dir) else df.schema
+        (0L, versionZero(logical, dir, partitionBy, columnMapping),
+          Some(mapping(logical)).filter(_ => columnMapping), partitionBy)
+    }
     // column-mapped tables store PHYSICAL names on disk: rename the logical
     // input (and the partition directories) before writing
-    val (outDf, outPartitionBy) = mappingMode(snap) match {
-      case Some(_) =>
-        val log = snap.schema.getOrElse(
-          throw new IllegalArgumentException(
-            s"column-mapped delta table $dir has no metaData schema"
-          )
-        )
-        val phys = StructType(log.fields.map(physicalField))
-        val renamed = log.fields.zip(phys.fields).map { case (lf, pf) =>
-          val c = col(s"`${lf.name}`")
-          val cc = if (lf.dataType == pf.dataType) c else c.cast(pf.dataType)
-          cc.as(pf.name)
-        }
+    val (outDf, outPartitionBy) = mapped match {
+      case Some((log, phys)) =>
         val physByLogical = log.fieldNames.zip(phys.fieldNames).toMap
-        (df.select(renamed.toSeq: _*), effectivePartitionBy.map(physByLogical))
-      case None => (df, effectivePartitionBy)
+        (renameColumns(df, log, phys), partitionColumns.map(physByLogical))
+      case None => (df, partitionColumns)
     }
+    val before = dataFileStatuses(fs, root).keySet
     val writer = outDf.write.mode("append")
-    val partitioned =
-      if (outPartitionBy.nonEmpty)
-        writer.partitionBy(outPartitionBy: _*)
-      else writer
-    partitioned.parquet(dir)
+    (if (outPartitionBy.nonEmpty) writer.partitionBy(outPartitionBy: _*) else writer)
+      .parquet(dir)
     dropWriteMarkers(fs, root)
     val after = dataFileStatuses(fs, root)
     val added = (after.keySet -- before).toSeq.sorted
-    val version = snap.version + 1
-    val lines = extraActions ++ added.map(name => addActionJson(name, after(name)))
+    val lines = header ++ actions ++ added.map(name => addActionJson(name, after(name)))
     writeCommitAtomic(fs, new Path(root, "_delta_log"), version, lines)
     version
   }
@@ -846,123 +788,54 @@ object DeltaRead {
       .filter(s => s.isFile && s.getPath.getName.startsWith("_"))
       .foreach(s => fs.delete(s.getPath, false))
 
-  /** Highest committed `txn` action version for `appId`, or None — the
-    * delta protocol's application-transaction marker that makes retried
-    * writes detectable. Scans every commit file (our [[checkpoint]] does not
-    * fold txn actions, and commit files are never deleted here), so the
-    * answer is exact regardless of checkpointing. */
-  def lastTxnVersion(dir: String, appId: String): Option[Long] = {
-    val logDir = new Path(dir, "_delta_log")
-    val fs = fsOf(logDir, hadoopConf(None))
-    if (!isDir(fs, logDir)) return None
-    val versions = for {
-      s <- fs.listStatus(logDir).toSeq
-      if s.isFile && s.getPath.getName.matches("\\d{20}\\.json")
-      line <- readUtf8(fs, s.getPath).split("\n").toSeq
-      if line.nonEmpty
-      node = mapper.readTree(line)
-      txn <- Option(node.get("txn"))
-      if txn.path("appId").asText() == appId
-    } yield txn.path("version").asLong()
-    if (versions.isEmpty) None else Some(versions.max)
-  }
+  /** Commits between checkpoints [[appendIdempotent]] folds: the
+    * log-compaction cadence that keeps a long-lived streamed table's replay
+    * O(interval), not O(table age). */
+  private val CheckpointInterval = 10
 
   /** Exactly-once append: commit `df` together with a `txn` marker
-    * (appId, txnVersion) in the SAME atomic commit file; if a commit with
-    * `txnVersion` (or later) for `appId` already exists, do nothing. A crash
+    * (appId, txnVersion) in the SAME atomic commit file; if the snapshot
+    * already holds `txnVersion` (or later) for `appId`, do nothing. A crash
     * before the commit move leaves no commit at all — the replayed batch
     * then re-appends cleanly (its orphaned parquet parts are never
-    * referenced by any commit and stay invisible to readers).
+    * referenced by any commit and stay invisible to readers). The marker
+    * check and the commit share one snapshot, so a call reads the log once;
+    * the first call bootstraps the table.
     *
-    * With `checkpointEvery > 0`, a checkpoint is folded every that many
-    * versions — the log-compaction cadence that keeps long-lived streamed
-    * tables' replay O(interval), not O(table age). Returns true when the
-    * append actually committed. */
+    * Every [[CheckpointInterval]] (10) versions a checkpoint is folded; it
+    * carries the txn markers, so replays stay detectable after commits
+    * older than it are cleaned. Returns true when the append actually
+    * committed. */
   def appendIdempotent(
       df: DataFrame,
       dir: String,
       appId: String,
-      txnVersion: Long,
-      checkpointEvery: Int = 0
+      txnVersion: Long
   ): Boolean = {
-    if (lastTxnVersion(dir, appId).exists(_ >= txnVersion)) return false
-    val txnLine = s"""{"txn":{"appId":"$appId","version":$txnVersion}}"""
-    // first batch bootstraps the table; later batches append a commit
-    val version =
-      if (!isDeltaTable(dir)) { create(df, dir, extraActions = Seq(txnLine)); 0L }
-      else append(df, dir, extraActions = Seq(txnLine))
-    if (checkpointEvery > 0 && version > 0 && version % checkpointEvery == 0)
+    val snap = existing(df.sparkSession, dir)
+    if (snap.exists(_.txns.get(appId).exists(_ >= txnVersion))) return false
+    val txnLine =
+      s"""{"txn":{"appId":${mapper.writeValueAsString(appId)},"version":$txnVersion}}"""
+    val version = commit(df, dir, snap, Seq.empty, Seq(txnLine))
+    if (version > 0 && version % CheckpointInterval == 0)
       checkpoint(df.sparkSession, dir)
     true
   }
 
   // ---------- checkpoint ----------
 
-  private def checkpointSchema: StructType = StructType(
-    Seq(
-      StructField(
-        "protocol",
-        StructType(
-          Seq(
-            StructField("minReaderVersion", IntegerType),
-            StructField("minWriterVersion", IntegerType),
-            StructField("readerFeatures", ArrayType(StringType)),
-            StructField("writerFeatures", ArrayType(StringType))
-          )
-        ),
-        nullable = true
-      ),
-      StructField(
-        "metaData",
-        StructType(
-          Seq(
-            StructField("id", StringType),
-            StructField(
-              "format",
-              StructType(
-                Seq(
-                  StructField("provider", StringType),
-                  StructField("options", MapType(StringType, StringType))
-                )
-              )
-            ),
-            StructField("schemaString", StringType),
-            StructField("partitionColumns", ArrayType(StringType)),
-            StructField("configuration", MapType(StringType, StringType))
-          )
-        ),
-        nullable = true
-      ),
-      StructField(
-        "add",
-        StructType(
-          Seq(
-            StructField("path", StringType),
-            StructField(
-              "partitionValues",
-              MapType(StringType, StringType, valueContainsNull = true)
-            ),
-            StructField("size", LongType),
-            StructField("modificationTime", LongType),
-            StructField("dataChange", BooleanType),
-            StructField(
-              "deletionVector",
-              StructType(
-                Seq(
-                  StructField("storageType", StringType),
-                  StructField("pathOrInlineDv", StringType),
-                  StructField("offset", IntegerType),
-                  StructField("sizeInBytes", IntegerType),
-                  StructField("cardinality", LongType)
-                )
-              ),
-              nullable = true
-            )
-          )
-        ),
-        nullable = true
-      )
-    )
+  /** A checkpoint row: one nullable struct per action kind. */
+  private lazy val checkpointSchema: StructType = StructType.fromDDL(
+    "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
+      "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>, " +
+      "metaData STRUCT<id: STRING, format: STRUCT<provider: STRING, " +
+      "options: MAP<STRING, STRING>>, schemaString: STRING, " +
+      "partitionColumns: ARRAY<STRING>, configuration: MAP<STRING, STRING>>, " +
+      "add STRUCT<path: STRING, partitionValues: MAP<STRING, STRING>, size: BIGINT, " +
+      "modificationTime: BIGINT, dataChange: BOOLEAN, deletionVector: STRUCT<" +
+      "storageType: STRING, pathOrInlineDv: STRING, offset: INT, sizeInBytes: INT, " +
+      "cardinality: BIGINT>>, " +
+      "txn STRUCT<appId: STRING, version: BIGINT>"
   )
 
   /** Fold the snapshot at the latest version into a parquet checkpoint
@@ -977,7 +850,8 @@ object DeltaRead {
     * so a partitioned table stays partitioned across a checkpoint), and one
     * `add` per active file carrying partitionValues / size /
     * modificationTime (`dataChange=false`, as the protocol requires of
-    * checkpoint adds). Returns the checkpointed version. */
+    * checkpoint adds), and one `txn` per appId with its highest version.
+    * Returns the checkpointed version. */
   def checkpoint(spark: SparkSession, dir: String, parts: Int = 1): Long = {
     require(parts >= 1, s"checkpoint parts must be >= 1, got $parts")
     val snap = snapshot(spark, dir)
@@ -990,17 +864,13 @@ object DeltaRead {
     // protocol upgrade
     val features = Seq(
       "deletionVectors" -> snap.adds.exists(_.deletionVector.isDefined),
-      "columnMapping" -> mappingMode(snap).isDefined
+      "columnMapping" -> snap.columnMapped
     ).collect { case (f, true) => f }
     val protocolRow =
-      if (features.isEmpty) Row(Row(1, 2, null, null), null, null)
-      else Row(Row(3, 7, features, features), null, null)
+      if (features.isEmpty) Row(Row(1, 2, null, null), null, null, null)
+      else Row(Row(3, 7, features, features), null, null, null)
     // id must be stable for a given location when the log never declared one
-    val tableId = snap.tableId.getOrElse(
-      java.util.UUID
-        .nameUUIDFromBytes(dir.getBytes(StandardCharsets.UTF_8))
-        .toString
-    )
+    val tableId = snap.tableId.getOrElse(locationId(dir))
     val metaRow = Row(
       null,
       Row(
@@ -1010,6 +880,7 @@ object DeltaRead {
         snap.partitionColumns,
         snap.configuration
       ),
+      null,
       null
     )
     val addRows = snap.adds.map { a =>
@@ -1021,18 +892,23 @@ object DeltaRead {
       Row(
         null,
         null,
-        Row(a.path, a.partitionValues, a.size, a.modificationTime, false, dvRow)
+        Row(a.path, a.partitionValues, a.size, a.modificationTime, false, dvRow),
+        null
       )
     }
+    val txnRows = snap.txns.toSeq.sorted.map { case (appId, v) =>
+      Row(null, null, null, Row(appId, v))
+    }
+    val headRows = Seq(protocolRow, metaRow) ++ txnRows
 
     val groups: Seq[Seq[Row]] =
-      if (parts == 1) Seq(Seq(protocolRow, metaRow) ++ addRows)
+      if (parts == 1) Seq(headRows ++ addRows)
       else
         (0 until parts).map { i =>
           val slice = addRows.zipWithIndex.collect {
             case (r, j) if j % parts == i => r
           }
-          if (i == 0) Seq(protocolRow, metaRow) ++ slice else slice
+          if (i == 0) headRows ++ slice else slice
         }
 
     val targets = checkpointPaths(
@@ -1048,7 +924,7 @@ object DeltaRead {
     writeAtomic(
       fs,
       new Path(logDir, "_last_checkpoint"),
-      s"""{"version":${snap.version},"size":${addRows.size + 2}$partsField}""",
+      s"""{"version":${snap.version},"size":${headRows.size + addRows.size}$partsField}""",
       overwrite = true
     )
     snap.version
@@ -1083,7 +959,7 @@ object DeltaRead {
     fs.delete(tmp, true)
   }
 
-  // ---------- create ----------
+  // ---------- writing ----------
 
   /** Relative paths of all parquet data files under `root` with their
     * statuses (size/modTime feed add actions), recursing into hive-layout
@@ -1105,7 +981,7 @@ object DeltaRead {
   }
 
   private def addActionJson(name: String, status: FileStatus): String =
-    s"""{"add":{"path":"$name","partitionValues":${partitionValuesJson(name)},""" +
+    s"""{"add":{"path":${mapper.writeValueAsString(name)},"partitionValues":${partitionValuesJson(name)},""" +
       s""""size":${status.getLen},"modificationTime":${status.getModificationTime},""" +
       s""""dataChange":true}}"""
 
@@ -1115,20 +991,6 @@ object DeltaRead {
     * null sentinel — but the delta protocol records the ACTUAL values
     * (null as JSON null), so unescape before serializing. */
   private def partitionValuesJson(relPath: String): String = {
-    def unescape(s: String): String = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '%' && i + 3 <= s.length)
-          try {
-            sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-            i += 3
-          } catch { case _: NumberFormatException => sb.append(c); i += 1 }
-        else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
     val kvs = relPath
       .split("/")
       .dropRight(1)
@@ -1136,19 +998,19 @@ object DeltaRead {
       .filter(_.contains("="))
       .map { seg =>
         val Array(k, v) = seg.split("=", 2)
-        val key = mapper.writeValueAsString(unescape(k))
+        val key = mapper.writeValueAsString(unescapePathName(k))
         val value =
-          if (v == "__HIVE_DEFAULT_PARTITION__") "null"
-          else mapper.writeValueAsString(unescape(v))
+          if (v == DEFAULT_PARTITION_NAME) "null"
+          else mapper.writeValueAsString(unescapePathName(v))
         s"$key:$value"
       }
     s"{${kvs.mkString(",")}}"
   }
 
-  /** Bootstrap a delta table from `df` at `dir`: distributed parquet write
-    * (hive-layout when `partitionBy` is set), then a version-0 commit
-    * (protocol + metaData + one add per data file with its partitionValues,
-    * plus any `extraActions`, all in one atomic commit file). Single-writer
+  /** Replace whatever is at `dir` with a delta table holding `df`:
+    * distributed parquet write (hive-layout when `partitionBy` is set), then
+    * a version-0 commit (protocol + metaData + one add per data file with
+    * its partitionValues, all in one atomic commit file). Single-writer
     * create; [[append]] adds commits, [[checkpoint]] folds them.
     *
     * With `columnMapping=true` the table is created in
@@ -1162,53 +1024,47 @@ object DeltaRead {
   def create(
       df: DataFrame,
       dir: String,
-      extraActions: Seq[String] = Seq.empty,
       partitionBy: Seq[String] = Seq.empty,
       columnMapping: Boolean = false
   ): Unit = {
     val root = new Path(dir)
     val fs = fsOf(root, hadoopConf(Some(df.sparkSession)))
     if (fs.exists(root)) fs.delete(root, true)
+    commit(df, dir, None, partitionBy, Seq.empty, columnMapping)
+  }
 
-    val (logicalSchema, outDf, outPartitionBy) =
-      if (!columnMapping) (df.schema, df, partitionBy)
-      else {
-        val fields = df.schema.fields.zipWithIndex.map { case (f, i) =>
-          val phys = "col-" + java.util.UUID.nameUUIDFromBytes(
-            s"$dir#${f.name}".getBytes(StandardCharsets.UTF_8)
-          )
-          f.copy(metadata =
-            new MetadataBuilder()
-              .withMetadata(f.metadata)
-              .putLong("delta.columnMapping.id", (i + 1).toLong)
-              .putString(PhysicalNameKey, phys)
-              .build()
-          )
-        }
-        val logical = StructType(fields)
-        val physByLogical =
-          fields.map(f => f.name -> f.metadata.getString(PhysicalNameKey)).toMap
-        val renamed =
-          df.schema.fieldNames.map(n => col(s"`$n`").as(physByLogical(n)))
-        (logical, df.select(renamed.toSeq: _*), partitionBy.map(physByLogical))
-      }
+  /** `schema` with the column-mapping field metadata on each top-level
+    * field: its 1-based id and a `col-<uuid>` physical name. */
+  private def withPhysicalNames(schema: StructType, dir: String): StructType =
+    StructType(schema.fields.zipWithIndex.map { case (f, i) =>
+      val phys = "col-" + java.util.UUID.nameUUIDFromBytes(
+        s"$dir#${f.name}".getBytes(StandardCharsets.UTF_8)
+      )
+      f.copy(metadata =
+        new MetadataBuilder()
+          .withMetadata(f.metadata)
+          .putLong("delta.columnMapping.id", (i + 1).toLong)
+          .putString(PhysicalNameKey, phys)
+          .build()
+      )
+    })
 
-    val writer = outDf.write
-    val partitioned =
-      if (outPartitionBy.nonEmpty) writer.partitionBy(outPartitionBy: _*)
-      else writer
-    partitioned.parquet(dir)
-    dropWriteMarkers(fs, root)
-    val logDir = new Path(root, "_delta_log")
-    fs.mkdirs(logDir)
-    // table id must be stable for a given location (no wall-clock / RNG)
-    val tableId = java.util.UUID
-      .nameUUIDFromBytes(dir.getBytes(StandardCharsets.UTF_8))
-      .toString
-    val schemaJson = mapper.writeValueAsString(logicalSchema.json)
+  /** Table id for a location: stable (no wall-clock / RNG), so rewrites of
+    * the same table are byte-identical. */
+  private def locationId(dir: String): String =
+    java.util.UUID.nameUUIDFromBytes(dir.getBytes(StandardCharsets.UTF_8)).toString
+
+  /** The protocol and metaData lines that open version 0. */
+  private def versionZero(
+      logical: StructType,
+      dir: String,
+      partitionBy: Seq[String],
+      columnMapping: Boolean
+  ): Seq[String] = {
+    def str(s: String): String = mapper.writeValueAsString(s)
     // metaData.partitionColumns stay LOGICAL; the directories (and each
     // add's partitionValues keys) carry the physical names
-    val partCols = partitionBy.map(c => s""""$c"""").mkString(",")
+    val partCols = partitionBy.map(str).mkString(",")
     val protocolLine =
       if (!columnMapping) """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
       else
@@ -1217,15 +1073,11 @@ object DeltaRead {
     val config =
       if (!columnMapping) "{}"
       else
-        s"""{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"${df.schema.length}"}"""
-    val statuses = dataFileStatuses(fs, root)
-    val lines = Seq(
+        s"""{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"${logical.length}"}"""
+    Seq(
       protocolLine,
-      s"""{"metaData":{"id":"$tableId","format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":$schemaJson,"partitionColumns":[$partCols],"configuration":$config}}"""
-    ) ++ extraActions ++ statuses.keys.toSeq.sorted.map(name =>
-      addActionJson(name, statuses(name))
+      s"""{"metaData":{"id":${str(locationId(dir))},"format":{"provider":"parquet","options":{}},""" +
+        s""""schemaString":${str(logical.json)},"partitionColumns":[$partCols],"configuration":$config}}"""
     )
-    writeCommitAtomic(fs, logDir, 0L, lines)
   }
 }

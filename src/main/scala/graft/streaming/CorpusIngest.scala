@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{Dedup, Repetition, Spread}
 import graft.sources.DeltaRead
@@ -17,8 +17,10 @@ import graft.sources.DeltaRead
   *      ([[Dedup.dedupAgainstCorpus]] — MinHash-LSH cross-corpus candidates,
   *      cost ∝ batch, never ∝ corpus),
   *   4. appended to the delta corpus exactly once
-  *      ([[DeltaRead.appendIdempotent]] with batchId as txn version — a
-  *      replayed batch after a crash cannot double-ingest).
+  *      ([[DeltaSink.exactlyOnce]]: [[DeltaRead.appendIdempotent]] with
+  *      batchId as txn version — a replayed batch after a crash cannot
+  *      double-ingest — and a log checkpoint every 10 commits, so the
+  *      long-lived corpus replays O(interval), not O(batches ingested)).
   *
   * Scale shape: per batch, the corpus side contributes one sketch pass
   * (in production the corpus band table is maintained incrementally; here it
@@ -103,7 +105,11 @@ object CorpusIngest {
     )
 
   /** Streaming writer running [[prepareBatch]] + exactly-once append per
-    * micro-batch. Caller sets checkpointLocation and start()s. */
+    * micro-batch ([[DeltaSink.exactlyOnce]], which also folds the corpus log
+    * into a checkpoint every 10 commits). A replayed batch commits nothing
+    * and its dedup against a corpus that already holds its rows never runs
+    * (only dedupAgainstCorpus' candidate pin, on a corpus >= Large, is built
+    * eagerly). Caller sets checkpointLocation and start()s. */
   def ingest(
       stream: DataFrame,
       corpusDir: String,
@@ -113,18 +119,10 @@ object CorpusIngest {
       jaccardThreshold: Double = 0.5,
       gate: Gate = Gate()
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // appendIdempotent checks the txn marker before it runs the
-        // prepared frame, so a replayed batch commits nothing and its
-        // dedup against a corpus that already holds its rows never runs
-        // (only dedupAgainstCorpus' candidate pin, on a corpus >= Large,
-        // is built eagerly)
-        val prepared =
-          prepareBatch(batch, corpusDir, textCol, idCol, jaccardThreshold, gate)
-        DeltaRead.appendIdempotent(prepared, corpusDir, appId, batchId)
-        ()
-      }
+    DeltaSink.exactlyOnce(
+      stream,
+      corpusDir,
+      appId,
+      batch => prepareBatch(batch, corpusDir, textCol, idCol, jaccardThreshold, gate)
+    )
 }

@@ -16,26 +16,30 @@ import graft.sources.DeltaRead
   *
   * Scale shape: the data write is a normal distributed parquet append; only
   * the commit-marker bookkeeping is driver-side (one tiny JSON per batch) —
-  * exactly how delta-spark's own streaming sink coordinates.
+  * exactly how delta-spark's own streaming sink coordinates. The log is
+  * folded into a parquet checkpoint every 10 commits (carrying the txn
+  * markers), so a long-lived streamed table's replay stays O(interval)
+  * instead of O(batches ingested).
   */
 object DeltaSink {
 
-  /** Writer that appends each micro-batch to the delta table at `dir`
-    * exactly once under `appId`, folding a parquet checkpoint every
-    * `checkpointEvery` commits so a long-lived streamed table's log replay
-    * stays O(interval) instead of O(batches ingested). Caller sets
-    * checkpointLocation and start()s. */
+  /** Writer that appends each micro-batch, passed through `transform`, to
+    * the delta table at `dir` exactly once under `appId`; the first batch
+    * bootstraps the table. The marker is checked before the transformed
+    * frame is executed, so a replayed batch commits nothing and runs no
+    * write job (eager work inside `transform` itself still runs). Caller
+    * sets checkpointLocation and start()s. */
   def exactlyOnce(
       stream: DataFrame,
       dir: String,
       appId: String,
-      checkpointEvery: Int = 10
+      transform: DataFrame => DataFrame = identity
   ): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DeltaRead.appendIdempotent(batch, dir, appId, batchId, checkpointEvery)
+        DeltaRead.appendIdempotent(transform(batch), dir, appId, batchId)
         ()
       }
 }

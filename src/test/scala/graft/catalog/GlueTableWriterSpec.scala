@@ -58,25 +58,30 @@ class GlueTableWriterSpec extends AnyFunSuite {
 
   test("write delta -> table_type marker -> log-replay read round trip") {
     val root = Files.createTempDirectory("graft_write_delta").toFile
-    val loc = root.getAbsolutePath + "/events_d"
-    val glueTable = GlueTableWriter.write(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-      "dbw", "events_d", loc, format = "delta"
-    )
-    assert(glueTable.parameters("table_type") == "delta")
-    assert(glueTable.storageDescriptor.columns.map(_.name) == Seq("id", "v"))
+    // a plain path and a schemeful URI: Append must find the log (and
+    // totalSize must count the data) through the Hadoop FileSystem on both
+    for (loc <- Seq(root.getAbsolutePath + "/events_d", "file://" + root.getAbsolutePath + "/events_u")) {
+      val glueTable = GlueTableWriter.write(
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+        "dbw", "events_d", loc, format = "delta"
+      )
+      assert(glueTable.parameters("table_type") == "delta")
+      assert(glueTable.storageDescriptor.columns.map(_.name) == Seq("id", "v"))
 
-    // append mode adds a commit to the same log
-    GlueTableWriter.write(
-      Seq((3L, "c")).toDF("id", "v"),
-      "dbw", "events_d", loc, format = "delta",
-      mode = org.apache.spark.sql.SaveMode.Append
-    )
+      // append mode adds a commit to the same log
+      val appended = GlueTableWriter.write(
+        Seq((3L, "c")).toDF("id", "v"),
+        "dbw", "events_d", loc, format = "delta",
+        mode = org.apache.spark.sql.SaveMode.Append,
+        statsColumns = Seq("id")
+      )
+      assert(appended.parameters(TableStatistics.TotalSizeParam).toLong > 0L, loc)
 
-    val p = new GlueCatalogProvider(new InMemoryGlueClient(Seq(glueTable)), spark)
-    val back = p.registerTable("dbw", "events_d")
-    assert(back.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
-    // and time travel still sees the pre-append snapshot
-    assert(graft.sources.DeltaRead.read(spark, loc, Some(0L)).count() == 2)
+      val p = new GlueCatalogProvider(new InMemoryGlueClient(Seq(glueTable)), spark)
+      val back = p.registerTable("dbw", "events_d")
+      assert(back.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L), loc)
+      // and time travel still sees the pre-append snapshot
+      assert(graft.sources.DeltaRead.read(spark, loc, Some(0L)).count() == 2)
+    }
   }
 }

@@ -21,6 +21,20 @@ class DeltaReadSpec extends AnyFunSuite {
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
     )
 
+  /** Write `rows` (columns named after checkpoint actions) as the
+    * single-file checkpoint of `version` and point `_last_checkpoint` at it. */
+  private def writeCheckpoint(dir: String, version: Long, rows: org.apache.spark.sql.DataFrame): Unit = {
+    val cpTmp = Files.createTempDirectory("graft_delta_cptmp").toString
+    rows.coalesce(1).write.mode("overwrite").parquet(cpTmp)
+    val part = new File(cpTmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val logDir = new File(dir, "_delta_log")
+    Files.copy(part.toPath,
+      new File(logDir, f"$version%020d.checkpoint.parquet").toPath)
+    Files.write(new File(logDir, "_last_checkpoint").toPath,
+      s"""{"version":$version}""".getBytes(StandardCharsets.UTF_8))
+  }
+
   private def dataFiles(dir: String): Seq[String] =
     new File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
       .map(_.getName).sorted.toSeq
@@ -132,23 +146,16 @@ class DeltaReadSpec extends AnyFunSuite {
     ))
     val schemaJson = StructType(Seq(StructField("id", LongType))).json
 
-    // build the single-file checkpoint parquet: one row per surviving action
-    val cpTmp = Files.createTempDirectory("graft_delta_cptmp").toString
-    Seq(
+    // build the single-file checkpoint parquet: one row per surviving
+    // action, the actions a row does not carry left null (as Delta's own
+    // checkpoints write them)
+    writeCheckpoint(dir, 1L, Seq(
       (Some(files(1)), None: Option[String]),
       (None, Some(schemaJson))
     ).toDF("p", "s")
       .selectExpr(
-        "named_struct('path', p) AS add",
-        "named_struct('schemaString', s) AS metaData")
-      .coalesce(1).write.mode("overwrite").parquet(cpTmp)
-    val part = new File(cpTmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val logDir = new File(dir, "_delta_log")
-    Files.copy(part.toPath,
-      new File(logDir, f"${1L}%020d.checkpoint.parquet").toPath)
-    Files.write(new File(logDir, "_last_checkpoint").toPath,
-      """{"version":1}""".getBytes(StandardCharsets.UTF_8))
+        "if(p IS NULL, NULL, named_struct('path', p)) AS add",
+        "if(s IS NULL, NULL, named_struct('schemaString', s)) AS metaData"))
 
     // poison the pre-checkpoint commits: if replay read them it would throw
     writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
@@ -167,6 +174,41 @@ class DeltaReadSpec extends AnyFunSuite {
     val empty = DeltaRead.read(spark, dir)
     assert(empty.schema == StructType(Seq(StructField("id", LongType))))
     assert(empty.count() == 0)
+  }
+
+  test("a checkpoint add without a path is refused, naming the checkpoint") {
+    // the same refusal a JSON commit line gets: checkpoint rows go through
+    // the commit-line decoder
+    val dir = Files.createTempDirectory("graft_delta_cp_nopath").toString
+    DeltaRead.create(spark.range(0, 5).toDF("id"), dir)
+    writeCheckpoint(dir, 0L,
+      Seq(1).toDF("x").selectExpr("named_struct('path', CAST(NULL AS STRING), 'size', 1L) AS add"))
+    val e = intercept[IllegalArgumentException](DeltaRead.snapshot(spark, dir))
+    assert(e.getMessage.contains("checkpoint v0 row 1") &&
+      e.getMessage.contains("add action without a textual path"), e.getMessage)
+  }
+
+  test("checkpoint replay does not depend on spark.sql.jsonGenerator.ignoreNullFields") {
+    // without ignoreNullFields a checkpoint row's JSON spells out every
+    // action it does not carry as null; the snapshot must not change
+    val dir = Files.createTempDirectory("graft_delta_cp_nulls").toString
+    val df = Seq((1L, "a", Some("d1")), (2L, "b", None), (3L, "c", Some("d2")))
+      .toDF("id", "v", "ds")
+    DeltaRead.create(df, dir, partitionBy = Seq("ds"))
+    DeltaRead.appendIdempotent(Seq((4L, "d", Some("d1"))).toDF("id", "v", "ds"), dir, "app", 7L)
+    DeltaRead.deleteWhere(spark, dir, $"id" === 1L)
+    assert(DeltaRead.checkpoint(spark, dir) == 2L)
+    // poison the folded commits: the snapshot must come from the checkpoint
+    (0L to 2L).foreach(v => writeCommit(dir, v, Seq("""{"protocol":{"minReaderVersion":9}}""")))
+    val default = DeltaRead.snapshot(spark, dir)
+    assert(default.txns == Map("app" -> 7L))
+    assert(default.adds.exists(_.deletionVector.isDefined))
+    assert(default.adds.exists(a => a.partitionValues.contains("ds") && a.partitionValues("ds") == null))
+    val key = "spark.sql.jsonGenerator.ignoreNullFields"
+    spark.conf.set(key, "false")
+    try assert(DeltaRead.snapshot(spark, dir) == default)
+    finally spark.conf.unset(key)
+    assert(DeltaRead.read(spark, dir).count() == 3)
   }
 
   test("unsupported protocol features fail fast with clear errors") {
@@ -468,6 +510,22 @@ class DeltaReadSpec extends AnyFunSuite {
       assert(r.getLong(2) > 0L)
       assert(!r.getBoolean(3))
     }
+    assert(cp.filter("txn IS NOT NULL").count() == 0)
+
+    // txn markers: one row per appId, carrying its highest version
+    DeltaRead.appendIdempotent(Seq((3L, "z", "d1")).toDF("id", "v", "ds"), dir, "appA", 0L)
+    DeltaRead.appendIdempotent(Seq((4L, "w", "d2")).toDF("id", "v", "ds"), dir, "appA", 4L)
+    DeltaRead.appendIdempotent(Seq((5L, "u", "d1")).toDF("id", "v", "ds"), dir, "appB", 2L)
+    assert(DeltaRead.checkpoint(spark, dir) == 3L)
+    val txns = spark.read
+      .parquet(new File(new File(dir, "_delta_log"), f"${3L}%020d.checkpoint.parquet").getPath)
+      .filter("txn IS NOT NULL")
+      .select("txn.appId", "txn.version")
+      .collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+      .toSeq
+      .sorted
+    assert(txns == Seq("appA" -> 4L, "appB" -> 2L))
   }
 
   test("multi-part checkpoint: write, _last_checkpoint parts, replay") {
@@ -521,7 +579,7 @@ class DeltaReadSpec extends AnyFunSuite {
     DeltaRead.checkpoint(spark, dir)
     DeltaRead.append(spark.range(15, 18).toDF("id"), dir)
     assert(DeltaRead.read(spark, dir).count() == 18)
-    assert(DeltaRead.lastTxnVersion(dir, "nope").isEmpty)
+    assert(DeltaRead.snapshot(spark, dir).txns.get("nope").isEmpty)
     assert(DeltaRead.isDeltaTable(dir))
   }
 

@@ -56,7 +56,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     // restart with no new data: replay guard keeps the corpus unchanged
     runOnce()
     assert(DeltaRead.read(spark, dir).count() == 4)
-    assert(DeltaRead.lastTxnVersion(dir, "corpus-ingest").contains(1L))
+    assert(DeltaRead.snapshot(spark, dir).txns.get("corpus-ingest").contains(1L))
   }
 
   test("prepareBatch: a Huge batch and corpus give the Small-band rows") {

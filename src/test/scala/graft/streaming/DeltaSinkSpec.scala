@@ -1,12 +1,33 @@
 package graft.streaming
 
+import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
 import graft.sources.DeltaRead
+
+/** RawLocalFileSystem under the "graftcount" scheme that counts `open`
+  * calls per file name. Top-level class: Hadoop instantiates it
+  * reflectively from the `fs.graftcount.impl` config key. */
+class CountingFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftcount:///")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFileSystem.opens.computeIfAbsent(f.getName, _ => new AtomicInteger).incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingFileSystem {
+  val opens = new ConcurrentHashMap[String, AtomicInteger]()
+}
 
 class DeltaSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -24,10 +45,64 @@ class DeltaSinkSpec extends AnyFunSuite {
     assert(!DeltaRead.appendIdempotent(
       Seq(3L).toDF("id"), dir, "appA", txnVersion = 1L))
     assert(DeltaRead.read(spark, dir).count() == 3)
-    assert(DeltaRead.lastTxnVersion(dir, "appA").contains(1L))
+    assert(DeltaRead.snapshot(spark, dir).txns.get("appA").contains(1L))
     // a DIFFERENT app's versions are tracked independently
     assert(DeltaRead.appendIdempotent(
       Seq(9L).toDF("id"), dir, "appB", txnVersion = 0L))
+    assert(DeltaRead.read(spark, dir).count() == 4)
+  }
+
+  test("appendIdempotent: an appId with a quote commits valid JSON and replays as a no-op") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_delta_txn_quote").toString
+    val appId = "a\"b"
+    assert(DeltaRead.appendIdempotent(Seq(1L).toDF("id"), dir, appId, txnVersion = 0L))
+    assert(DeltaRead.appendIdempotent(Seq(2L).toDF("id"), dir, appId, txnVersion = 1L))
+    assert(!DeltaRead.appendIdempotent(Seq(2L).toDF("id"), dir, appId, txnVersion = 1L))
+    assert(DeltaRead.snapshot(spark, dir).txns == Map(appId -> 1L))
+    assert(DeltaRead.read(spark, dir).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("appendIdempotent: txn markers survive a checkpoint and the cleanup of the commits it folds") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_delta_txn_cp").toString
+    // app a commits v0..v10 (the tenth commit folds a checkpoint), app b v11
+    (0L to 10L).foreach(v => assert(DeltaRead.appendIdempotent(Seq(v).toDF("id"), dir, "a", v)))
+    assert(DeltaRead.appendIdempotent(Seq(100L).toDF("id"), dir, "b", 0L))
+    val logDir = new File(dir, "_delta_log")
+    assert(new File(logDir, f"${10L}%020d.checkpoint.parquet").isFile)
+    // a log cleaner drops every commit the checkpoint covers: only the
+    // checkpoint still knows app a's markers
+    (0 to 10).foreach(v => Files.delete(new File(logDir, f"$v%020d.json").toPath))
+    assert(!DeltaRead.appendIdempotent(Seq(5L).toDF("id"), dir, "a", 5L))
+    assert(!DeltaRead.appendIdempotent(Seq(100L).toDF("id"), dir, "b", 0L))
+    assert(DeltaRead.appendIdempotent(Seq(12L).toDF("id"), dir, "a", 12L))
+    assert(DeltaRead.snapshot(spark, dir).txns == Map("a" -> 12L, "b" -> 0L))
+    assert(DeltaRead.read(spark, dir).as[Long].collect().sorted.toSeq ==
+      (0L to 10L) ++ Seq(12L, 100L))
+  }
+
+  test("appendIdempotent reads each commit file once per call") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftcount.impl", classOf[CountingFileSystem].getName)
+    conf.set("fs.graftcount.impl.disable.cache", "true")
+    val dir = "graftcount://" + Files.createTempDirectory("graft_delta_opens").toString
+    (0L to 2L).foreach(v => DeltaRead.appendIdempotent(Seq(v).toDF("id"), dir, "app", v))
+    def commitOpens(body: => Unit): Map[String, Int] = {
+      CountingFileSystem.opens.clear()
+      body
+      CountingFileSystem.opens.asScala.collect {
+        case (name, n) if name.matches("\\d{20}\\.json") => name -> n.get
+      }.toMap
+    }
+    def once(versions: Range) = versions.map(v => f"$v%020d.json" -> 1).toMap
+    // the marker check and the commit share one snapshot
+    assert(commitOpens(assert(
+      DeltaRead.appendIdempotent(Seq(3L).toDF("id"), dir, "app", 3L))) == once(0 to 2))
+    // a replayed call reads the log once too, and commits nothing
+    assert(commitOpens(assert(
+      !DeltaRead.appendIdempotent(Seq(3L).toDF("id"), dir, "app", 3L))) == once(0 to 3))
     assert(DeltaRead.read(spark, dir).count() == 4)
   }
 
