@@ -36,7 +36,7 @@ object GlueTableWriter {
   ): GlueTable = {
     // delta is log-committed, not serde-dispatched: Overwrite creates a
     // fresh table (graft.sources.DeltaRead.create), Append adds a commit and
-    // bootstraps the table when the location has no log yet. The Glue entry
+    // bootstraps the table when the location holds none yet. The Glue entry
     // carries table_type=delta — exactly the marker the read path's format
     // dispatch routes back to the log-replay reader.
     if (format == "delta") {

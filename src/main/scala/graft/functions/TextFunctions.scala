@@ -22,11 +22,6 @@ object TextFunctions {
   def normText(c: Column): Column =
     lower(GraftFunctions.squeezeWs(c))
 
-  /** The regex formulation of [[normText]] — the spec's ground truth for
-    * the kernel equivalence property. */
-  def normTextReference(c: Column): Column =
-    lower(trim(regexp_replace(c, "\\s+", " ")))
-
   /** Content fingerprint: md5 of the normalized text (portable across
     * engines, unlike xxhash64 — used for the exact-dedup oracle). */
   def fingerprint(c: Column): Column = md5(normText(c))

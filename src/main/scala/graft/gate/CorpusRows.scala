@@ -151,7 +151,7 @@ object CorpusRows {
         ) // no ORDER BY — see text_quality
     }, Oracle(
       // The oracle recomputes the mixture selection from first principles as
-      // the NAIVE per-stratum window (see Mixture.sampleToTokenBudgetNaive);
+      // the NAIVE per-stratum window (MixtureSpec's reference formulation);
       // hash-matching it certifies the production histogram-cutoff path end
       // to end. Token counts reuse the ws_tokens normalization both engines
       // already hash-agree on (text_tokencount).

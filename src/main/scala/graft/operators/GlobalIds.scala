@@ -95,16 +95,4 @@ object GlobalIds {
       .withColumn(idName, col("__gid_off") + row_number().over(wIn))
       .drop("__gid_part", "__gid_off")
   }
-
-  /** The naive formulation — a global-ORDER window, one partition, one
-    * task. Spec ground truth only; `sequentialIds` is the production
-    * path. */
-  def sequentialIdsNaive(
-      df: DataFrame,
-      orderCols: Seq[String],
-      idName: String = "seq_id"
-  ): DataFrame = {
-    val w = Window.orderBy(orderCols.map(col): _*)
-    df.withColumn(idName, row_number().over(w).cast("long"))
-  }
 }

@@ -39,9 +39,8 @@ import org.apache.spark.sql.functions._
   * O(|stratum|/cutBuckets) rows for the boundary window; every other step
   * is a map-side-partial groupBy or a broadcast join of aggregate-scale
   * cutoff tables. The result is bit-identical to the naive window (the
-  * bucket id is a prefix of the sort key), which
-  * [[sampleToTokenBudgetNaive]] exists to prove in the spec and the DuckDB
-  * oracle recomputes independently.
+  * bucket id is a prefix of the sort key), which MixtureSpec proves against
+  * that window and the DuckDB oracle recomputes independently.
   *
   * Cost note for 100 TB: the production path reads the input three times
   * (histogram, whole-bucket keep, boundary slice) but shuffles almost
@@ -74,9 +73,10 @@ object Mixture {
   }
 
   // (stratum, id, tokens, rank key, bucket, budget[, order value]) — the
-  // shared front of every formulation. Inner-joining the broadcast budget
-  // table drops unweighted strata before any shuffle.
-  private def prepared(
+  // shared front of every formulation, the spec's reference windows
+  // included. Inner-joining the broadcast budget table drops unweighted
+  // strata before any shuffle.
+  private[operators] def prepared(
       docs: DataFrame,
       strataCol: String,
       tokensCol: Column,
@@ -121,7 +121,7 @@ object Mixture {
     4096 / cutBuckets
   }
 
-  private def finish(kept: DataFrame, strataCol: String, idCol: String): DataFrame =
+  private[operators] def finish(kept: DataFrame, strataCol: String, idCol: String): DataFrame =
     kept.select(
       col("id").as(idCol),
       col("s").as(strataCol),
@@ -137,31 +137,6 @@ object Mixture {
     * re-plan. A 100 TB input always gets the machinery. */
   private def oneWindowOk(docs: DataFrame): Boolean =
     Spread.scale(docs) < Spread.Scale.Huge
-
-  /** Reference formulation: ONE cumulative window per stratum. Semantics
-    * ground truth for the spec and the shape of the DuckDB oracle; not the
-    * production path — a dominant stratum serializes onto a single window
-    * task. */
-  def sampleToTokenBudgetNaive(
-      docs: DataFrame,
-      strataCol: String,
-      tokensCol: Column,
-      idCol: String,
-      weights: Map[String, Double],
-      totalBudget: Long,
-      seed: String = "mix"
-  ): DataFrame = {
-    val base = prepared(docs, strataCol, tokensCol, idCol, weights, totalBudget, seed, 4096)
-    val w = Window
-      .partitionBy("s")
-      .orderBy("rk", "id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    finish(
-      base.withColumn("cum", sum("tok").over(w)).where(col("cum") <= col("budget")),
-      strataCol,
-      idCol
-    )
-  }
 
   /** Production path: two-pass histogram cutoff, bit-identical to the
     * naive window (see object doc for the argument). `tokensCol` is any
@@ -246,35 +221,6 @@ object Mixture {
       .drop("before", "cum")
 
     keptWhole.unionByName(keptBoundary)
-  }
-
-  /** Reference formulation of [[takeBestToBudget]]: one window per
-    * stratum ordered by (quality desc, hash, id). Spec/oracle ground
-    * truth only — same hot-stratum serialization as
-    * [[sampleToTokenBudgetNaive]]. */
-  def takeBestToBudgetNaive(
-      docs: DataFrame,
-      strataCol: String,
-      orderCol: Column,
-      tokensCol: Column,
-      idCol: String,
-      weights: Map[String, Double],
-      totalBudget: Long,
-      seed: String = "mix"
-  ): DataFrame = {
-    val base = prepared(
-      docs, strataCol, tokensCol, idCol, weights, totalBudget, seed, 4096,
-      orderCol = Some(orderCol)
-    )
-    val w = Window
-      .partitionBy("s")
-      .orderBy(col("qv").desc, col("rk"), col("id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    finishQ(
-      base.withColumn("cum", sum("tok").over(w)).where(col("cum") <= col("budget")),
-      strataCol,
-      idCol
-    )
   }
 
   /** Curation variant (C34): keep the HIGHEST-`orderCol` documents of each
@@ -385,7 +331,7 @@ object Mixture {
     finishQ(keptWhole.unionByName(keptBoundary), strataCol, idCol)
   }
 
-  private def finishQ(kept: DataFrame, strataCol: String, idCol: String): DataFrame =
+  private[operators] def finishQ(kept: DataFrame, strataCol: String, idCol: String): DataFrame =
     kept.select(
       col("id").as(idCol),
       col("s").as(strataCol),

@@ -3,11 +3,8 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
-import scala.util.Try
-import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, unescapePathName}
@@ -20,9 +17,19 @@ import org.apache.spark.sql.types._
   * commits (`<v>.json`, one action per line — add / remove / metaData /
   * protocol / txn) and periodic parquet checkpoints (single-file
   * `<v>.checkpoint.parquet` or multi-part
-  * `<v>.checkpoint.<i>.<n>.parquet`, named by `_last_checkpoint`). The
-  * active snapshot at version V = replay of all actions `<= V`: last
-  * metaData wins, `add` paths minus `remove` paths.
+  * `<v>.checkpoint.<i>.<n>.parquet`). The active snapshot at version V =
+  * replay of all actions `<= V`: last metaData wins, `add` paths minus
+  * `remove` paths.
+  *
+  * One listing of `_delta_log` decides the table's state ([[lookup]]):
+  * whether it exists (at least one commit or one complete checkpoint), its
+  * latest version, the newest complete checkpoint at or below the target
+  * version to start from, and the commits to replay after it. Those must
+  * run without a gap; a gap fails naming the missing versions, so a log
+  * whose old commits were cleaned never yields a silently partial
+  * snapshot. [[checkpoint]] still writes the last-checkpoint pointer file
+  * for other readers (delta-spark and delta-rs use it as a hint); nothing
+  * here reads it.
   *
   * The reference registers Glue `table_type=delta` tables through the
   * deltalake crate (reference: src/catalog_provider/glue.rs:195-237); this
@@ -59,7 +66,8 @@ import org.apache.spark.sql.types._
   * Writes share one write-and-commit path: [[create]] replaces the
   * directory with a version-0 table, and [[append]] (also behind
   * [[appendIdempotent]]) adds a commit, bootstrapping version 0 when the
-  * directory has no `_delta_log` yet.
+  * table does not exist yet — including a `_delta_log` that a crash during
+  * the first commit left without a commit file.
   */
 object DeltaRead {
 
@@ -111,15 +119,8 @@ object DeltaRead {
 
   // ---------- Hadoop FS plumbing ----------
 
-  private def hadoopConf(spark: Option[SparkSession]): Configuration =
-    spark
-      .orElse(SparkSession.getActiveSession)
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
-
-  private def fsOf(dir: Path, conf: Configuration): FileSystem =
-    dir.getFileSystem(conf)
+  private def fsOf(dir: Path, spark: SparkSession): FileSystem =
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def readUtf8(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -132,17 +133,13 @@ object DeltaRead {
     } finally in.close()
   }
 
-  private def isDir(fs: FileSystem, p: Path): Boolean =
-    try fs.getFileStatus(p).isDirectory
-    catch { case _: java.io.FileNotFoundException => false }
-
   /** Write `content` to `target` via temp-file + rename. With
     * `overwrite=false` an existing target makes the rename fail — the
     * single-writer commit guard. With `overwrite=true` the target is
-    * deleted first; a crash between delete and rename leaves NO file,
-    * which every reader of the files written this way (only
-    * `_last_checkpoint`) treats as "fall back to full JSON replay" —
-    * commits are never deleted, so replay is always possible. */
+    * deleted first; a crash between delete and rename leaves NO file. The
+    * only file written that way is the last-checkpoint pointer, a hint
+    * that this reader never reads and that delta-spark and delta-rs replace
+    * by listing the log when it is missing. */
   private def writeAtomic(
       fs: FileSystem,
       target: Path,
@@ -182,9 +179,6 @@ object DeltaRead {
       overwrite = false
     )
 
-  private def commitVersion(name: String): Long =
-    name.stripSuffix(".json").toLong
-
   // ---------- protocol feature guards ----------
 
   /** Reader features this replay honors end-to-end. Reader version 3 makes
@@ -222,23 +216,6 @@ object DeltaRead {
 
   // ---------- snapshot (log replay) ----------
 
-  /** `_last_checkpoint` contents: (version, part count if multi-part). A
-    * missing or unparsable file yields None — full JSON replay, always
-    * correct because commits are never deleted. */
-  private def lastCheckpoint(
-      fs: FileSystem,
-      logDir: Path
-  ): Option[(Long, Option[Int])] = {
-    val p = new Path(logDir, "_last_checkpoint")
-    if (!fs.exists(p)) return None
-    Try {
-      val n = mapper.readTree(readUtf8(fs, p))
-      val parts =
-        if (n.hasNonNull("parts")) Some(n.get("parts").asInt()) else None
-      (n.get("version").asLong(), parts)
-    }.toOption
-  }
-
   private def checkpointPaths(
       logDir: Path,
       version: Long,
@@ -251,8 +228,68 @@ object DeltaRead {
     case None => Seq(new Path(logDir, f"$version%020d.checkpoint.parquet"))
   }
 
-  /** Replay the log and return the snapshot at `versionAsOf` (default:
-    * latest).
+  /** What one listing of `_delta_log` holds: the commit files by version,
+    * and the complete checkpoints by version (a single
+    * `<v>.checkpoint.parquet`, or all `n` parts of
+    * `<v>.checkpoint.<i>.<n>.parquet`). */
+  private final case class LogListing(commits: Map[Long, Path], checkpoints: Map[Long, Seq[Path]]) {
+    def latest: Long = (commits.keys ++ checkpoints.keys).max
+  }
+
+  private val CommitFile = """(\d{20})\.json""".r
+  private val CheckpointFile = """(\d{20})\.checkpoint(?:\.(\d{10})\.(\d{10}))?\.parquet""".r
+
+  /** List `_delta_log` once. None means the table does not exist yet: no
+    * log directory, or one holding no commit and no complete checkpoint (a
+    * crash during the first commit leaves such a log). A multi-part
+    * checkpoint missing a part (a crash between its parts) is skipped. */
+  private def listLog(fs: FileSystem, root: Path): Option[LogListing] = {
+    val files =
+      try fs.listStatus(new Path(root, "_delta_log")).toSeq.filter(_.isFile).map(_.getPath)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val commits = files.flatMap { p =>
+      p.getName match {
+        case CommitFile(v) => Some(v.toLong -> p)
+        case _             => None
+      }
+    }.toMap
+    // (version, part count) -> (part index, file); a single file is part 1
+    // of 1. File names are unique, so n in-range indexes are a complete set.
+    val parts = files.flatMap { p =>
+      p.getName match {
+        case CheckpointFile(v, i, n) =>
+          Some((v.toLong, Option(n).fold(1L)(_.toLong)) -> (Option(i).fold(1L)(_.toLong) -> p))
+        case _ => None
+      }
+    }
+    val checkpoints = parts
+      .groupMap(_._1)(_._2)
+      .collect {
+        case ((v, n), set) if set.count { case (i, _) => 1 <= i && i <= n } == n =>
+          v -> set.sortBy(_._1).map(_._2)
+      }
+    if (commits.isEmpty && checkpoints.isEmpty) None
+    else Some(LogListing(commits, checkpoints))
+  }
+
+  /** `0, 1, 2, 5` as `0..2, 5`. */
+  private def spans(versions: Seq[Long]): String =
+    versions
+      .foldLeft(List.empty[(Long, Long)]) {
+        case ((lo, hi) :: rest, v) if v == hi + 1 => (lo, v) :: rest
+        case (acc, v)                             => (v, v) :: acc
+      }
+      .reverse
+      .map { case (lo, hi) => if (lo == hi) s"$lo" else s"$lo..$hi" }
+      .mkString(", ")
+
+  /** The table at `tableDir` as of `versionAsOf` (default: latest), or None
+    * when it does not exist yet. The one decision on a table's existence
+    * and state: one listing of `_delta_log` ([[listLog]]) gives the latest
+    * version (the largest commit or checkpoint version), the replay start
+    * (the newest complete checkpoint at or below the target) and the
+    * commits to replay after it, which must all be listed — a gap fails
+    * naming the missing versions.
     *
     * Driver-memory bound (documented, not guarded): the active add-file
     * list lives on the driver at ~200 B per action (path + partition values
@@ -263,32 +300,53 @@ object DeltaRead {
     * large mean misconfigured file sizing long before they mean a snapshot
     * problem. A DataFrame-resident snapshot is the documented growth path
     * if a 10M-file table ever becomes real (SURVEY §5). */
+  def lookup(
+      spark: SparkSession,
+      tableDir: String,
+      versionAsOf: Option[Long] = None
+  ): Option[Snapshot] = {
+    val root = new Path(tableDir)
+    val fs = fsOf(root, spark)
+    listLog(fs, root).map(replay(spark, fs, root, _, versionAsOf))
+  }
+
+  /** The snapshot of an existing table ([[lookup]]); a location holding no
+    * table fails. */
   def snapshot(
       spark: SparkSession,
       tableDir: String,
       versionAsOf: Option[Long] = None
+  ): Snapshot =
+    lookup(spark, tableDir, versionAsOf).getOrElse(
+      throw new IllegalArgumentException(
+        s"no delta table under $tableDir: _delta_log holds no commit and no complete checkpoint"
+      )
+    )
+
+  private def replay(
+      spark: SparkSession,
+      fs: FileSystem,
+      root: Path,
+      log: LogListing,
+      versionAsOf: Option[Long]
   ): Snapshot = {
-    val root = new Path(tableDir)
-    val fs = fsOf(root, hadoopConf(Some(spark)))
-    val logDir = new Path(root, "_delta_log")
-    require(isDir(fs, logDir), s"no _delta_log under $tableDir — not a delta table")
-
-    val commitFiles = fs
-      .listStatus(logDir)
-      .toSeq
-      .filter(s => s.isFile && s.getPath.getName.matches("\\d{20}\\.json"))
-      .sortBy(_.getPath.getName)
-    require(commitFiles.nonEmpty, s"empty delta log under $tableDir")
-
-    val latest = commitVersion(commitFiles.last.getPath.getName)
+    val latest = log.latest
     val version = versionAsOf.getOrElse(latest)
     require(
       version >= 0 && version <= latest,
       s"versionAsOf $version out of range [0, $latest]"
     )
-
-    // checkpoint start point, if one exists at or below the target version
-    val checkpoint = lastCheckpoint(fs, logDir).filter(_._1 <= version)
+    // the newest complete checkpoint at or below the target starts the
+    // replay; every commit after it (or from version 0) must be listed
+    val start = log.checkpoints.keys.filter(_ <= version).maxOption
+    val replayed = start.fold(0L)(_ + 1) to version
+    val missing = replayed.filterNot(log.commits.contains)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"delta log under $root cannot replay v$version from " +
+          start.fold("version 0")(cv => s"the checkpoint at v$cv") +
+          s": commits ${spans(missing)} are missing"
+      )
 
     val active = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     var schema: Option[StructType] = None
@@ -378,15 +436,13 @@ object DeltaRead {
       }
     }
 
-    checkpoint.foreach { case (cv, parts) =>
-      val cpFiles = checkpointPaths(logDir, cv, parts)
-      cpFiles.foreach(p => require(fs.exists(p), s"missing checkpoint file $p"))
+    start.foreach { cv =>
       // a checkpoint is a parquet table of the same actions, one per row,
       // and a row's JSON form is the commit-line shape; collect it in ONE
       // job (snapshot() runs on every read/append, so each extra Spark job
       // here is hot-path driver latency)
       spark.read
-        .parquet(cpFiles.map(_.toString): _*)
+        .parquet(log.checkpoints(cv).map(_.toString): _*)
         .toJSON
         .collect()
         .iterator
@@ -394,21 +450,17 @@ object DeltaRead {
         .foreach { case (line, i) => applyAction(line, s"checkpoint v$cv row ${i + 1}") }
     }
 
-    commitFiles
-      .filter { s =>
-        val v = commitVersion(s.getPath.getName)
-        v <= version && checkpoint.forall(v > _._1)
-      }
-      .foreach { s =>
-        readUtf8(fs, s.getPath)
-          .split("\n")
-          .iterator
-          .zipWithIndex
-          .filter(_._1.nonEmpty)
-          .foreach { case (line, idx) =>
-            applyAction(line, s"commit ${s.getPath.getName} line ${idx + 1}")
-          }
-      }
+    replayed.foreach { v =>
+      val p = log.commits(v)
+      readUtf8(fs, p)
+        .split("\n")
+        .iterator
+        .zipWithIndex
+        .filter(_._1.nonEmpty)
+        .foreach { case (line, idx) =>
+          applyAction(line, s"commit ${p.getName} line ${idx + 1}")
+        }
+    }
 
     Snapshot(
       version,
@@ -420,14 +472,6 @@ object DeltaRead {
       txns.toMap
     )
   }
-
-  /** True when `dir` holds a delta table (`_delta_log/` exists, any
-    * scheme). */
-  def isDeltaTable(dir: String): Boolean =
-    try {
-      val p = new Path(dir, "_delta_log")
-      isDir(fsOf(p, hadoopConf(None)), p)
-    } catch { case NonFatal(_) => false }
 
   // ---------- column mapping ----------
 
@@ -487,7 +531,12 @@ object DeltaRead {
       tableDir: String,
       versionAsOf: Option[Long] = None
   ): DataFrame =
-    readSnapshot(spark, tableDir, snapshot(spark, tableDir, versionAsOf), withMeta = false)
+    read(spark, tableDir, snapshot(spark, tableDir, versionAsOf))
+
+  /** Read the table at `tableDir` as of a snapshot already taken, e.g. by
+    * [[lookup]]. */
+  def read(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame =
+    readSnapshot(spark, tableDir, snap, withMeta = false)
 
   /** `withMeta=true` appends `__graft_file` / `__graft_row` (absolute file
     * path + file-local row index from parquet `_metadata`) for callers like
@@ -551,7 +600,7 @@ object DeltaRead {
       // — one write job reuses the same part-file name in every partition
       // directory — and `_metadata.file_path` may spell the scheme
       // differently than the log, e.g. `file:///` vs `file:/`).
-      val fs = fsOf(root, hadoopConf(Some(spark)))
+      val fs = fsOf(root, spark)
       val dvMap: Map[String, (String, Array[Byte])] = adds.map { a =>
         val d = a.deletionVector.get
         fs.makeQualified(new Path(root, a.path)).toString ->
@@ -650,7 +699,7 @@ object DeltaRead {
       matched: Array[(String, Array[Byte], Long)]
   ): Long = {
     val root = new Path(dir)
-    val fs = fsOf(root, hadoopConf(Some(spark)))
+    val fs = fsOf(root, spark)
 
     // map scanned absolute paths back to the snapshot's relative add paths
     // by qualified-path equality (same normalization as the read side)
@@ -709,24 +758,17 @@ object DeltaRead {
 
   /** Append `df` to the delta table at `dir` as one new commit: the new
     * rows are written as parquet parts into the table directory, then a
-    * single `<latest+1>.json` commit adds exactly those files. A directory
-    * without `_delta_log` is bootstrapped: the append writes version 0
-    * (protocol + metaData, partitioned by `partitionBy`) and never deletes
-    * what the directory already holds. Single-writer only — real
+    * single `<latest+1>.json` commit adds exactly those files. A location
+    * holding no table yet ([[lookup]] is None: no `_delta_log`, or one with
+    * no commit and no checkpoint) is bootstrapped: the append writes
+    * version 0 (protocol + metaData, partitioned by `partitionBy`) and
+    * never deletes what the directory already holds. Single-writer only — real
     * concurrent commits need a coordinator (the reference gets one from the
     * deltalake crate's LogStore); this covers the ingest-append shape so log
     * replay, time travel and checkpointing can be exercised end-to-end.
     * Returns the new version. */
   def append(df: DataFrame, dir: String, partitionBy: Seq[String] = Seq.empty): Long =
-    commit(df, dir, existing(df.sparkSession, dir), partitionBy, Seq.empty)
-
-  /** The snapshot of the table at `dir`, or None when it has no
-    * `_delta_log` yet. */
-  private def existing(spark: SparkSession, dir: String): Option[Snapshot] = {
-    val logDir = new Path(dir, "_delta_log")
-    if (isDir(fsOf(logDir, hadoopConf(Some(spark))), logDir)) Some(snapshot(spark, dir))
-    else None
-  }
+    commit(df, dir, lookup(df.sparkSession, dir), partitionBy, Seq.empty)
 
   /** The one write-and-commit path behind [[create]], [[append]] and
     * [[appendIdempotent]]: write `df` as parquet parts into `dir`, then
@@ -744,7 +786,7 @@ object DeltaRead {
       columnMapping: Boolean = false
   ): Long = {
     val root = new Path(dir)
-    val fs = fsOf(root, hadoopConf(Some(df.sparkSession)))
+    val fs = fsOf(root, df.sparkSession)
     val (version, header, mapped, partitionColumns) = snap match {
       case Some(s) =>
         // an append MUST match the table's declared partitioning — a flat
@@ -798,27 +840,36 @@ object DeltaRead {
     * already holds `txnVersion` (or later) for `appId`, do nothing. A crash
     * before the commit move leaves no commit at all — the replayed batch
     * then re-appends cleanly (its orphaned parquet parts are never
-    * referenced by any commit and stay invisible to readers). The marker
-    * check and the commit share one snapshot, so a call reads the log once;
-    * the first call bootstraps the table.
-    *
-    * Every [[CheckpointInterval]] (10) versions a checkpoint is folded; it
-    * carries the txn markers, so replays stay detectable after commits
-    * older than it are cleaned. Returns true when the append actually
-    * committed. */
+    * referenced by any commit and stay invisible to readers). Returns true
+    * when the append actually committed. */
   def appendIdempotent(
       df: DataFrame,
       dir: String,
       appId: String,
       txnVersion: Long
+  ): Boolean =
+    appendIdempotent(df.sparkSession, dir, appId, txnVersion)(_ => df)
+
+  /** [[appendIdempotent]] of the frame `build` makes from the table's
+    * snapshot (None before the first commit). One [[lookup]] serves the
+    * marker check, `build` and the commit, so a call lists the log once and
+    * reads each commit file once; `build` runs only when the marker check
+    * passes, so a replayed batch builds nothing. The first call bootstraps
+    * the table.
+    *
+    * Every [[CheckpointInterval]] (10) versions a checkpoint is folded; it
+    * carries the txn markers, so replays stay detectable after commits
+    * older than it are cleaned. */
+  def appendIdempotent(spark: SparkSession, dir: String, appId: String, txnVersion: Long)(
+      build: Option[Snapshot] => DataFrame
   ): Boolean = {
-    val snap = existing(df.sparkSession, dir)
+    val snap = lookup(spark, dir)
     if (snap.exists(_.txns.get(appId).exists(_ >= txnVersion))) return false
     val txnLine =
       s"""{"txn":{"appId":${mapper.writeValueAsString(appId)},"version":$txnVersion}}"""
-    val version = commit(df, dir, snap, Seq.empty, Seq(txnLine))
+    val version = commit(build(snap), dir, snap, Seq.empty, Seq(txnLine))
     if (version > 0 && version % CheckpointInterval == 0)
-      checkpoint(df.sparkSession, dir)
+      checkpoint(spark, dir)
     true
   }
 
@@ -840,9 +891,11 @@ object DeltaRead {
 
   /** Fold the snapshot at the latest version into a parquet checkpoint
     * (single-file, or `parts`-way multi-part per the delta protocol's
-    * `<v>.checkpoint.<i>.<n>.parquet` naming) plus `_last_checkpoint`, so
-    * later reads replay only commits past it — the log-compaction step that
-    * keeps replay O(checkpoint interval), not O(table age).
+    * `<v>.checkpoint.<i>.<n>.parquet` naming), so later reads replay only
+    * commits past it — the log-compaction step that keeps replay
+    * O(checkpoint interval), not O(table age). `_last_checkpoint` is
+    * written last, as the hint other readers use; [[lookup]] finds the
+    * checkpoint by listing.
     *
     * The checkpoint rows are protocol-compliant: a `protocol` action, a
     * complete `metaData` action (id / format / schemaString /
@@ -856,7 +909,7 @@ object DeltaRead {
     require(parts >= 1, s"checkpoint parts must be >= 1, got $parts")
     val snap = snapshot(spark, dir)
     val root = new Path(dir)
-    val fs = fsOf(root, hadoopConf(Some(spark)))
+    val fs = fsOf(root, spark)
     val logDir = new Path(root, "_delta_log")
 
     // a snapshot using table features (vectors, mapping) must re-declare
@@ -1028,7 +1081,7 @@ object DeltaRead {
       columnMapping: Boolean = false
   ): Unit = {
     val root = new Path(dir)
-    val fs = fsOf(root, hadoopConf(Some(df.sparkSession)))
+    val fs = fsOf(root, df.sparkSession)
     if (fs.exists(root)) fs.delete(root, true)
     commit(df, dir, None, partitionBy, Seq.empty, columnMapping)
   }

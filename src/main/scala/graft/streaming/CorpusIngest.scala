@@ -92,24 +92,25 @@ object CorpusIngest {
       idCol: String,
       jaccardThreshold: Double,
       gate: Gate
-  ): DataFrame =
+  ): DataFrame = {
+    val spark = batch.sparkSession
     prepareBatch(
       batch,
-      if (DeltaRead.isDeltaTable(corpusDir))
-        Some(DeltaRead.read(batch.sparkSession, corpusDir))
-      else None,
+      DeltaRead.lookup(spark, corpusDir).map(DeltaRead.read(spark, corpusDir, _)),
       textCol,
       idCol,
       jaccardThreshold,
       gate
     )
+  }
 
   /** Streaming writer running [[prepareBatch]] + exactly-once append per
     * micro-batch ([[DeltaSink.exactlyOnce]], which also folds the corpus log
-    * into a checkpoint every 10 commits). A replayed batch commits nothing
-    * and its dedup against a corpus that already holds its rows never runs
-    * (only dedupAgainstCorpus' candidate pin, on a corpus >= Large, is built
-    * eagerly). Caller sets checkpointLocation and start()s. */
+    * into a checkpoint every 10 commits). Each batch takes one snapshot of
+    * the corpus: the replay guard checks its txn marker, and only a batch
+    * that passes runs [[prepareBatch]] against the corpus read from that
+    * snapshot and commits against it. A replayed batch builds no dedup and
+    * commits nothing. Caller sets checkpointLocation and start()s. */
   def ingest(
       stream: DataFrame,
       corpusDir: String,
@@ -123,6 +124,6 @@ object CorpusIngest {
       stream,
       corpusDir,
       appId,
-      batch => prepareBatch(batch, corpusDir, textCol, idCol, jaccardThreshold, gate)
+      (batch, corpus) => prepareBatch(batch, corpus, textCol, idCol, jaccardThreshold, gate)
     )
 }

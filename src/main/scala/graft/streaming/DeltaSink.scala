@@ -25,21 +25,26 @@ object DeltaSink {
 
   /** Writer that appends each micro-batch, passed through `transform`, to
     * the delta table at `dir` exactly once under `appId`; the first batch
-    * bootstraps the table. The marker is checked before the transformed
-    * frame is executed, so a replayed batch commits nothing and runs no
-    * write job (eager work inside `transform` itself still runs). Caller
-    * sets checkpointLocation and start()s. */
+    * bootstraps the table. Each batch looks the table up once and checks
+    * its txn marker on that snapshot; only a batch that passes calls
+    * `transform`, with the batch and the table read from the same snapshot
+    * (None before the first commit), and commits against it. A replayed
+    * batch therefore calls no `transform` and commits nothing. Caller sets
+    * checkpointLocation and start()s. */
   def exactlyOnce(
       stream: DataFrame,
       dir: String,
       appId: String,
-      transform: DataFrame => DataFrame = identity
+      transform: (DataFrame, Option[DataFrame]) => DataFrame = (batch, _) => batch
   ): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DeltaRead.appendIdempotent(transform(batch), dir, appId, batchId)
+        val spark = batch.sparkSession
+        DeltaRead.appendIdempotent(spark, dir, appId, batchId) { snap =>
+          transform(batch, snap.map(DeltaRead.read(spark, dir, _)))
+        }
         ()
       }
 }

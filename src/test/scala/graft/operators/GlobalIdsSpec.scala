@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +13,11 @@ import graft.SparkFixture
 class GlobalIdsSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   import spark.implicits._
+
+  /** The naive formulation — a global-ORDER window, one partition, one
+    * task: the ground truth [[GlobalIds.sequentialIds]] must equal. */
+  private def sequentialIdsNaive(df: DataFrame, orderCols: Seq[String]): DataFrame =
+    df.withColumn("seq_id", row_number().over(Window.orderBy(orderCols.map(col): _*)).cast("long"))
 
   // heavy duplicate prefixes so the order is only total with the id column
   private def data(n: Int) =
@@ -23,8 +30,7 @@ class GlobalIdsSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Long]("seq_id")))
       .toMap
-    val naive = GlobalIds
-      .sequentialIdsNaive(df, Seq("k", "g", "id"))
+    val naive = sequentialIdsNaive(df, Seq("k", "g", "id"))
       .collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Long]("seq_id")))
       .toMap

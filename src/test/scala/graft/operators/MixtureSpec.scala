@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +39,56 @@ class MixtureSpec extends AnyFunSuite {
 
   private val weights = Map("a" -> 0.5, "b" -> 0.25, "c" -> 0.25)
 
+  /** Reference formulation of [[Mixture.sampleToTokenBudget]]: ONE
+    * cumulative window per stratum, the ground truth the production cutoff
+    * must match and the shape of the DuckDB oracle. Not a production path:
+    * a dominant stratum serializes onto a single window task. */
+  private def sampleToTokenBudgetNaive(
+      docs: DataFrame,
+      strataCol: String,
+      tokensCol: Column,
+      idCol: String,
+      weights: Map[String, Double],
+      totalBudget: Long
+  ): DataFrame = {
+    val base = Mixture.prepared(docs, strataCol, tokensCol, idCol, weights, totalBudget, "mix", 4096)
+    val w = Window
+      .partitionBy("s")
+      .orderBy("rk", "id")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    Mixture.finish(
+      base.withColumn("cum", sum("tok").over(w)).where(col("cum") <= col("budget")),
+      strataCol,
+      idCol
+    )
+  }
+
+  /** Reference formulation of [[Mixture.takeBestToBudget]]: one window per
+    * stratum ordered by (quality desc, hash, id). */
+  private def takeBestToBudgetNaive(
+      docs: DataFrame,
+      strataCol: String,
+      orderCol: Column,
+      tokensCol: Column,
+      idCol: String,
+      weights: Map[String, Double],
+      totalBudget: Long
+  ): DataFrame = {
+    val base = Mixture.prepared(
+      docs, strataCol, tokensCol, idCol, weights, totalBudget, "mix", 4096,
+      orderCol = Some(orderCol)
+    )
+    val w = Window
+      .partitionBy("s")
+      .orderBy(col("qv").desc, col("rk"), col("id"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    Mixture.finishQ(
+      base.withColumn("cum", sum("tok").over(w)).where(col("cum") <= col("budget")),
+      strataCol,
+      idCol
+    )
+  }
+
   private def keptSet(df: DataFrame): Set[(Long, String, Long)] =
     df.collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("src"), r.getAs[Long]("tokens")))
@@ -47,7 +98,7 @@ class MixtureSpec extends AnyFunSuite {
     val docs =
       forceMachinery(corpus(Map("a" -> 300, "b" -> 120, "c" -> 40, "unweighted" -> 25)))
     val naive =
-      Mixture.sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", weights, 2000L)
+      sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", weights, 2000L)
     val naiveSet = keptSet(naive)
     assert(naiveSet.nonEmpty, "boundary must actually cut (budget < corpus)")
     for (buckets <- Seq(4096, 256, 16, 1)) {
@@ -125,7 +176,7 @@ class MixtureSpec extends AnyFunSuite {
     val docs = forceMachinery(corpus(Map("hot" -> 2400, "cold" -> 100)))
     val w = Map("hot" -> 0.9375, "cold" -> 0.0625)
     val naive = keptSet(
-      Mixture.sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", w, 8000L)
+      sampleToTokenBudgetNaive(docs, "src", col("tok"), "id", w, 8000L)
     )
     val prod = keptSet(
       Mixture.sampleToTokenBudget(docs, "src", col("tok"), "id", w, 8000L, cutBuckets = 64)
@@ -157,7 +208,7 @@ class MixtureSpec extends AnyFunSuite {
   test("quality cutoff is bit-identical to the naive window, ties and all bucket widths") {
     val docs = forceMachinery(qCorpus(Map("a" -> 300, "b" -> 120, "c" -> 40)))
     val naive = keptSetQ(
-      Mixture.takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", weights, 2000L)
+      takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", weights, 2000L)
     )
     assert(naive.nonEmpty)
     for (buckets <- Seq(4096, 64, 1)) {
@@ -204,7 +255,7 @@ class MixtureSpec extends AnyFunSuite {
     )
     val w2 = Map("a" -> 0.5, "b" -> 0.5)
     val naive = keptSetQ(
-      Mixture.takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", w2, 1200L)
+      takeBestToBudgetNaive(docs, "src", col("q"), col("tok"), "id", w2, 1200L)
     )
     val prod = keptSetQ(
       Mixture.takeBestToBudget(docs, "src", col("q"), col("tok"), "id", w2, 1200L, cutBuckets = 64)

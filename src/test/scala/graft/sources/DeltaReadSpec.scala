@@ -557,7 +557,7 @@ class DeltaReadSpec extends AnyFunSuite {
     assert(DeltaRead.read(spark, dir).count() == 45)
   }
 
-  test("corrupt _last_checkpoint degrades to full JSON replay, not an outage") {
+  test("corrupt _last_checkpoint: replay starts from the listed checkpoint") {
     val dir = Files.createTempDirectory("graft_delta_cp_corrupt").toString
     DeltaRead.create(spark.range(0, 20).toDF("id"), dir)
     DeltaRead.append(spark.range(20, 30).toDF("id"), dir)
@@ -567,8 +567,80 @@ class DeltaReadSpec extends AnyFunSuite {
       new File(new File(dir, "_delta_log"), "_last_checkpoint").toPath,
       """{"version":1,"si""".getBytes(StandardCharsets.UTF_8)
     )
+    // poison the commits the checkpoint folds: a replay from version 0
+    // would throw, so the start point must come from the listing
+    (0L to 1L).foreach(v => writeCommit(dir, v, Seq("""{"protocol":{"minReaderVersion":9}}""")))
     assert(DeltaRead.read(spark, dir).count() == 30)
     assert(DeltaRead.snapshot(spark, dir).version == 1L)
+  }
+
+  test("checkpoints are found by listing: time travel after the old commits are cleaned") {
+    val dir = Files.createTempDirectory("graft_delta_cp_list").toString
+    // v0..v20, one row each; the 10th and 20th commits fold checkpoints
+    (0L to 20L).foreach(v => DeltaRead.appendIdempotent(Seq(v).toDF("id"), dir, "app", v))
+    val logDir = new File(dir, "_delta_log")
+    Seq(10L, 20L).foreach(v => assert(new File(logDir, f"$v%020d.checkpoint.parquet").isFile))
+    // a log cleaner drops the commits the v10 checkpoint folds, except v10
+    (0 to 9).foreach(v => Files.delete(new File(logDir, f"$v%020d.json").toPath))
+    def ids(v: Long) = DeltaRead.read(spark, dir, versionAsOf = Some(v)).as[Long].collect().sorted.toSeq
+    // v15 starts from the v10 checkpoint, not from the listed commits alone
+    assert(ids(15L) == (0L to 15L))
+    assert(ids(10L) == (0L to 10L))
+    assert(DeltaRead.read(spark, dir).count() == 21)
+    // below the oldest checkpoint nothing can replay: the error names the gap
+    val gone = intercept[IllegalStateException](DeltaRead.read(spark, dir, versionAsOf = Some(5L)))
+    assert(gone.getMessage.contains("commits 0..5 are missing"), gone.getMessage)
+    // a gap after a checkpoint fails too; the v20 checkpoint still serves
+    Files.delete(new File(logDir, f"${12}%020d.json").toPath)
+    val gap = intercept[IllegalStateException](DeltaRead.read(spark, dir, versionAsOf = Some(15L)))
+    assert(gap.getMessage.contains("from the checkpoint at v10: commits 12 are missing"), gap.getMessage)
+    assert(ids(20L) == (0L to 20L))
+  }
+
+  test("an incomplete multi-part checkpoint is skipped for the previous complete one") {
+    val dir = Files.createTempDirectory("graft_delta_cp_torn").toString
+    DeltaRead.create(spark.range(0, 40).toDF("id").repartition(5), dir)
+    DeltaRead.checkpoint(spark, dir)
+    DeltaRead.append(spark.range(40, 45).toDF("id"), dir)
+    assert(DeltaRead.checkpoint(spark, dir, parts = 3) == 1L)
+    val expected = DeltaRead.snapshot(spark, dir)
+    // a crash between the parts of the v1 checkpoint leaves part 2 missing
+    Files.delete(new File(new File(dir, "_delta_log"),
+      f"${1L}%020d.checkpoint.${2}%010d.${3}%010d.parquet").toPath)
+    // poison v0: replay must start from the complete v0 checkpoint
+    writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
+    val snap = DeltaRead.snapshot(spark, dir)
+    assert(snap.version == 1L)
+    assert(snap.files.sorted == expected.files.sorted)
+    assert(DeltaRead.read(spark, dir).as[Long].collect().sorted.toSeq == (0L until 45L))
+  }
+
+  test("a _delta_log with no commit is no table yet: append and appendIdempotent bootstrap it") {
+    // a crash during the first commit leaves the log directory and the
+    // temp file of the commit that never moved into place
+    def crashedFirstCommit(prefix: String): String = {
+      val dir = Files.createTempDirectory(prefix).toString
+      val logDir = new File(dir, "_delta_log")
+      assert(logDir.mkdir())
+      Files.write(new File(logDir, f".${0L}%020d.json.crashed.tmp").toPath, Array.emptyByteArray)
+      dir
+    }
+    val a = crashedFirstCommit("graft_delta_boot_append")
+    assert(DeltaRead.append(Seq(1L, 2L).toDF("id"), a) == 0L)
+    assert(DeltaRead.lookup(spark, a).map(_.version).contains(0L))
+    assert(DeltaRead.read(spark, a).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+
+    val b = crashedFirstCommit("graft_delta_boot_txn")
+    assert(DeltaRead.appendIdempotent(Seq(3L).toDF("id"), b, "app", 0L))
+    assert(!DeltaRead.appendIdempotent(Seq(3L).toDF("id"), b, "app", 0L))
+    assert(DeltaRead.snapshot(spark, b).txns == Map("app" -> 0L))
+    assert(DeltaRead.read(spark, b).as[Long].collect().toSeq == Seq(3L))
+
+    // until then it is no table, and reading it says so
+    val c = crashedFirstCommit("graft_delta_boot_none")
+    assert(DeltaRead.lookup(spark, c).isEmpty)
+    val e = intercept[IllegalArgumentException](DeltaRead.snapshot(spark, c))
+    assert(e.getMessage.contains("no delta table"), e.getMessage)
   }
 
   test("delta table behind a file:/// URI reads and appends (Hadoop FS path)") {
@@ -580,7 +652,7 @@ class DeltaReadSpec extends AnyFunSuite {
     DeltaRead.append(spark.range(15, 18).toDF("id"), dir)
     assert(DeltaRead.read(spark, dir).count() == 18)
     assert(DeltaRead.snapshot(spark, dir).txns.get("nope").isEmpty)
-    assert(DeltaRead.isDeltaTable(dir))
+    assert(DeltaRead.lookup(spark, dir).isDefined)
   }
 
   test("DSv2 three-part-name SQL over a delta table serves the live snapshot") {

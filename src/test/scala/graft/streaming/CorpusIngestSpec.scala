@@ -59,6 +59,54 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(DeltaRead.snapshot(spark, dir).txns.get("corpus-ingest").contains(1L))
   }
 
+  test("one ingest micro-batch takes one snapshot: each commit file opened once") {
+    import spark.implicits._
+    import CountingFileSystem.{logOpens, once}
+    implicit val sc = spark.sqlContext
+    val dir = CountingFileSystem.tempDir(spark, "graft_corpus_opens")
+    val ckpt = Files.createTempDirectory("graft_corpus_opens_ck").toString
+    val input = MemoryStream[(Long, String)]
+    def runOnce(): Unit =
+      CorpusIngest
+        .ingest(input.toDF().toDF("doc_id", "text"), dir, "corpus-opens")
+        .option("checkpointLocation", ckpt)
+        .start()
+        .awaitTermination()
+    val docs = Seq(
+      "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+      "one two three four five six seven eight nine ten",
+      "carrots peas onions leeks beans corn kale chard basil mint"
+    )
+    docs.zipWithIndex.foreach { case (text, i) =>
+      input.addData((i.toLong, text))
+      runOnce()
+    }
+    // the replay guard, the corpus read for dedup and the commit share one
+    // lookup of the three-commit log
+    input.addData((3L, "totally new content about completely different things here"))
+    assert(logOpens(runOnce()) == once(0 to 2))
+    assert(DeltaRead.read(spark, dir).select("doc_id").as[Long].collect().sorted.toSeq ==
+      (0L to 3L))
+  }
+
+  test("an empty _delta_log bootstraps through one ingest micro-batch") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    // a crash during the first commit leaves an empty log directory
+    val dir = Files.createTempDirectory("graft_corpus_boot").toString
+    Files.createDirectory(java.nio.file.Paths.get(dir, "_delta_log"))
+    val ckpt = Files.createTempDirectory("graft_corpus_boot_ck").toString
+    val input = MemoryStream[(Long, String)]
+    input.addData((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+    CorpusIngest
+      .ingest(input.toDF().toDF("doc_id", "text"), dir, "corpus-boot")
+      .option("checkpointLocation", ckpt)
+      .start()
+      .awaitTermination()
+    assert(DeltaRead.read(spark, dir).select("doc_id").as[Long].collect().toSeq == Seq(1L))
+    assert(DeltaRead.snapshot(spark, dir).txns == Map("corpus-boot" -> 0L))
+  }
+
   test("prepareBatch: a Huge batch and corpus give the Small-band rows") {
     // RDD-backed inputs (no estimate of their own: Huge) take
     // dedupAgainstCorpus's pinned, semi-filtered branch, and must give
