@@ -31,7 +31,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * The TIME line lists each timed run's seconds and generated classes
   * compiled (`compiles=[…]`), in run order: after the warm-up a run should
   * compile 0, and a run that compiles is paying for a codegen cache miss
-  * (see [[BenchSession.CodegenReuse]]).
+  * (see [[BenchSession.LongLived]]).
   */
 object Probe {
 

@@ -290,8 +290,13 @@ object DeletionVectors {
     * roaring-bitmap `contains` — no per-row string allocation, unlike the
     * Scala-UDF formulation this replaces. */
   final class DvProbe(
-      bc: org.apache.spark.broadcast.Broadcast[Map[String, (String, Array[Byte])]]
+      bc: org.apache.spark.broadcast.Broadcast[Map[String, (String, Array[Byte])]],
+      vectors: Int
   ) extends Serializable {
+    // plan text names the probe by content, not by identity hash, so two
+    // plans of one snapshot print the same
+    override def toString: String = s"DvProbe($vectors vectors)"
+
     @transient private var lastPath: org.apache.spark.unsafe.types.UTF8String = _
     @transient private var lastBitmap: BitmapArray = _
 
@@ -356,7 +361,7 @@ object DeletionVectors {
       dvMap: Map[String, (String, Array[Byte])]
   ): (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column = {
     import org.apache.spark.sql.GraftColumns.{column, expression}
-    val probe = new DvProbe(spark.sparkContext.broadcast(dvMap))
+    val probe = new DvProbe(spark.sparkContext.broadcast(dvMap), dvMap.size)
     (file, row) => !column(DvRowDeleted(expression(file), expression(row), probe))
   }
 }

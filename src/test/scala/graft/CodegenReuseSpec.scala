@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.length
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A long-lived session compiles each generated class once
-  * ([[BenchSession.CodegenReuse]]): repeated work compiles nothing. */
+/** A long-lived session compiles each generated class once (the codegen
+  * half of [[BenchSession.LongLived]]): repeated work compiles nothing. */
 class CodegenReuseSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   private val dir = SparkFixture.sfDir

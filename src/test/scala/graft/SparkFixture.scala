@@ -6,10 +6,12 @@ import org.apache.spark.sql.SparkSession
   * suites must not stop it). */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    // the shipped codegen-cache policy: whichever session generates code
-    // first sizes the JVM-wide cache, so every session here applies it
+    // the shipped long-lived-session confs: the codegen cache and the
+    // exchange pools are JVM-wide and sized by whichever session uses them
+    // first, and the status store once per context, so the fixture applies
+    // them as every graft session does
     val s = BenchSession
-      .reuseCodegen(SparkSession.builder())
+      .longLived(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -15,11 +15,31 @@ class DeltaReadSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   import spark.implicits._
 
-  private def writeCommit(dir: String, version: Long, lines: Seq[String]): Unit =
-    Files.write(
-      new File(new File(dir, "_delta_log"), f"$version%020d.json").toPath,
-      lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
-    )
+  /** Write commit `version`, in place of any commit already there. A
+    * commit the table wrote came through Hadoop's checksummed local file
+    * system, so its `.<name>.crc` sidecar goes too: a stale sidecar fails
+    * the read with a `ChecksumException` before the decoder sees a line. */
+  private def writeCommit(dir: String, version: Long, lines: Seq[String]): Unit = {
+    val log = new File(dir, "_delta_log")
+    val name = f"$version%020d.json"
+    Files.write(new File(log, name).toPath, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.deleteIfExists(new File(log, s".$name.crc").toPath)
+  }
+
+  /** Poison commits `versions` with a protocol line the decoder refuses, so
+    * a replay that reads one of them throws. The poison is checked on a copy
+    * of the commits alone (sidecars included, no checkpoint): replayed from
+    * version 0 it must reach the decoder and raise the decoder's own error. */
+  private def poison(dir: String, versions: Long*): Unit = {
+    versions.foreach(v => writeCommit(dir, v, Seq("""{"protocol":{"minReaderVersion":9}}""")))
+    val copy = Files.createTempDirectory("graft_delta_poisoned")
+    val log = Files.createDirectory(copy.resolve("_delta_log"))
+    new File(dir, "_delta_log").listFiles()
+      .filter(f => f.getName.matches("""\.?\d{20}\.json(\.crc)?"""))
+      .foreach(f => Files.copy(f.toPath, log.resolve(f.getName)))
+    val e = intercept[IllegalArgumentException](DeltaRead.snapshot(spark, copy.toString))
+    assert(e.getMessage.contains("minReaderVersion 9 exceeds"), e.getMessage)
+  }
 
   /** Write `rows` (columns named after checkpoint actions) as the
     * single-file checkpoint of `version` and point `_last_checkpoint` at it. */
@@ -158,7 +178,7 @@ class DeltaReadSpec extends AnyFunSuite {
         "if(s IS NULL, NULL, named_struct('schemaString', s)) AS metaData"))
 
     // poison the pre-checkpoint commits: if replay read them it would throw
-    writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
+    poison(dir, 0L)
 
     val snap = DeltaRead.snapshot(spark, dir)
     assert(snap.version == 1L && snap.files == Seq(files(1)))
@@ -199,7 +219,7 @@ class DeltaReadSpec extends AnyFunSuite {
     DeltaRead.deleteWhere(spark, dir, $"id" === 1L)
     assert(DeltaRead.checkpoint(spark, dir) == 2L)
     // poison the folded commits: the snapshot must come from the checkpoint
-    (0L to 2L).foreach(v => writeCommit(dir, v, Seq("""{"protocol":{"minReaderVersion":9}}""")))
+    poison(dir, 0L, 1L, 2L)
     val default = DeltaRead.snapshot(spark, dir)
     assert(default.txns == Map("app" -> 7L))
     assert(default.adds.exists(_.deletionVector.isDefined))
@@ -258,8 +278,7 @@ class DeltaReadSpec extends AnyFunSuite {
 
     // vectors survive a checkpoint (descriptors folded into the parquet)
     assert(DeltaRead.checkpoint(spark, dir) == 2L)
-    writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
-    writeCommit(dir, 1L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
+    poison(dir, 0L, 1L)
     assert(DeltaRead.read(spark, dir).count() == 86)
     assert(DeltaRead.read(spark, dir).filter($"id" < 5 || $"id" % 10 === 0).count() == 0)
 
@@ -345,7 +364,7 @@ class DeltaReadSpec extends AnyFunSuite {
 
     // checkpoint keeps both features readable
     DeltaRead.checkpoint(spark, dir)
-    writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
+    poison(dir, 0L)
     val afterCp = DeltaRead.read(spark, dir)
     assert(afterCp.count() == 36 && afterCp.schema.fieldNames.contains("name"))
   }
@@ -367,8 +386,7 @@ class DeltaReadSpec extends AnyFunSuite {
     val v3 = DeltaRead.append(spark.range(30, 32).toDF("id"), dir)
     assert(v3 == 3L)
     // poison pre-checkpoint commits: a reader that replays them would throw
-    writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
-    writeCommit(dir, 1L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
+    poison(dir, 0L, 1L)
     val snap = DeltaRead.snapshot(spark, dir)
     assert(snap.version == 3L)
     assert(
@@ -547,7 +565,7 @@ class DeltaReadSpec extends AnyFunSuite {
     }
     // poison the only pre-checkpoint commit: replay MUST start from the
     // multi-part checkpoint or it would throw
-    writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
+    poison(dir, 0L)
     val snap = DeltaRead.snapshot(spark, dir)
     assert(snap.files.size == 5)
     assert(snap.schema.isDefined)
@@ -569,7 +587,7 @@ class DeltaReadSpec extends AnyFunSuite {
     )
     // poison the commits the checkpoint folds: a replay from version 0
     // would throw, so the start point must come from the listing
-    (0L to 1L).foreach(v => writeCommit(dir, v, Seq("""{"protocol":{"minReaderVersion":9}}""")))
+    poison(dir, 0L, 1L)
     assert(DeltaRead.read(spark, dir).count() == 30)
     assert(DeltaRead.snapshot(spark, dir).version == 1L)
   }
@@ -608,7 +626,7 @@ class DeltaReadSpec extends AnyFunSuite {
     Files.delete(new File(new File(dir, "_delta_log"),
       f"${1L}%020d.checkpoint.${2}%010d.${3}%010d.parquet").toPath)
     // poison v0: replay must start from the complete v0 checkpoint
-    writeCommit(dir, 0L, Seq("""{"protocol":{"minReaderVersion":9}}"""))
+    poison(dir, 0L)
     val snap = DeltaRead.snapshot(spark, dir)
     assert(snap.version == 1L)
     assert(snap.files.sorted == expected.files.sorted)
